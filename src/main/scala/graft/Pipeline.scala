@@ -28,16 +28,17 @@ object Pipeline {
       typed: DataFrame,
       metrics: FileMetrics)
 
-  /** One table cycle: clean → load → write → count-verified metrics. */
+  /** One table cycle: clean → load → write → count-verified metrics
+    * (the load count from the written files' footers). */
   def updateTable(spark: SparkSession, table: TableDef, tsvPath: String,
       outDir: String): TableResult = {
     val cleaned = Clean.cleanFile(spark, table, tsvPath)
     val typed = Load.load(table, cleaned.good)
-    typed.write.mode("overwrite").parquet(s"$outDir/${table.name}.parquet")
+    val out = s"$outDir/${table.name}.parquet"
+    typed.write.mode("overwrite").parquet(out)
     Clean.writeCleaned(cleaned, outDir, table.name)
-    val loadedBack = spark.read.parquet(s"$outDir/${table.name}.parquet")
-    val metrics = Tracking.forTable(table.name, cleaned, loadedBack)
-    TableResult(table.name, loadedBack, metrics)
+    val metrics = Tracking.forWritten(table.name, cleaned, out)
+    TableResult(table.name, Pq.read(spark, out), metrics)
   }
 
   /** One table cycle committed as ONE TABLE EPOCH (≙ one

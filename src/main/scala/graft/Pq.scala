@@ -1,36 +1,48 @@
 package graft
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
-/** Schema-memoized parquet reads for HOT QUERY PATHS (r21 guide §5,
-  * driver round-trips).
+/** Parquet reads whose schema comes from one footer read ON THE DRIVER,
+  * memoized per path stamp.
   *
-  * Every bare `spark.read.parquet(path)` infers its schema by reading a
-  * footer THROUGH A SPARK JOB (`readParquetFootersInParallel`) — one
-  * ~30-75 ms single-task job per read call, paid at QUERY CONSTRUCTION
-  * time on every rep. Profiled: `index_stats` paid ELEVEN sequential
-  * footer jobs per rep (0.83 s of its 1.2 s); every registry entry pays
-  * one per table it touches. The bytes those jobs read never change
-  * within a process, so this helper memoizes the inferred StructType
-  * under a (path, mtime, length) stamp and constructs later reads with
-  * the explicit schema — zero jobs at steady state, one re-inference
-  * whenever a path's stamp changes (append/overwrite/compact all touch
-  * the directory, so mutation invalidates structurally).
+  * A bare `spark.read.parquet(path)` infers its schema through a Spark
+  * job (`readParquetFootersInParallel`): one single-task job per read
+  * call, paid at query construction whatever the data's size. [[read]]
+  * never starts that job. On a memo miss it lists the paths on the
+  * driver, opens the first data file's footer with
+  * `ParquetFileReader` and converts it the way Spark's own
+  * inference does (`ParquetFileFormat.readSchemaFromFooter`: the
+  * row-metadata schema when the file carries one, else the session's
+  * `ParquetToSparkSchemaConverter`, so `nanosAsLong` and the NTZ
+  * inference confs apply). `s.read.schema(…)` then appends the
+  * partition columns the directory names carry. Spark's own inference
+  * still runs in two cases: `spark.sql.parquet.mergeSchema` is on (one
+  * footer is not the answer), and the driver read throws or finds no
+  * data file — so empty, missing and corrupt paths fail with Spark's own
+  * error, and `ignoreCorruptFiles` still applies.
   *
-  * Contract: use for SCHEMA-STABLE layouts only — the testdata tables
-  * (immutable fixtures) and the engine's own side tables/segment dirs,
-  * whose writers never change column shape in place (schema evolution
-  * in the epoch table tier flows through its DECLARED read schema —
-  * `physReadSchema` — never through footer inference). Stores whose
-  * directory stamps are non-observable (some object stores) should not
-  * route schema-EVOLVING paths here; none of the call sites do.
-  *
-  * This extends the established metadata-residency discipline (fields/
-  * merge-keys/meta caches, centroid/codebook memos): bounded metadata,
-  * stamp-keyed, never query results.
+  * Memo contract: the key is the (path, mtime, length) stamp of each
+  * NAMED path, not of the files below it. A hit skips even the driver
+  * footer read. Append, overwrite and compaction touch the named
+  * directory, so they re-key it; but a writer that CHANGES a
+  * schema must write it under a new path — every engine writer does
+  * (fresh generation dirs; the epoch tier's evolution flows through its
+  * declared read schema, never through footer inference).
   */
 object Pq {
 
@@ -41,7 +53,7 @@ object Pq {
   private def stamp(s: SparkSession, paths: Seq[String])
       : Seq[(String, Long, Long)] =
     paths.sorted.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
+      val hp = new Path(p)
       val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       try {
         val st = fs.getFileStatus(hp)
@@ -51,12 +63,70 @@ object Pq {
       }
     }
 
-  /** `spark.read.parquet(paths…)` with the footer schema memoized per
-    * (path, mtime, len) — identical frame, no per-rep footer job. */
+  /** `spark.read.parquet(paths…)`, same frame, with no Spark job to
+    * learn the schema. */
   def read(s: SparkSession, paths: String*): DataFrame = {
     if (cache.size > MaxEntries) cache.clear()
-    val k = stamp(s, paths)
-    val schema = cache.getOrElseUpdate(k, s.read.parquet(paths: _*).schema)
+    val schema = cache.getOrElseUpdate(stamp(s, paths), infer(s, paths))
     s.read.schema(schema).parquet(paths: _*)
+  }
+
+  /** Total rows of the parquet data files under `paths`, summed from
+    * their footers — the count of just-committed files without a job. */
+  def rows(s: SparkSession, paths: String*): Long = {
+    val conf = s.sessionState.newHadoopConf()
+    dataFiles(conf, paths).map(st =>
+      footer(conf, st, ParquetMetadataConverter.NO_FILTER)
+        .getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  private def infer(s: SparkSession, paths: Seq[String]): StructType = {
+    val onDriver =
+      if (s.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else try {
+        val conf = s.sessionState.newHadoopConf()
+        dataFiles(conf, paths).nextOption().map { st =>
+          ParquetFileFormat.readSchemaFromFooter(
+            new Footer(st.getPath,
+              footer(conf, st, ParquetMetadataConverter.SKIP_ROW_GROUPS)),
+            new ParquetToSparkSchemaConverter(s.sessionState.conf))
+        }
+      } catch { case NonFatal(_) => None }
+    onDriver.getOrElse(s.read.parquet(paths: _*).schema)
+  }
+
+  private def footer(conf: Configuration, st: FileStatus,
+      filter: ParquetMetadataConverter.MetadataFilter): ParquetMetadata =
+    Using.resource(ParquetFileReader.open(HadoopInputFile.fromStatus(st,
+      conf), HadoopReadOptions.builder(conf).withMetadataFilter(filter)
+      .build()))(_.getFooter)
+
+  /** Spark's file-index rule: `_x` and `.x` names are hidden (and
+    * in-flight `._COPYING_` copies), `k=v` partition dirs such as `_p=3`
+    * are kept. */
+  private def visible(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_"))
+
+  /** The non-empty visible files under `paths`, lazily, in the file
+    * index's order: path by path, a directory's files before its
+    * subdirectories. */
+  private def dataFiles(conf: Configuration, paths: Seq[String])
+      : Iterator[FileStatus] = {
+    // a named directory is listed whatever its own name; what a listing
+    // returns (a named file included) goes through the hidden-name rule
+    def under(fs: org.apache.hadoop.fs.FileSystem, st: FileStatus)
+        : Iterator[FileStatus] = {
+      val (dirs, files) = (if (st.isFile) Array(st)
+        else fs.listStatus(st.getPath))
+        .filter(c => visible(c.getPath.getName)).partition(_.isDirectory)
+      files.iterator.filter(_.getLen > 0) ++
+        dirs.iterator.flatMap(under(fs, _))
+    }
+    paths.iterator.flatMap { p =>
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(conf)
+      under(fs, fs.getFileStatus(hp))
+    }
   }
 }

@@ -18,9 +18,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // r21: footer schema memoized per (path, mtime, len) — the fixtures
-  // are immutable, and the bare read paid one footer-inference Spark
-  // job per table per query construction (see graft.Pq)
+  // through graft.Pq: a first read takes the schema from one footer on
+  // the driver (no Spark job), later reads hit the memo keyed on the
+  // file's (path, mtime, len) stamp — the fixtures are immutable, and
+  // a changed schema must arrive under a new path
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     Pq.read(spark, s"$dir/$name.parquet")
 

@@ -54,12 +54,19 @@ object Clean {
   /** Read a TSV file (header row skipped by position) and clean it.
     * For real multi-file layouts pass a glob; header removal is done by
     * filtering the header literal, which the reference also treats as a
-    * known, validated first line (`cleancalaccessrawdata.py:~100`). */
+    * known, validated first line (`cleancalaccessrawdata.py:~100`).
+    *
+    * Records end at LF only: a bare CR is a byte inside its field that
+    * [[scrub]] removes, not a line break (Spark's default line reader
+    * would end the record there and send both halves to errs). A CRLF
+    * export's lines therefore arrive with a trailing CR, so the header
+    * matches with or without one. The match is on the raw line: a
+    * filter on the scrubbed line would run the scrub's regex once more
+    * per row (the filter is pushed below the projection). */
   def cleanFile(spark: SparkSession, table: TableDef, path: String): CleanResult = {
     val headerLine = table.rawSchema.fieldNames.mkString("\t")
-    val lines = spark.read.text(path)
-      .filter(col("value") =!= headerLine)
-    clean(table, lines)
+    clean(table, spark.read.option("lineSep", "\n").text(path)
+      .filter(!col("value").isin(headerLine, headerLine + "\r")))
   }
 
   /** S4: write the good rows as RFC-4180 CSV and the bad rows to the errs

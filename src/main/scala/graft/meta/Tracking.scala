@@ -36,20 +36,31 @@ object Tracking {
   /** Count-verified metrics row for one cleaned+loaded table. Counts are
     * Spark jobs; at scale these are the same `count()` aggregations the
     * reference issues as `SELECT count(*)`. */
-  def forTable(name: String, cleaned: CleanResult, loaded: DataFrame): FileMetrics = {
-    // The three verification counts are independent aggregations (the
-    // reference issues them as separate SELECT count(*) statements);
-    // submit them concurrently so the stage tails overlap instead of
-    // paying three sequential job round-trips (optimization guide
-    // §2.6). Values and the consistency invariant are unchanged.
+  def forTable(name: String, cleaned: CleanResult, loaded: DataFrame): FileMetrics =
+    counted(name, cleaned, () => loaded.count())
+
+  /** [[forTable]] for a table just committed as parquet under `path`:
+    * the load count is the sum of the written files' footer row counts —
+    * still what landed, counted without a job. */
+  def forWritten(name: String, cleaned: CleanResult, path: String): FileMetrics =
+    counted(name, cleaned,
+      () => graft.Pq.rows(cleaned.good.sparkSession, path))
+
+  private def counted(name: String, cleaned: CleanResult,
+      loadCount: () => Long): FileMetrics = {
+    // The verification counts are independent (the reference issues
+    // them as separate SELECT count(*) statements); submit them
+    // concurrently so the stage tails overlap instead of paying
+    // sequential job round-trips (optimization guide §2.6). Values and
+    // the consistency invariant are unchanged.
     // r21: through graft.Overlap — dedicated pool (the shared global
     // pool mislabeled jobs and could starve under the nested fan-out
     // in tracking_verify) and a finite await ceiling.
-    val spark = loaded.sparkSession
-    val Seq(good, bad, loadedN) = graft.Overlap.all(spark)(
-      () => cleaned.good.count(),
-      () => cleaned.bad.count(),
-      () => loaded.count())
+    val Seq(good, bad, loadedN) =
+      graft.Overlap.all(cleaned.good.sparkSession)(
+        () => cleaned.good.count(),
+        () => cleaned.bad.count(),
+        loadCount)
     FileMetrics(name, good + bad, good, loadedN, bad)
   }
 

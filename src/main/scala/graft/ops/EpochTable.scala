@@ -1588,13 +1588,11 @@ object EpochTable {
       // per-batch commit never pays a partition regroup
     }
     // an empty micro-batch still produces a zero-row parquet file
-    // (Spark's V2 write runs one empty task) — gate on ROWS, not
-    // files, so idle epochs never bloat the manifest chain
+    // (Spark's V2 write runs one empty task) — gate on ROWS (footer
+    // counts, no job), not files, so idle epochs never bloat the
+    // manifest chain
     val hasRows = !replayed && f.exists(staged) &&
-      f.listStatus(staged).exists(st =>
-        st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")) &&
-      !s.read.parquet(staged.toString).isEmpty
+      graft.Pq.rows(s, staged.toString) > 0
     if (!hasRows) { f.delete(staged, true); () }
     else commitStreamRows(s, path, f, staged, key, m)
   }
@@ -1613,7 +1611,7 @@ object EpochTable {
     // declared-schema read until the next fold.
     def shape(sc: org.apache.spark.sql.types.StructType) =
       sc.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-    require(shape(s.read.parquet(stagedDir).schema) ==
+    require(shape(graft.Pq.read(s, stagedDir).schema) ==
         shape(graft.Pq.read(s, m.dirs(path, Data): _*).schema),
       s"EpochTable.commitStreamDelta: staged schema does not match " +
         s"the served table at $path (names or types differ) — the " +
@@ -1727,7 +1725,7 @@ object EpochTable {
           s"merges' ${mergeKeyCols(s, path, m)} — compact first")
     val g = Epoch.genDir(s, path, m.next)
     upserts.write.mode("overwrite").parquet(s"$g/merge")
-    val batch = s.read.parquet(s"$g/merge")
+    val batch = graft.Pq.read(s, s"$g/merge")
     if (batch.isEmpty) return metaRows(s, path, Seq(m))
       .head().getAs[Long]("load_records")
     require(batch.groupBy(keys.map(col): _*).count()

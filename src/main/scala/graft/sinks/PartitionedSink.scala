@@ -35,7 +35,7 @@ object PartitionedSink {
   /** Read back a partitioned path (pruning visible in the scan's
     * PartitionFilters when filtered on the partition column). */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Pq.read(spark, path)
 
   /** Z-order compaction: rewrite a table into size-targeted parquet
     * files clustered on the z-curve of two dimensions, so every file's

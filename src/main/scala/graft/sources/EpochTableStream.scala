@@ -652,7 +652,7 @@ object EpochTableStream {
       val m = Epoch.resolve(s, path).getOrElse(
         throw new IllegalStateException(
           s"EpochTableStream: no committed version at $path"))
-      s.read.parquet(EpochTable.scanDataDirs(path, m): _*).schema
+      graft.Pq.read(s, EpochTable.scanDataDirs(path, m): _*).schema
     }
     override def name(): String = ident
     override def schema(): StructType = cdcSchema(dataSchema)
@@ -795,11 +795,11 @@ object EpochTableStream {
             // fresh doomed keys = cur tombstones minus prev (null-safe
             // — tombstones may carry NULLs); bounded by the takedown
             // contract, so a driver-side collect is the cheap plan
-            val curT = s.read.parquet(cur.dirs(path, "tombstones"): _*)
+            val curT = graft.Pq.read(s, cur.dirs(path, "tombstones"): _*)
             val fresh = prevTomb match {
               case Seq() => curT
               case pd =>
-                val prevT = s.read.parquet(
+                val prevT = graft.Pq.read(s,
                   pd.map(d => s"$path/$d"): _*)
                 curT.join(org.apache.spark.sql.functions.broadcast(prevT),
                   curT.columns.map(c => curT(c) <=> prevT(c))

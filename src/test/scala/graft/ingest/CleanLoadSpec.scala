@@ -208,4 +208,39 @@ class CleanLoadSpec extends SparkTestBase {
       Clean.scrub(col("value")).as("clean")).head().getString(0)
     assert(out === "1001\tabc")
   }
+
+  test("cleanFile keeps a bare CR inside its record and reads CRLF " +
+      "exports; counts equal the records as written") {
+    val n = table.rawSchema.fields.length
+    def rec(i: Int, cr: Boolean = false): String =
+      (0 until n).map(j => if (j == 1 && cr) s"a\rb$i" else s"v${i}_$j")
+        .mkString("\t")
+    val header = table.rawSchema.fieldNames.mkString("\t")
+    val short = "x\ty"
+    def cleanOf(body: String) = {
+      val f = java.nio.file.Files.createTempFile("clean", ".tsv")
+      java.nio.file.Files.write(f,
+        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Clean.cleanFile(spark, table, f.toString)
+    }
+    // (a) LF export: 2 of its 5 well-formed records hold a bare CR
+    val inField = cleanOf((Seq(header, rec(0), rec(1, cr = true), rec(2),
+      short, rec(3, cr = true), rec(4)).mkString("\n")) + "\n")
+    assert(inField.good.count() === 5)
+    assert(inField.bad.count() === 1)
+    assert(inField.good.where(col(table.rawSchema.fieldNames(1))
+      .contains("\r")).isEmpty)
+    assert(inField.good.where(col(table.rawSchema.fieldNames(1)) === "ab1")
+      .count() === 1)
+    val m = Tracking.forTable("cr", inField, Load.load(table, inField.good))
+    assert(m.consistent && m.downloadRecords === 6)
+    // (b) CRLF export: its header row still drops, no CR survives
+    val crlf = cleanOf(Seq(header, rec(0), short, rec(1), rec(2, cr = true))
+      .map(_ + "\r\n").mkString)
+    assert(crlf.good.count() === 3)
+    assert(crlf.bad.count() === 1)
+    assert(crlf.bad.head().getString(0) === short)
+    assert(crlf.good.where(col(table.rawSchema.fieldNames.last)
+      .contains("\r")).isEmpty)
+  }
 }
