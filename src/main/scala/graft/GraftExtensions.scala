@@ -11,18 +11,20 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `.withExtensions(new GraftExtensions)` — the deployment-grade
   * alternative to per-session `SimHash64.register`.
   *
-  * The custom-rule slot carries exactly ONE optimizer rule — the
-  * materialized-view rewrite ([[graft.plans.MatView.MvRewrite]]), the
-  * one beyond-§2 capability the built-in operators can't express
-  * (every §2 operator still plans well with Catalyst defaults —
-  * SURVEY §4's decision, re-validated by PlanSpec). The rule is inert
-  * unless a view is registered for the scanned path, so installing the
-  * extension changes no other plan.
+  * The optimizer slots carry two rules. The materialized-view rewrite
+  * ([[graft.plans.MatView.MvRewrite]]) is the one beyond-§2 capability
+  * the built-in operators can't express (SURVEY §4, re-validated by
+  * PlanSpec); it is inert unless a view is registered for the scanned
+  * path. [[graft.plans.FinalSort]] picks a final sort's shape from the
+  * measured input, as a runtime rule (AQE stage sizes) and a static one
+  * (plans without stages).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(s => graft.plans.MatView.MvRewrite(s))
+    e.injectOptimizerRule(s => graft.plans.FinalSort(s))
+    e.injectRuntimeOptimizerRule(s => graft.plans.FinalSort(s))
     e.injectFunction((
       new FunctionIdentifier("simhash64"),
       new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),

@@ -1,6 +1,5 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 import scala.util.control.NonFatal
@@ -46,12 +45,17 @@ import org.apache.spark.sql.types.StructType
   */
 object Pq {
 
-  private val MaxEntries = 8192
-  private val cache =
-    TrieMap.empty[Seq[(String, Long, Long)], StructType]
+  private type Key = Seq[(String, Long, Long)]
+  private[graft] val MaxEntries = 8192
+  /** Access-ordered: past [[MaxEntries]] the least recently used goes. */
+  private[graft] val memo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Key, StructType]): Boolean =
+        size > MaxEntries
+    })
 
-  private def stamp(s: SparkSession, paths: Seq[String])
-      : Seq[(String, Long, Long)] =
+  private def stamp(s: SparkSession, paths: Seq[String]): Key =
     paths.sorted.map { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -66,8 +70,12 @@ object Pq {
   /** `spark.read.parquet(paths…)`, same frame, with no Spark job to
     * learn the schema. */
   def read(s: SparkSession, paths: String*): DataFrame = {
-    if (cache.size > MaxEntries) cache.clear()
-    val schema = cache.getOrElseUpdate(stamp(s, paths), infer(s, paths))
+    val key = stamp(s, paths)
+    val schema = Option(memo.get(key)).getOrElse {
+      val inferred = infer(s, paths) // outside the lock: footer I/O
+      memo.put(key, inferred)
+      inferred
+    }
     s.read.schema(schema).parquet(paths: _*)
   }
 

@@ -47,7 +47,7 @@ object AggQueries {
           count(lit(1)).as("cnt"),
           sum(col("value").cast(DecimalType(14, 2)))
             .cast(DecimalType(38, 2)).cast(DoubleType).as("sum_value"))
-        .transform(Out.boundedSort(_, col("event_type"))),
+        .orderBy(col("event_type")),
     Some("""
       SELECT event_type, COUNT(*) AS cnt,
              CAST(CAST(SUM(CAST(value AS DECIMAL(14,2))) AS DECIMAL(38,2)) AS DOUBLE) AS sum_value
@@ -69,7 +69,7 @@ object AggQueries {
             .cast(DoubleType).as("min_price"),
           max(col("o_totalprice").cast(DecimalType(14, 2)))
             .cast(DoubleType).as("max_price"))
-        .transform(Out.boundedSort(_, col("o_orderstatus"))),
+        .orderBy(col("o_orderstatus")),
     Some("""
       SELECT o_orderstatus,
              MIN(o_orderdate) AS first_date, MAX(o_orderdate) AS last_date,
@@ -89,7 +89,7 @@ object AggQueries {
         .agg(
           countDistinct(col("l_partkey")).as("n_parts"),
           countDistinct(col("l_suppkey")).as("n_supps"))
-        .transform(Out.boundedSort(_, col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
     Some("""
       SELECT l_returnflag,
              COUNT(DISTINCT l_partkey) AS n_parts,
@@ -138,7 +138,7 @@ object AggQueries {
             col("exact_parts").cast(DoubleType)) <=
             col("exact_parts").cast(DoubleType) * 0.05)
             .as("approx_within_5pct"))
-        .transform(Out.boundedSort(_, col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
     Some("""
       SELECT l_returnflag,
              COUNT(DISTINCT l_partkey) AS exact_parts,
@@ -161,7 +161,7 @@ object AggQueries {
           col("c_mktsegment"),
           col("cnt"),
           (col("raw_sum").cast(DoubleType) / col("cnt")).as("avg_bal"))
-        .transform(Out.boundedSort(_, col("c_mktsegment"))),
+        .orderBy(col("c_mktsegment")),
     Some("""
       SELECT c_mktsegment, COUNT(*) AS cnt,
              CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_bal
@@ -185,7 +185,7 @@ object AggQueries {
           coalesce(col("c_mktsegment"), lit("<ALL>")).as("seg"),
           coalesce(col("c_nationkey").cast(StringType), lit("<ALL>")).as("nk"),
           col("cnt"), col("sum_bal"))
-        .transform(Out.boundedSort(_, col("seg"), col("nk"))),
+        .orderBy(col("seg"), col("nk")),
     Some("""
       SELECT COALESCE(c_mktsegment, '<ALL>') AS seg,
              COALESCE(CAST(c_nationkey AS VARCHAR), '<ALL>') AS nk,
@@ -207,7 +207,7 @@ object AggQueries {
           coalesce(col("o_orderstatus"), lit("<ALL>")).as("status"),
           coalesce(col("o_orderpriority"), lit("<ALL>")).as("priority"),
           col("cnt"))
-        .transform(Out.boundedSort(_, col("status"), col("priority"))),
+        .orderBy(col("status"), col("priority")),
     Some("""
       SELECT COALESCE(o_orderstatus, '<ALL>') AS status,
              COALESCE(o_orderpriority, '<ALL>') AS priority,
@@ -256,7 +256,7 @@ object AggQueries {
           Seq("click", "view", "purchase", "signup", "error"))
         .count()
         .na.fill(0L)
-        .transform(Out.boundedSort(_, col("day"))),
+        .orderBy(col("day")),
     Some("""
       SELECT CAST(ts AS DATE) AS day,
              COUNT(*) FILTER (event_type = 'click') AS click,
@@ -291,7 +291,7 @@ object AggQueries {
             col("l_extendedprice").cast(DoubleType))).as("corr_qty_price"),
           r4(covar_samp(col("l_quantity").cast(DoubleType),
             col("l_discount").cast(DoubleType))).as("cov_qty_disc"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     Some("""
       SELECT l_returnflag,
@@ -335,7 +335,7 @@ object AggQueries {
           r4(element_at(col("pq"), 2)).as("p50"),
           r4(element_at(col("pq"), 3)).as("p75"),
           col("p90_price"))
-        .transform(Out.boundedSort(_, col("l_linestatus")))
+        .orderBy(col("l_linestatus"))
     },
     Some("""
       SELECT l_linestatus,
@@ -392,7 +392,7 @@ object AggQueries {
       spans.groupBy(col("g").as("l_linestatus"))
         .agg(r4(interp(0.25)).as("p25"), r4(interp(0.5)).as("p50"),
           r4(interp(0.75)).as("p75"))
-        .transform(Out.boundedSort(_, col("l_linestatus")))
+        .orderBy(col("l_linestatus"))
     },
     Some("""
       SELECT l_linestatus,
@@ -451,7 +451,7 @@ object AggQueries {
           ok(col("a25"), col("e25")).as("p25_ok"),
           ok(col("a50"), col("e50")).as("p50_ok"),
           ok(col("a75"), col("e75")).as("p75_ok"))
-        .transform(Out.boundedSort(_, col("l_linestatus")))
+        .orderBy(col("l_linestatus"))
     },
     Some("""
       SELECT l_linestatus,
@@ -475,7 +475,7 @@ object AggQueries {
         .groupBy(col("n_regionkey"))
         .agg(array_join(array_sort(collect_list(col("n_name"))), ",")
           .as("nations"))
-        .transform(Out.boundedSort(_, col("n_regionkey"))),
+        .orderBy(col("n_regionkey")),
     Some("""
       SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations
       FROM nation
@@ -506,7 +506,7 @@ object AggQueries {
             struct(col("value"), col("event_id"))).as("max_value_event"),
           min_by(col("event_id"),
             struct(col("value"), col("event_id"))).as("min_value_event"))
-        .transform(Out.boundedSort(_, col("event_type"))),
+        .orderBy(col("event_type")),
     Some("""
       SELECT event_type,
              MAX(CASE WHEN value = mx THEN event_id END) AS max_value_event,
@@ -534,7 +534,7 @@ object AggQueries {
           coalesce(col("c_mktsegment"), lit("<ALL>")).as("seg"),
           coalesce(col("c_nationkey").cast(StringType), lit("<ALL>")).as("nk"),
           col("cnt"), col("gid"))
-        .transform(Out.boundedSort(_, col("seg"), col("nk"))),
+        .orderBy(col("seg"), col("nk")),
     Some("""
       SELECT COALESCE(c_mktsegment, '<ALL>') AS seg,
              COALESCE(CAST(c_nationkey AS VARCHAR), '<ALL>') AS nk,
@@ -565,7 +565,7 @@ object AggQueries {
         // salt on a column the aggregate already reads — no extra
         // scan width, deterministic across task retries
         saltOn = Seq(col("l_quantity")))
-        .transform(Out.boundedSort(_, col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
     Some("""
       SELECT l_returnflag, COUNT(*) AS cnt,
              CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS sum_qty
@@ -615,7 +615,7 @@ object AggQueries {
           (col("c").cast(DoubleType) >
             lit(10d) * col("n_rows").cast(DoubleType) /
               col("n_keys").cast(DoubleType)).as("skewed"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some("""
       WITH dirty AS (

@@ -41,7 +41,7 @@ object CoreQueries {
           col("raw_disc").cast(DoubleType).as("sum_disc"),
           (col("raw_qty").cast(DoubleType) / col("cnt")).as("avg_qty"),
           col("cnt"))
-        .transform(Out.boundedSort(_, col("l_returnflag"), col("l_linestatus")))
+        .orderBy(col("l_returnflag"), col("l_linestatus"))
     },
     Some("""
       SELECT l_returnflag, l_linestatus,
@@ -154,7 +154,7 @@ object CoreQueries {
         .groupBy("l_returnflag")
         .agg(sum(col("price")).cast(DoubleType).as("sum_price"),
           max(col("price")).cast(DoubleType).as("max_price"))
-        .transform(Out.boundedSort(_, col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
     Some("""
       SELECT l_returnflag,
              CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))) AS DOUBLE) AS sum_price,
@@ -405,7 +405,7 @@ object CoreQueries {
           col("download_records") ===
             col("clean_records") + col("error_records") &&
             col("load_records") === col("clean_records"))
-        .transform(Out.boundedSort(_, col("table_name")))
+        .orderBy(col("table_name"))
     },
     Some("""
       SELECT 'events_even' AS table_name,
@@ -560,7 +560,7 @@ object CoreQueries {
           m.loadRecords, m.errorRecords) }
         .toDF("release", "tableName", "downloadRecords", "cleanRecords",
           "loadRecords", "errorRecords")
-      Out.boundedSort(Tracking.versionRollup(filesDf), col("release"))
+      Tracking.versionRollup(filesDf).orderBy(col("release"))
     },
     Some("""
       SELECT 'r_even' AS release,
@@ -788,7 +788,7 @@ object CoreQueries {
           sum(col("amend_id")).as("sum_latest_amend"),
           min(col("qual_date")).as("min_qual"),
           max(col("qual_date")).as("max_qual"))
-        .transform(Out.boundedSort(_, col("form_desc")))
+        .orderBy(col("form_desc"))
     },
     Some(s"""
       WITH regd(code, meaning) AS (
@@ -868,7 +868,7 @@ object CoreQueries {
           min(col("from_date")).as("min_from"),
           max(col("thru_date")).as("max_thru"),
           max(col("sig_date")).as("max_sig"))
-        .transform(Out.boundedSort(_, col("form_desc")))
+        .orderBy(col("form_desc"))
     },
     Some(s"""
       WITH regd(code, meaning) AS (
@@ -966,7 +966,7 @@ object CoreQueries {
           min(col("pmnt_dt")).as("min_pmnt"),
           max(col("pmnt_dt")).as("max_pmnt"),
           sum(col("type_tv")).as("n_tv"))
-        .transform(Out.boundedSort(_, col("office_desc")))
+        .orderBy(col("office_desc"))
     },
     Some(s"""
       WITH offd(code, meaning) AS (
@@ -1162,9 +1162,7 @@ object CoreQueries {
     "recursive_cte",
     (s, d) => {
       Tables.customer(s, d).createOrReplaceTempView("rec_customer")
-      // r21 §2.4: the result is bounded by the custkey <= 2000 literal —
-      // total order via the single-partition sort, not a range exchange
-      Out.boundedSort(s.sql("""
+      s.sql("""
         WITH RECURSIVE anc(custkey, depth) AS (
           SELECT c_custkey, CAST(0 AS BIGINT) FROM rec_customer
           WHERE c_custkey < 10
@@ -1174,7 +1172,7 @@ object CoreQueries {
           WHERE c.c_custkey >= 10)
         SELECT custkey, depth FROM anc
         WHERE custkey <= 2000
-      """), col("custkey"))
+      """).orderBy(col("custkey"))
     },
     Some("""
       WITH RECURSIVE anc(custkey, depth) AS (

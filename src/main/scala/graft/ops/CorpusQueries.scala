@@ -168,7 +168,7 @@ object CorpusQueries {
         .agg(count(lit(1)).as("n_docs"),
           min(col("n_tok")).as("min_toks"),
           max(col("n_tok")).as("max_toks"))
-        .transform(Out.boundedSort(_, col("bucket_lo"))),
+        .orderBy(col("bucket_lo")),
     Some("""
       SELECT CAST(FLOOR(n_tok / 25) * 25 AS BIGINT) AS bucket_lo,
              CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -198,7 +198,7 @@ object CorpusQueries {
           count_distinct(col("val")).as("n_distinct"),
           min(col("val")).as("min_val"),
           max(col("val")).as("max_val"))
-        .transform(Out.boundedSort(_, col("col_name"))),
+        .orderBy(col("col_name")),
     Some("""
       WITH u AS (
         SELECT 'lang' AS col_name, lang AS val FROM documents
@@ -349,7 +349,7 @@ object CorpusQueries {
           col("n_emitted"),
           round(col("n_emitted").cast(DoubleType) / col("n_docs"), 4)
             .as("eff_weight"))
-        .transform(Out.boundedSort(_, col("lang")))
+        .orderBy(col("lang"))
     },
     Some("""
       WITH w(lang, base, thr) AS (
@@ -551,7 +551,7 @@ object CorpusQueries {
     single.unionByName(pk).unionByName(fk)
       .select(col("constraint"), col("metric"),
         (col("metric") === 0).as("ok"))
-      .transform(Out.boundedSort(_, col("constraint")))
+      .orderBy(col("constraint"))
   }
 
   val constraintCheck = GQuery(

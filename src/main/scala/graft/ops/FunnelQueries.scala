@@ -39,7 +39,7 @@ object FunnelQueries {
           count(lit(1)).as("n_users")))
         .union(s3.agg(lit("3_purchase").as("stage"),
           count(lit(1)).as("n_users")))
-        .transform(Out.boundedSort(_, col("stage")))
+        .orderBy(col("stage"))
     },
     Some("""
       WITH s1 AS (
@@ -78,7 +78,7 @@ object FunnelQueries {
           floor(datediff(col("wk"), col("cohort_wk")) / 7)
             .cast(LongType).as("week_offset"))
         .agg(count_distinct(col("user_id")).as("n_users"))
-        .transform(Out.boundedSort(_, col("cohort_wk"), col("week_offset")))
+        .orderBy(col("cohort_wk"), col("week_offset"))
     },
     Some("""
       WITH ev AS (

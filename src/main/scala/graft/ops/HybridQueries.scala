@@ -115,10 +115,7 @@ object HybridQueries {
       .withColumn("rnk", row_number().over(w).cast(LongType))
       .select(keys.map(col) ++ Seq(col("rnk"), col("doc_id"),
         col("kw_rnk"), col("vec_rnk"), col("rrf")): _*)
-      // r21 §2.4: fused lists are bounded by construction (≤ kw_k +
-      // vec_k per key group, batch-bounded groups) — single-partition
-      // final sort instead of a range exchange (see Out.boundedSort)
-      .transform(Out.boundedSort(_, (keys :+ "rnk").map(col): _*))
+      .orderBy((keys :+ "rnk").map(col): _*)
   }
 
   /** The exact keyword list: BM25 top-10 (the oracle-verified
@@ -229,7 +226,7 @@ object HybridQueries {
           col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy()) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     // hybrid_search's oracle with the tolerance boolean asserted TRUE:
     // the served fusion must cover all but ≤2 of the exact fused docs
@@ -386,7 +383,7 @@ object HybridQueries {
           col("vec_rnk"), col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy(col("query_id"))) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("query_id"), col("rnk")))
+        .orderBy(col("query_id"), col("rnk"))
     },
     Some(s"""
       WITH q(query_id, term) AS (VALUES
@@ -502,7 +499,7 @@ object HybridQueries {
         .select(row_number().over(Window.orderBy(col("score").desc,
             col("rrf").desc, col("doc_id"))).cast(LongType).as("rnk"),
           col("doc_id"), col("fuse_rnk"), col("score"), col("rrf"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some(s"""
       WITH docs AS (
@@ -639,7 +636,7 @@ object HybridQueries {
           col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy()) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some(s"""
       WITH docs AS (
@@ -733,7 +730,7 @@ object HybridQueries {
           col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy()) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     // hybrid_serve's oracle verbatim: the grown indexes must cover the
     // exact full-corpus fusion within the same tolerance
@@ -829,7 +826,7 @@ object HybridQueries {
         .withColumn("rnk", row_number().over(w).cast(LongType))
         .select(col("query_id"), col("rnk"), col("doc_id"), col("fuse_rnk"),
           col("score"), col("rrf"))
-        .transform(Out.boundedSort(_, col("query_id"), col("rnk")))
+        .orderBy(col("query_id"), col("rnk"))
     },
     Some(s"""
       WITH q(query_id, term) AS (VALUES
@@ -977,7 +974,7 @@ object HybridQueries {
           col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy()) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     // the hybrid_serve oracle over ONLY the survivors: one takedown,
     // propagated through both tiers of the fused ranking
@@ -1197,7 +1194,7 @@ object HybridQueries {
       picked.zipWithIndex
         .map { case (id, i) => ((i + 1).toLong, id) }
         .toSeq.toDF("rnk", "doc_id")
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some(s"""
       WITH docs AS (
@@ -1328,7 +1325,7 @@ object HybridQueries {
           col("vec_rnk"), col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy()) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     hybridServe.oracle)
 
@@ -1392,7 +1389,7 @@ object HybridQueries {
           col("vec_rnk"), col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy()) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     hybridServe.oracle)
 
@@ -1489,7 +1486,7 @@ object HybridQueries {
           col("vec_rnk"), col("rrf"),
           (sum(when(col("hit").isNull, lit(1L)).otherwise(lit(0L)))
             .over(Window.partitionBy()) <= 2).as("fuse_ok"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     hybridServe.oracle)
 

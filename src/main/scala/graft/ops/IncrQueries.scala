@@ -99,7 +99,7 @@ object IncrQueries {
           col("sum_dec").cast(DoubleType).as("sum_total"),
           (col("sum_dec").cast(DoubleType) / col("cnt").cast(DoubleType))
             .as("avg_total"))
-        .transform(Out.boundedSort(_, col("o_orderpriority")))
+        .orderBy(col("o_orderpriority"))
     },
     // The oracle is the FULL-SCAN aggregate — a hash match proves the
     // incremental merge reproduces it bit-for-bit.
@@ -152,7 +152,7 @@ object IncrQueries {
             col("exact_users").cast(DoubleType)) <=
             col("exact_users").cast(DoubleType) * 0.05)
             .as("approx_within_5pct"))
-        .transform(Out.boundedSort(_, col("event_type")))
+        .orderBy(col("event_type"))
     },
     Some("""
       SELECT event_type,
@@ -224,7 +224,7 @@ object IncrQueries {
             col("exact_wau").cast(DoubleType)) <=
             col("exact_wau").cast(DoubleType) * 0.05)
             .as("approx_within_5pct"))
-        .transform(Out.boundedSort(_, col("day")))
+        .orderBy(col("day"))
     },
     Some("""
       WITH days AS (
@@ -272,7 +272,7 @@ object IncrQueries {
         .where(col("rnk") <= 5)
         .select(col("o_orderpriority"), col("rnk"), col("o_orderkey"),
           col("o_totalprice"))
-        .transform(Out.boundedSort(_, col("o_orderpriority"), col("rnk")))
+        .orderBy(col("o_orderpriority"), col("rnk"))
     },
     Some("""
       SELECT o_orderpriority, rnk, o_orderkey, o_totalprice
@@ -330,7 +330,7 @@ object IncrQueries {
             col("exact_overlap").cast(DoubleType)) <=
             col("exact_overlap").cast(DoubleType) * 0.10)
             .as("approx_within_10pct"))
-        .transform(Out.boundedSort(_, col("type_a"), col("type_b")))
+        .orderBy(col("type_a"), col("type_b"))
     },
     Some("""
       WITH pairs AS (
@@ -405,7 +405,7 @@ object IncrQueries {
           count(lit(1)).as("cnt"),
           min(col("x")).as("min_x"), max(col("x")).as("max_x"),
           min(col("y")).as("min_y"), max(col("y")).as("max_y"))
-        .transform(Out.boundedSort(_, col("ztile")))
+        .orderBy(col("ztile"))
     },
     Some(s"""
       WITH pts AS (
@@ -459,7 +459,7 @@ object IncrQueries {
           col("cnt"),
           col("sum_dec").cast(DoubleType).as("sum_total"),
           col("gate_ok"))
-        .transform(Out.boundedSort(_, col("o_orderpriority")))
+        .orderBy(col("o_orderpriority"))
     },
     Some("""
       SELECT o_orderpriority,
@@ -560,7 +560,7 @@ object IncrQueries {
           col("cnt"),
           col("sum_dec").cast(DoubleType).as("sum_total"),
           col("gate_ok"))
-        .transform(Out.boundedSort(_, col("o_orderpriority")))
+        .orderBy(col("o_orderpriority"))
     },
     Some("""
       SELECT o_orderpriority,
@@ -632,7 +632,7 @@ object IncrQueries {
         .select(col("l_returnflag"),
           col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
           col("n_rows"), col("min_qty"), col("max_qty"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     Some("""
       SELECT l_returnflag,
@@ -708,7 +708,7 @@ object IncrQueries {
         .select(col("l_returnflag"),
           col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
           col("n_rows"), col("min_qty"), col("max_qty"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     mvRewrite.oracle)
 
@@ -732,7 +732,7 @@ object IncrQueries {
         .select(col("l_returnflag"),
           col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
           col("n_rows"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     Some("""
       SELECT l_returnflag,
@@ -794,7 +794,7 @@ object IncrQueries {
         .agg(avg(col("l_quantity")).as("avg_qty"),
           count(col("l_quantity")).as("n_vals"),
           count(lit(1)).as("n_rows"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     Some("""
       SELECT l_returnflag,
@@ -867,7 +867,7 @@ object IncrQueries {
         .select(col("l_returnflag"),
           col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
           col("n_rows"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     Some("""
       SELECT l_returnflag,
@@ -940,7 +940,7 @@ object IncrQueries {
         .select(col("l_returnflag"),
           col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
           col("n_rows"), col("min_qty"), col("max_qty"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     mvRewrite.oracle)
 
@@ -1015,7 +1015,7 @@ object IncrQueries {
         .select(col("l_returnflag"),
           col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
           col("n_rows"), col("min_qty"), col("max_qty"))
-        .transform(Out.boundedSort(_, col("l_returnflag")))
+        .orderBy(col("l_returnflag"))
     },
     Some("""
       SELECT l_returnflag,
@@ -1085,7 +1085,7 @@ object IncrQueries {
         .select(col("s_nationkey"),
           col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
           col("n_rows"))
-        .transform(Out.boundedSort(_, col("s_nationkey")))
+        .orderBy(col("s_nationkey"))
     },
     Some("""
       SELECT s.s_nationkey,
@@ -1119,7 +1119,7 @@ object IncrQueries {
           coalesce(col("l_returnflag"), lit("<all>")).as("flag"),
           coalesce(col("l_linestatus"), lit("<all>")).as("status"),
           col("sum_qty"), col("n_rows"), col("avg_qty"))
-        .transform(Out.boundedSort(_, col("flag"), col("status")))
+        .orderBy(col("flag"), col("status"))
     },
     Some("""
       SELECT COALESCE(l_returnflag, '<all>') AS flag,
@@ -1227,7 +1227,7 @@ object IncrQueries {
         .select(col("egroup"),
           col("sum_v_p").cast(DoubleType).as("sum_v"),
           col("cnt_p").as("n_rows"))
-        .transform(Out.boundedSort(_, col("egroup")))
+        .orderBy(col("egroup"))
     },
     Some("""
       WITH t AS (

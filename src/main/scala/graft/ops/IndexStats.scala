@@ -62,7 +62,7 @@ object IndexStats {
         graft.Pq.read(s, s"$sug/delnbr").agg(countDistinct(col("term")))),
       one("suggest", "n_delkeys",
         graft.Pq.read(s, s"$sug/delnbr").agg(count(lit(1)))))
-    Out.boundedSort(frames.reduce(_ unionByName _), col("layout"), col("stat"))
+    frames.reduce(_ unionByName _).orderBy(col("layout"), col("stat"))
   }
 
   /** Index metadata audit, driver-verified: layout-resident statistics

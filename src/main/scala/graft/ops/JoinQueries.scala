@@ -48,7 +48,7 @@ object JoinQueries {
           count(lit(1)).as("cnt"),
           sum(col("l_extendedprice").cast(DecimalType(18, 2)))
             .cast(DecimalType(38, 2)).cast(DoubleType).as("sum_price"))
-        .transform(Out.boundedSort(_, col("n_name"))),
+        .orderBy(col("n_name")),
     Some("""
       SELECT n_name, COUNT(*) AS cnt,
              CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS sum_price
@@ -140,7 +140,7 @@ object JoinQueries {
             .cast(DecimalType(18, 4))).cast(DecimalType(38, 4))
             .cast(DoubleType)
             .as("revenue"))
-        .transform(Out.boundedSort(_, col("r_name"))),
+        .orderBy(col("r_name")),
     Some("""
       SELECT r_name, COUNT(*) AS cnt,
              CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
@@ -188,7 +188,7 @@ object JoinQueries {
             .cast(DecimalType(18, 4))).cast(DecimalType(38, 4))
             .cast(DoubleType)
             .as("revenue"))
-        .transform(Out.boundedSort(_, col("revenue").desc, col("n_name"))),
+        .orderBy(col("revenue").desc, col("n_name")),
     Some("""
       SELECT n_name,
              CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
@@ -271,7 +271,7 @@ object JoinQueries {
         .agg(count(lit(1)).as("cnt"),
           sum(col("p_retailprice").cast(DecimalType(18, 2)))
             .cast(DecimalType(38, 2)).cast(DoubleType).as("sum_price"))
-        .transform(Out.boundedSort(_, col("band")))
+        .orderBy(col("band"))
     },
     Some("""
       SELECT band, COUNT(*) AS cnt,
@@ -394,7 +394,7 @@ object JoinQueries {
           col("n_lines"),
           col("sum_qty").cast(DecimalType(18, 2)).cast(DoubleType)
             .as("sum_qty"))
-        .transform(Out.boundedSort(_, col("o_year")))
+        .orderBy(col("o_year"))
     },
     Some("""
       SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
@@ -426,7 +426,7 @@ object JoinQueries {
         .agg(count(lit(1)).as("n_lines"),
           sum(col("l_quantity").cast(DecimalType(18, 2)))
             .cast(DecimalType(38, 2)).cast(DoubleType).as("sum_qty"))
-        .transform(Out.boundedSort(_, col("s_nationkey"))),
+        .orderBy(col("s_nationkey")),
     Some("""
       SELECT s_nationkey, CAST(COUNT(*) AS BIGINT) AS n_lines,
              CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2)))
@@ -511,7 +511,7 @@ object JoinQueries {
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast(LongType).as("total_chars"))
-        .transform(Out.boundedSort(_, col("source")))
+        .orderBy(col("source"))
     },
     Some("""
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,

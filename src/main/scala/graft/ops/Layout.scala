@@ -98,12 +98,6 @@ private[graft] object Layout {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** The delete-tombstone segment of a persisted layout, if one exists
-    * — ids removed since the last compaction. Bounded by construction:
-    * deletes accumulate only between compactions, which fold them into
-    * the data for real, so the segment stays a broadcast-sized side
-    * table. ONE definition behind every index's serving path (postings,
-    * IVF, IVF-PQ) so the crash-recovery-sensitive pattern cannot fork. */
   /** Cheap content fingerprint of a layout directory: the sorted
     * (name, length, mtime) listing. Used as the staleness component of
     * once-per-process driver caches over SMALL layout components
@@ -124,6 +118,12 @@ private[graft] object Layout {
       .sorted.mkString(",")
   }
 
+  /** The delete-tombstone segment of a persisted layout, if one exists
+    * — ids removed since the last compaction. Bounded by construction:
+    * deletes accumulate only between compactions, which fold them into
+    * the data for real, so the segment stays a broadcast-sized side
+    * table. ONE definition behind every index's serving path (postings,
+    * IVF, IVF-PQ) so the crash-recovery-sensitive pattern cannot fork. */
   def tombstonesOpt(s: SparkSession, path: String): Option[DataFrame] =
     if (dirExists(s, s"$path/tombstones"))
       Some(graft.Pq.read(s, s"$path/tombstones"))

@@ -307,7 +307,7 @@ object NearDup {
         Seq("probe_id"))
       .select(col("probe_id"), col("match_id"), jac.as("jaccard"))
       .where(col("jaccard") >= tau)
-      .transform(Out.boundedSort(_, col("probe_id"), col("match_id")))
+      .orderBy(col("probe_id"), col("match_id"))
   }
 
   /** Per-document ingest VERDICTS for a candidate batch against the
@@ -370,7 +370,7 @@ object NearDup {
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         coalesce(col("best_match_id"), lit(-1L)).as("best_match_id"),
         coalesce(col("best_jaccard"), lit(0.0)).as("best_jaccard"))
-      .transform(Out.boundedSort(_, col("doc_id")))
+      .orderBy(col("doc_id"))
   }
 
   /** One ingest micro-batch, mutation included — the body of

@@ -2,37 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Final-sort shape for BOUNDED results (optimization guide §2.4: "an
-  * orderBy used only to make output deterministic" is an accidental
-  * exchange).
-  *
-  * Nearly every registry query ends in a global `orderBy` so its output
-  * is deterministic. A global sort plans a RANGE EXCHANGE: one sampling
-  * job over the child to pick boundaries, a shuffle, then the sort —
-  * three driver round-trips to order a handful of rows. When the result
-  * is bounded BY CONSTRUCTION — a group-by over a fixed key domain, a
-  * top-K list, a fixed report shape — the scale-correct plan is a
-  * single-partition sort: `coalesce(1)` merges the (already tiny,
-  * AQE-coalesced) final stage into one task and `sortWithinPartitions`
-  * totally orders it with NO exchange and NO sampling job. Row set,
-  * schema, and total order are identical to `orderBy` (all rows sit in
-  * the one partition), so oracle hashes cannot move. Measured on a
-  * bounded lineitem aggregate at sf0.1/local[32]: 0.22 s → 0.16 s min,
-  * 0.24 s → 0.18 s median per query (SortShapeProbe).
-  *
-  * Contract: callers apply this ONLY where the row count is bounded by
-  * the query's construction (group domain, top-K, fixed spine) — never
-  * where the output scales with the corpus (full-table projections,
-  * per-document frames), which keep the distributed range sort.
-  * `coalesce` merges only up to the nearest shuffle boundary, so the
-  * map side of the final aggregation keeps its parallelism at any
-  * scale; only the bounded reduce/sort work lands in the single task.
-  */
+/** Final-sort helpers. A final sort over a small input needs none:
+  * [[graft.plans.FinalSort]] picks its shape from the measured input. */
 private[graft] object Out {
-
-  /** Totally order a bounded frame without a range exchange. */
-  def boundedSort(df: DataFrame, cols: Column*): DataFrame =
-    df.coalesce(1).sortWithinPartitions(cols: _*)
 
   /** Global sort of a CORPUS-SCALED frame over an EXPENSIVE scan.
     *

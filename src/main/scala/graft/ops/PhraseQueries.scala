@@ -511,7 +511,7 @@ object PhraseQueries {
           row_number().over(Window.orderBy(col("score").desc,
             col("doc_id"))).cast(LongType).as("rnk"),
           col("doc_id"), col("n_occ"), col("score"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some("""
       WITH docs AS (
@@ -781,7 +781,7 @@ object PhraseQueries {
         .select(col("rnk"), col("doc_id"), col("score"), col("hit_pos"),
           array_join(slice(col("toks"), (s0 + 1).cast(IntegerType),
             (e0 - s0 + 1).cast(IntegerType)), " ").as("snippet"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some("""
       WITH docs AS (

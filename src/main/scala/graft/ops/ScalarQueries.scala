@@ -47,7 +47,7 @@ object ScalarQueries {
         .filter(col("text").contains("merge"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"))
-        .transform(Out.boundedSort(_, col("lang"))),
+        .orderBy(col("lang")),
     Some("""
       SELECT lang, COUNT(*) AS n_docs
       FROM documents
@@ -64,7 +64,7 @@ object ScalarQueries {
       Tables.events(s, d)
         .groupBy(to_date(col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
-        .transform(Out.boundedSort(_, col("day"), col("event_type"))),
+        .orderBy(col("day"), col("event_type")),
     Some("""
       SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS cnt
       FROM events
@@ -81,7 +81,7 @@ object ScalarQueries {
           year(col("o_orderdate")).cast(LongType).as("yr"),
           month(col("o_orderdate")).cast(LongType).as("mo"))
         .agg(count(lit(1)).as("cnt"))
-        .transform(Out.boundedSort(_, col("yr"), col("mo"))),
+        .orderBy(col("yr"), col("mo")),
     Some("""
       SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
              CAST(month(o_orderdate) AS BIGINT) AS mo,
@@ -137,7 +137,7 @@ object ScalarQueries {
             .as("k_parity"))
         .groupBy("event_type", "k_parity")
         .agg(count(lit(1)).as("cnt"))
-        .transform(Out.boundedSort(_, col("event_type"), col("k_parity"))),
+        .orderBy(col("event_type"), col("k_parity")),
     Some("""
       SELECT event_type,
              CAST(json_extract_string(props, '$.k') AS BIGINT) % 2 AS k_parity,
@@ -187,7 +187,7 @@ object ScalarQueries {
           reverse(col("n_name")).as("reversed"),
           repeat(substring(col("n_name"), 1, 2), 2).as("repeated"),
           instr(col("n_name"), "A").cast(LongType).as("a_pos"))
-        .transform(Out.boundedSort(_, col("n_nationkey"))),
+        .orderBy(col("n_nationkey")),
     Some("""
       SELECT n_nationkey,
              lpad(n_name, 12, '.') AS padded,
@@ -218,7 +218,7 @@ object ScalarQueries {
             .otherwise("UNKNOWN").as("status_desc"))
         .groupBy("flag_desc", "status_desc")
         .agg(count(lit(1)).as("cnt"))
-        .transform(Out.boundedSort(_, col("flag_desc"), col("status_desc"))),
+        .orderBy(col("flag_desc"), col("status_desc")),
     Some("""
       SELECT CASE l_returnflag WHEN 'A' THEN 'ACCEPTED'
                                WHEN 'R' THEN 'RETURNED'
@@ -261,7 +261,7 @@ object ScalarQueries {
           coalesce(col("st_meaning"), lit("UNKNOWN")).as("status_desc"))
         .groupBy("flag_desc", "status_desc")
         .agg(count(lit(1)).as("cnt"))
-        .transform(Out.boundedSort(_, col("flag_desc"), col("status_desc")))
+        .orderBy(col("flag_desc"), col("status_desc"))
     },
     Some(s"""
       WITH flagd(code, meaning) AS (
@@ -297,7 +297,7 @@ object ScalarQueries {
         .select(coalesce(col("meaning"), lit("UNKNOWN")).as("status_desc"))
         .groupBy("status_desc")
         .agg(count(lit(1)).as("cnt"))
-        .transform(Out.boundedSort(_, col("status_desc")))
+        .orderBy(col("status_desc"))
     },
     Some(s"""
       WITH statd(code, meaning) AS (
@@ -356,7 +356,7 @@ object ScalarQueries {
         .select(col("table_name"), col("column_name"), col("n_documented"),
           col("n_present"), col("n_covered"),
           (col("n_present") === col("n_covered")).as("full_coverage"))
-        .transform(Out.boundedSort(_, col("table_name"), col("column_name")))
+        .orderBy(col("table_name"), col("column_name"))
     },
     Some {
       import graft.meta.Annotations
@@ -430,7 +430,7 @@ object ScalarQueries {
         .select(col("form_id"), col("title"),
           col("n_sections").cast(LongType).as("n_sections"),
           coalesce(col("n_reffing_tables"), lit(0L)).as("n_reffing_tables"))
-        .transform(Out.boundedSort(_, col("form_id")))
+        .orderBy(col("form_id"))
     },
     Some {
       import graft.meta.Annotations
@@ -528,7 +528,7 @@ object ScalarQueries {
       spine.join(daily, Seq("day"), "left")
         .select(col("day").cast(StringType).as("day"),
           coalesce(col("cnt"), lit(0L)).as("cnt"))
-        .transform(Out.boundedSort(_, col("day")))
+        .orderBy(col("day"))
     },
     Some("""
       WITH r AS (
@@ -574,7 +574,7 @@ object ScalarQueries {
         .select(col("table_name"), col("n_columns"), col("n_date_cols"),
           col("n_datetime_cols"), col("key_arity"), col("key_head"),
           md5(col("cols_csv")).as("cols_md5"))
-        .transform(Out.boundedSort(_, col("table_name")))
+        .orderBy(col("table_name"))
     },
     Some {
       import graft.schemas.Schemas

@@ -110,7 +110,7 @@ object SortSetQueries {
       Tables.lineitem(s, d)
         .select("l_returnflag", "l_linestatus")
         .distinct()
-        .transform(Out.boundedSort(_, col("l_returnflag"), col("l_linestatus"))),
+        .orderBy(col("l_returnflag"), col("l_linestatus")),
     Some("""
       SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
       ORDER BY l_returnflag, l_linestatus
@@ -158,7 +158,7 @@ object SortSetQueries {
         .withColumn("rn", row_number().over(w).cast(LongType))
         .filter(col("rn") > 20 && col("rn") <= 40)
         .select("rn", "o_orderkey", "o_custkey", "o_totalprice")
-        .transform(Out.boundedSort(_, col("rn")))
+        .orderBy(col("rn"))
     },
     Some("""
       SELECT rn, o_orderkey, o_custkey, o_totalprice
@@ -189,7 +189,7 @@ object SortSetQueries {
         Array(col("l_returnflag")),
         Array(col("sum_qty"), col("sum_price"), col("n_rows")),
         "metric", "value")
-        .transform(Out.boundedSort(_, col("l_returnflag"), col("metric")))
+        .orderBy(col("l_returnflag"), col("metric"))
     },
     Some("""
       WITH wide AS (

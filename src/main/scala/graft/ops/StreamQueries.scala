@@ -23,7 +23,7 @@ object StreamQueries {
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
         .select(col("window.start").as("ws"), col("event_type"), col("cnt"))
-        .transform(Out.boundedSort(_, col("ws"), col("event_type"))),
+        .orderBy(col("ws"), col("event_type")),
     Some("""
       SELECT date_trunc('hour', ts) AS ws, event_type, COUNT(*) AS cnt
       FROM events
@@ -41,7 +41,7 @@ object StreamQueries {
         .groupBy(window(col("ts"), "1 hour", "30 minutes"))
         .agg(count(lit(1)).as("cnt"))
         .select(col("window.start").as("ws"), col("cnt"))
-        .transform(Out.boundedSort(_, col("ws"))),
+        .orderBy(col("ws")),
     Some("""
       SELECT ws, COUNT(*) AS cnt
       FROM (
@@ -127,7 +127,7 @@ object StreamQueries {
           sum(when(col("late"), 1L).otherwise(0L)).as("cnt_late"))
         .select(col("window.start").as("ws"),
           col("cnt_accepted"), col("cnt_late"))
-        .transform(Out.boundedSort(_, col("ws")))
+        .orderBy(col("ws"))
     },
     Some("""
       WITH ev AS (

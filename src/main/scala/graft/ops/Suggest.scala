@@ -128,7 +128,7 @@ object Suggest {
     cand.withColumn("rnk", row_number().over(w).cast(LongType))
       .where(col("rnk") <= k)
       .select(col("query"), col("rnk"), col("term"), col("df"))
-      .transform(Out.boundedSort(_, col("query"), col("rnk")))
+      .orderBy(col("query"), col("rnk"))
   }
 
   /** Incremental growth of the suggest index: the new batch's partial
@@ -297,7 +297,7 @@ object Suggest {
       .where(col("rnk") <= k)
       .select(col("query"), col("rnk"), col("term"), col("dist"),
         col("df"))
-      .transform(Out.boundedSort(_, col("query"), col("rnk")))
+      .orderBy(col("query"), col("rnk"))
   }
 
   private val suggest2Saved =
@@ -506,7 +506,7 @@ object Suggest {
           row_number().over(Window.orderBy(col("df").desc, col("term")))
             .cast(LongType).as("rnk"),
           col("term"), col("df"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some("""
       WITH terms AS (

@@ -31,7 +31,7 @@ object TextQueries {
       toks.withColumn("rn", row_number().over(w).cast(LongType))
         .filter(col("rn") <= 5)
         .select("lang", "token", "cnt", "rn")
-        .transform(Out.boundedSort(_, col("lang"), col("rn")))
+        .orderBy(col("lang"), col("rn"))
     },
     Some("""
       SELECT lang, token, cnt, rn
@@ -246,7 +246,7 @@ object TextQueries {
       bigrams.withColumn("rn", row_number().over(wr).cast(LongType))
         .filter(col("rn") <= 3)
         .select("lang", "bigram", "cnt", "rn")
-        .transform(Out.boundedSort(_, col("lang"), col("rn")))
+        .orderBy(col("lang"), col("rn"))
     },
     Some("""
       WITH toks AS (
@@ -333,7 +333,7 @@ object TextQueries {
         .select(col("lang"), col("doc_id"))
         .withColumn("rk", row_number().over(w).cast(LongType))
         .where(col("rk") <= 20)
-        .transform(Out.boundedSort(_, col("lang"), col("rk")))
+        .orderBy(col("lang"), col("rk"))
     },
     Some("""
       SELECT lang, doc_id, rk
@@ -567,8 +567,11 @@ object TextQueries {
     * back onto it. The vocab exchange is built once and REUSED by both
     * consumers (pinned in PlanSpec), so neither the corpus nor the
     * vocab is read twice; unlike a `Window.partitionBy(lit(0))` total,
-    * no step funnels the whole |vocab| through a single partition —
-    * the filter stays fully parallel even at a billion-token vocab). */
+    * no step funnels the whole |vocab| through a single partition: the
+    * final sort runs in one task only while the vocab shuffle is below
+    * [[graft.plans.FinalSort]]'s size bound; past it the vocab reduce
+    * and the filter stay parallel and a range sort orders the survivors,
+    * even at a billion-token vocab). */
   val heavyHitters = GQuery(
     "heavy_hitters",
     (s, d) => {
@@ -579,7 +582,7 @@ object TextQueries {
       tf.crossJoin(broadcast(total))
         .filter(col("cnt") > col("total") / 200)
         .select(col("token"), col("cnt"))
-        .transform(Out.boundedSort(_, col("cnt").desc, col("token")))
+        .orderBy(col("cnt").desc, col("token"))
     },
     Some("""
       WITH tf AS (
@@ -640,7 +643,7 @@ object TextQueries {
         .filter(col("cnt") > col("total") / 200)
         .select(col("token"), col("cnt"),
           col("token").isin(cand: _*).as("in_sketch"))
-        .transform(Out.boundedSort(_, col("cnt").desc, col("token")))
+        .orderBy(col("cnt").desc, col("token"))
     },
     Some("""
       WITH tf AS (
@@ -762,7 +765,7 @@ object TextQueries {
         row_number().over(Window.orderBy(col("score").desc,
           col("doc_id"))).cast(LongType).as("rnk"),
         col("doc_id"), col("n_terms"), col("score"))
-      .transform(Out.boundedSort(_, col("rnk")))
+      .orderBy(col("rnk"))
   }
 
   val bm25Search = GQuery(
@@ -1495,7 +1498,7 @@ object TextQueries {
           col("doc_id"))) + lit(5)).cast(LongType).as("rnk"),
         col("doc_id"), col("n_terms"),
         col("score_dec").cast(DoubleType).as("score"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     // the full ranking's rows 6–10 — keyset page 2 must equal them
     Some("""
@@ -1660,7 +1663,7 @@ object TextQueries {
         1L -> Seq("spark", "merge"),
         2L -> Seq("filter"),
         3L -> Seq("spark", "filter", "query")), topK = 5)
-      .transform(Out.boundedSort(_, col("query_id"), col("rnk"))),
+      .orderBy(col("query_id"), col("rnk")),
     Some("""
       WITH q(query_id, term) AS (VALUES
         (CAST(1 AS BIGINT), 'spark'), (1, 'merge'),
@@ -1735,7 +1738,7 @@ object TextQueries {
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("cnt"),
           min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
-        .transform(Out.boundedSort(_, col("bin")))
+        .orderBy(col("bin"))
     },
     Some("""
       WITH cuts AS (
@@ -1935,7 +1938,7 @@ object TextQueries {
           row_number().over(Window.orderBy(col("tf_total").desc,
             col("doc_id"))).cast(LongType).as("rnk"),
           col("doc_id"), col("n_terms"), col("tf_total"))
-        .transform(Out.boundedSort(_, col("rnk")))
+        .orderBy(col("rnk"))
     },
     Some("""
       WITH pairs AS (
@@ -2015,7 +2018,7 @@ object TextQueries {
           when(col("gid") === 1, col("lang")).otherwise(col("source"))
             .as("value"),
           col("n_docs"))
-        .transform(Out.boundedSort(_, col("facet"), col("value")))
+        .orderBy(col("facet"), col("value"))
     },
     Some("""
       WITH m AS (

@@ -120,7 +120,7 @@ object VectorQueries {
     * [[bruteTopK]]. */
   val simTopk = GQuery(
     "sim_topk",
-    (s, d) => Out.boundedSort(bruteTopK(s, d, topK = 5), col("rnk")),
+    (s, d) => bruteTopK(s, d, topK = 5).orderBy(col("rnk")),
     Some("""
       WITH probe AS (SELECT embedding AS probe_emb FROM embeddings WHERE vec_id = 0),
       sims AS (
@@ -185,7 +185,7 @@ object VectorQueries {
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_vecs"),
           min(col("vec_id")).as("min_vec"))
-        .transform(Out.boundedSort(_, col("bucket")))
+        .orderBy(col("bucket"))
     },
     Some("""
       SELECT array_to_string(list_transform(embedding[1:8],
@@ -350,7 +350,7 @@ object VectorQueries {
       .select(col("rnk"), col("neighbor_id"),
         (sum(coalesce(col("hit"), lit(0L)))
           .over(Window.partitionBy()) >= minHits).as("recall_ok"))
-      .transform(Out.boundedSort(_, col("rnk")))
+      .orderBy(col("rnk"))
   }
 
   private def ivfWithRecall(s: org.apache.spark.sql.SparkSession, d: String,
@@ -1101,7 +1101,7 @@ object VectorQueries {
       .select(col("probe_id"), col("rnk"), col("neighbor_id"),
         (sum(coalesce(col("hit"), lit(0L)))
           .over(Window.partitionBy(col("probe_id"))) >= 3).as("recall_ok"))
-      .transform(Out.boundedSort(_, col("probe_id"), col("rnk")))
+      .orderBy(col("probe_id"), col("rnk"))
   }
 
   /** DuckDB twin of [[perProbeRecallAnchored]]. Lazy: referenced by
@@ -1526,7 +1526,7 @@ object VectorQueries {
         .withColumn("rnk", row_number().over(w).cast(LongType))
         .filter(col("rnk") <= 3)
         .select(col("probe_id"), col("rnk"), col("neighbor_id"))
-        .transform(Out.boundedSort(_, col("probe_id"), col("rnk")))
+        .orderBy(col("probe_id"), col("rnk"))
     },
     Some("""
       WITH probes AS (

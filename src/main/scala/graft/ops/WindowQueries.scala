@@ -49,7 +49,7 @@ object WindowQueries {
         .withColumn("rnk", rank().over(w).cast(LongType))
         .filter(col("rnk") <= 5)
         .select("p_brand", "p_partkey", "p_retailprice", "rnk")
-        .transform(Out.boundedSort(_, col("p_brand"), col("rnk"), col("p_partkey")))
+        .orderBy(col("p_brand"), col("rnk"), col("p_partkey"))
     },
     Some("""
       SELECT p_brand, p_partkey, p_retailprice, rnk
@@ -121,7 +121,7 @@ object WindowQueries {
         .filter(col("rn") <= 5)
         .select("l_returnflag", "l_linestatus", "l_orderkey", "l_linenumber",
           "l_extendedprice", "rn")
-        .transform(Out.boundedSort(_, col("l_returnflag"), col("l_linestatus"), col("rn")))
+        .orderBy(col("l_returnflag"), col("l_linestatus"), col("rn"))
     },
     Some("""
       SELECT l_returnflag, l_linestatus, l_orderkey, l_linenumber, l_extendedprice, rn
@@ -148,7 +148,7 @@ object WindowQueries {
           ntile(4).over(w).cast(LongType).as("quartile"),
           percent_rank().over(w).as("pct_rank"),
           cume_dist().over(w).as("cume"))
-        .transform(Out.boundedSort(_, col("o_orderpriority"), col("o_orderkey")))
+        .orderBy(col("o_orderpriority"), col("o_orderkey"))
     },
     Some("""
       SELECT o_orderpriority, o_orderkey,
@@ -178,7 +178,7 @@ object WindowQueries {
           first(col("event_id")).over(w).as("first_id"),
           last(col("event_id")).over(w).as("last_id"),
           nth_value(col("event_id"), 2).over(w).as("second_id"))
-        .transform(Out.boundedSort(_, col("event_type"), col("event_id")))
+        .orderBy(col("event_type"), col("event_id"))
     },
     Some("""
       SELECT event_type, event_id,

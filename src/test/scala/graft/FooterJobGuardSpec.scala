@@ -3,33 +3,50 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A bare `read.parquet(…)` infers its schema through a Spark job. Engine
-  * code reads parquet through [[Pq.read]] (driver footer, memoized) or
-  * with an explicit `.schema(…)`; this scan keeps footer jobs from
-  * creeping back. `tools/` and `Bench.scala` are exempt. */
+/** Source scans that keep hand-rolled plan shapes out of engine code.
+  * `tools/` is exempt from both. */
 class FooterJobGuardSpec extends AnyFunSuite {
 
-  test("engine code has no bare read.parquet( outside Pq.scala") {
-    val base = Paths.get("src/main/scala/graft")
+  private val base = Paths.get("src/main/scala/graft")
+
+  /** Engine files (relative to `base`, outside `tools/` and `exempt`)
+    * whose code — comments stripped — matches `pattern`. */
+  private def offenders(pattern: Regex, exempt: Set[String]): Seq[String] = {
     assert(Files.isDirectory(base), s"${base.toAbsolutePath} not found")
-    val bare = "read\\s*\\.\\s*parquet\\(".r
-    val offenders = Files.walk(base).iterator().asScala
+    Files.walk(base).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot { p =>
-        val rel = base.relativize(p).toString
-        rel.startsWith("tools/") || rel == "Bench.scala" || rel == "Pq.scala"
-      }
-      .flatMap { p =>
+      .map(p => (p, base.relativize(p).toString))
+      .filterNot { case (_, rel) => rel.startsWith("tools/") || exempt(rel) }
+      .flatMap { case (p, rel) =>
         // comments may name the call; code may not
         val code = Files.readAllLines(p).asScala.map(_.replaceAll("//.*", ""))
           .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/*"))
           .mkString("\n")
-        bare.findAllMatchIn(code).map(_ => base.relativize(p).toString)
+        pattern.findAllMatchIn(code).map(_ => rel)
       }
       .toSeq
-    assert(offenders.isEmpty, s"bare read.parquet( in: ${offenders.mkString(", ")}")
+  }
+
+  /** A bare `read.parquet(…)` infers its schema through a Spark job.
+    * Engine code reads parquet through [[Pq.read]] (driver footer,
+    * memoized) or with an explicit `.schema(…)`. */
+  test("engine code has no bare read.parquet( outside Pq.scala") {
+    val found = offenders("read\\s*\\.\\s*parquet\\(".r,
+      Set("Bench.scala", "Pq.scala"))
+    assert(found.isEmpty, s"bare read.parquet( in: ${found.mkString(", ")}")
+  }
+
+  /** `graft.plans.FinalSort` picks the single-partition final sort from
+    * the measured input; a hand-written `coalesce(1)` +
+    * `sortWithinPartitions` would fix that shape at any scale. */
+  test("engine code has no hand-rolled coalesce(1).sortWithinPartitions") {
+    val found = offenders(
+      "coalesce\\(\\s*1\\s*\\)\\s*\\.\\s*sortWithinPartitions".r, Set.empty)
+    assert(found.isEmpty,
+      s"coalesce(1).sortWithinPartitions in: ${found.mkString(", ")}")
   }
 }

@@ -131,4 +131,34 @@ class PqReadSpec extends SparkTestBase {
     rows(0L).write.mode("overwrite").parquet(none)
     assert(Pq.rows(spark, none) === 0L)
   }
+
+  test("past its cap the memo evicts its eldest entries, not all of them") {
+    val src = s"$root/evict"
+    rows(6L).write.mode("overwrite").parquet(src)
+    // copies, not links: their data files are overwritten below
+    def copy(): String = {
+      val to = Files.createTempDirectory("pqevict")
+      Files.list(Paths.get(src)).forEach { (p: Path) =>
+        if (p.getFileName.toString.startsWith("part-"))
+          Files.copy(p, to.resolve(p.getFileName))
+      }
+      to.toString
+    }
+    val (eldest, recent) = (copy(), copy())
+    val schema = Pq.read(spark, eldest).schema
+    val filler = (1 to Pq.MaxEntries).map(i => Seq((s"filler-$i", 0L, 0L)))
+    filler.foreach(Pq.memo.put(_, schema))
+    assert(Pq.read(spark, recent).schema === schema)
+    assert(Pq.memo.size === Pq.MaxEntries)
+    // same length, no footer: only a read that skips the footer succeeds;
+    // the directory stamps (the memo keys) do not change
+    for (d <- Seq(eldest, recent))
+      Files.list(Paths.get(d)).forEach { (p: Path) =>
+        Files.write(p, new Array[Byte](Files.size(p).toInt))
+      }
+    try {
+      assert(Pq.read(spark, recent).schema === schema)
+      intercept[Exception](Pq.read(spark, eldest).schema)
+    } finally filler.foreach(Pq.memo.remove)
+  }
 }

@@ -13,10 +13,16 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = GraftSession.builder(4)
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val s = GraftSession.builder(4)
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .getOrCreate()
+    // as GraftSession.local: a failing suite's tail shows its assertion,
+    // not Spark's INFO log
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
