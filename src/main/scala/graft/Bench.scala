@@ -134,8 +134,10 @@ object Bench {
     val nErr = results.count(_._3.isDefined)
     // ONE stdout line; headline keys at the END so the driver's bounded
     // (2000-byte) tail capture preserves them past the per-query map.
-    val full = s"""{"reps":$reps,"fast_reps":$fastReps,"queries":$qs,"errors":$errs,"n":${results.size},"errors_n":$nErr,"sf":"$sfDir","metric":"total","unit":"sec","total_s":${jnum(total)},"value":${jnum(total)}}"""
-    val compact = s"""{"total_s":${jnum(total)},"n":${results.size},"errors_n":$nErr,"reps":$reps,"sf":"$sfDir"}"""
+    // `cpus` and `default_parallelism` say what the run had to scale on.
+    val par = spark.sparkContext.defaultParallelism
+    val full = s"""{"reps":$reps,"fast_reps":$fastReps,"cpus":$cpus,"default_parallelism":$par,"queries":$qs,"errors":$errs,"n":${results.size},"errors_n":$nErr,"sf":"$sfDir","metric":"total","unit":"sec","total_s":${jnum(total)},"value":${jnum(total)}}"""
+    val compact = s"""{"total_s":${jnum(total)},"n":${results.size},"errors_n":$nErr,"reps":$reps,"cpus":$cpus,"default_parallelism":$par,"sf":"$sfDir"}"""
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
       "/root/repo/bench_full_latest.json")
     val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY",

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * per-subspace argmin-L2 code array, all `m` subspaces in ONE pass.
   *
   * WHY a custom Expression (SURVEY §2.11 preference order): the
-  * composition form (`Pq.codesExpr` — an `aggregate` fold over an array
+  * composition form (`ProductQuant.codesExpr` — an `aggregate` fold over an array
   * of per-centroid struct literals) is correct but its generated code
   * grows with m · codes · dsub inlined literals. At the corpus-scaled
   * codebook sizes `codesFor` now picks (256 codes at 20k vectors) that
@@ -25,15 +25,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * loop is tight primitive arithmetic — no struct allocation, no
   * per-centroid Column machinery. `PqEncodeSpec` pins it bit-equal to
   * the composition (same distance form, same strict-< lowest-code
-  * tie-break); `Pq.train`/`Pq.build`/`Ivfpq.build` all encode through
+  * tie-break); `ProductQuant.train`/`ProductQuant.build`/`Ivfpq.build` all encode through
   * it.
   *
-  * Distance matches `Pq.argminCode` exactly: per centroid c,
+  * Distance matches `ProductQuant.argminCode` exactly: per centroid c,
   * d = ||c||² − 2⟨sub, c⟩ (the row's own ||sub||² is constant per row
   * and dropped), ||c||² precomputed once per codebook at construction
   * in the same left-fold order the literal form used. Strict `<` keeps
   * the LOWEST code on exact ties. Input must be the unit-normalized
-  * array<double> (`Pq.unit`); null array → null, elements are assumed
+  * array<double> (`ProductQuant.unit`); null array → null, elements are assumed
   * non-null (the normalizer's output).
   */
 case class PqEncode(child: Expression, books: Array[Array[Array[Double]]])
@@ -108,7 +108,7 @@ object PqEncode {
   }
 
   /** Column API entry point: `unitEmb` MUST already be unit-normalized
-    * array<double> (`Pq.unit`). */
+    * array<double> (`ProductQuant.unit`). */
   def pqEncode(unitEmb: Column, books: Seq[Seq[Seq[Double]]]): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(PqEncode(Bridge.expression(unitEmb),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Native per-probe ADC lookup-table builder: unit-normalized probe →
   * array<array<double>> where LUT(i)(c) = squared L2 from the probe's
   * i-th subvector to code c's centroid — the executor-side twin of the
-  * driver's `Pq.lutsFor`, computed once per PROBE ROW so an unbounded
+  * driver's `ProductQuant.lutsFor`, computed once per PROBE ROW so an unbounded
   * probe table can ADC-score candidates without any driver LUTs
   * (`Ivfpq.knnJoin`).
   *
@@ -26,11 +26,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * call at any codebook size and the table fills in a tight primitive
   * loop.
   *
-  * Fold order matches `Pq.lutsFor` exactly — ascending j, acc + (x−y)²
+  * Fold order matches `ProductQuant.lutsFor` exactly — ascending j, acc + (x−y)²
   * from 0.0 — so ADC values (and therefore shortlists and final ranks)
   * are bit-identical across the driver-LUT path (`Ivfpq.search`), the
   * literal composition, and this kernel (`KnnJoinPqSpec` pins all
-  * three). Input must be the unit-normalized array<double> (`Pq.unit`);
+  * three). Input must be the unit-normalized array<double> (`ProductQuant.unit`);
   * null array → null, elements assumed non-null (the normalizer's
   * output).
   */
@@ -69,7 +69,7 @@ object PqLut {
 
   /** One-pass kernel, shared by interpreted eval and generated code:
     * LUT(i)(c) = Σ_j (probe(off+j) − book(i)(c)(j))², accumulated in
-    * ascending j from 0.0 — `Pq.lutsFor`'s exact fold order. */
+    * ascending j from 0.0 — `ProductQuant.lutsFor`'s exact fold order. */
   def compute(arr: ArrayData, books: Array[Array[Array[Double]]]): ArrayData = {
     val m = books.length
     val out = new Array[ArrayData](m)
@@ -100,7 +100,7 @@ object PqLut {
   }
 
   /** Column API entry point: `unitEmb` MUST already be unit-normalized
-    * array<double> (`Pq.unit`). */
+    * array<double> (`ProductQuant.unit`). */
   def pqLut(unitEmb: Column, books: Seq[Seq[Seq[Double]]]): Column = {
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(PqLut(Bridge.expression(unitEmb),

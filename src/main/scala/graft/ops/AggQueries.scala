@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{GQuery, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -659,14 +659,14 @@ object AggQueries {
     * rows; no WHERE clause and no row-group filtering, the conditions
     * under which footer stats are exact. Values are plain
     * integer/double min/max/count — exact on both engines, no rounding
-    * discipline needed. */
+    * discipline needed. The child session is built once per parent
+    * session ([[pushdownSession]]); its executions are its own, so a
+    * `QueryExecutionListener` registered on the caller's session does
+    * not see them. */
   val aggPushdown = GQuery(
     "agg_pushdown",
     (s, d) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.sources.useV1SourceList", "")
-      s2.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      Tables.orders(s2, d)
+      Tables.orders(pushdownSession(s), d)
         .agg(count(lit(1)).as("n_rows"),
           min(col("o_orderkey")).as("min_key"),
           max(col("o_orderkey")).as("max_key"),
@@ -681,6 +681,19 @@ object AggQueries {
              MAX(o_totalprice) AS max_price
       FROM orders
     """))
+
+  /** `agg_pushdown`'s child session of each parent session, built on
+    * first use and held weakly: it goes when its parent does. */
+  private val pushdownSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  private def pushdownSession(s: SparkSession): SparkSession =
+    pushdownSessions.computeIfAbsent(s, (p: SparkSession) => {
+      val c = p.newSession()
+      c.conf.set("spark.sql.sources.useV1SourceList", "")
+      c.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+      c
+    })
 
   def all: Seq[GQuery] = Seq(aggCount, aggGroup, aggMinmax, aggDistinct,
     aggApproxDistinct, aggAvg, aggRollup, aggCube, aggConditional, aggPivot,

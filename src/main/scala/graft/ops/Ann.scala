@@ -74,9 +74,9 @@ object Ann {
     * sort, so a single zero-norm row would claim the top rank of every
     * search. The guard pins such rows to sim = −1 (below any real
     * cosine), i.e. "matches nothing", which is the documented contract
-    * ([[Pq.unit]]) — now enforced at scoring time in every search path
+    * ([[ProductQuant.unit]]) — now enforced at scoring time in every search path
     * (query / knnJoin / serveBatch here, and the re-ranks in
-    * [[Pq.search]] / [[Ivfpq.search]]). */
+    * [[ProductQuant.search]] / [[Ivfpq.search]]). */
   private[ops] def guardedSim(emb: Column, probeEmb: Column,
       probeNorm: Column): Column = {
     val n = norm(emb)

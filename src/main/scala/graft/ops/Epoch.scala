@@ -55,10 +55,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * like Iceberg snapshot expiry — size `keep` to the longest query.
   *
   * Adoption map: postings ([[EpochPostings]]), positional phrase
-  * ([[EpochPositional]]), suggest ([[EpochSuggest]]), float IVF
-  * ([[EpochAnn]]), and materialized views ([[graft.plans.EpochMv]])
-  * serve from epochs; hybrid retrieval composes the epoch postings +
-  * IVF faces. The NEAR-DUP tier deliberately stays on the
+  * ([[EpochPositional]]), suggest ([[EpochSuggest]]) and float IVF
+  * ([[EpochAnn]]) serve from epochs beside their swap layouts;
+  * materialized views are epoch-only ([[graft.plans.EpochMv]] is the
+  * one way a view is built and maintained); hybrid retrieval composes
+  * the epoch postings + IVF faces. The NEAR-DUP tier deliberately stays on the
   * [[Layout.replaceDir]] swap discipline: its ingest gate is a
   * read-your-own-writes loop (each micro-batch's verdicts must see the
   * segments the PREVIOUS batch appended, and `ingestVerdicts` replay

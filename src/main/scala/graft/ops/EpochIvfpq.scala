@@ -178,7 +178,7 @@ object EpochIvfpq {
     Ann.assign(batch, centroidsOf(s, path, m), "vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), col("cell"),
         graft.functions.PqEncode.pqEncode(
-          Pq.unit(col("embedding")), books).as("codes"))
+          ProductQuant.unit(col("embedding")), books).as("codes"))
   }
 
   /** Tombstone-delete under `del_<batchId>`; ids absent from the

@@ -579,32 +579,34 @@ object IncrQueries {
   private val mvSaved =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
+  // the partials the registry's lineitem views store
+  private val SumQtyP = graft.plans.MatView.AggSpec("sum", "l_quantity",
+    Some(DecimalType(38, 2)), "sum_qty_p")
+  private val CntP = graft.plans.MatView.AggSpec("count", "", None, "cnt_p")
+  private val MinQtyP =
+    graft.plans.MatView.AggSpec("min", "l_quantity", None, "min_qty_p")
+  private val MaxQtyP =
+    graft.plans.MatView.AggSpec("max", "l_quantity", None, "max_qty_p")
+  private val FlagStatus = Seq("l_returnflag", "l_linestatus")
+
+  /** The view over `base` at layout root `<scratch>/<prefix>_view_<tag>`. */
+  private def mvDefOf(base: String, prefix: String, tag: String,
+      groupCols: Seq[String], aggs: graft.plans.MatView.AggSpec*)
+      : graft.plans.EpochMv.EpochMvDef =
+    graft.plans.EpochMv.EpochMvDef(base,
+      s"${graft.GraftSession.scratchDir}/${prefix}_view_$tag",
+      groupCols, aggs)
+
   private[ops] def savedMvBasePath(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     graft.BuildOnce.memo(mvSaved, d) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"${graft.GraftSession.scratchDir}/mv_base_$tag"
-      val mv = s"${graft.GraftSession.scratchDir}/mv_view_$tag"
       Tables.lineitem(s, d)
         .select("l_quantity", "l_returnflag", "l_linestatus")
         .write.mode("overwrite").parquet(base)
-      graft.Pq.read(s, base)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast(DecimalType(38, 2)))
-          .as("sum_qty_p"),
-          count(lit(1)).as("cnt_p"),
-          min(col("l_quantity")).as("min_qty_p"),
-          max(col("l_quantity")).as("max_qty_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(graft.plans.MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"),
-          graft.plans.MatView.AggSpec("min", "l_quantity", None,
-            "min_qty_p"),
-          graft.plans.MatView.AggSpec("max", "l_quantity", None,
-            "max_qty_p"))))
+      graft.plans.EpochMv.create(s, mvDefOf(base, "mv", tag, FlagStatus,
+        SumQtyP, CntP, MinQtyP, MaxQtyP))
       base
     }
 
@@ -645,10 +647,10 @@ object IncrQueries {
       ORDER BY l_returnflag
     """))
 
-  /** Base copy built on the EVEN half, view registered, then the odd
-    * half appended to the base AND merged into the view through
-    * [[graft.plans.MatView.refresh]] — the grown-warehouse state
-    * `mv_refresh` queries. */
+  /** Base copy built on the EVEN half, view created as generation 0,
+    * then the odd half appended to the base AND merged into the view as
+    * generation 1 through [[graft.plans.EpochMv.refresh]] — the
+    * grown-warehouse state `mv_refresh` and `mv_refresh_epoch` query. */
   private val mvRefreshSaved =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -657,33 +659,18 @@ object IncrQueries {
     graft.BuildOnce.memo(mvRefreshSaved, d) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"${graft.GraftSession.scratchDir}/mvr_base_$tag"
-      val mv = s"${graft.GraftSession.scratchDir}/mvr_view_$tag"
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_returnflag",
           "l_linestatus")
       li.where(col("l_orderkey") % 2 === 0)
         .write.mode("overwrite").parquet(base)
-      graft.Pq.read(s, base)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast(DecimalType(38, 2)))
-          .as("sum_qty_p"),
-          count(lit(1)).as("cnt_p"),
-          min(col("l_quantity")).as("min_qty_p"),
-          max(col("l_quantity")).as("max_qty_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(graft.plans.MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"),
-          graft.plans.MatView.AggSpec("min", "l_quantity", None,
-            "min_qty_p"),
-          graft.plans.MatView.AggSpec("max", "l_quantity", None,
-            "max_qty_p"))))
+      val mv = mvDefOf(base, "mvr", tag, FlagStatus,
+        SumQtyP, CntP, MinQtyP, MaxQtyP)
+      graft.plans.EpochMv.create(s, mv)
       val delta = li.where(col("l_orderkey") % 2 === 1)
         .localCheckpoint(true)
       delta.write.mode("append").parquet(base)
-      graft.plans.MatView.refresh(s, base, delta)
+      graft.plans.EpochMv.refresh(s, mv, delta, batchId = 1L)
       base
     }
 
@@ -757,23 +744,15 @@ object IncrQueries {
     graft.BuildOnce.memo(mvAvgSaved, d) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"${graft.GraftSession.scratchDir}/mva_base_$tag"
-      val mv = s"${graft.GraftSession.scratchDir}/mva_view_$tag"
       Tables.lineitem(s, d)
         .select("l_quantity", "l_returnflag", "l_linestatus")
         .write.mode("overwrite").parquet(base)
-      graft.Pq.read(s, base)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity")).as("sum_qty_p"),
-          count(col("l_quantity")).as("cntq_p"),
-          count(lit(1)).as("cnt_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(graft.plans.MatView.AggSpec("sum", "l_quantity", None,
-            "sum_qty_p"),
-          graft.plans.MatView.AggSpec("count", "l_quantity", None,
-            "cntq_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"))))
+      graft.plans.EpochMv.create(s, mvDefOf(base, "mva", tag, FlagStatus,
+        graft.plans.MatView.AggSpec("sum", "l_quantity", None,
+          "sum_qty_p"),
+        graft.plans.MatView.AggSpec("count", "l_quantity", None,
+          "cntq_p"),
+        CntP))
       base
     }
 
@@ -806,10 +785,10 @@ object IncrQueries {
       ORDER BY l_returnflag
     """))
 
-  /** Base copy + sum/count view (NO min/max — those partials refuse
-    * deletes), then a takedown slice removed from BOTH the base table
-    * and the view via [[graft.plans.MatView.refreshDelete]]'s negated
-    * partials. */
+  /** Base copy + sum/count view (NO min/max — those partials take the
+    * recount path), then a takedown slice removed from BOTH the base
+    * table and the view via [[graft.plans.EpochMv.refreshDelete]]'s
+    * negated partials. */
   private val mvDelSaved =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -818,22 +797,12 @@ object IncrQueries {
     graft.BuildOnce.memo(mvDelSaved, d) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"${graft.GraftSession.scratchDir}/mvd_base_$tag"
-      val mv = s"${graft.GraftSession.scratchDir}/mvd_view_$tag"
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_returnflag",
           "l_linestatus")
       li.write.mode("overwrite").parquet(base)
-      graft.Pq.read(s, base)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast(DecimalType(38, 2)))
-          .as("sum_qty_p"),
-          count(lit(1)).as("cnt_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(graft.plans.MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"))))
+      val mv = mvDefOf(base, "mvd", tag, FlagStatus, SumQtyP, CntP)
+      graft.plans.EpochMv.create(s, mv)
       // the takedown: materialize the doomed rows BEFORE rewriting the
       // base they're computed from (the lazy-segment trap), shrink the
       // base, negative-merge the view
@@ -842,7 +811,7 @@ object IncrQueries {
         .localCheckpoint(true)
       graft.ops.Layout.replaceDir(s,
         graft.Pq.read(s, base).where(col("l_orderkey") % 3 =!= 0), base)
-      graft.plans.MatView.refreshDelete(s, base, doomed)
+      graft.plans.EpochMv.refreshDelete(s, mv, doomed, batchId = 1L)
       base
     }
 
@@ -854,7 +823,8 @@ object IncrQueries {
     * aggregate over the survivors. Exact decimal/long subtraction
     * makes delete-refresh ≡ survivors-rebuild; cells whose row count
     * reaches 0 drop out entirely (`MatViewSpec` pins the cell-drop and
-    * that min/max views REFUSE the delete by name). */
+    * that a view without a COUNT(*) partial REFUSES the delete by
+    * name). */
   val mvRefreshDelete = GQuery(
     "mv_refresh_delete",
     (s, d) => {
@@ -879,73 +849,12 @@ object IncrQueries {
       ORDER BY l_returnflag
     """))
 
-  /** EPOCH-MV state: base built on the even half, the view created as
-    * manifest generation 0, base grown to full, the view refreshed as
-    * generation 1 through [[graft.plans.EpochMv.refresh]] — every flip
-    * one atomic manifest rename + one atomic catalog swap, no
-    * maintenance window. */
-  private val mvEpochSaved =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[ops] def savedMvEpochBasePath(
-      s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.BuildOnce.memo(mvEpochSaved, d) {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"${graft.GraftSession.scratchDir}/mvre_base_$tag"
-      val layout = s"${graft.GraftSession.scratchDir}/mvre_layout_$tag"
-      val li = Tables.lineitem(s, d)
-        .select("l_orderkey", "l_quantity", "l_returnflag",
-          "l_linestatus")
-      li.where(col("l_orderkey") % 2 === 0)
-        .write.mode("overwrite").parquet(base)
-      val d0 = graft.plans.EpochMv.EpochMvDef(base, layout,
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(graft.plans.MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"),
-          graft.plans.MatView.AggSpec("min", "l_quantity", None,
-            "min_qty_p"),
-          graft.plans.MatView.AggSpec("max", "l_quantity", None,
-            "max_qty_p")))
-      graft.plans.EpochMv.create(s, d0)
-      val delta = li.where(col("l_orderkey") % 2 === 1)
-        .localCheckpoint(true)
-      delta.write.mode("append").parquet(base)
-      graft.plans.EpochMv.refresh(s, d0, delta, batchId = 1L)
-      base
-    }
-
-  /** Serve-safe view maintenance, driver-verified end to end: the
-    * warehouse grows by a delta batch, the EPOCH-layout view merges
-    * the delta's partials into a NEW manifest generation (the same
-    * merge frames as `mv_refresh` — the arithmetic is shared), the
-    * Catalyst rewrite atomically re-points at the fresh generation,
-    * and the rollup through it must hash-match the from-scratch
-    * aggregate over the grown table. Identical oracle to `mv_refresh`:
-    * the layout change (swap → manifest flip) must be invisible in
-    * the served answer — what changed is that a concurrent reader
-    * never needed a maintenance window (`EpochMvSpec` pins the atomic
-    * catalog swap and pinned-generation reads). */
-  val mvRefreshEpoch = GQuery(
-    "mv_refresh_epoch",
-    (s, d) => {
-      val base = savedMvEpochBasePath(s, d)
-      graft.Pq.read(s, base)
-        .groupBy(col("l_returnflag"))
-        .agg(sum(col("l_quantity").cast(DecimalType(38, 2)))
-          .as("sum_qty_dec"),
-          count(lit(1)).as("n_rows"),
-          min(col("l_quantity")).as("min_qty"),
-          max(col("l_quantity")).as("max_qty"))
-        .select(col("l_returnflag"),
-          col("sum_qty_dec").cast(DoubleType).as("sum_qty"),
-          col("n_rows"), col("min_qty"), col("max_qty"))
-        .orderBy(col("l_returnflag"))
-    },
-    mvRewrite.oracle)
+  /** `mv_refresh`'s state and oracle under its second registry
+    * name; both names stay oracle-checked entries. */
+  val mvRefreshEpoch = mvRefresh.copy(name = "mv_refresh_epoch")
 
   /** Base copy + view WITH min/max partials, then a takedown slice
-    * removed through [[graft.plans.MatView.refreshDelete]]'s targeted
+    * removed through [[graft.plans.EpochMv.refreshDelete]]'s targeted
     * RECOUNT path (extrema are not subtractable — only the delete
     * batch's cells recompute from surviving base rows). Ordering
     * follows the takedown contract: the view recounts BEFORE the base
@@ -958,34 +867,19 @@ object IncrQueries {
     graft.BuildOnce.memo(mvMinmaxDelSaved, d) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"${graft.GraftSession.scratchDir}/mvdx_base_$tag"
-      val mv = s"${graft.GraftSession.scratchDir}/mvdx_view_$tag"
       val li = Tables.lineitem(s, d)
         .select("l_orderkey", "l_quantity", "l_returnflag",
           "l_linestatus")
       li.write.mode("overwrite").parquet(base)
-      graft.Pq.read(s, base)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast(DecimalType(38, 2)))
-          .as("sum_qty_p"),
-          count(lit(1)).as("cnt_p"),
-          min(col("l_quantity")).as("min_qty_p"),
-          max(col("l_quantity")).as("max_qty_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(graft.plans.MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"),
-          graft.plans.MatView.AggSpec("min", "l_quantity", None,
-            "min_qty_p"),
-          graft.plans.MatView.AggSpec("max", "l_quantity", None,
-            "max_qty_p"))))
+      val mv = mvDefOf(base, "mvdx", tag, FlagStatus,
+        SumQtyP, CntP, MinQtyP, MaxQtyP)
+      graft.plans.EpochMv.create(s, mv)
       val doomed = graft.Pq.read(s, base)
         .where(col("l_orderkey") % 3 === 0)
         .localCheckpoint(true)
       // takedown-first: the recount scans the doomed rows' cells while
       // they still exist, then the data-plane delete shrinks the base
-      graft.plans.MatView.refreshDelete(s, base, doomed)
+      graft.plans.EpochMv.refreshDelete(s, mv, doomed, batchId = 1L)
       graft.ops.Layout.replaceDir(s,
         graft.Pq.read(s, base).where(col("l_orderkey") % 3 =!= 0), base)
       base
@@ -1041,21 +935,11 @@ object IncrQueries {
     graft.BuildOnce.memo(mvJoinSaved, d) {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val base = s"${graft.GraftSession.scratchDir}/mvj_base_$tag"
-      val mv = s"${graft.GraftSession.scratchDir}/mvj_view_$tag"
       Tables.lineitem(s, d)
         .select("l_suppkey", "l_quantity")
         .write.mode("overwrite").parquet(base)
-      graft.Pq.read(s, base)
-        .groupBy(col("l_suppkey"))
-        .agg(sum(col("l_quantity").cast(DecimalType(38, 2)))
-          .as("sum_qty_p"),
-          count(lit(1)).as("cnt_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("l_suppkey"),
-        Seq(graft.plans.MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"))))
+      graft.plans.EpochMv.create(s, mvDefOf(base, "mvj", tag,
+        Seq("l_suppkey"), SumQtyP, CntP))
       base
     }
 

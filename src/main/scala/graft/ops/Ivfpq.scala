@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 /** IVF-PQ — the composed 100 TB ANN serving index (SURVEY §2.10 X3
   * scale path): [[Ann]]'s inverted-file cells decide WHICH vectors a
   * probe scores (nProbe/k of the corpus, partition pruning on the
-  * persisted layout) and [[Pq]]'s product codes decide WHAT scoring a
+  * persisted layout) and [[ProductQuant]]'s product codes decide WHAT scoring a
   * candidate costs (m byte codes instead of dim floats). This is the
   * standard large-scale layout (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011 — the IVFADC system): at 100 TB
@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   *   phase 2 (re-rank): broadcast the ≤shortlist ids back onto the
   *     probed cells, read the TRUE embedding column for just those
   *     rows, exact cosine, final top-k. Exact-within-shortlist — the
-  *     same serving contract as [[Pq.search]], so recall is governed by
+  *     same serving contract as [[ProductQuant.search]], so recall is governed by
   *     (nProbe, shortlist), and a full-probe full-shortlist search
   *     degenerates to brute force (pinned in IvfpqSpec).
   *
@@ -44,16 +44,17 @@ object Ivfpq {
       m: Int, dsub: Int, books: Seq[Seq[Seq[Double]]], encoded: DataFrame)
 
   /** One coarse k-means ([[Ann.build]]) + one global PQ training pass
-    * ([[Pq.train]]); the encode is a narrow map fused onto the already
+    * ([[ProductQuant.train]]); the encode is a narrow map fused onto the already
     * cell-assigned scan — build cost is the two trainings plus one
     * projection, nothing extra shuffles. */
   def build(embeddings: DataFrame, k: Int, m: Int, codes: Int,
       iters: Int = 2, idCol: String = "vec_id",
       embCol: String = "embedding"): IvfPqIndex = {
     val ivf = Ann.build(embeddings, k, iters, idCol, embCol)
-    val (books, dsub) = Pq.train(embeddings, m, codes, iters, idCol, embCol)
+    val (books, dsub) =
+      ProductQuant.train(embeddings, m, codes, iters, idCol, embCol)
     val encoded = ivf.assigned.select(col(idCol), col(embCol), col("cell"),
-      graft.functions.PqEncode.pqEncode(Pq.unit(col(embCol)), books)
+      graft.functions.PqEncode.pqEncode(ProductQuant.unit(col(embCol)), books)
         .as("codes"))
     IvfPqIndex(ivf.centroids, m, dsub, books, encoded)
   }
@@ -208,7 +209,7 @@ object Ivfpq {
     val books = loadBooks(spark, path)
     Ann.assign(newVectors, cents, idCol, embCol)
       .select(col(idCol), col(embCol), col("cell"),
-        graft.functions.PqEncode.pqEncode(Pq.unit(col(embCol)), books)
+        graft.functions.PqEncode.pqEncode(ProductQuant.unit(col(embCol)), books)
           .as("codes"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/encoded")
   }
@@ -276,7 +277,7 @@ object Ivfpq {
         case _ => throw new IllegalArgumentException(
           s"Ivfpq.search: probe id $probeId not found in the index")
       })
-    val probeUnit = Pq.localUnit(probe)
+    val probeUnit = ProductQuant.localUnit(probe)
     val pnorm = math.sqrt(probe.map(x => x * x).sum)
     val cells: Seq[Long] = index.centroids
       .map { case (cid, cemb) => (cid, Ann.localCosine(cemb, probe)) }
@@ -290,7 +291,8 @@ object Ivfpq {
     // phase 1: compressed candidates — (id, codes) only
     val short = probed
       .select(col(idCol),
-        Pq.adcExpr(Pq.lutsFor(index.books, index.dsub, probeUnit),
+        ProductQuant.adcExpr(
+          ProductQuant.lutsFor(index.books, index.dsub, probeUnit),
           col("codes")).as("_adc"))
       .orderBy(col("_adc").asc, col(idCol))
       .limit(shortlist)
@@ -317,7 +319,7 @@ object Ivfpq {
 
   /** Per-probe ADC lookup table computed ON THE EXECUTORS from a
     * unit-normalized probe COLUMN — the row-side twin of the
-    * driver-side [[Pq.lutsFor]] (which serves bounded probe batches):
+    * driver-side [[ProductQuant.lutsFor]] (which serves bounded probe batches):
     * LUT(i)(c) = squared L2 from the probe's i-th subvector to code c's
     * centroid, laid out as array<array<double>> so scoring a candidate
     * is still m lookups + a sum. Identical left-to-right fold order as
@@ -396,7 +398,7 @@ object Ivfpq {
       Seq(idCol, embCol, "cell", "codes"))
     val routed = Ann.routeProbes(
       probes
-        .withColumn("_unit", Pq.unit(col(probeEmbCol)))
+        .withColumn("_unit", ProductQuant.unit(col(probeEmbCol)))
         .withColumn("_lut",
           graft.functions.PqLut.pqLut(col("_unit"), index.books)),
       index.centroids, probeEmbCol, nProbe)
@@ -405,7 +407,7 @@ object Ivfpq {
       // instead of riding into the cell join and going ambiguous
       .select(col(probeIdCol), col("_probe_norm"), col("_unit"),
         col("_lut"), col("cell"))
-    // same structure as Pq.adcExpr: m lookups, left-assoc sum
+    // same structure as ProductQuant.adcExpr: m lookups, left-assoc sum
     val adc = (1 to index.m).map(i =>
       element_at(element_at(col("_lut"), i),
         element_at(col("codes"), i) + 1))

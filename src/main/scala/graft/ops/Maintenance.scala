@@ -48,7 +48,7 @@ object Maintenance {
   /** One layout under sweep management. `kind` ∈ postings |
     * positional | neardup | ivf | ivfpq | epoch_postings |
     * epoch_positional | epoch_suggest | epoch_ivf | epoch_ivfpq |
-    * epoch_neardup | epoch_table.
+    * epoch_neardup | epoch_table | epoch_mv.
     * `registry` binds an epoch layout to the cross-tier snapshot
     * registry that pins it — `(registry layout path, tier name)` as
     * published by [[Snapshot.publish]]: the sweep's prune arm then
@@ -106,6 +106,9 @@ object Maintenance {
           .getOrElse(Seq.empty)
       case "epoch_ivfpq" =>
         Epoch.resolve(s, ref.path).map(_.dirs(ref.path, "encoded"))
+          .getOrElse(Seq.empty)
+      case "epoch_mv" =>
+        Epoch.resolve(s, ref.path).map(_.dirs(ref.path, "view"))
           .getOrElse(Seq.empty)
       case k => throw new IllegalArgumentException(
         s"Maintenance: unknown layout kind $k")
@@ -261,7 +264,8 @@ object Maintenance {
           Epoch.prune(s, ref.path, pinnedKeep(s, ref))
           "compact"
         // epoch layouts whose data never degrades (the suggest
-        // dictionary rewrites wholesale per mutation) — and any other
+        // dictionary and the MV partials rewrite wholesale per
+        // mutation) — and any other
         // epoch layout the compact triggers left alone — still accrete
         // HISTORY: retired generations past the retention horizon are
         // the one statistic left to manage. The pin floor applies here

@@ -38,7 +38,7 @@ import org.apache.spark.sql.types._
   * the exact re-rank emits true cosine — the same output contract as
   * [[Ann.query]], letting `sim_pq` share the IVF recall oracle.
   */
-object Pq {
+object ProductQuant {
 
   private def norm(a: Column): Column =
     sqrt(graft.functions.VecMath.vecNormSq(a))
@@ -137,7 +137,7 @@ object Pq {
     val unitDf = embeddings
       .select(col(idCol), col(embCol), unit(col(embCol)).as("_unit"))
     val dim = unitDf.select(size(col("_unit"))).head().getInt(0)
-    require(dim % m == 0, s"Pq.train: dim $dim not divisible by m=$m")
+    require(dim % m == 0, s"ProductQuant.train: dim $dim not divisible by m=$m")
     val dsub = dim / m
 
     // deterministic seeds: subvectors of the `codes` lowest-id rows
@@ -145,7 +145,7 @@ object Pq {
       val seedRows = unitDf.orderBy(col(idCol)).limit(codes)
         .select(col("_unit")).collect()
         .map(_.getSeq[Double](0).toSeq).toSeq
-      require(seedRows.nonEmpty, "Pq.train: input has no rows")
+      require(seedRows.nonEmpty, "ProductQuant.train: input has no rows")
       (0 until m).map(i => seedRows.map(v => v.slice(i * dsub, i * dsub + dsub)))
     }
 
@@ -212,7 +212,7 @@ object Pq {
       .take(1) match {
         case Array(r) => r.getSeq[Double](0).toSeq
         case _ => throw new IllegalArgumentException(
-          s"Pq.search: probe id $probeId not found in the index")
+          s"ProductQuant.search: probe id $probeId not found in the index")
       }
     val pnorm = math.sqrt(raw.map(x => x * x).sum)
     val probe = localUnit(raw)

@@ -205,9 +205,9 @@ object Suggest {
       negate = true, stageMarkers)
 
   /** EXACTLY-ONCE [[suggestDelete]]: the `_applied_del_<batchId>`
-    * marker rides the delnbr swap (the `MatView.refreshDeleteOnce`
-    * discipline), so a crash-replayed takedown batch skips the
-    * negative merge exactly when it already committed. */
+    * marker rides the delnbr swap (it publishes in the same rename as
+    * the merge), so a crash-replayed takedown batch skips the negative
+    * merge exactly when it already committed. */
   def suggestDeleteOnce(s: SparkSession, deletedDocs: DataFrame,
       path: String, batchId: Long): Unit = {
     val marker = s"_applied_del_$batchId"

@@ -26,14 +26,17 @@ import org.apache.spark.sql.types._
   *    [[Suggest.suggestDelete2Once]], one per edit-distance layout):
   *    algebraic negative df merges — NOT idempotent, so each rides an
   *    `_applied_del_<batchId>` marker in its directory swap.
-  *  - Materialized views ([[graft.plans.MatView.refreshDeleteOnce]]):
-  *    negated-partials merge per registered view, each under the same
-  *    `_applied_del_<batchId>` marker family.
+  *  - Materialized views ([[graft.plans.EpochMv.refreshDelete]]):
+  *    the view's delete merge as a new manifest generation, skipped
+  *    on a replay by the manifest ledger key `del_<batchId>`.
+  *  - The epoch twins of the index tiers and the table tier: each
+  *    leg one manifest generation under the same `del_<batchId>`
+  *    ledger key.
   *
   * A crash ANYWHERE in the composition replays to the identical final
   * state: the caller re-invokes with the same batch id, tombstone legs
-  * no-op on their own, marked legs skip exactly the merges that
-  * committed. The doomed frame is MATERIALIZED up front (the
+  * no-op on their own, marked and ledgered legs skip exactly the
+  * merges that committed. The doomed frame is MATERIALIZED up front (the
   * lazy-segment trap: a frame derived from one of these layouts would
   * otherwise be re-read mid-mutation). Run in a maintenance window
   * without concurrent serving — the same contract as every layout
@@ -50,13 +53,13 @@ import org.apache.spark.sql.types._
 object Takedown {
 
   /** The tier paths one takedown spans; every field optional so a
-    * deployment wires exactly the layouts it runs. `mvBase` names a
-    * registered MV base table that carries `doc_id` — the MV delete
-    * algebra needs the doomed rows' MEASURES, which the takedown
-    * derives itself by an id join against the (not-yet-shrunk) base;
-    * the caller shrinks the base table only AFTER the takedown
-    * returns, so a replayed call either re-derives the same rows or
-    * skips on its marker. */
+    * deployment wires exactly the layouts it runs. `mvEpoch` names a
+    * view whose base table carries `doc_id` — the MV delete algebra
+    * needs the doomed rows' MEASURES, which the takedown derives
+    * itself by an id join against the (not-yet-shrunk) base; the
+    * caller shrinks the base table only AFTER the takedown returns,
+    * so a replayed call either re-derives the same rows or skips on
+    * its ledger key. */
   final case class Tiers(
       postings: Option[String] = None,
       positional: Option[String] = None,
@@ -65,7 +68,6 @@ object Takedown {
       suggest2: Option[String] = None,
       ivf: Option[String] = None,
       ivfpq: Option[String] = None,
-      mvBase: Option[String] = None,
       // the SERVE-SAFE epoch-layout twins (ops/Epoch): deletes publish
       // a new manifest generation under the ledger key del_<batchId>
       // — exactly-once rides the manifest, not marker files, and
@@ -76,10 +78,10 @@ object Takedown {
       ivfEpoch: Option[String] = None,
       ivfpqEpoch: Option[String] = None,
       neardupEpoch: Option[String] = None,
-      // the epoch MV tier takes the view DEFINITION (base + layout
-      // root + shape), because its delete leg derives the doomed
-      // rows' measures from the base itself — same ordering contract
-      // as mvBase: takedown first, base shrink after
+      // the MV tier takes the view DEFINITION (base + layout root +
+      // shape), because its delete leg derives the doomed rows'
+      // measures from the base itself: takedown first, base shrink
+      // after
       mvEpoch: Option[graft.plans.EpochMv.EpochMvDef] = None,
       // the TABLE tier itself ([[EpochTable]], keyed on doc_id): the
       // takedown finally removes the ROWS, not just the derived
@@ -96,7 +98,7 @@ object Takedown {
     * nothing).
     *
     * ORDERING vs the data-plane row delete: when a suggest tier OR an
-    * MV base is wired, the takedown must run BEFORE the caller shrinks
+    * MV is wired, the takedown must run BEFORE the caller shrinks
     * the corpus/base table — both legs derive doomed state (per-term
     * text counts, per-row measures) from rows that must still exist.
     * An id-only batch against a corpus already shrunk cannot be joined
@@ -146,8 +148,8 @@ object Takedown {
       EpochTable.delete(s, ids, p, batchId)
     })
     tiers.mvEpoch.foreach { d =>
-      // lazy on purpose (the mvBase leg's discipline): the ledger
-      // check inside refreshDelete skips without evaluating the frame
+      // lazy on purpose: the ledger check inside refreshDelete skips
+      // without evaluating the frame
       val deletedRows = graft.Pq.read(s, d.basePath)
         .join(broadcast(ids), Seq("doc_id"))
       Epoch.occ(s, d.layoutPath) {
@@ -165,14 +167,6 @@ object Takedown {
       Suggest.suggestDeleteOnce(s, doomed, p, batchId))
     tiers.suggest2.foreach(p =>
       Suggest.suggestDelete2Once(s, doomed, p, batchId))
-    tiers.mvBase.foreach { base =>
-      // lazy on purpose: refreshDeleteOnce skips marked views without
-      // ever evaluating the frame
-      val deletedRows = graft.Pq.read(s, base)
-        .join(broadcast(ids), Seq("doc_id"))
-      graft.plans.MatView.refreshDeleteOnce(s, base, deletedRows,
-        batchId)
-    }
   }
 
   /** The doomed residue shared by the entry, its oracle, and the tier
@@ -181,6 +175,15 @@ object Takedown {
     * tier's served output visibly changes. */
   private[ops] val Residue = 3
 
+  /** The view both takedown entries maintain: chars and rows per
+    * source over a documents copy at `base`. */
+  private def sourceCharsMv(base: String, layout: String)
+      : graft.plans.EpochMv.EpochMvDef =
+    graft.plans.EpochMv.EpochMvDef(base, layout, Seq("source"),
+      Seq(graft.plans.MatView.AggSpec("sum", "n_chars",
+          Some(DecimalType(38, 0)), "sum_chars_p"),
+        graft.plans.MatView.AggSpec("count", "", None, "cnt_p")))
+
   private val savedState =
     scala.collection.concurrent.TrieMap.empty[String, Map[String, String]]
 
@@ -188,7 +191,7 @@ object Takedown {
     s"${graft.GraftSession.scratchDir}/${prefix}_" +
       d.replaceAll("[^A-Za-z0-9]", "_")
 
-  /** Build every tier FULL, register the MV, then ONE Takedown call
+  /** Build every tier FULL, create the MV, then ONE Takedown call
     * removes the residue everywhere — the state `takedown_all` serves.
     * The MV's deleted base rows are materialized before the base table
     * itself shrinks (the warehouse-side row delete is the caller's
@@ -214,23 +217,15 @@ object Takedown {
       Ann.save(Ann.build(emb, k = 8), ivf)
       docs.select(col("doc_id"), col("source"), col("n_chars"))
         .write.mode("overwrite").parquet(base)
-      graft.Pq.read(s, base).groupBy(col("source"))
-        .agg(sum(col("n_chars").cast(DecimalType(38, 0)))
-          .as("sum_chars_p"),
-          count(lit(1)).as("cnt_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("source"),
-        Seq(graft.plans.MatView.AggSpec("sum", "n_chars",
-            Some(DecimalType(38, 0)), "sum_chars_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p"))))
+      val mvDef = sourceCharsMv(base, mv)
+      graft.plans.EpochMv.create(s, mvDef)
       val doomed = docs.where(col("doc_id") % 5 === Residue)
         .select(col("doc_id"), col("text"))
         .localCheckpoint(true)
       Takedown(s, doomed,
         Tiers(postings = Some(post), positional = Some(pos),
           neardup = Some(nd), suggest = Some(sug), ivf = Some(ivf),
-          ivfpq = Some(vec), mvBase = Some(base)),
+          ivfpq = Some(vec), mvEpoch = Some(mvDef)),
         batchId = 1L)
       Layout.replaceDir(s,
         graft.Pq.read(s, base).where(col("doc_id") % 5 =!= Residue), base)
@@ -547,11 +542,7 @@ object Takedown {
         version = 0L)
       docs.select(col("doc_id"), col("source"), col("n_chars"))
         .write.mode("overwrite").parquet(base)
-      val mvDef = graft.plans.EpochMv.EpochMvDef(base, mv,
-        Seq("source"),
-        Seq(graft.plans.MatView.AggSpec("sum", "n_chars",
-            Some(DecimalType(38, 0)), "sum_chars_p"),
-          graft.plans.MatView.AggSpec("count", "", None, "cnt_p")))
+      val mvDef = sourceCharsMv(base, mv)
       graft.plans.EpochMv.create(s, mvDef)
       val doomed = docs.where(col("doc_id") % 5 === Residue)
         .select(col("doc_id"), col("text"))

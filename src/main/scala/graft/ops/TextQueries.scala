@@ -1007,8 +1007,9 @@ object TextQueries {
     *    attempts, which is why the prefix-delete precedes the rename).
     *  - df and stats: algebraic merges, NOT idempotent — each rides an
     *    `_applied_<batchId>` marker in its own [[Layout.replaceDir]]
-    *    swap (the `MatView.refreshOnce` discipline), so a replay skips
-    *    a leg exactly when its merge already committed.
+    *    swap (the marker publishes in the same rename as the merge),
+    *    so a replay skips a leg exactly when its merge already
+    *    committed.
     *
     * A crash between any two legs replays to the identical final
     * layout: lists re-publish the same rows, each side table merges

@@ -1314,7 +1314,8 @@ object VectorQueries {
     graft.BuildOnce.memo(corpusCount, d)(Tables.embeddings(s, d).count())
 
   private val pqBuilt =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), Pq.PqIndex]
+    scala.collection.concurrent.TrieMap
+      .empty[(String, Int, Int), ProductQuant.PqIndex]
 
   /** Build once per process AND materialize the encoded corpus to
     * scratch parquet — `PqIndex.encoded` is otherwise a lazy frame, so
@@ -1325,9 +1326,10 @@ object VectorQueries {
     * at index build and SERVED from storage. Cold build+encode cost
     * stays visible in `sim_ivf` (per-invocation by design). */
   private def builtPq(s: org.apache.spark.sql.SparkSession, d: String,
-      m: Int, codes: Int): Pq.PqIndex =
+      m: Int, codes: Int): ProductQuant.PqIndex =
     graft.BuildOnce.memo(pqBuilt, (d, m, codes)) {
-      val idx = Pq.build(Tables.embeddings(s, d), m = m, codes = codes)
+      val idx = ProductQuant.build(Tables.embeddings(s, d), m = m,
+        codes = codes)
       val path = s"${graft.GraftSession.scratchDir}/pq_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_m${m}_c$codes"
       idx.encoded.write.mode("overwrite").parquet(path)
@@ -1342,7 +1344,7 @@ object VectorQueries {
     graft.BuildOnce.memo(ivfpqBuilt, (d, k, m, codes))(
       Ivfpq.build(Tables.embeddings(s, d), k = k, m = m, codes = codes))
 
-  /** Product-quantized ANN ([[Pq]]), driver-visible end-to-end: m=4
+  /** Product-quantized ANN ([[ProductQuant]]), driver-visible end-to-end: m=4
     * subspace codebooks sized to the corpus ([[codesFor]] — 16 codes at
     * 500 vectors, 64 at 2000; distributed Lloyd's, same seeding
     * convention as the IVF build — trained ONCE per process via
@@ -1359,7 +1361,8 @@ object VectorQueries {
   val simPq = GQuery(
     "sim_pq",
     (s, d) => recallAnchored(s, d,
-      Pq.search(builtPq(s, d, m = 4, codes = codesFor(embCount(s, d))),
+      ProductQuant.search(
+        builtPq(s, d, m = 4, codes = codesFor(embCount(s, d))),
         probeId = 0, topK = IvfTopK,
         shortlist = shortlistFor(embCount(s, d))),
       topK = IvfTopK, minHits = 3),

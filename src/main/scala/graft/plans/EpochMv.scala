@@ -3,29 +3,27 @@ package graft.plans
 import graft.ops.Epoch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Materialized views on EPOCH manifests — the last mutable tier made
-  * serve-safe (`ops/Epoch`, the postings/IVF discipline applied to
+/** Materialized views on EPOCH manifests — the one way a view is built
+  * and maintained (`ops/Epoch`, the postings/IVF discipline applied to
   * [[MatView]]'s partial tables): each refresh/delete writes the
   * merged partials as a NEW generation directory, publishes it with
   * one atomic manifest rename, and atomically re-points the Catalyst
   * rewrite at the fresh generation ([[MatView.registerGeneration]] —
-  * one in-memory catalog update). The in-place form
-  * ([[MatView.refresh]]) swaps the live view directory with two
-  * renames, so a query planned mid-swap can miss the path entirely;
-  * here a query planned before the flip keeps its still-on-disk old
-  * generation and a query planned after sees only the new one — no
-  * gap, no mixed state, no maintenance window.
+  * one in-memory catalog update). A query planned before the flip
+  * keeps its still-on-disk old generation and a query planned after
+  * sees only the new one — no gap, no mixed state, no maintenance
+  * window.
   *
   * The merge arithmetic is [[MatView.mergedForRefresh]] /
-  * [[MatView.mergedForDelete]] — the SAME frames the swap layout
-  * writes (append algebra, negated partials, min/max targeted
-  * recount), so the two maintenance forms cannot drift. Exactly-once
-  * rides the manifest ledger (`app_<id>` / `del_<id>`) instead of
-  * marker files. Old generations survive until [[Epoch.prune]];
+  * [[MatView.mergedForDelete]] (append algebra, negated partials,
+  * min/max targeted recount). Exactly-once rides the manifest ledger
+  * (`app_<id>` / `del_<id>`). Old generations survive until
+  * [[Epoch.prune]] (the maintenance sweep's `epoch_mv` kind);
   * size the retention to the longest-running dashboard query.
-  * `mv_refresh_epoch` proves refresh ≡ rebuild through the rewrite
-  * path on this layout; `EpochMvSpec` pins the atomic catalog swap,
-  * ledger replays, pinned-generation reads, and the delete leg. */
+  * `mv_refresh` proves refresh ≡ rebuild through the rewrite path on
+  * this layout; `MatViewSpec` pins the maintenance algebra and
+  * `EpochMvSpec` the atomic catalog swap, ledger replays,
+  * pinned-generation reads, and the delete leg. */
 object EpochMv {
 
   private val View = "view"
@@ -81,11 +79,11 @@ object EpochMv {
     mutate(s, d, s"app_$batchId",
       MatView.mergedForRefresh(s, currentDef(s, d), delta))
 
-  /** Delete-refresh as a new epoch — the same dispatch as
-    * [[MatView.refreshDelete]] (negated partials, or the min/max
-    * targeted recount), under `del_<batchId>`. Runs BEFORE the base
-    * shrinks (the takedown ordering contract — the recount needs the
-    * doomed rows' cells scannable). */
+  /** Delete-refresh as a new epoch — [[MatView.mergedForDelete]]'s
+    * dispatch (negated partials, or the min/max targeted recount),
+    * under `del_<batchId>`. A recounting (min/max) view runs BEFORE
+    * the base shrinks (the takedown ordering contract — the recount
+    * needs the doomed rows' cells scannable). */
   def refreshDelete(s: SparkSession, d: EpochMvDef, deleted: DataFrame,
       batchId: Long): Unit =
     mutate(s, d, s"del_$batchId",

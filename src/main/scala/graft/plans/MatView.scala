@@ -53,7 +53,11 @@ import org.apache.spark.sql.types.DataType
   * other 200+ registry plans are untouched (views register against
   * dedicated base paths). `MatViewSpec` pins: the rewritten plan scans
   * ONLY the view, results equal the pre-registration run, and
-  * filter/uncovered-agg/distinct shapes are NOT rewritten. */
+  * filter/uncovered-agg/distinct shapes are NOT rewritten.
+  *
+  * This object holds the catalog, the rule and the maintenance merge
+  * frames; views are built and maintained only through [[EpochMv]],
+  * which publishes each frame as a manifest generation. */
 object MatView {
 
   /** One covered aggregate: `func` ("sum" | "count" | "min" | "max")
@@ -80,26 +84,22 @@ object MatView {
   private def norm(p: String): String =
     p.stripPrefix("file:").stripSuffix("/")
 
-  /** A base table may carry SEVERAL views at different granularities;
-    * registration replaces any prior definition stored at the same
-    * view path. */
-  def register(d: MvDef): Unit = catalog.synchronized {
-    val k = norm(d.basePath)
-    catalog.put(k, catalog.getOrElse(k, Vector.empty)
-      .filterNot(_.mvPath == d.mvPath) :+ d)
-  }
   def deregister(basePath: String): Unit = catalog.remove(norm(basePath))
-  /** ATOMIC generation swap for epoch MVs ([[EpochMv]]): register the
-    * new generation's definition and drop every prior definition whose
-    * mvPath lives under the same layout `prefix`, in ONE catalog
-    * update — a query planned before the swap keeps its (still
-    * on-disk) old generation, a query planned after sees only the new
-    * one, and no instant exposes both (a stale view answering rewrites
-    * beside the fresh one). */
+  /** ATOMIC generation swap for epoch MVs ([[EpochMv]], the one way a
+    * view is built and maintained): register the new generation's
+    * definition and drop every prior definition whose mvPath lives
+    * under the same layout `prefix`, in ONE catalog update — a query
+    * planned before the swap keeps its (still on-disk) old generation,
+    * a query planned after sees only the new one, and no instant
+    * exposes both (a stale view answering rewrites beside the fresh
+    * one). A base table may carry SEVERAL views at different
+    * granularities, each under its own layout root; a root that is a
+    * string prefix of another's (`v` and `v2`) leaves the other's
+    * views alone. */
   private[plans] def registerGeneration(d: MvDef, prefix: String): Unit =
     catalog.synchronized {
       val k = norm(d.basePath)
-      val p = norm(prefix)
+      val p = norm(prefix) + "/"
       catalog.put(k, catalog.getOrElse(k, Vector.empty)
         .filterNot(v => norm(v.mvPath).startsWith(p)) :+ d)
     }
@@ -111,30 +111,10 @@ object MatView {
     paths.map(norm).flatMap(p => catalog.getOrElse(p, Vector.empty))
       .sortBy(d => (d.groupCols.size, d.mvPath))
 
-  /** Incremental view maintenance: merge a DELTA batch of base rows
-    * into a registered view's partials — the view's own `incr_agg`
-    * story. The delta aggregates to view granularity (∝ |delta|, the
-    * base table is never rescanned), unions with the stored partials,
-    * and re-aggregates: decimal sums and long counts merge exactly, so
-    * refresh ≡ rebuild-over-grown-base algebraically — which is what
-    * `mv_refresh`'s oracle hash-verifies through the rewrite path. The
-    * directory swap is the shared [[graft.ops.Layout.replaceDir]]
-    * crash-recovery contract (same offline-maintenance window rules as
-    * every index mutation). Deletes are [[refreshDelete]] — the same
-    * algebra with negated partials. */
-  def refresh(s: SparkSession, basePath: String,
-      delta: org.apache.spark.sql.DataFrame,
-      stageMarkers: Seq[String] = Nil): Unit =
-    catalog.getOrElse(norm(basePath), Vector.empty)
-      .foreach(mv => refreshView(s, mv, delta, stageMarkers))
-
   /** The per-cell partial expressions a view stores — shared by the
-    * initial refresh aggregation and the delete-recount path so both
-    * compute partials with ONE definition. */
+    * build ([[EpochMv.create]]), the append merge and the delete
+    * recount so all three compute partials with ONE definition. */
   private[plans] def partialColsOf(mv: MvDef)
-      : Seq[org.apache.spark.sql.Column] = partialCols(mv)
-
-  private def partialCols(mv: MvDef)
       : Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, count, lit, sum}
     mv.aggs.map {
@@ -154,18 +134,21 @@ object MatView {
     }
   }
 
-  /** The append-refresh merge as a FRAME: current partials (read from
-    * `mv.mvPath`) ⊎ the delta's partials, re-aggregated under each
-    * partial's own algebra — sums and counts add, min-of-mins /
-    * max-of-maxes re-extremize. None when the delta contributes
-    * nothing. Shared by the in-place swap refresh below and the
-    * epoch-layout refresh ([[EpochMv]]), so the two maintenance forms
-    * cannot drift on the merge arithmetic. */
+  /** Incremental view maintenance — the append merge as a FRAME: a
+    * DELTA batch of base rows aggregates to view granularity (∝
+    * |delta|, the base table is never rescanned), unions with the
+    * current partials (read from `mv.mvPath`), and re-aggregates under
+    * each partial's own algebra — sums and counts add, min-of-mins /
+    * max-of-maxes re-extremize. Decimal sums and long counts merge
+    * exactly, so refresh ≡ rebuild-over-grown-base algebraically —
+    * which is what `mv_refresh`'s oracle hash-verifies through the
+    * rewrite path. None when the delta contributes nothing.
+    * [[EpochMv.refresh]] publishes it as a new generation. */
   private[plans] def mergedForRefresh(s: SparkSession, mv: MvDef,
       delta: org.apache.spark.sql.DataFrame)
       : Option[org.apache.spark.sql.DataFrame] = {
     import org.apache.spark.sql.functions.{col, sum}
-    val pc = partialCols(mv)
+    val pc = partialColsOf(mv)
     val deltaPartials = delta
       .groupBy(mv.groupCols.map(col): _*)
       .agg(pc.head, pc.tail: _*)
@@ -191,40 +174,13 @@ object MatView {
     })
   }
 
-  private def refreshView(s: SparkSession, mv: MvDef,
-      delta: org.apache.spark.sql.DataFrame,
-      stageMarkers: Seq[String]): Unit =
-    mergedForRefresh(s, mv, delta).foreach(restored =>
-      graft.ops.Layout.replaceDir(s, restored, mv.mvPath,
-        stageMarkers = stageMarkers))
-
-  /** EXACTLY-ONCE refresh for the streaming face: the batch id's
-    * applied-marker rides the staged directory, so it becomes visible
-    * in the SAME atomic rename that publishes the merged partials —
-    * there is no crash window where the data landed without its marker
-    * (or vice versa), which is what makes a replayed delta a true
-    * no-op rather than a double-add. (Contrast the tombstone layouts,
-    * which get replay safety for free because their mutation is
-    * idempotent; an algebraic merge is not, so it needs the ledger —
-    * same discipline as `StreamRunner.refreshBatch`, but the marker
-    * IS the swap here instead of a separate state store.) */
-  def refreshOnce(s: SparkSession, basePath: String,
-      delta: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
-    val marker = s"_applied_$batchId"
-    // per-VIEW markers: a crash between two views' swaps replays the
-    // batch, skips the already-marked view, and applies the rest —
-    // each view is exactly-once independently
-    catalog.getOrElse(norm(basePath), Vector.empty).foreach { mv =>
-      if (!graft.ops.Layout.hasMarker(s, mv.mvPath, marker))
-        refreshView(s, mv, delta, Seq(marker))
-    }
-  }
-
-  /** DELETE-side view maintenance: the deleted base rows merge into the
-    * partials with NEGATED sums and counts — exact subtraction for
-    * LONG/DECIMAL-typed sum partials, so for those
-    * refresh-after-delete ≡ rebuild-over-survivors algebraically (what
-    * `mv_refresh_delete` hash-verifies through the rewrite path).
+  /** DELETE-side view maintenance as a FRAME (current partials read
+    * from `mv.mvPath`; [[EpochMv.refreshDelete]] publishes it as a new
+    * generation; None when the batch changes nothing): the deleted
+    * base rows merge into the partials with NEGATED sums and counts —
+    * exact subtraction for LONG/DECIMAL-typed sum partials, so for
+    * those refresh-after-delete ≡ rebuild-over-survivors algebraically
+    * (what `mv_refresh_delete` hash-verifies through the rewrite path).
     * SCOPE of that exactness claim: a view registering DOUBLE-typed
     * sum partials (e.g. an uncast AVG-covering pattern) passes the
     * preconditions but float subtraction is not exact — surviving
@@ -251,17 +207,6 @@ object MatView {
     * case — register the count to close it. Assumes deleted ⊆ base
     * (the caller's takedown contract); rows never ingested subtract
     * garbage, exactly as re-appending them would double-add it. */
-  def refreshDelete(s: SparkSession, basePath: String,
-      deleted: org.apache.spark.sql.DataFrame,
-      stageMarkers: Seq[String] = Nil): Unit =
-    catalog.getOrElse(norm(basePath), Vector.empty)
-      .foreach(mv => refreshViewDelete(s, mv, deleted, stageMarkers))
-
-  /** The delete-refresh result as a FRAME — dispatching exactly as
-    * [[refreshDelete]] documents (extrema → targeted recount, else
-    * negated partials), reading current partials from `mv.mvPath`.
-    * None when the batch changes nothing. Shared by the in-place swap
-    * delete below and the epoch-layout delete ([[EpochMv]]). */
   private[plans] def mergedForDelete(s: SparkSession, mv: MvDef,
       deleted: org.apache.spark.sql.DataFrame)
       : Option[org.apache.spark.sql.DataFrame] = {
@@ -274,7 +219,7 @@ object MatView {
       return recountFrame(s, mv, deleted)
     val star = mv.aggs.find(sp => sp.func == "count" && sp.inputCol.isEmpty)
     require(star.isDefined,
-      s"MatView.refreshDelete: view ${mv.mvPath} has no COUNT(*) " +
+      s"MatView.mergedForDelete: view ${mv.mvPath} has no COUNT(*) " +
         "partial — the delete algebra needs the row count as the " +
         "cell-liveness signal (count 0 drops the cell)")
     val negCols = mv.aggs.map {
@@ -283,7 +228,7 @@ object MatView {
       case AggSpec("count", in, _, mvCol) =>
         (-(if (in.isEmpty) count(lit(1)) else count(col(in)))).as(mvCol)
       case sp => throw new IllegalArgumentException(
-        s"MatView.refreshDelete: unsupported agg ${sp.func}")
+        s"MatView.mergedForDelete: unsupported agg ${sp.func}")
     }
     val negPartials = deleted
       .groupBy(mv.groupCols.map(col): _*)
@@ -312,13 +257,6 @@ object MatView {
           when(col(c.mvCol) === 0L, lit(null)).otherwise(col(sp.mvCol))))
     })
   }
-
-  private def refreshViewDelete(s: SparkSession, mv: MvDef,
-      deleted: org.apache.spark.sql.DataFrame,
-      stageMarkers: Seq[String]): Unit =
-    mergedForDelete(s, mv, deleted).foreach(repaired =>
-      graft.ops.Layout.replaceDir(s, repaired, mv.mvPath,
-        stageMarkers = stageMarkers))
 
   /** TARGETED CELL RECOUNT — the delete path for views whose partials
     * are not algebraically subtractable (min/max): recompute ONLY the
@@ -362,7 +300,7 @@ object MatView {
     val affected = base.join(broadcast(keys), keyCond(base, keys))
       .select(cols.map(base(_)): _*)
     val survivors = affected.exceptAll(delP)
-    val pc = partialCols(mv)
+    val pc = partialColsOf(mv)
     val recounted = survivors
       .groupBy(mv.groupCols.map(col): _*)
       .agg(pc.head, pc.tail: _*)
@@ -370,19 +308,6 @@ object MatView {
     val untouched = view.join(broadcast(keys), keyCond(view, keys),
       "left_anti")
     Some(untouched.unionByName(recounted))
-  }
-
-  /** EXACTLY-ONCE delete refresh — [[refreshOnce]]'s discipline on the
-    * delete algebra, with its own marker family (`_applied_del_<id>`)
-    * so an append stream and a takedown stream over the same view
-    * cannot collide on batch ids. */
-  def refreshDeleteOnce(s: SparkSession, basePath: String,
-      deleted: org.apache.spark.sql.DataFrame, batchId: Long): Unit = {
-    val marker = s"_applied_del_$batchId"
-    catalog.getOrElse(norm(basePath), Vector.empty).foreach { mv =>
-      if (!graft.ops.Layout.hasMarker(s, mv.mvPath, marker))
-        refreshViewDelete(s, mv, deleted, Seq(marker))
-    }
   }
 
   /** The rewrite rule. One instance per session via

@@ -744,10 +744,10 @@ object StreamRunner {
     * suggest dictionary's negative df merge — the one leg bare ids
     * cannot drive). EXACTLY-ONCE composition: the checkpointed
     * foreachBatch batch id IS the takedown batch id, so the tombstone
-    * legs replay as no-ops by construction and the algebraic legs
-    * (suggest, MV partials) skip on their `_applied_del_<id>` markers
-    * — a worker crash at ANY point replays to the identical global
-    * state, the property `TakedownSpec` pins call-level and this
+    * legs replay as no-ops by construction, the suggest legs skip on
+    * their `_applied_del_<id>` markers and the MV and other epoch legs
+    * on the manifest ledger key `del_<id>` — a worker crash at ANY
+    * point replays to the identical global state, the property `TakedownSpec` pins call-level and this
     * stream inherits wholesale. Same maintenance-worker contract as
     * [[takedownStream]]: serialized delete batches in a window
     * without concurrent serving.
@@ -757,9 +757,10 @@ object StreamRunner {
     * select mirrors the batch face instead of demanding text
     * unconditionally. `checkpoint` is REQUIRED for exactly-once across
     * restarts: the algebraic legs skip on `_applied_del_<batchId>`
-    * markers keyed by the checkpointed foreachBatch id, and a restart
-    * without a checkpoint resets ids to 0 — a new doomed batch then
-    * collides with old markers, so the suggest/MV legs silently skip
+    * markers and `del_<batchId>` ledger keys, both keyed by the
+    * checkpointed foreachBatch id, and a restart without a checkpoint
+    * resets ids to 0 — a new doomed batch then collides with old
+    * markers and keys, so the suggest/MV legs silently skip
     * while the tombstone legs still apply: exactly the cross-tier
     * inconsistency this stream exists to prevent. `checkpoint = None`
     * is for never-restarted one-shot runs only. */
@@ -808,44 +809,22 @@ object StreamRunner {
       }
       .start()
 
-  /** Streaming MATERIALIZED-VIEW maintenance — each micro-batch of new
-    * base rows merges into the registered view's partials
-    * (`MatView.refreshOnce`), so every rollup query rewritten onto the
-    * view by the Catalyst rule serves the warehouse as of the last
-    * drained batch, with the base table never rescanned. EXACTLY-ONCE
-    * via the applied-marker-in-the-swap: the batch id's marker becomes
-    * visible in the same atomic rename as the merged data, so a
-    * crash-replayed batch (same checkpointed offsets, same batch id)
-    * is detected and skipped — no double-add, no lost batch, no
-    * separate ledger store. Pinned in `MatViewSpec`'s stream test
-    * (growth across batches + replay no-op). The caller appends the
-    * same batches to the base table downstream of `emitBase` (or
-    * treats the view as the only materialization). `checkpoint` is
-    * REQUIRED for the replay-no-op to survive a restart (the markers
-    * key off the checkpointed batch id — see [[postingsIngestStream]]'s
+  /** Streaming MATERIALIZED-VIEW maintenance ([[graft.plans.EpochMv]]):
+    * each micro-batch of new base rows merges into a NEW view
+    * generation behind one atomic manifest flip + one atomic catalog
+    * re-point, so every rollup query rewritten onto the view by the
+    * Catalyst rule serves the warehouse as of the last drained batch,
+    * with the base table never rescanned.
+    * EXACTLY-ONCE: the ledger key `app_<batchId>` commits in the same
+    * manifest rename as the merged partials, so a crash-replayed batch
+    * (same checkpointed offsets, same batch id) is skipped — no
+    * double-add, no lost batch. Pinned in `MatViewSpec`'s and
+    * `EpochMvSpec`'s stream tests (growth across batches + replay
+    * no-op). The caller appends the same batches to the base table
+    * downstream of `emitBase`. `checkpoint` is REQUIRED for the
+    * replay no-op to survive a restart (the ledger keys off the
+    * checkpointed batch id — see [[postingsIngestStream]]'s
     * contract). */
-  def mvRefreshStream(basePath: String, rows: DataFrame,
-      checkpoint: Option[String] = None)
-      (emitBase: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(rows.writeStream.outputMode("append"), checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(true)
-        graft.plans.MatView.refreshOnce(b.sparkSession, basePath, b,
-          batchId)
-        emitBase(b, batchId)
-      }
-      .start()
-
-  /** Streaming MATERIALIZED-VIEW maintenance on the EPOCH layout
-    * ([[graft.plans.EpochMv]]) — [[mvRefreshStream]]'s serve-safe
-    * successor: each micro-batch merges into a NEW view generation
-    * behind one atomic manifest flip + one atomic catalog re-point,
-    * so dashboard queries rewritten onto the view never hit a swap
-    * window. Exactly-once rides the manifest ledger keyed by the
-    * checkpointed batch id (same `checkpoint` caveat as every ledger
-    * face). The caller appends the same batches to the base table
-    * downstream of `emitBase`. */
   def mvRefreshEpochStream(d: graft.plans.EpochMv.EpochMvDef,
       rows: DataFrame, checkpoint: Option[String] = None)
       (emitBase: (DataFrame, Long) => Unit = (_, _) => ())

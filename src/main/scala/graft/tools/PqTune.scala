@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, Tables}
-import graft.ops.{Pq, VectorQueries}
+import graft.ops.{ProductQuant, VectorQueries}
 import org.apache.spark.sql.functions._
 
 /** Dev loop helper: sweep PQ (m, codes, shortlist) on one sfDir and
@@ -22,9 +22,9 @@ object PqTune {
     // the index depends only on (m, codes) — build once per pair, not
     // once per shortlist, or the sweep pays Lloyd's training 3× over
     for (m <- Seq(4, 8); codes <- Seq(16, 64)) {
-      val idx = Pq.build(e, m = m, codes = codes)
+      val idx = ProductQuant.build(e, m = m, codes = codes)
       for (shortlist <- Seq(50, 200, 500)) {
-        val got = Pq.search(idx, probeId = 0, topK = 5,
+        val got = ProductQuant.search(idx, probeId = 0, topK = 5,
             shortlist = shortlist)
           .select("neighbor_id").collect().map(_.getLong(0)).toSet
         val hits = got.intersect(brute).size

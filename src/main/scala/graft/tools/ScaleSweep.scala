@@ -225,13 +225,8 @@ object ScaleSweep {
       graft.Tables.lineitem(s, dir)
         .select("l_quantity", "l_returnflag", "l_linestatus")
         .write.mode("overwrite").parquet(base)
-      s.read.parquet(base)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("l_quantity").cast(DecimalType(38, 2)))
-          .as("sum_qty_p"), count(lit(1)).as("cnt_p"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-        Seq("l_returnflag", "l_linestatus"),
+      graft.plans.EpochMv.create(s, graft.plans.EpochMv.EpochMvDef(base,
+        mv, Seq("l_returnflag", "l_linestatus"),
         Seq(graft.plans.MatView.AggSpec("sum", "l_quantity",
             Some(DecimalType(38, 2)), "sum_qty_p"),
           graft.plans.MatView.AggSpec("count", "", None, "cnt_p"))))

@@ -7,19 +7,21 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scans that keep hand-rolled plan shapes out of engine code.
-  * `tools/` is exempt from both. */
+/** Source scans that keep hand-rolled plan shapes and retired
+  * protocols out of engine code. `tools/` is exempt from all of them. */
 class FooterJobGuardSpec extends AnyFunSuite {
 
   private val base = Paths.get("src/main/scala/graft")
 
-  /** Engine files (relative to `base`, outside `tools/` and `exempt`)
-    * whose code — comments stripped — matches `pattern`. */
-  private def offenders(pattern: Regex, exempt: Set[String]): Seq[String] = {
+  /** Engine files (relative to `base`, under `within`, outside `tools/`
+    * and `exempt`) whose code — comments stripped — matches `pattern`. */
+  private def offenders(pattern: Regex, exempt: Set[String],
+      within: String = ""): Seq[String] = {
     assert(Files.isDirectory(base), s"${base.toAbsolutePath} not found")
     Files.walk(base).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .map(p => (p, base.relativize(p).toString))
+      .filter { case (_, rel) => rel.startsWith(within) }
       .filterNot { case (_, rel) => rel.startsWith("tools/") || exempt(rel) }
       .flatMap { case (p, rel) =>
         // comments may name the call; code may not
@@ -48,5 +50,13 @@ class FooterJobGuardSpec extends AnyFunSuite {
       "coalesce\\(\\s*1\\s*\\)\\s*\\.\\s*sortWithinPartitions".r, Set.empty)
     assert(found.isEmpty,
       s"coalesce(1).sortWithinPartitions in: ${found.mkString(", ")}")
+  }
+
+  /** Views are built and maintained only on epoch manifests
+    * (`EpochMv`); the swap-replace protocol (`Layout`) has no caller in
+    * the plans package. */
+  test("plans code references no Layout.") {
+    val found = offenders("\\bLayout\\.".r, Set.empty, within = "plans/")
+    assert(found.isEmpty, s"Layout. in: ${found.mkString(", ")}")
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * scan must actually carry the pushed aggregates (otherwise the query
   * silently degrades to a full column scan and the 100 TB metadata-pass
   * claim is false), the child-session conf must not leak into the
-  * parent session, and the pushed result must equal the row-scan
-  * recompute. */
+  * parent session, the child session is built once per parent, and the
+  * pushed result must equal the row-scan recompute. */
 class AggPushdownSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.01"
@@ -32,5 +32,12 @@ class AggPushdownSpec extends SparkTestBase {
     // the PARENT session still has its defaults — the child-session
     // overrides must not have mutated it
     assert(spark.conf.get("spark.sql.parquet.aggregatePushdown") === "false")
+  }
+
+  test("two calls on one parent session share one child session") {
+    val a = graft.SparkEntry.queries("agg_pushdown")(spark, sf)
+    val b = graft.SparkEntry.queries("agg_pushdown")(spark, sf)
+    assert(a.sparkSession eq b.sparkSession)
+    assert(!(a.sparkSession eq spark))
   }
 }

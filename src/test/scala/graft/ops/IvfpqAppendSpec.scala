@@ -31,7 +31,7 @@ class IvfpqAppendSpec extends SparkTestBase {
     // through the build-side expression (assign + PqEncode)
     val ref = Ann.assign(emb, built.centroids, "vec_id", "embedding")
       .select(col("vec_id"), col("cell"),
-        graft.functions.PqEncode.pqEncode(Pq.unit(col("embedding")),
+        graft.functions.PqEncode.pqEncode(ProductQuant.unit(col("embedding")),
           built.books).as("codes"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),

@@ -39,7 +39,7 @@ class IvfpqUpdateSpec extends SparkTestBase {
     val ref = Ann.assign(updatedCorpus, built.centroids, "vec_id",
         "embedding")
       .select(col("vec_id"), col("cell"),
-        graft.functions.PqEncode.pqEncode(Pq.unit(col("embedding")),
+        graft.functions.PqEncode.pqEncode(ProductQuant.unit(col("embedding")),
           built.books).as("codes"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2).toSeq))

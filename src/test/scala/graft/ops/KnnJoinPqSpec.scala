@@ -82,7 +82,7 @@ class KnnJoinPqSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val unitDf = emb.limit(32)
       .select(col("vec_id"),
-        graft.ops.Pq.unit(col("embedding")).as("_unit"))
+        graft.ops.ProductQuant.unit(col("embedding")).as("_unit"))
     val viaKernel = unitDf
       .select(col("vec_id"),
         graft.functions.PqLut.pqLut(col("_unit"), index.books).as("lut"))
@@ -101,7 +101,7 @@ class KnnJoinPqSpec extends SparkTestBase {
     // and both equal the driver-side lutsFor on a spot row
     val unit0 = unitDf.filter(col("vec_id") === 0)
       .select(col("_unit")).head().getSeq[Double](0).toSeq
-    val driver = graft.ops.Pq.lutsFor(index.books, index.dsub, unit0)
+    val driver = graft.ops.ProductQuant.lutsFor(index.books, index.dsub, unit0)
     assert(viaKernel(0L) === driver.map(_.toSeq))
   }
 

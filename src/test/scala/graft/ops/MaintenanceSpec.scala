@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Sweep-policy pins: the shared compact trigger fires IFF a threshold
   * is hit (segment count and tombstone ratio independently), a
@@ -289,5 +290,47 @@ class MaintenanceSpec extends SparkTestBase {
     assert(r.map(_.action) === Seq("compact"))
     assert(!Layout.dirExists(spark, s"$path/tombstones"))
     assert(Ann.load(spark, path).assigned.count() === 8L)
+  }
+
+  test("the epoch-MV arm prunes view generations to the horizon; the " +
+      "rewrite keeps serving the current generation") {
+    val base = s"${graft.GraftSession.scratchDir}/maint_emv_base"
+    val layout = s"${graft.GraftSession.scratchDir}/maint_emv"
+    Seq(("A", 1.0), ("B", 2.0)).toDF("f", "q")
+      .write.mode("overwrite").parquet(base)
+    val d = graft.plans.EpochMv.EpochMvDef(base, layout, Seq("f"),
+      Seq(graft.plans.MatView.AggSpec("sum", "q",
+          Some(DecimalType(38, 2)), "sum_p"),
+        graft.plans.MatView.AggSpec("count", "", None, "cnt_p")))
+    graft.plans.EpochMv.create(spark, d)
+    def q() = spark.read.parquet(base).groupBy(col("f"))
+      .agg(sum(col("q").cast(DecimalType(38, 2))).as("s"),
+        count(lit(1)).as("n"))
+    def rows() = q().collect().map(r => (r.getString(0),
+      r.getDecimal(1).toPlainString, r.getLong(2))).sortBy(_._1).toSeq
+    try {
+      // one generation per refresh: five committed epochs
+      (1 to 4).foreach { i =>
+        val delta = Seq(("A", i.toDouble), ("C", 10.0 * i)).toDF("f", "q")
+        delta.write.mode("append").parquet(base)
+        graft.plans.EpochMv.refresh(spark, d, delta, batchId = i.toLong)
+      }
+      assert(Epoch.committedEpochs(spark, layout) === 5)
+      val before = rows()
+      val ref = Maintenance.LayoutRef("epoch_mv", layout)
+      val horizon = Maintenance.Policy(maxSegments = 1000,
+        maxTombstoneRatio = 0.99, maxRetainedEpochs = 3)
+      assert(Maintenance.sweep(spark, Seq(ref), horizon)
+        .map(_.action) === Seq("prune"))
+      assert(Epoch.committedEpochs(spark, layout) === 3)
+      assert(!new java.io.File(s"$layout/g0").exists())
+      assert(Maintenance.sweep(spark, Seq(ref), horizon)
+        .map(_.action) === Seq("none"))
+      // the rewrite scans the current generation only, same rows
+      val plan = q().queryExecution.executedPlan.toString
+      assert(plan.contains("maint_emv/g4/view") &&
+        !plan.contains("maint_emv_base"), plan)
+      assert(rows() === before)
+    } finally graft.plans.MatView.deregister(base)
   }
 }

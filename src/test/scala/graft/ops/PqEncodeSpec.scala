@@ -5,7 +5,7 @@ import graft.functions.PqEncode
 import org.apache.spark.sql.functions._
 
 /** Pins the [[PqEncode]] kernel bit-equal to the built-in composition
-  * (`Pq.codesExpr`) it replaces — same distance form
+  * (`ProductQuant.codesExpr`) it replaces — same distance form
   * (||c||² − 2⟨sub,c⟩), same strict-< lowest-code tie-break — incl. the
   * degenerate cases that would expose a drift: exact ties, zero
   * vectors, null rows, and a codebook size (128) well past the
@@ -34,7 +34,7 @@ class PqEncodeSpec extends SparkTestBase {
       transform(col("emb"), x => x).as("u")) // already double
     val mismatch = df.select(
       PqEncode.pqEncode(col("u"), bk).as("kernel"),
-      Pq.codesExpr(bk, dsub, col("u")).as("composed"))
+      ProductQuant.codesExpr(bk, dsub, col("u")).as("composed"))
       .filter(not(col("kernel") <=> col("composed")))
       .count()
     assert(mismatch === 0L, s"kernel != composition at m=$m codes=$codes")
@@ -57,7 +57,7 @@ class PqEncodeSpec extends SparkTestBase {
       .toDF("vec_id", "u")
     val rows = df.select(col("vec_id"),
       PqEncode.pqEncode(col("u"), bk).as("kernel"),
-      Pq.codesExpr(bk, 2, col("u")).as("composed"))
+      ProductQuant.codesExpr(bk, 2, col("u")).as("composed"))
       .orderBy("vec_id").collect()
     assert(rows(0).getSeq[Int](1) === Seq(0))
     assert(rows(0).getSeq[Int](2) === Seq(0))
@@ -78,12 +78,12 @@ class PqEncodeSpec extends SparkTestBase {
     assert(rows(1).isNullAt(1))
   }
 
-  test("Pq.build encodes through the kernel identically to the composition") {
+  test("ProductQuant.build encodes through the kernel identically to the composition") {
     val df = vecs(120).withColumnRenamed("emb", "embedding")
-    val idx = Pq.build(df, m = 4, codes = 8)
+    val idx = ProductQuant.build(df, m = 4, codes = 8)
     val viaComposition = df.select(col("vec_id"),
-      Pq.codesExpr(idx.books, idx.dsub,
-        Pq.unit(col("embedding"))).as("codes"))
+      ProductQuant.codesExpr(idx.books, idx.dsub,
+        ProductQuant.unit(col("embedding"))).as("codes"))
     val joined = idx.encoded.select(col("vec_id"), col("codes").as("k"))
       .join(viaComposition.withColumnRenamed("codes", "c"), "vec_id")
       .filter(not(col("k") <=> col("c")))

@@ -8,15 +8,15 @@ import org.apache.spark.sql.functions._
   * exact, so only shortlist membership can lose a neighbor), encoding
   * must be deterministic across invocations, and the code arrays must
   * carry exactly m small codes. */
-class PqSpec extends SparkTestBase {
+class ProductQuantSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
   private lazy val emb = graft.Tables.embeddings(spark, sf)
   private lazy val n = emb.count().toInt
 
   test("full-shortlist PQ search equals brute-force top-k") {
-    val index = Pq.build(emb, m = 4, codes = 16)
-    val pq = Pq.search(index, probeId = 0, topK = 5, shortlist = n)
+    val index = ProductQuant.build(emb, m = 4, codes = 16)
+    val pq = ProductQuant.search(index, probeId = 0, topK = 5, shortlist = n)
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[Long]("neighbor_id")))
       .sortBy(_._1)
     // brute force via the simTopk registry entry on the same frame
@@ -28,8 +28,8 @@ class PqSpec extends SparkTestBase {
   }
 
   test("encoding is deterministic and carries m codes in range") {
-    val a = Pq.build(emb, m = 4, codes = 16)
-    val b = Pq.build(emb, m = 4, codes = 16)
+    val a = ProductQuant.build(emb, m = 4, codes = 16)
+    val b = ProductQuant.build(emb, m = 4, codes = 16)
     assert(a.books === b.books) // same seeds, same Lloyd path
     val codes = a.encoded.select(col("vec_id"), col("codes")).collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1).toSeq)).sortBy(_._1)
@@ -41,8 +41,8 @@ class PqSpec extends SparkTestBase {
   }
 
   test("standard shortlist keeps recall@5 >= 0.6 on the probe") {
-    val index = Pq.build(emb, m = 4, codes = 16)
-    val pq = Pq.search(index, probeId = 0, topK = 5, shortlist = 50)
+    val index = ProductQuant.build(emb, m = 4, codes = 16)
+    val pq = ProductQuant.search(index, probeId = 0, topK = 5, shortlist = 50)
       .collect().map(_.getAs[Long]("neighbor_id")).toSet
     val brute = graft.SparkEntry.registry.find(_.name == "sim_topk").get
       .fn(spark, sf)

@@ -11,6 +11,17 @@ import org.apache.spark.sql.types.DecimalType
   * skip), and a new batch id must still apply. */
 class TakedownSpec extends SparkTestBase {
 
+  /** Chars and rows per `src` over the documents copy at `base`. */
+  private def srcView(base: String, layout: String) =
+    graft.plans.EpochMv.EpochMvDef(base, layout, Seq("src"),
+      Seq(graft.plans.MatView.AggSpec("sum", "n",
+          Some(DecimalType(38, 0)), "sum_p"),
+        graft.plans.MatView.AggSpec("count", "", None, "cnt_p")))
+
+  /** The view's current generation. */
+  private def viewOf(d: graft.plans.EpochMv.EpochMvDef) =
+    spark.read.parquet(graft.plans.EpochMv.currentDef(spark, d).mvPath)
+
   test("one call spans every tier; same-batch-id replay is a no-op; " +
       "a new batch id applies") {
     import spark.implicits._
@@ -43,19 +54,12 @@ class TakedownSpec extends SparkTestBase {
     docs.select(col("doc_id"), col("src"),
       length(col("text")).cast("long").as("n"))
       .write.mode("overwrite").parquet(base)
-    spark.read.parquet(base).groupBy(col("src"))
-      .agg(sum(col("n").cast(DecimalType(38, 0))).as("sum_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mv)
-    graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-      Seq("src"),
-      Seq(graft.plans.MatView.AggSpec("sum", "n",
-          Some(DecimalType(38, 0)), "sum_p"),
-        graft.plans.MatView.AggSpec("count", "", None, "cnt_p"))))
+    val mvDef = srcView(base, mv)
+    graft.plans.EpochMv.create(spark, mvDef)
     try {
       val tiers = Takedown.Tiers(postings = Some(post),
         positional = Some(pos), neardup = Some(nd), suggest = Some(sug),
-        ivfpq = Some(vec), mvBase = Some(base))
+        ivfpq = Some(vec), mvEpoch = Some(mvDef))
       def doom(id: Long) =
         docs.where(col("doc_id") === id).select("doc_id", "text")
       Takedown(spark, doom(4L), tiers, batchId = 1L)
@@ -88,7 +92,7 @@ class TakedownSpec extends SparkTestBase {
       assert(!nn.contains(4L) && nn.contains(2L))
       // MV partials: the 'book' cell lost one row and doc 4's chars,
       // and the rewrite still serves the shrunk view
-      def cells = spark.read.parquet(mv).collect()
+      def cells = viewOf(mvDef).collect()
         .map(r => (r.getString(0), r.getDecimal(1).longValue(),
           r.getLong(2))).sortBy(_._1).toSeq
       val after = cells
@@ -254,17 +258,10 @@ class TakedownSpec extends SparkTestBase {
     val mv = s"$root/mv"
     docs.select(col("doc_id"), col("src"), lit(1L).as("n"))
       .write.mode("overwrite").parquet(base)
-    spark.read.parquet(base).groupBy(col("src"))
-      .agg(sum(col("n").cast(DecimalType(38, 0))).as("sum_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mv)
-    graft.plans.MatView.register(graft.plans.MatView.MvDef(base, mv,
-      Seq("src"),
-      Seq(graft.plans.MatView.AggSpec("sum", "n",
-          Some(DecimalType(38, 0)), "sum_p"),
-        graft.plans.MatView.AggSpec("count", "", None, "cnt_p"))))
+    val mvDef = srcView(base, mv)
+    graft.plans.EpochMv.create(spark, mvDef)
     val tiers = Takedown.Tiers(postings = Some(post),
-      suggest = Some(sug), mvBase = Some(base))
+      suggest = Some(sug), mvEpoch = Some(mvDef))
     try {
       val source = MemoryStream[(Long, String)]
       val q = graft.streaming.StreamRunner.takedownAllStream(tiers,
@@ -283,17 +280,18 @@ class TakedownSpec extends SparkTestBase {
         .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
       assert(dict === Map("merge" -> 1L, "filter" -> 1L, "scan" -> 1L))
       // MV: the 'web' cell (both rows doomed) dropped entirely
-      val cells = spark.read.parquet(mv).collect()
+      val cells = viewOf(mvDef).collect()
         .map(r => (r.getString(0), r.getLong(2))).toMap
       assert(cells === Map("book" -> 1L))
       // crash-replay of the stream's batch 0 (same id, same payload):
-      // the algebraic legs skip on their markers — nothing changes
+      // the algebraic legs skip on their markers and ledger keys —
+      // nothing changes
       Takedown(spark,
         Seq(1L -> "spark merge filter").toDF("doc_id", "text"),
         tiers, batchId = 0L)
       assert(spark.read.parquet(s"$sug/delnbr")
         .where(col("delkey") === col("term")).count() === 3L)
-      assert(spark.read.parquet(mv).count() === 1L)
+      assert(viewOf(mvDef).count() === 1L)
     } finally graft.plans.MatView.deregister(base)
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * emitting NaN — Spark sorts NaN ABOVE all real values in a descending
   * sort, so an unguarded zero-norm row would claim rank 1 of every
   * probe. Pins `Ann.guardedSim` through the three serving surfaces
-  * (Ann.query, Pq.search, Ivfpq.search). */
+  * (Ann.query, ProductQuant.search, Ivfpq.search). */
 class ZeroNormSpec extends SparkTestBase {
 
   /** 8 vectors, dim 4, ids 0–7; id 7 is the all-zero vector. Built so
@@ -37,9 +37,9 @@ class ZeroNormSpec extends SparkTestBase {
     assert(out.forall(t => !t._2.isNaN))
   }
 
-  test("Pq.search exact re-rank pins the zero-norm row to sim -1") {
-    val index = Pq.build(vecs, m = 2, codes = 2, iters = 1)
-    val out = Pq.search(index, probeId = 0, topK = 7, shortlist = 10)
+  test("ProductQuant.search exact re-rank pins the zero-norm row to sim -1") {
+    val index = ProductQuant.build(vecs, m = 2, codes = 2, iters = 1)
+    val out = ProductQuant.search(index, probeId = 0, topK = 7, shortlist = 10)
       .collect().map(r => (r.getAs[Long]("neighbor_id"),
         r.getAs[Double]("sim"), r.getAs[Long]("rank")))
     val zero = out.find(_._1 == 7L).get
@@ -60,9 +60,9 @@ class ZeroNormSpec extends SparkTestBase {
     assert(out.forall(t => !t._2.isNaN))
   }
 
-  test("Pq.search with a zero-norm PROBE pins every neighbor to -1") {
-    val index = Pq.build(vecs, m = 2, codes = 2, iters = 1)
-    val out = Pq.search(index, probeId = 7, topK = 7, shortlist = 10)
+  test("ProductQuant.search with a zero-norm PROBE pins every neighbor to -1") {
+    val index = ProductQuant.build(vecs, m = 2, codes = 2, iters = 1)
+    val out = ProductQuant.search(index, probeId = 7, topK = 7, shortlist = 10)
       .collect().map(r => r.getAs[Double]("sim"))
     assert(out.nonEmpty)
     assert(out.forall(_ === -1.0))

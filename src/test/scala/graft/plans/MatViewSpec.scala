@@ -7,7 +7,10 @@ import org.apache.spark.sql.types.DecimalType
 /** MV-rewrite pins: a covered rollup aggregate is re-planned onto the
   * view (the executed plan scans ONLY the view path) with results
   * identical to the pre-registration run; shapes the view cannot answer
-  * — filters, uncovered aggregates, distinct — are left alone. */
+  * — filters, uncovered aggregates, distinct — are left alone. Every
+  * view is built and maintained through [[EpochMv]], so the
+  * maintenance-algebra pins (delta merge, negated partials, recount,
+  * refusal, null repair, replay) hold on manifest generations. */
 class MatViewSpec extends SparkTestBase {
 
   private lazy val base = {
@@ -29,25 +32,30 @@ class MatViewSpec extends SparkTestBase {
     .map(r => (r.getString(0), r.getDecimal(1).toPlainString,
       r.getLong(2))).sortBy(_._1).toSeq
 
-  private def registerMv(): String = {
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_mv"
-    baseDf.groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("l_quantity").cast(DecimalType(38, 2))).as("sum_qty_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(base, mvPath,
-      Seq("l_returnflag", "l_linestatus"),
-      Seq(MatView.AggSpec("sum", "l_quantity",
-          Some(DecimalType(38, 2)), "sum_qty_p"),
-        MatView.AggSpec("count", "", None, "cnt_p"))))
-    mvPath
+  private val SumQty = MatView.AggSpec("sum", "l_quantity",
+    Some(DecimalType(38, 2)), "sum_qty_p")
+  private val Cnt = MatView.AggSpec("count", "", None, "cnt_p")
+
+  /** The rollup view over `base`: generation 0, created once. */
+  private lazy val mvDef = {
+    val d = EpochMv.EpochMvDef(base,
+      s"${graft.GraftSession.scratchDir}/mvspec_mv",
+      Seq("l_returnflag", "l_linestatus"), Seq(SumQty, Cnt))
+    EpochMv.create(spark, d)
+    d
   }
+
+  private def registerMv(): Unit = EpochMv.registerCurrent(spark, mvDef)
+
+  /** A view's current generation, as collected rows. */
+  private def viewOf(d: EpochMv.EpochMvDef) =
+    spark.read.parquet(EpochMv.currentDef(spark, d).mvPath)
 
   test("covered rollup rewrites onto the view with identical results") {
     val truth = rows // pre-registration: scans the base
     val basePlanned = query.queryExecution.executedPlan.toString
     assert(basePlanned.contains("mvspec_base"))
-    val mvPath = registerMv()
+    registerMv()
     try {
       val plan = query.queryExecution.executedPlan.toString
       assert(plan.contains("mvspec_mv"), plan)
@@ -102,26 +110,19 @@ class MatViewSpec extends SparkTestBase {
 
   test("refresh merges a delta algebraically and still serves rewrites") {
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_rbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_rmv"
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
       .select("l_orderkey", "l_quantity", "l_returnflag", "l_linestatus")
     li.where(col("l_orderkey") % 2 === 0)
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("l_quantity").cast(DecimalType(38, 2))).as("sum_qty_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath,
-      Seq("l_returnflag", "l_linestatus"),
-      Seq(MatView.AggSpec("sum", "l_quantity",
-          Some(DecimalType(38, 2)), "sum_qty_p"),
-        MatView.AggSpec("count", "", None, "cnt_p"))))
+    val d = EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_rmv",
+      Seq("l_returnflag", "l_linestatus"), Seq(SumQty, Cnt))
+    EpochMv.create(spark, d)
     try {
       val delta = li.where(col("l_orderkey") % 2 === 1)
         .localCheckpoint(true)
       delta.write.mode("append").parquet(basePath)
-      MatView.refresh(spark, basePath, delta)
+      EpochMv.refresh(spark, d, delta, batchId = 1L)
       val q = spark.read.parquet(basePath)
         .groupBy(col("l_returnflag"))
         .agg(sum(col("l_quantity").cast(DecimalType(38, 2))).as("s"),
@@ -137,16 +138,13 @@ class MatViewSpec extends SparkTestBase {
         .collect().map(r => (r.getString(0),
           r.getDecimal(1).toPlainString, r.getLong(2))).sortBy(_._1).toSeq
       assert(got === truth)
-      // empty delta is a no-op
-      MatView.register(MatView.MvDef(basePath, mvPath,
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          MatView.AggSpec("count", "", None, "cnt_p"))))
-      val before = spark.read.parquet(mvPath).collect()
+      // empty delta is a no-op: no generation, same partials
+      EpochMv.registerCurrent(spark, d)
+      val before = viewOf(d).collect()
         .map(_.toSeq).sortBy(_.mkString("|")).toSeq
-      MatView.refresh(spark, basePath, li.limit(0))
-      assert(spark.read.parquet(mvPath).collect()
+      EpochMv.refresh(spark, d, li.limit(0), batchId = 2L)
+      assert(graft.ops.Epoch.resolve(spark, d.layoutPath).get.epoch === 1L)
+      assert(viewOf(d).collect()
         .map(_.toSeq).sortBy(_.mkString("|")).toSeq === before)
     } finally MatView.deregister(basePath)
   }
@@ -156,23 +154,16 @@ class MatViewSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_sbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_smv"
     Seq(("A", "O", 1.0), ("B", "F", 2.0))
       .toDF("l_returnflag", "l_linestatus", "l_quantity")
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("l_quantity").cast(DecimalType(38, 2))).as("sum_qty_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath,
-      Seq("l_returnflag", "l_linestatus"),
-      Seq(MatView.AggSpec("sum", "l_quantity",
-          Some(DecimalType(38, 2)), "sum_qty_p"),
-        MatView.AggSpec("count", "", None, "cnt_p"))))
+    val d = EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_smv",
+      Seq("l_returnflag", "l_linestatus"), Seq(SumQty, Cnt))
+    EpochMv.create(spark, d)
     try {
       val source = MemoryStream[(String, String, Double)]
-      val q = graft.streaming.StreamRunner.mvRefreshStream(basePath,
+      val q = graft.streaming.StreamRunner.mvRefreshEpochStream(d,
         source.toDF().toDF("l_returnflag", "l_linestatus",
           "l_quantity"))()
       source.addData(("A", "O", 10.0), ("C", "O", 5.0))
@@ -180,7 +171,7 @@ class MatViewSpec extends SparkTestBase {
       source.addData(("A", "O", 100.0))
       q.processAllAvailable()
       q.stop()
-      def cells = spark.read.parquet(mvPath).collect()
+      def cells = viewOf(d).collect()
         .map(r => (r.getString(0), r.getString(1),
           r.getDecimal(2).toPlainString, r.getLong(3)))
         .sortBy(t => (t._1, t._2)).toSeq
@@ -188,15 +179,15 @@ class MatViewSpec extends SparkTestBase {
       assert(after === Seq(
         ("A", "O", "111.00", 3L), ("B", "F", "2.00", 1L),
         ("C", "O", "5.00", 1L)))
-      // crash-replay of batch 0: same batch id → marker detected, the
+      // crash-replay of batch 0: same batch id → ledger key found, the
       // algebraic merge must NOT double-fire
-      MatView.refreshOnce(spark, basePath,
+      EpochMv.refresh(spark, d,
         Seq(("A", "O", 10.0), ("C", "O", 5.0))
           .toDF("l_returnflag", "l_linestatus", "l_quantity"),
         batchId = 0L)
       assert(cells === after)
       // a genuinely new batch id still applies
-      MatView.refreshOnce(spark, basePath,
+      EpochMv.refresh(spark, d,
         Seq(("B", "F", 1.0))
           .toDF("l_returnflag", "l_linestatus", "l_quantity"),
         batchId = 7L)
@@ -211,20 +202,18 @@ class MatViewSpec extends SparkTestBase {
     graft.Tables.lineitem(spark, "/root/testdata/sf0.001")
       .select("l_quantity", "l_returnflag", "l_linestatus")
       .write.mode("overwrite").parquet(basePath)
-    def buildView(path: String, groups: Seq[String]): Unit = {
-      spark.read.parquet(basePath)
-        .groupBy(groups.map(col): _*)
-        .agg(count(lit(1)).as("cnt_p"))
-        .write.mode("overwrite").parquet(path)
-      MatView.register(MatView.MvDef(basePath, path, groups,
-        Seq(MatView.AggSpec("count", "", None, "cnt_p"))))
+    def buildView(path: String, groups: Seq[String]) = {
+      val d = EpochMv.EpochMvDef(basePath, path, groups, Seq(
+        MatView.AggSpec("count", "", None, "cnt_p")))
+      EpochMv.create(spark, d)
+      d
     }
-    buildView(fine, Seq("l_returnflag", "l_linestatus"))
-    buildView(coarse, Seq("l_returnflag"))
+    val fineMv = buildView(fine, Seq("l_returnflag", "l_linestatus"))
+    val coarseMv = buildView(coarse, Seq("l_returnflag"))
     try {
       // a returnflag-only rollup is answerable by BOTH — the coarser
       // (fewer rows) view must be chosen
-      val byFlag = spark.read.parquet(basePath)
+      def byFlag = spark.read.parquet(basePath)
         .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
       assert(byFlag.queryExecution.executedPlan.toString
         .contains("mvspec_mcoarse"))
@@ -234,15 +223,43 @@ class MatViewSpec extends SparkTestBase {
         .agg(count(lit(1)).as("n"))
       assert(byBoth.queryExecution.executedPlan.toString
         .contains("mvspec_mfine"))
-      // and refresh reaches EVERY view of the base
+      // each view refreshes as its own generation, and selection still
+      // picks the coarsest after the flip
       import spark.implicits._
-      MatView.refresh(spark, basePath,
-        Seq((1.0, "Z", "Z")).toDF("l_quantity", "l_returnflag",
-          "l_linestatus"))
-      assert(spark.read.parquet(coarse)
+      val z = Seq((1.0, "Z", "Z")).toDF("l_quantity", "l_returnflag",
+        "l_linestatus")
+      Seq(fineMv, coarseMv).foreach(EpochMv.refresh(spark, _, z, 1L))
+      assert(viewOf(coarseMv)
         .where(col("l_returnflag") === "Z").count() === 1L)
-      assert(spark.read.parquet(fine)
+      assert(viewOf(fineMv)
         .where(col("l_returnflag") === "Z").count() === 1L)
+      assert(byFlag.queryExecution.executedPlan.toString
+        .contains("mvspec_mcoarse/g1/view"))
+    } finally MatView.deregister(basePath)
+  }
+
+  test("a view whose layout root is a prefix of another's leaves the " +
+      "other registered") {
+    import spark.implicits._
+    val basePath = s"${graft.GraftSession.scratchDir}/mvspec_pbase"
+    Seq(("A", "O"), ("A", "F"), ("N", "O"))
+      .toDF("l_returnflag", "l_linestatus")
+      .write.mode("overwrite").parquet(basePath)
+    def view(root: String, groups: Seq[String]) = EpochMv.EpochMvDef(
+      basePath, s"${graft.GraftSession.scratchDir}/$root", groups,
+      Seq(Cnt))
+    val both = view("mvspec_pv2", Seq("l_returnflag", "l_linestatus"))
+    val flag = view("mvspec_pv", Seq("l_returnflag"))
+    EpochMv.create(spark, both)
+    EpochMv.create(spark, flag)
+    try {
+      EpochMv.refresh(spark, flag,
+        Seq(("Z", "Z")).toDF("l_returnflag", "l_linestatus"), 1L)
+      val plan = spark.read.parquet(basePath)
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(count(lit(1)).as("n"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("mvspec_pv2/g0/view"), plan)
     } finally MatView.deregister(basePath)
   }
 
@@ -250,16 +267,12 @@ class MatViewSpec extends SparkTestBase {
       "null-correct, including the all-null cell") {
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_abase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_amv"
     Seq(("A", Option(10.0)), ("A", Option.empty[Double]),
       ("A", Option(20.0)), ("B", Option.empty[Double]))
       .toDF("f", "q")
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath).groupBy(col("f"))
-      .agg(sum(col("q")).as("sum_p"), count(col("q")).as("cntq_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath, Seq("f"),
+    EpochMv.create(spark, EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_amv", Seq("f"),
       Seq(MatView.AggSpec("sum", "q", None, "sum_p"),
         MatView.AggSpec("count", "q", None, "cntq_p"),
         MatView.AggSpec("count", "", None, "cnt_p"))))
@@ -298,37 +311,34 @@ class MatViewSpec extends SparkTestBase {
   }
 
   test("delete refresh: negated partials, cell drop at count 0, " +
-      "exactly-once markers independent of the append family") {
+      "exactly-once ledger keys independent of the append family") {
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_dbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_dmv"
     Seq(("A", 1.0), ("A", 2.0), ("B", 5.0), ("C", 7.0))
       .toDF("f", "q")
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath).groupBy(col("f"))
-      .agg(sum(col("q").cast(DecimalType(38, 2))).as("sum_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath, Seq("f"),
+    val d = EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_dmv", Seq("f"),
       Seq(MatView.AggSpec("sum", "q", Some(DecimalType(38, 2)), "sum_p"),
-        MatView.AggSpec("count", "", None, "cnt_p"))))
-    def cells = spark.read.parquet(mvPath).collect()
+        MatView.AggSpec("count", "", None, "cnt_p")))
+    EpochMv.create(spark, d)
+    def cells = viewOf(d).collect()
       .map(r => (r.getString(0), r.getDecimal(1).toPlainString,
         r.getLong(2))).sortBy(_._1).toSeq
     try {
       // delete the WHOLE C cell plus one A row
       val doomed = Seq(("C", 7.0), ("A", 1.0)).toDF("f", "q")
-      MatView.refreshDeleteOnce(spark, basePath, doomed, batchId = 3L)
+      EpochMv.refreshDelete(spark, d, doomed, batchId = 3L)
       val after = cells
       // C's count reached 0 → the cell is GONE, not a zero row
       assert(after === Seq(("A", "2.00", 1L), ("B", "5.00", 1L)))
       // crash-replay of the same delete batch id: a mechanical no-op
-      MatView.refreshDeleteOnce(spark, basePath, doomed, batchId = 3L)
+      EpochMv.refreshDelete(spark, d, doomed, batchId = 3L)
       assert(cells === after)
-      // the APPEND family's marker space is separate: batch id 3 on
+      // the APPEND family's ledger keys are separate: batch id 3 on
       // the append side still applies
-      MatView.refreshOnce(spark, basePath,
-        Seq(("B", 1.0)).toDF("f", "q"), batchId = 3L)
+      EpochMv.refresh(spark, d, Seq(("B", 1.0)).toDF("f", "q"),
+        batchId = 3L)
       assert(cells === Seq(("A", "2.00", 1L), ("B", "6.00", 2L)))
     } finally MatView.deregister(basePath)
   }
@@ -338,7 +348,7 @@ class MatViewSpec extends SparkTestBase {
       "keep their exact bytes, emptied cells drop, replay is a no-op") {
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_rcbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_rcmv"
+
     // A: three rows with a double sum partial whose value (0.1+0.2+7)
     // is NOT reproducible by any recomputation order-for-order — if
     // the untouched cell were recounted instead of passed through,
@@ -349,16 +359,14 @@ class MatViewSpec extends SparkTestBase {
       ("C", 4.0))
       .toDF("f", "q")
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath).groupBy(col("f"))
-      .agg(sum(col("q")).as("sum_p"), count(lit(1)).as("cnt_p"),
-        min(col("q")).as("min_p"), max(col("q")).as("max_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath, Seq("f"),
+    val d = EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_rcmv", Seq("f"),
       Seq(MatView.AggSpec("sum", "q", None, "sum_p"),
         MatView.AggSpec("count", "", None, "cnt_p"),
         MatView.AggSpec("min", "q", None, "min_p"),
-        MatView.AggSpec("max", "q", None, "max_p"))))
-    def cells = spark.read.parquet(mvPath).collect()
+        MatView.AggSpec("max", "q", None, "max_p")))
+    EpochMv.create(spark, d)
+    def cells = viewOf(d).collect()
       .map(r => (r.getString(0),
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
         r.getLong(2), r.getDouble(3), r.getDouble(4)))
@@ -368,7 +376,7 @@ class MatViewSpec extends SparkTestBase {
       // delete B's max (9.0) and all of C — before the base shrinks
       // (the takedown ordering contract)
       val doomed = Seq(("B", 9.0), ("C", 4.0)).toDF("f", "q")
-      MatView.refreshDeleteOnce(spark, basePath, doomed, batchId = 11L)
+      EpochMv.refreshDelete(spark, d, doomed, batchId = 11L)
       val after = cells
       assert(after.map(_._1) === Seq("A", "B")) // C dropped
       // untouched A: the double partial's EXACT bits survived — proof
@@ -377,8 +385,8 @@ class MatViewSpec extends SparkTestBase {
       // recounted B: the runner-up extremum is back
       val b = after.find(_._1 == "B").get
       assert(b._3 === 2L && b._4 === 3.0 && b._5 === 5.0)
-      // same-batch-id replay: marker no-op
-      MatView.refreshDeleteOnce(spark, basePath, doomed, batchId = 11L)
+      // same-batch-id replay: ledger no-op
+      EpochMv.refreshDelete(spark, d, doomed, batchId = 11L)
       assert(cells === after)
       // the rewrite serves the recounted view ≡ survivors rebuild
       val served = spark.read.parquet(basePath)
@@ -395,19 +403,17 @@ class MatViewSpec extends SparkTestBase {
   test("delete refresh REFUSES count-star-less views by name") {
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_refbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_refmv"
     Seq(("A", 1.0)).toDF("f", "q")
       .write.mode("overwrite").parquet(basePath)
     // sum-only view: no cell-liveness signal → refused
-    spark.read.parquet(basePath).groupBy(col("f"))
-      .agg(sum(col("q")).as("sum_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath, Seq("f"),
-      Seq(MatView.AggSpec("sum", "q", None, "sum_p"))))
+    val d = EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_refmv", Seq("f"),
+      Seq(MatView.AggSpec("sum", "q", None, "sum_p")))
+    EpochMv.create(spark, d)
     try {
       val ex = intercept[IllegalArgumentException] {
-        MatView.refreshDelete(spark, basePath,
-          Seq(("A", 1.0)).toDF("f", "q"))
+        EpochMv.refreshDelete(spark, d, Seq(("A", 1.0)).toDF("f", "q"),
+          batchId = 1L)
       }
       assert(ex.getMessage.contains("COUNT(*)"), ex.getMessage)
     } finally MatView.deregister(basePath)
@@ -417,24 +423,21 @@ class MatViewSpec extends SparkTestBase {
       "matching the survivors rebuild") {
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_nbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_nmv"
     Seq(("A", Option(5.0)), ("A", Option.empty[Double]))
       .toDF("f", "q")
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath).groupBy(col("f"))
-      .agg(sum(col("q")).as("sum_p"), count(col("q")).as("cntq_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath, Seq("f"),
+    val d = EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_nmv", Seq("f"),
       Seq(MatView.AggSpec("sum", "q", None, "sum_p"),
         MatView.AggSpec("count", "q", None, "cntq_p"),
-        MatView.AggSpec("count", "", None, "cnt_p"))))
+        MatView.AggSpec("count", "", None, "cnt_p")))
+    EpochMv.create(spark, d)
     try {
       // delete the only non-null row: the cell survives (one null row)
       // but its sum must read NULL, exactly as a rebuild would
-      MatView.refreshDelete(spark, basePath,
-        Seq(("A", Option(5.0))).toDF("f", "q"))
-      val row = spark.read.parquet(mvPath).collect().head
+      EpochMv.refreshDelete(spark, d,
+        Seq(("A", Option(5.0))).toDF("f", "q"), batchId = 1L)
+      val row = viewOf(d).collect().head
       assert(row.getString(0) === "A")
       assert(row.isNullAt(row.fieldIndex("sum_p")))
       assert(row.getAs[Long]("cntq_p") === 0L)
@@ -470,17 +473,11 @@ class MatViewSpec extends SparkTestBase {
       "onto view ⋈ dim — exact under join multiplicity") {
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_jbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_jmv"
     Seq((1L, 1.0), (1L, 2.0), (2L, 5.0), (3L, 7.0))
       .toDF("k", "q")
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath).groupBy(col("k"))
-      .agg(sum(col("q").cast(DecimalType(38, 2))).as("sum_p"),
-        count(col("q")).as("cntq_p"),
-        sum(col("q")).as("sumraw_p"),
-        count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath, Seq("k"),
+    EpochMv.create(spark, EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_jmv", Seq("k"),
       Seq(MatView.AggSpec("sum", "q", Some(DecimalType(38, 2)), "sum_p"),
         MatView.AggSpec("count", "q", None, "cntq_p"),
         MatView.AggSpec("sum", "q", None, "sumraw_p"),
@@ -517,13 +514,10 @@ class MatViewSpec extends SparkTestBase {
       "joins, and row-level fact filters") {
     import spark.implicits._
     val basePath = s"${graft.GraftSession.scratchDir}/mvspec_jbbase"
-    val mvPath = s"${graft.GraftSession.scratchDir}/mvspec_jbmv"
     Seq((1L, 1.0), (2L, 5.0)).toDF("k", "q")
       .write.mode("overwrite").parquet(basePath)
-    spark.read.parquet(basePath).groupBy(col("k"))
-      .agg(sum(col("q")).as("sum_p"), count(lit(1)).as("cnt_p"))
-      .write.mode("overwrite").parquet(mvPath)
-    MatView.register(MatView.MvDef(basePath, mvPath, Seq("k"),
+    EpochMv.create(spark, EpochMv.EpochMvDef(basePath,
+      s"${graft.GraftSession.scratchDir}/mvspec_jbmv", Seq("k"),
       Seq(MatView.AggSpec("sum", "q", None, "sum_p"),
         MatView.AggSpec("count", "", None, "cnt_p"))))
     val dim = Seq((1L, "A", 10.0), (2L, "B", 20.0)).toDF("dk", "g", "w")
@@ -577,12 +571,7 @@ class MatViewSpec extends SparkTestBase {
       assert(got.exists(t => t._1.isEmpty && t._2.isEmpty))
       MatView.deregister(base)
       assert(got === snap(ru))
-      MatView.register(MatView.MvDef(base,
-        s"${graft.GraftSession.scratchDir}/mvspec_mv",
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(MatView.AggSpec("sum", "l_quantity",
-            Some(DecimalType(38, 2)), "sum_qty_p"),
-          MatView.AggSpec("count", "", None, "cnt_p"))))
+      registerMv()
       // CUBE: same Expand shape, more sets
       def cu = baseDf.cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"))
