@@ -41,7 +41,7 @@ object BoolQueries {
   /** Top-`10` BM25 over the docs satisfying
     * (AND must) ∧ (OR should, required iff must empty) ∧
     * (AND each `phrases` entry, exact-adjacency via the POSITIONAL
-    * layout at `positional`) ∧ ¬(OR mustNot),
+    * epoch layout at `positional`) ∧ ¬(OR mustNot),
     * served from the persisted postings layout at `path`. Scoring
     * rows are the must+should+phrase-term postings of satisfying
     * docs (the phrase contributes its terms' BM25 — the standard
@@ -81,7 +81,7 @@ object BoolQueries {
         Seq(lists.where(col("term").isin(should: _*))
           .select(col("doc_id")).distinct())
       else Seq.empty) ++
-        phrases.map(ph => PhraseQueries
+        phrases.map(ph => EpochPositional
           .servePhrase(s, positional.get, ph).select(col("doc_id")))
     val satisfying = clauseSets.reduce(_.join(_, Seq("doc_id")))
     val positive = lists.where(col("term").isin(scoring: _*))

@@ -54,11 +54,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * older than the keep horizon can lose directories mid-query, exactly
   * like Iceberg snapshot expiry — size `keep` to the longest query.
   *
-  * Adoption map: postings ([[EpochPostings]]), positional phrase
-  * ([[EpochPositional]]), suggest ([[EpochSuggest]]) and float IVF
+  * Adoption map: postings ([[EpochPostings]]) and float IVF
   * ([[EpochAnn]]) serve from epochs beside their swap layouts;
-  * materialized views are epoch-only ([[graft.plans.EpochMv]] is the
-  * one way a view is built and maintained); hybrid retrieval composes
+  * materialized views ([[graft.plans.EpochMv]]), the positional phrase
+  * index ([[EpochPositional]]) and the suggest dictionary
+  * ([[EpochSuggest]]) are epoch-only — each is the one way its state
+  * is built, maintained and read; hybrid retrieval composes
   * the epoch postings + IVF faces. The NEAR-DUP tier deliberately stays on the
   * [[Layout.replaceDir]] swap discipline: its ingest gate is a
   * read-your-own-writes loop (each micro-batch's verdicts must see the

@@ -5,21 +5,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** The POSITIONAL (phrase) index on EPOCH manifests — the third text
-  * tier on the manifest-pointer layout ([[Epoch]]), beside
-  * [[EpochPostings]] and [[EpochAnn]]: same index semantics as the
-  * swap layout ([[PhraseQueries.buildPositional]] lineage — the row
-  * builders, adjacency fold, and presentation are the SHARED code
-  * paths), but append/delete/compact each publish ONE atomic manifest
-  * flip, so phrase serving continues uninterrupted through any
+/** The POSITIONAL (phrase) index on EPOCH manifests ([[Epoch]]) — the
+  * one way a positional index is built, maintained and read. The row
+  * builders, adjacency fold and presentation are [[PhraseQueries]]'
+  * shared code; build/append/delete/compact each publish ONE atomic
+  * manifest flip, so phrase serving continues uninterrupted through any
   * mutation. Components: `lists` (multi-dir — appends reference a new
   * delta beside the old segments), `stats` (exact long accumulators,
-  * rewritten per mutation), `tombstones`. No df side table — the
-  * positional tier derives df from rows already in hand
-  * (the swap layout's documented design), so an epoch here is two
-  * component updates, never three. Ledger exactly-once (`app_<id>` /
-  * `del_<id>`); `phrase_serve_epoch` drives build → delta append →
-  * serve under the `phrase_search` oracle. */
+  * rewritten per mutation), `tombstones`. No df side table — a term's
+  * df is the row count of its posting list, derived from rows already
+  * in hand — so a mutation touches at most two components, committed
+  * together. Ledger exactly-once (`app_<id>` / `del_<id>`). Every
+  * reader resolves the manifest once and reads through [[lists]]. */
 object EpochPositional {
 
   private val Lists = "lists"
@@ -42,14 +39,14 @@ object EpochPositional {
       Seq.empty))
   }
 
-  private def current(s: SparkSession, path: String): Epoch.Manifest =
+  private[ops] def current(s: SparkSession, path: String)
+      : Epoch.Manifest =
     Epoch.resolve(s, path).getOrElse(throw new IllegalStateException(
       s"EpochPositional: no committed epoch at $path — build first"))
 
   /** Append one document batch as a referenced delta generation —
     * positional rows are per-document state, so the delta's rows are
-    * identical to a rebuild's for those docs ([[PhraseQueries
-    * .positionalAppend]]'s argument, inherited). Ledger-replay-safe on
+    * identical to a rebuild's for those docs. Ledger-replay-safe on
     * `app_<batchId>`; tombstoned re-adds refused (compact first). */
   def append(s: SparkSession, newDocs: DataFrame, path: String,
       batchId: Long): Unit = {
@@ -71,7 +68,7 @@ object EpochPositional {
       .repartitionByRange(8, col("term"))
       .sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$g/delta")
-    val old = Epoch.read(s, path, m, Stats).get
+    val old = stats(s, path, m)
       .select(col("sum_dl"), col("n_docs_l")).head()
     writeStats(s, s"$g/stats", old.getLong(1) + nw.getLong(0),
       old.getLong(0) + nw.getLong(1))
@@ -83,7 +80,9 @@ object EpochPositional {
   }
 
   /** Tombstone-delete under `del_<batchId>` — accumulated tombstones +
-    * subtracted stats as one epoch; the positional lists untouched. */
+    * subtracted stats as one epoch; the positional lists untouched.
+    * Already-tombstoned ids are excluded up front, so a re-delivered id
+    * under a NEW batch id commits nothing either. */
   def delete(s: SparkSession, docIds: DataFrame, path: String,
       batchId: Long): Unit = {
     val m = current(s, path)
@@ -104,7 +103,7 @@ object EpochPositional {
     val g = Epoch.genDir(s, path, m.next)
     oldTomb.map(_.unionByName(freshIds)).getOrElse(freshIds)
       .coalesce(1).write.mode("overwrite").parquet(s"$g/tombstones")
-    val old = Epoch.read(s, path, m, Stats).get
+    val old = stats(s, path, m)
       .select(col("sum_dl"), col("n_docs_l")).head()
     writeStats(s, s"$g/stats", old.getLong(1) - docStats.getLong(0),
       old.getLong(0) - docStats.getLong(1))
@@ -149,50 +148,44 @@ object EpochPositional {
       .write.mode("overwrite").parquet(dir)
   }
 
-  /** Phrase hits served against ONE pinned manifest — the shared
-    * adjacency fold over the multi-dir pushed-`In` scan, minus the
-    * pinned tombstones. */
-  def servePhraseOn(s: SparkSession, path: String, m: Epoch.Manifest,
-      phrase: Seq[String]): DataFrame = {
-    val lists0 = Epoch.read(s, path, m, Lists).get
-      .where(col("term").isin(phrase.distinct: _*))
-    val lists = Epoch.read(s, path, m, Tomb)
-      .map(t => lists0.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .getOrElse(lists0)
-    PhraseQueries.phraseHits(
-      PhraseQueries.phraseStarts(lists, phrase))
+  /** The ONE positional-list read behind every serving path: the
+    * pinned manifest's multi-dir `lists` scan restricted to `terms`
+    * (a pushed `In(term, …)`; every term when None), minus the pinned
+    * `tombstones` by broadcast anti-join when that component is
+    * non-empty. */
+  private[ops] def lists(s: SparkSession, path: String, m: Epoch.Manifest,
+      terms: Option[Seq[String]]): DataFrame = {
+    val all = Epoch.read(s, path, m, Lists).get
+    val scan = terms.fold(all)(ts => all.where(col("term").isin(ts: _*)))
+    Epoch.read(s, path, m, Tomb)
+      .map(t => scan.join(broadcast(t), Seq("doc_id"), "left_anti"))
+      .getOrElse(scan)
   }
 
-  /** Resolve-then-serve reader face. */
+  /** The pinned manifest's corpus stats row. */
+  private[ops] def stats(s: SparkSession, path: String,
+      m: Epoch.Manifest): DataFrame =
+    Epoch.read(s, path, m, Stats).get
+
+  /** Phrase hits served against ONE pinned manifest — the shared
+    * adjacency fold over [[lists]]. */
+  def servePhraseOn(s: SparkSession, path: String, m: Epoch.Manifest,
+      phrase: Seq[String]): DataFrame =
+    PhraseQueries.phraseHits(PhraseQueries.phraseStarts(
+      lists(s, path, m, Some(phrase.distinct)), phrase))
+
+  /** Phrase hits served from a positional layout path — resolve the
+    * current manifest, then [[servePhraseOn]]. */
   def servePhrase(s: SparkSession, path: String, phrase: Seq[String])
       : DataFrame =
     servePhraseOn(s, path, current(s, path), phrase)
 
-  /** Per-process lifecycle state — build(half) → append(half) — the
-    * layout `phrase_serve_epoch` serves. */
-  private val saved =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[ops] def savedEpochPath(s: SparkSession, d: String): String =
-    graft.BuildOnce.memo(saved, d) {
-      val path = s"${graft.GraftSession.scratchDir}/positional_epoch_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
-      val docs = graft.Tables.documents(s, d)
-      build(s, docs.where(col("doc_id") % 2 === 0), path)
-      append(s, docs.where(col("doc_id") % 2 === 1), path, batchId = 1L)
-      path
-    }
-
-  /** Snapshot-isolated phrase serving, driver-verified: the positional
-    * index lives on epoch manifests, grown half→full by a referenced
-    * delta append, and the exact-adjacency fold over the pinned
-    * multi-dir scan must reproduce `phrase_search`'s full-corpus
-    * oracle — the layout change is invisible in the served hits. */
-  val phraseServeEpoch = GQuery(
-    "phrase_serve_epoch",
-    (s, d) => servePhrase(s, savedEpochPath(s, d),
-      PhraseQueries.phraseTerms),
-    Some(PhraseQueries.phraseOracle))
+  /** Snapshot-isolated phrase serving over the grown index (even half
+    * built, odd half appended as a delta epoch) — the state
+    * `phrase_serve_append` serves, under the same builder and the
+    * `phrase_search` full-corpus oracle. */
+  val phraseServeEpoch =
+    PhraseQueries.phraseServeAppend.copy(name = "phrase_serve_epoch")
 
   def all: Seq[GQuery] = Seq(phraseServeEpoch)
 }

@@ -1,39 +1,35 @@
 package graft.ops
 
-import graft.GQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** The spell-suggest dictionary on EPOCH manifests — the ALGEBRAIC
-  * tier's turn on the manifest-pointer layout ([[Epoch]]): unlike the
-  * tombstone tiers (postings/positional/IVF), every suggest mutation
-  * is a signed df merge that rewrites the whole delkey dictionary, so
-  * the epoch form is the natural fit — each merge ([[Suggest
-  * .mergedDict]], the SAME frame the swap layout writes) lands as a
-  * fresh generation behind one atomic manifest rename, replacing the
-  * `_applied_del_<id>` marker-in-swap discipline with the manifest
-  * ledger. Serving reuses the [[Suggest]] faces verbatim, pointed at
-  * the CURRENT generation directory (one layout root per generation,
-  * `delnbr` inside — the swap layout's exact on-disk shape), so the
-  * pushed-`In(delkey,…)` candidate read, the bounded-batch serving,
-  * and every SuggestSpec pin carry over untouched. `suggest_epoch`
-  * proves delete ≡ survivors-rebuild on this layout under
-  * `suggest_delete`'s own oracle. */
+/** The spell-suggest dictionary on EPOCH manifests ([[Epoch]]) — the one
+  * way a suggest dictionary is built and maintained. Every suggest
+  * mutation is a signed df merge that rewrites the whole delkey
+  * dictionary ([[Suggest.mergedDict]]), so each one lands as a fresh
+  * generation behind one atomic manifest rename, exactly-once on the
+  * manifest ledger. A layout holds ONE dictionary ([[Suggest.Dict]]:
+  * distance-1 `delnbr` or distance-2 `delnbr2`), named by every call
+  * that builds or maintains it. Serving reuses the [[Suggest]] faces
+  * pointed at the CURRENT generation directory ([[currentGen]], the
+  * dictionary directory inside), so the pushed-`In(delkey,…)`
+  * candidate read and the bounded-batch serving are the same for
+  * every generation. */
 object EpochSuggest {
 
   private val Gen = "gen"
 
-  /** Epoch 0: the built distance-1 dictionary. */
-  def create(s: SparkSession, docs: DataFrame, path: String): Unit = {
+  /** Epoch 0: `dict` built over `docs`. */
+  def create(s: SparkSession, docs: DataFrame, path: String,
+      dict: Suggest.Dict): Unit = {
     val g = Epoch.genDir(s, path, 0L)
-    Suggest.buildSuggest(s, docs, g)
+    Suggest.buildSuggest(docs, g, dict)
     Epoch.commit(s, path, Epoch.Manifest(0L,
       Map(Gen -> Seq("g0")), Seq.empty))
   }
 
-  /** The CURRENT generation root — a swap-layout-compatible directory
-    * (`<gen>/delnbr` inside); pass it to any [[Suggest]] serving face.
-    * One manifest read pins the generation for the query. */
+  /** The CURRENT generation root (`<gen>/delnbr` or `<gen>/delnbr2`
+    * inside); pass it to any [[Suggest]] serving face. One manifest
+    * read pins the generation for the query. */
   def currentGen(s: SparkSession, path: String): String =
     Epoch.resolve(s, path).map(_.dirs(path, Gen).head)
       .getOrElse(throw new IllegalStateException(
@@ -42,63 +38,40 @@ object EpochSuggest {
   /** Append a document batch's dictionary partial as a new generation
     * (positive merge). Ledger-replay-safe on `app_<batchId>`. */
   def append(s: SparkSession, newDocs: DataFrame, path: String,
-      batchId: Long): Unit =
-    mutate(s, path, s"app_$batchId", newDocs, negate = false)
+      dict: Suggest.Dict, batchId: Long): Unit =
+    mutate(s, path, dict, s"app_$batchId", newDocs, negate = false)
 
   /** Delete documents (negative merge — rows reaching df 0 drop) as a
     * new generation. Takes (doc_id, text): df counts distinct docs per
     * term, so the subtraction needs each deleted doc's term set. Runs
     * BEFORE the data-plane row delete (the takedown ordering
-    * contract). Ledger-replay-safe on `del_<batchId>`. */
+    * contract) and assumes deleted ⊆ the indexed corpus, as every
+    * negative merge does. Ledger-replay-safe on `del_<batchId>`: a
+    * replay skips before its frame is evaluated. */
   def delete(s: SparkSession, deletedDocs: DataFrame, path: String,
-      batchId: Long): Unit =
-    mutate(s, path, s"del_$batchId", deletedDocs, negate = true)
+      dict: Suggest.Dict, batchId: Long): Unit =
+    mutate(s, path, dict, s"del_$batchId", deletedDocs, negate = true)
 
-  private def mutate(s: SparkSession, path: String, key: String,
-      docs: DataFrame, negate: Boolean): Unit = {
+  private def mutate(s: SparkSession, path: String, dict: Suggest.Dict,
+      key: String, docs: DataFrame, negate: Boolean): Unit = {
     val m = Epoch.resolve(s, path).getOrElse(
       throw new IllegalStateException(
         s"EpochSuggest: no committed epoch at $path — create first"))
     if (m.has(key)) return
     val cur = m.dirs(path, Gen).head
-    Suggest.mergedDict(s, s"$cur/delnbr", Suggest.dictionary(docs),
-      Suggest.delKeys, negate).foreach { merged =>
-      val g = Epoch.genDir(s, path, m.next)
-      merged.write.mode("overwrite").parquet(s"$g/delnbr")
-      Epoch.commit(s, path, Epoch.Manifest(m.next,
-        Map(Gen -> Seq(s"g${m.next}")), m.applied :+ key))
-    }
+    Suggest.mergedDict(s, cur, Suggest.dictionary(docs), dict, negate)
+      .foreach { merged =>
+        val g = Epoch.genDir(s, path, m.next)
+        merged.write.mode("overwrite").parquet(s"$g/${dict.dir}")
+        Epoch.commit(s, path, Epoch.Manifest(m.next,
+          Map(Gen -> Seq(s"g${m.next}")), m.applied :+ key))
+      }
   }
 
-  /** Full dictionary built as epoch 0, then the mod-6 residue's
-    * documents deleted as epoch 1 — the state `suggest_epoch`
-    * serves. */
-  private val saved =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Snapshot-isolated suggest serving: the full dictionary with the
+    * mod-6 residue's documents deleted as generation 1 — the state and
+    * oracle of `suggest_delete`, under the same builder. */
+  val suggestEpoch = Suggest.suggestDeleteQ.copy(name = "suggest_epoch")
 
-  private[ops] def savedEpochPath(s: SparkSession, d: String): String =
-    graft.BuildOnce.memo(saved, d) {
-      val path = s"${graft.GraftSession.scratchDir}/suggest_epoch_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
-      val docs = graft.Tables.documents(s, d)
-      create(s, docs, path)
-      delete(s,
-        docs.where(col("doc_id") % 6 === 1).select("doc_id", "text"),
-        path, batchId = 1L)
-      path
-    }
-
-  /** Snapshot-isolated suggest serving, driver-verified: the negative
-    * merge landed as a manifest generation (ledger exactly-once, no
-    * marker files, readers pinned throughout), and spell correction
-    * off the current generation must hash-match the brute levenshtein
-    * scan over ONLY the surviving documents' dictionary —
-    * `suggest_delete`'s oracle on the epoch layout. */
-  val suggestEpoch = GQuery(
-    "suggest_epoch",
-    (s, d) => Suggest.suggestBatch(s,
-      currentGen(s, savedEpochPath(s, d)), Suggest.probeQueries),
-    Suggest.suggestDeleteQ.oracle)
-
-  def all: Seq[GQuery] = Seq(suggestEpoch)
+  def all: Seq[graft.GQuery] = Seq(suggestEpoch)
 }

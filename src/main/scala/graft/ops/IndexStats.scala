@@ -36,8 +36,9 @@ object IndexStats {
   def indexStats(s: SparkSession, d: String): DataFrame = {
     val post = TextQueries.savedPostingsPath(s, d)
     val pos = PhraseQueries.savedPositionalPath(s, d)
+    val posM = EpochPositional.current(s, pos)
     val nd = NearDup.savedFullPath(s, d)
-    val sug = Suggest.savedSuggestPath(s, d)
+    val sug = EpochSuggest.currentGen(s, Suggest.savedSuggestPath(s, d))
     val vec = VectorQueries.savedIvfpqPath(s, d, k = 8, m = 4)
     val frames = Seq(
       one("ivfpq", "n_vectors",
@@ -49,11 +50,12 @@ object IndexStats {
       one("postings", "n_terms",
         graft.Pq.read(s, s"$post/df").agg(count(lit(1)))),
       one("positional", "n_docs",
-        graft.Pq.read(s, s"$pos/stats").agg(sum("n_docs_l"))),
+        EpochPositional.stats(s, pos, posM).agg(sum("n_docs_l"))),
       one("positional", "sum_dl",
-        graft.Pq.read(s, s"$pos/stats").agg(sum("sum_dl"))),
+        EpochPositional.stats(s, pos, posM).agg(sum("sum_dl"))),
       one("positional", "n_terms",
-        graft.Pq.read(s, s"$pos/lists").agg(countDistinct(col("term")))),
+        EpochPositional.lists(s, pos, posM, None)
+          .agg(countDistinct(col("term")))),
       one("neardup", "n_docs",
         graft.Pq.read(s, s"$nd/toks").agg(count(lit(1)))),
       one("neardup", "n_band_rows",

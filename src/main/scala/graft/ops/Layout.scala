@@ -56,8 +56,8 @@ private[graft] object Layout {
       fs.listStatus(live).map(_.getPath.getName)
         .filter(_.startsWith("_applied_")).toSeq
     else Seq.empty)
-      // trailing-digit sort covers every marker family (_applied_<id>,
-      // _applied_del_<id>): the cap keeps the highest batch ids, which
+      // trailing-digit sort covers any marker family (_applied_<id>,
+      // _applied_<kind>_<id>): the cap keeps the highest batch ids, which
       // are the only ones a streaming replay can still ask about
       .sortBy(m => m.reverse.takeWhile(_.isDigit).reverse.toLongOption
         .getOrElse(Long.MaxValue))

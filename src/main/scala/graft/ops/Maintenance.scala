@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *
   * [[sweep]] walks registered layouts, probes each against the policy,
   * and applies the due operation through the layout's OWN maintenance
-  * face (postings/positional/near-dup compaction, IVF retrain-or-
+  * face (postings/near-dup/epoch-layout compaction, IVF retrain-or-
   * compact via the existing [[Ann.needsRetrain]] skew trigger, IVF-PQ
   * compaction) — the sweep adds no new mutation semantics, so every
   * crash/replay contract those faces document carries over verbatim;
@@ -46,7 +46,7 @@ object Maintenance {
       maxRetainedEpochs: Int = 8)
 
   /** One layout under sweep management. `kind` ∈ postings |
-    * positional | neardup | ivf | ivfpq | epoch_postings |
+    * neardup | ivf | ivfpq | epoch_postings |
     * epoch_positional | epoch_suggest | epoch_ivf | epoch_ivfpq |
     * epoch_neardup | epoch_table | epoch_mv.
     * `registry` binds an epoch layout to the cross-tier snapshot
@@ -82,7 +82,7 @@ object Maintenance {
     * like the swap layout's file count). */
   private def dataDirs(s: SparkSession, ref: LayoutRef): Seq[String] =
     ref.kind match {
-      case "postings" | "positional" => Seq(s"${ref.path}/lists")
+      case "postings" => Seq(s"${ref.path}/lists")
       case "neardup" => Seq(s"${ref.path}/bands")
       case "ivf" => Seq(s"${ref.path}/assigned")
       case "ivfpq" => Seq(s"${ref.path}/encoded")
@@ -211,8 +211,6 @@ object Maintenance {
           Ivfpq.compact(s, ref.path); "compact"
         case "postings" if compactDue =>
           TextQueries.postingsCompact(s, ref.path); "compact"
-        case "positional" if compactDue =>
-          PhraseQueries.positionalCompact(s, ref.path); "compact"
         case "neardup" if compactDue =>
           NearDup.neardupCompact(s, ref.path); "compact"
         // the serve-safe layouts: compaction/retrain publish a fresh

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * documented in SURVEY §2.6; this tier is the indexed form of the same
   * question, extended to the phrase semantics a real search box needs).
   *
-  * Index layout ([[buildPositional]]): the BM25 layout ([[TextQueries]])
+  * Index layout ([[EpochPositional]], the one build/maintain/read
+  * face): the BM25 layout ([[TextQueries]])
   * with the posting row widened to carry the term's sorted 0-based
   * POSITION LIST — `(term, doc_id, dl, positions)` term-range-partitioned
   * and term-sorted, plus the same exact-accumulator corpus stats side
@@ -88,130 +89,8 @@ object PhraseQueries {
           col("n_docs_l").cast(DoubleType)).as("avgdl"),
         col("sum_dl"), col("n_docs_l"))
 
-  /** Materialize the positional index at `path`: term-range-partitioned
-    * + term-sorted positional posting lists and the corpus stats table.
-    * No df side table — a term's df is exactly the row count of its
-    * posting list, and every query here reads its terms' full lists
-    * anyway (the pushed-`In` restriction), so df is recovered by a
-    * count over rows already in hand instead of a second lookup. */
-  def buildPositional(s: SparkSession, docs: DataFrame,
-      path: String): Unit = {
-    val proj = docProjection(docs)
-    positionalRows(proj)
-      .repartitionByRange(8, col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$path/lists")
-    statsFrame(proj).write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  /** The ONE positional-list read behind every serving path: pushed
-    * `In(term, …)` restriction, then the tombstone anti-join when a
-    * delete segment exists ([[Layout.minusTombstones]] — the shared
-    * contract with the BM25/IVF layouts; a never-deleted layout pays
-    * only a directory-existence probe). */
-  private def servedPositional(s: SparkSession, path: String,
-      terms: Seq[String]): DataFrame =
-    Layout.minusTombstones(s,
-      graft.Pq.read(s, s"$path/lists").where(col("term").isin(terms: _*)),
-      path)
-
-  /** Incremental growth of a positional index — the BM25 layout's
-    * append story inherited unchanged, because every posting field
-    * (dl, positions) is PER-DOCUMENT state: a new segment's rows are
-    * identical to a full rebuild's rows for those docs. New term-sorted
-    * files append next to the built ones; the exact long accumulators
-    * merge algebraically. Same offline-maintenance consistency contract
-    * and tombstone gate as `postingsAppend`. */
-  def positionalAppend(s: SparkSession, newDocs: DataFrame,
-      path: String): Unit = {
-    val proj = docProjection(newDocs)
-    val nw = proj.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("dl")), lit(0L)).as("sd")).head()
-    if (nw.getLong(0) == 0L) return
-    Ann.appendTombstoneGate(s, path, proj.select(col("doc_id")),
-      "doc_id", "positionalAppend")
-    positionalRows(proj)
-      .repartitionByRange(8, col("term"))
-      .sortWithinPartitions("term")
-      .write.mode("append").parquet(s"$path/lists")
-    val old = graft.Pq.read(s, s"$path/stats")
-      .select(col("sum_dl"), col("n_docs_l")).head()
-    val sumDl = old.getLong(0) + nw.getLong(1)
-    val nDocs = old.getLong(1) + nw.getLong(0)
-    import s.implicits._
-    Layout.replaceDir(s,
-      Seq((nDocs.toDouble, sumDl.toDouble / nDocs.toDouble, sumDl, nDocs))
-        .toDF("n_docs", "avgdl", "sum_dl", "n_docs_l"),
-      s"$path/stats")
-  }
-
-  /** DELETE from a positional index — `postingsDelete`'s contract on
-    * the positional layout: tombstone segment (takedown-first, commits
-    * before the stats swap), exact-accumulator stats subtraction from
-    * ONE matched-rows scan, lists never rewritten. No df side table
-    * exists here (df is derived from rows at query time), so the only
-    * algebraic adjustment is stats — everything else is the serving
-    * paths' anti-join. Re-delivered batches are no-ops by construction
-    * (already-tombstoned ids are excluded up front); re-adding a
-    * deleted id requires [[positionalCompact]] first (the shared
-    * tombstone gate). */
-  def positionalDelete(s: SparkSession, docIds: DataFrame,
-      path: String): Unit = {
-    val ids = docIds.select(col("doc_id").cast(LongType)).distinct()
-    // materialize before the tombstone write — the anti-join is lazy
-    // and would otherwise re-read the segment it is about to grow
-    val freshIds = Layout.tombstonesOpt(s, path)
-      .map(t => ids.join(broadcast(t), Seq("doc_id"), "left_anti"))
-      .getOrElse(ids)
-      .localCheckpoint(true)
-    val matched = graft.Pq.read(s, s"$path/lists")
-      .join(broadcast(freshIds), Seq("doc_id"))
-    val docStats = matched.select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("sd")).head()
-    if (docStats.getLong(0) == 0L) return
-    freshIds.coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-    val old = graft.Pq.read(s, s"$path/stats")
-      .select(col("sum_dl"), col("n_docs_l")).head()
-    val sumDl = old.getLong(0) - docStats.getLong(1)
-    val nDocs = old.getLong(1) - docStats.getLong(0)
-    import s.implicits._
-    Layout.replaceDir(s,
-      Seq((nDocs.toDouble,
-        if (nDocs == 0L) 0.0 else sumDl.toDouble / nDocs.toDouble,
-        sumDl, nDocs))
-        .toDF("n_docs", "avgdl", "sum_dl", "n_docs_l"),
-      s"$path/stats")
-  }
-
-  /** Offline compaction: re-sort appended segments into `nFiles`
-    * term-sorted runs, physically drop tombstoned rows, and heal
-    * stats from the surviving lists as ground truth (the
-    * `postingsCompact` repair discipline — a crash between a delete's
-    * tombstone commit and its stats swap is repaired here, since the
-    * no-op replay can never re-fire the subtraction). */
-  def positionalCompact(s: SparkSession, path: String,
-      nFiles: Int = 8): Unit = {
-    val survivors = Layout.minusTombstones(s,
-      graft.Pq.read(s, s"$path/lists"), path)
-    Layout.replaceDir(s,
-      survivors
-        .repartitionByRange(nFiles, col("term"))
-        .sortWithinPartitions("term"),
-      s"$path/lists")
-    val st = graft.Pq.read(s, s"$path/lists")
-      .select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("sd")).head()
-    val (n, sd) = (st.getLong(0), st.getLong(1))
-    import s.implicits._
-    Layout.replaceDir(s,
-      Seq((n.toDouble, if (n == 0L) 0.0 else sd.toDouble / n, sd, n))
-        .toDF("n_docs", "avgdl", "sum_dl", "n_docs_l"),
-      s"$path/stats")
-    Layout.deleteDir(s, s"$path/tombstones")
-  }
-
+  /** The full-corpus index, epoch 0 ([[EpochPositional.build]]) — the
+    * layout every read-only positional entry serves. */
   private val positionalSaved =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -219,13 +98,14 @@ object PhraseQueries {
     graft.BuildOnce.memo(positionalSaved, d) {
       val path = s"${graft.GraftSession.scratchDir}/positional_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
-      buildPositional(s, Tables.documents(s, d), path)
+      EpochPositional.build(s, Tables.documents(s, d), path)
       path
     }
 
-  /** Half-built, half-appended layout (doc-id parity split) —
-    * `bm25_serve_append`'s positional twin, served by
-    * `phrase_serve_append` against the full-corpus oracle. */
+  /** Half-built, half-appended layout (doc-id parity split, the odd
+    * half one delta epoch) — `bm25_serve_append`'s positional twin,
+    * served by `phrase_serve_append` and `phrase_serve_epoch` against
+    * the full-corpus oracle. */
   private val positionalAppendSaved =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -235,14 +115,15 @@ object PhraseQueries {
       val path = s"${graft.GraftSession.scratchDir}/positional_app_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
       val docs = Tables.documents(s, d)
-      buildPositional(s, docs.where(col("doc_id") % 2 === 0), path)
-      positionalAppend(s, docs.where(col("doc_id") % 2 === 1), path)
+      EpochPositional.build(s, docs.where(col("doc_id") % 2 === 0), path)
+      EpochPositional.append(s, docs.where(col("doc_id") % 2 === 1), path,
+        batchId = 1L)
       path
     }
 
   /** The append layout taken through the FULL lifecycle: build-half →
-    * append-half → [[positionalCompact]] back to 8 sorted runs — the
-    * layout `phrase_serve_compact` serves. Separate path from
+    * append-half → [[EpochPositional.compact]] back to 8 sorted runs —
+    * the layout `phrase_serve_compact` serves. Separate path from
     * [[savedPositionalAppendPath]] so the un-compacted mixed layout
     * stays independently served. */
   private val positionalCompactSaved =
@@ -254,9 +135,10 @@ object PhraseQueries {
       val path = s"${graft.GraftSession.scratchDir}/positional_cpt_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
       val docs = Tables.documents(s, d)
-      buildPositional(s, docs.where(col("doc_id") % 2 === 0), path)
-      positionalAppend(s, docs.where(col("doc_id") % 2 === 1), path)
-      positionalCompact(s, path)
+      EpochPositional.build(s, docs.where(col("doc_id") % 2 === 0), path)
+      EpochPositional.append(s, docs.where(col("doc_id") % 2 === 1), path,
+        batchId = 1L)
+      EpochPositional.compact(s, path)
       path
     }
 
@@ -273,10 +155,10 @@ object PhraseQueries {
       val path = s"${graft.GraftSession.scratchDir}/positional_del_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
       val docs = Tables.documents(s, d)
-      buildPositional(s, docs, path)
-      positionalDelete(s,
+      EpochPositional.build(s, docs, path)
+      EpochPositional.delete(s,
         docs.where(pmod(col("doc_id"), lit(5)) === 1).select("doc_id"),
-        path)
+        path, batchId = 1L)
       path
     }
 
@@ -311,15 +193,6 @@ object PhraseQueries {
         size(col("starts")).cast(LongType).as("n_occ"),
         array_min(col("starts")).as("first_pos"))
       .orderBy("doc_id")
-
-  /** Phrase hits served from an ARBITRARY positional layout path —
-    * the public serving API behind the registry entries (which bind it
-    * to the per-process sfDir layouts): tombstone-aware pushed-`In`
-    * read, adjacency fold, (doc_id, n_occ, first_pos) presentation. */
-  def servePhrase(s: SparkSession, path: String,
-      phrase: Seq[String]): DataFrame =
-    phraseHits(phraseStarts(
-      servedPositional(s, path, phrase.distinct), phrase))
 
   /** The oracle shared by `phrase_search` and `phrase_serve`: DuckDB
     * re-derives the start set positionally from the token array (1-based
@@ -360,18 +233,20 @@ object PhraseQueries {
     * build→persist→serve roundtrip is itself hash-verified. */
   val phraseServe = GQuery(
     "phrase_serve",
-    (s, d) => servePhrase(s, savedPositionalPath(s, d), phraseTerms),
+    (s, d) => EpochPositional.servePhrase(s, savedPositionalPath(s, d),
+      phraseTerms),
     Some(phraseOracle))
 
   /** The positional index under GROWTH: built on the even-id half,
-    * [[positionalAppend]]ed the odd half, then phrase-served. The
+    * the odd half appended as a delta epoch, then phrase-served. The
     * oracle is the FULL-corpus phrase SQL — per-document posting state
     * means appended serving must equal full-rebuild serving exactly,
     * and the hash match proves it (the `bm25_serve_append`
     * discipline). */
   val phraseServeAppend = GQuery(
     "phrase_serve_append",
-    (s, d) => servePhrase(s, savedPositionalAppendPath(s, d), phraseTerms),
+    (s, d) => EpochPositional.servePhrase(s,
+      savedPositionalAppendPath(s, d), phraseTerms),
     Some(phraseOracle))
 
   /** The full maintenance lifecycle, driver-verified: build-half →
@@ -382,19 +257,21 @@ object PhraseQueries {
     * append ≡ rebuild. */
   val phraseServeCompact = GQuery(
     "phrase_serve_compact",
-    (s, d) => servePhrase(s, savedPositionalCompactPath(s, d), phraseTerms),
+    (s, d) => EpochPositional.servePhrase(s,
+      savedPositionalCompactPath(s, d), phraseTerms),
     Some(phraseOracle))
 
   /** The positional index under DELETE: full build, doc_id ≡ 1 (mod 5)
-    * tombstoned ([[positionalDelete]] — lists untouched, serving paths
-    * anti-join the bounded segment), then phrase-served. Oracle =
+    * tombstoned ([[EpochPositional.delete]] — lists untouched, serving
+    * paths anti-join the pinned tombstones), then phrase-served. Oracle =
     * the phrase SQL over ONLY the survivors, so the hash match is the
     * delete ≡ rebuild-over-survivors proof; a deleted doc can never
     * surface in a phrase result (the takedown guarantee, now on all
     * FOUR persisted index forms). */
   val phraseServeDelete = GQuery(
     "phrase_serve_delete",
-    (s, d) => servePhrase(s, savedPositionalDeletePath(s, d), phraseTerms),
+    (s, d) => EpochPositional.servePhrase(s,
+      savedPositionalDeletePath(s, d), phraseTerms),
     Some("""
       WITH toks AS (
         SELECT doc_id, str_split(text, ' ') AS t
@@ -440,7 +317,8 @@ object PhraseQueries {
     "phrase_near",
     (s, d) => {
       val path = savedPositionalPath(s, d)
-      val rows = servedPositional(s, path, phraseTerms)
+      val rows = EpochPositional.lists(s, path,
+        EpochPositional.current(s, path), Some(phraseTerms))
       phraseHits(nearStarts(rows, phraseTerms(0), phraseTerms(1),
         window = 3))
     },
@@ -486,8 +364,9 @@ object PhraseQueries {
     "phrase_rank",
     (s, d) => {
       val path = savedPositionalPath(s, d)
-      val rows = servedPositional(s, path, phraseTerms)
-      val stats = graft.Pq.read(s, s"$path/stats")
+      val m = EpochPositional.current(s, path)
+      val rows = EpochPositional.lists(s, path, m, Some(phraseTerms))
+      val stats = EpochPositional.stats(s, path, m)
         .select(col("n_docs"), col("avgdl"))
       val matches = phraseStarts(rows, phraseTerms)
         .select(col("doc_id"),
@@ -580,8 +459,8 @@ object PhraseQueries {
     "phrase_snippet",
     (s, d) => {
       val path = savedPositionalPath(s, d)
-      val matches = phraseStarts(
-        servedPositional(s, path, phraseTerms), phraseTerms)
+      val matches = phraseStarts(EpochPositional.lists(s, path,
+        EpochPositional.current(s, path), Some(phraseTerms)), phraseTerms)
         .select(col("doc_id"),
           size(col("starts")).cast(LongType).as("n_occ"),
           array_min(col("starts")).as("first_pos"))
@@ -667,7 +546,9 @@ object PhraseQueries {
       queries: Seq[(Long, Seq[String])]): DataFrame = {
     val qreq = requestFrame(s, queries)
     val path = savedPositionalPath(s, d)
-    val rows = servedPositional(s, path, queries.flatMap(_._2).distinct)
+    val rows = EpochPositional.lists(s, path,
+      EpochPositional.current(s, path),
+      Some(queries.flatMap(_._2).distinct))
     matchBatch(rows, qreq)
   }
 
@@ -764,7 +645,8 @@ object PhraseQueries {
       val ids = top.select(col("doc_id"))
         .collect().map(_.getLong(0)).toSeq
       require(ids.size <= 10, s"search_snippets: ${ids.size} ids")
-      val hits = servedPositional(s, pos, terms)
+      val hits = EpochPositional.lists(s, pos,
+          EpochPositional.current(s, pos), Some(terms))
         .where(col("doc_id").isin(ids: _*))
         .groupBy(col("doc_id"))
         .agg(min(array_min(col("positions"))).as("hit_pos"))

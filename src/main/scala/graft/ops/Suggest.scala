@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{GQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   * into a handful of exact bucket lookups plus a bounded verification —
   * never a dictionary scan with a levenshtein per row.
   *
-  * Index layout at `path`/delnbr: `(delkey, term, df)` — one row per
+  * Index layout at `<generation>/delnbr` ([[EpochSuggest]], the one
+  * build/maintain face; [[Dict]] names the distance-1 and distance-2
+  * layouts): `(delkey, term, df)` — one row per
   * (dictionary term, deletion key), df (document frequency, the ranking
   * signal) DENORMALIZED inline so serving is a single lookup with no
   * second dictionary join. Range-partitioned + sorted on `delkey`, so a
@@ -55,23 +57,36 @@ object Suggest {
   /** {term} ∪ {term minus one character} as a per-row array — the
     * deletion-key set, SQL-expression form (no UDF: substr arithmetic
     * under `transform`). */
-  private[ops] def delKeys(term: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
+  private[ops] def delKeys(term: Column): Column =
     array_union(
       array(term),
       transform(sequence(lit(1), length(term)),
         i => concat(term.substr(lit(1), i - 1),
           term.substr(i + 1, length(term) - i))))
 
-  /** Materialize the deletion-neighborhood index at `path` from `docs`:
+  /** One deletion-neighborhood dictionary: the directory it occupies
+    * under a generation root and its deletion-key rule. [[Distance1]]
+    * serves [[suggestBatch]], [[Distance2]] serves [[suggestBatch2]];
+    * each is its own layout so an entry's scan cost matches its edit
+    * budget (classic SymSpell ships maxEdit as a build parameter for
+    * exactly this reason). */
+  final case class Dict(dir: String, keys: Column => Column)
+
+  val Distance1 = Dict("delnbr", delKeys)
+  // Σ(1 + |t| + |t|(|t|−1)/2) rows per dictionary term: still
+  // dictionary-scale
+  val Distance2 = Dict("delnbr2", delKeys2)
+
+  /** Materialize `dict` under the generation root `gen` from `docs`:
     * one (delkey, term, df) row per deletion key, delkey-sorted. */
-  def buildSuggest(s: SparkSession, docs: DataFrame, path: String): Unit =
+  private[ops] def buildSuggest(docs: DataFrame, gen: String,
+      dict: Dict): Unit =
     dictionary(docs)
-      .select(explode(delKeys(col("term"))).as("delkey"),
+      .select(explode(dict.keys(col("term"))).as("delkey"),
         col("term"), col("df"))
       .repartitionByRange(4, col("delkey"))
       .sortWithinPartitions("delkey")
-      .write.mode("overwrite").parquet(s"$path/delnbr")
+      .write.mode("overwrite").parquet(s"$gen/${dict.dir}")
 
   /** Scala-side deletion neighborhood of a query string — the request
     * frame is driver-built (queries are literals), so this is the one
@@ -102,10 +117,11 @@ object Suggest {
       .join(broadcast(requests), Seq("delkey"))
   }
 
-  /** Serve a query batch: per query, the top-`k` dictionary terms
-    * within edit distance 1, ranked (df DESC, term). Output
-    * (query, rnk, term, df); a query with no match contributes no
-    * rows. */
+  /** Serve a query batch off the [[Distance1]] dictionary under the
+    * generation root `path` ([[EpochSuggest.currentGen]]): per query,
+    * the top-`k` dictionary terms within edit distance 1, ranked
+    * (df DESC, term). Output (query, rnk, term, df); a query with no
+    * match contributes no rows. */
   def suggestBatch(s: SparkSession, path: String, queries: Seq[String],
       k: Int = 3,
       maxInPushdown: Int = NearDup.MaxInPushdown): DataFrame = {
@@ -118,7 +134,7 @@ object Suggest {
     // r20 §5: the request frame IS driver-local — derive the pushed-In
     // key set from the local pairs instead of a collect job per serve
     val keys = reqPairs.map(_._2).distinct.toArray
-    val cand = candidateRead(s, s"$path/delnbr", requests, keys,
+    val cand = candidateRead(s, s"$path/${Distance1.dir}", requests, keys,
       maxInPushdown)
       .select(col("query"), col("term"), col("df"))
       .distinct()
@@ -131,47 +147,27 @@ object Suggest {
       .orderBy(col("query"), col("rnk"))
   }
 
-  /** Incremental growth of the suggest index: the new batch's partial
-    * dictionary (term, df) merges algebraically into the persisted
-    * delkey rows — matched terms' rows get their (denormalized) df
-    * summed, genuinely new terms contribute their freshly generated
-    * deletion keys — and the merged frame swap-replaces the directory
-    * ([[Layout.replaceDir]], the shared crash-recovery contract). The
-    * rewrite is ∝ |dictionary|, NOT corpus: dictionary-scale
-    * maintenance is the correct cost model for a term-level layout (at
-    * 100 TB the dictionary is millions of rows where the corpus is
-    * trillions). df addition is exact (long counts), so append ≡
-    * rebuild — `suggest_append` hash-verifies it against the
-    * full-corpus oracle; [[suggestDelete]] is the same algebra
-    * negated. */
-  def suggestAppend(s: SparkSession, newDocs: DataFrame,
-      path: String): Unit =
-    mergeDict(s, s"$path/delnbr", dictionary(newDocs), delKeys,
-      negate = false, Nil)
-
-  /** The ONE dictionary-merge core behind append and delete on BOTH
-    * edit-distance layouts: the batch's partial dictionary explodes to
-    * its deletion keys (the layout's own key rule), merges signed
-    * (positive = append, negated = delete) into the stored rows, and
-    * — on the delete side — (delkey, term) rows whose df reaches 0
-    * drop, exactly the rows a survivors-rebuild would never produce.
-    * Long df arithmetic is exact in both directions, so append ≡
-    * grown-rebuild and delete ≡ survivors-rebuild algebraically; one
-    * body means the four public ops cannot drift apart. */
-  /** The dictionary merge as a FRAME (sorted-layout shape included) —
-    * shared by the in-place swap merge below and the epoch-layout
-    * suggest ([[EpochSuggest]]), so the two maintenance forms cannot
-    * drift on the signed-df algebra. None when the partial is empty. */
-  private[ops] def mergedDict(s: SparkSession, dir: String,
-      partial: DataFrame,
-      keysOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      negate: Boolean): Option[DataFrame] = {
+  /** The dictionary merge behind append and delete on BOTH
+    * edit-distance layouts, as a FRAME (sorted-layout shape included):
+    * the batch's partial dictionary explodes to its deletion keys (the
+    * layout's own key rule), merges signed (positive = append, negated
+    * = delete) into the rows of `dict` under the generation root
+    * `gen`, and — on the delete side — (delkey, term) rows whose df
+    * reaches 0 drop, exactly the rows a survivors-rebuild would never
+    * produce. Long df arithmetic is exact in both directions, so
+    * append ≡ grown-rebuild and delete ≡ survivors-rebuild
+    * algebraically. The rewrite is ∝ |dictionary|, NOT corpus. None
+    * when the partial is empty. [[EpochSuggest]] publishes it as a
+    * generation. */
+  private[ops] def mergedDict(s: SparkSession, gen: String,
+      partial: DataFrame, dict: Dict, negate: Boolean)
+      : Option[DataFrame] = {
     if (partial.isEmpty) return None
     val signed = if (negate) -col("df") else col("df")
-    val merged = graft.Pq.read(s, dir)
+    val merged = graft.Pq.read(s, s"$gen/${dict.dir}")
       .select(col("delkey"), col("term"), col("df"))
       .unionByName(partial
-        .select(explode(keysOf(col("term"))).as("delkey"),
+        .select(explode(dict.keys(col("term"))).as("delkey"),
           col("term"), signed.as("df")))
       .groupBy(col("delkey"), col("term"))
       .agg(sum(col("df")).as("df"))
@@ -180,94 +176,17 @@ object Suggest {
       .sortWithinPartitions("delkey"))
   }
 
-  private def mergeDict(s: SparkSession, dir: String, partial: DataFrame,
-      keysOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      negate: Boolean, stageMarkers: Seq[String]): Unit =
-    mergedDict(s, dir, partial, keysOf, negate).foreach(m =>
-      Layout.replaceDir(s, m, dir, stageMarkers = stageMarkers))
-
-  /** DELETE documents from the suggest dictionary — the algebraic
-    * NEGATIVE merge [[suggestAppend]]'s df addition implies: the
-    * deleted docs' partial dictionary (term, distinct-doc df) merges
-    * in with NEGATED counts, and (delkey, term) rows whose df reaches
-    * 0 drop — exactly the rows a rebuild over the survivors would
-    * never produce. Long subtraction is exact, so delete ≡
-    * survivors-rebuild algebraically (`takedown_all` hash-verifies it
-    * through the full cross-tier composition). Takes the deleted
-    * docs' (doc_id, text) — df counts DISTINCT DOCS per term, so the
-    * subtraction needs each deleted doc's term set, not just its id.
-    * NOT idempotent (an algebraic merge never is) — replay-safe only
-    * through [[suggestDeleteOnce]]'s marker. Assumes deleted ⊆ the
-    * indexed corpus, same as every negative merge. */
-  def suggestDelete(s: SparkSession, deletedDocs: DataFrame,
-      path: String, stageMarkers: Seq[String] = Nil): Unit =
-    mergeDict(s, s"$path/delnbr", dictionary(deletedDocs), delKeys,
-      negate = true, stageMarkers)
-
-  /** EXACTLY-ONCE [[suggestDelete]]: the `_applied_del_<batchId>`
-    * marker rides the delnbr swap (it publishes in the same rename as
-    * the merge), so a crash-replayed takedown batch skips the negative
-    * merge exactly when it already committed. */
-  def suggestDeleteOnce(s: SparkSession, deletedDocs: DataFrame,
-      path: String, batchId: Long): Unit = {
-    val marker = s"_applied_del_$batchId"
-    if (!Layout.hasMarker(s, s"$path/delnbr", marker))
-      suggestDelete(s, deletedDocs, path, Seq(marker))
-  }
-
   /** Depth-2 deletion keys: the depth-1 rule applied to its own output
     * (nested HOF lambdas — still zero UDFs), distinct-folded. Includes
     * depths 0 and 1, so one index serves distance ≤ 2 lookups. */
-  private def delKeys2(term: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
+  private def delKeys2(term: Column): Column =
     array_distinct(flatten(transform(delKeys(term), k => delKeys(k))))
 
   private[ops] def delNeighborhood2(q: String): Seq[String] =
     delNeighborhood(q).flatMap(delNeighborhood).distinct
 
-  /** The distance-2 index: one (delkey, term, df) row per DEPTH-≤2
-    * deletion key — Σ(1 + |t| + |t|(|t|−1)/2) rows per dictionary term,
-    * still dictionary-scale. Kept a separate layout from the
-    * distance-1 directory so each entry's scan cost matches its edit
-    * budget (classic SymSpell ships maxEdit as a build parameter for
-    * exactly this reason). */
-  def buildSuggest2(s: SparkSession, docs: DataFrame, path: String): Unit =
-    dictionary(docs)
-      .select(explode(delKeys2(col("term"))).as("delkey"),
-        col("term"), col("df"))
-      .repartitionByRange(4, col("delkey"))
-      .sortWithinPartitions("delkey")
-      .write.mode("overwrite").parquet(s"$path/delnbr2")
-
-  /** Incremental growth of the distance-2 layout — [[suggestAppend]]'s
-    * algebra through the SAME merge core, just the depth-≤2 key rule
-    * and directory. append ≡ rebuild (`suggest2_append`
-    * hash-verifies it against the full-corpus distance-2 oracle). */
-  def suggestAppend2(s: SparkSession, newDocs: DataFrame,
-      path: String): Unit =
-    mergeDict(s, s"$path/delnbr2", dictionary(newDocs), delKeys2,
-      negate = false, Nil)
-
-  /** DELETE on the distance-2 layout — [[suggestDelete]]'s negative
-    * merge over the depth-≤2 keys; same exactness, same 0-df row drop,
-    * same non-idempotence (replay-safe only via
-    * [[suggestDelete2Once]]). */
-  def suggestDelete2(s: SparkSession, deletedDocs: DataFrame,
-      path: String, stageMarkers: Seq[String] = Nil): Unit =
-    mergeDict(s, s"$path/delnbr2", dictionary(deletedDocs), delKeys2,
-      negate = true, stageMarkers)
-
-  /** EXACTLY-ONCE [[suggestDelete2]] under the shared
-    * `_applied_del_<batchId>` marker family — the distance-2 leg of
-    * [[Takedown]]. */
-  def suggestDelete2Once(s: SparkSession, deletedDocs: DataFrame,
-      path: String, batchId: Long): Unit = {
-    val marker = s"_applied_del_$batchId"
-    if (!Layout.hasMarker(s, s"$path/delnbr2", marker))
-      suggestDelete2(s, deletedDocs, path, Seq(marker))
-  }
-
-  /** Distance-2 serving with the CLASSIC SymSpell ranking — closest
+  /** Distance-2 serving off the [[Distance2]] dictionary under the
+    * generation root `path`, with the CLASSIC SymSpell ranking — closest
     * edit distance first, then df, then term: an exact or distance-1
     * hit must outrank a popular distance-2 one. Same pushed-`In`
     * candidate lookup (|q|²/2-ish keys per query — still a bounded
@@ -284,7 +203,7 @@ object Suggest {
     val requests = reqPairs.toDF("query", "delkey")
     // local key derivation — same rationale as suggestBatch
     val keys = reqPairs.map(_._2).distinct.toArray
-    val cand = candidateRead(s, s"$path/delnbr2", requests, keys,
+    val cand = candidateRead(s, s"$path/${Distance2.dir}", requests, keys,
       maxInPushdown)
       .select(col("query"), col("term"), col("df"))
       .distinct()
@@ -300,6 +219,9 @@ object Suggest {
       .orderBy(col("query"), col("rnk"))
   }
 
+  /** The saved dictionaries below are epoch layouts ([[EpochSuggest]],
+    * each mutation one generation at batch id 1); entries serve the
+    * current generation. */
   private val suggest2Saved =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -307,7 +229,7 @@ object Suggest {
     graft.BuildOnce.memo(suggest2Saved, d) {
       val path = s"${graft.GraftSession.scratchDir}/suggest2_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
-      buildSuggest2(s, Tables.documents(s, d), path)
+      EpochSuggest.create(s, Tables.documents(s, d), path, Distance2)
       path
     }
 
@@ -320,7 +242,8 @@ object Suggest {
     * double-insertion, one hopeless. */
   val termSuggest2 = GQuery(
     "term_suggest2",
-    (s, d) => suggestBatch2(s, savedSuggest2Path(s, d),
+    (s, d) => suggestBatch2(s,
+      EpochSuggest.currentGen(s, savedSuggest2Path(s, d)),
       Seq("spqrk", "spxxk", "wind", "zzz")),
     Some("""
       WITH terms AS (
@@ -356,7 +279,7 @@ object Suggest {
     graft.BuildOnce.memo(suggestSaved, d) {
       val path = s"${graft.GraftSession.scratchDir}/suggest_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
-      buildSuggest(s, Tables.documents(s, d), path)
+      EpochSuggest.create(s, Tables.documents(s, d), path, Distance1)
       path
     }
 
@@ -368,7 +291,8 @@ object Suggest {
     * drift. */
   val termSuggest = GQuery(
     "term_suggest",
-    (s, d) => suggestBatch(s, savedSuggestPath(s, d), probeQueries),
+    (s, d) => suggestBatch(s,
+      EpochSuggest.currentGen(s, savedSuggestPath(s, d)), probeQueries),
     Some("""
       WITH terms AS (
         SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
@@ -388,7 +312,7 @@ object Suggest {
     """))
 
   /** Suggest index built on the even half then grown to the whole
-    * corpus through [[suggestAppend]] — the layout `suggest_append`
+    * corpus through [[EpochSuggest.append]] — the layout `suggest_append`
     * serves against the FULL-corpus oracle. */
   private val appendSaved =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -398,8 +322,10 @@ object Suggest {
       val path = s"${graft.GraftSession.scratchDir}/suggest_app_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
       val docs = Tables.documents(s, d)
-      buildSuggest(s, docs.where(col("doc_id") % 2 === 0), path)
-      suggestAppend(s, docs.where(col("doc_id") % 2 === 1), path)
+      EpochSuggest.create(s, docs.where(col("doc_id") % 2 === 0), path,
+        Distance1)
+      EpochSuggest.append(s, docs.where(col("doc_id") % 2 === 1), path,
+        Distance1, batchId = 1L)
       path
     }
 
@@ -410,12 +336,13 @@ object Suggest {
     * (same oracle as [[termSuggest]]). */
   val suggestAppendQ = GQuery(
     "suggest_append",
-    (s, d) => suggestBatch(s, savedAppendPath(s, d), probeQueries),
+    (s, d) => suggestBatch(s,
+      EpochSuggest.currentGen(s, savedAppendPath(s, d)), probeQueries),
     termSuggest.oracle)
 
   /** Full dictionary, then the mod-6 residue's documents deleted
-    * through the negative merge — the layout `suggest_delete`
-    * serves. */
+    * through the negative merge as generation 1 — the layout
+    * `suggest_delete` and `suggest_epoch` serve. */
   private val deleteSaved =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
@@ -424,10 +351,10 @@ object Suggest {
       val path = s"${graft.GraftSession.scratchDir}/suggest_del_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
       val docs = Tables.documents(s, d)
-      buildSuggest(s, docs, path)
-      suggestDelete(s,
+      EpochSuggest.create(s, docs, path, Distance1)
+      EpochSuggest.delete(s,
         docs.where(col("doc_id") % 6 === 1).select("doc_id", "text"),
-        path)
+        path, Distance1, batchId = 1L)
       path
     }
 
@@ -439,7 +366,8 @@ object Suggest {
     * (build/append/delete) the other persisted tiers already have. */
   val suggestDeleteQ = GQuery(
     "suggest_delete",
-    (s, d) => suggestBatch(s, savedDeletePath(s, d), probeQueries),
+    (s, d) => suggestBatch(s,
+      EpochSuggest.currentGen(s, savedDeletePath(s, d)), probeQueries),
     Some("""
       WITH terms AS (
         SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
@@ -460,7 +388,7 @@ object Suggest {
     """))
 
   /** Distance-2 layout built on the even half then grown through
-    * [[suggestAppend2]] — `suggest2_append` serves it against the
+    * [[EpochSuggest.append]] — `suggest2_append` serves it against the
     * FULL-corpus distance-2 oracle. */
   private val append2Saved =
     scala.collection.concurrent.TrieMap.empty[String, String]
@@ -470,8 +398,10 @@ object Suggest {
       val path = s"${graft.GraftSession.scratchDir}/suggest2_app_" +
         d.replaceAll("[^A-Za-z0-9]", "_")
       val docs = Tables.documents(s, d)
-      buildSuggest2(s, docs.where(col("doc_id") % 2 === 0), path)
-      suggestAppend2(s, docs.where(col("doc_id") % 2 === 1), path)
+      EpochSuggest.create(s, docs.where(col("doc_id") % 2 === 0), path,
+        Distance2)
+      EpochSuggest.append(s, docs.where(col("doc_id") % 2 === 1), path,
+        Distance2, batchId = 1L)
       path
     }
 
@@ -481,7 +411,8 @@ object Suggest {
     * brute scan — one merge core, both layouts, both directions. */
   val suggest2AppendQ = GQuery(
     "suggest2_append",
-    (s, d) => suggestBatch2(s, savedAppend2Path(s, d),
+    (s, d) => suggestBatch2(s,
+      EpochSuggest.currentGen(s, savedAppend2Path(s, d)),
       Seq("spqrk", "spxxk", "wind", "zzz")),
     termSuggest2.oracle)
 
@@ -496,8 +427,8 @@ object Suggest {
   val termComplete = GQuery(
     "term_complete",
     (s, d) => {
-      val path = savedSuggestPath(s, d)
-      graft.Pq.read(s, s"$path/delnbr")
+      val gen = EpochSuggest.currentGen(s, savedSuggestPath(s, d))
+      graft.Pq.read(s, s"$gen/delnbr")
         .where(col("delkey").startsWith("s") &&
           col("delkey") === col("term"))
         .orderBy(col("df").desc, col("term"))
@@ -540,7 +471,8 @@ object Suggest {
   val searchCorrected = GQuery(
     "search_corrected",
     (s, d) => {
-      val corrected = suggestBatch(s, savedSuggestPath(s, d),
+      val corrected = suggestBatch(s,
+        EpochSuggest.currentGen(s, savedSuggestPath(s, d)),
         Seq("spqrk", "mergee", "filtr", "zzz"), k = 1)
         .select(col("term")).distinct()
         .collect().map(_.getString(0)).toSeq.sorted

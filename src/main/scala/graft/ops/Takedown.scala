@@ -16,27 +16,25 @@ import org.apache.spark.sql.types._
   *
   * Per-tier legs and their replay story under ONE `batchId`:
   *
-  *  - BM25 postings ([[TextQueries.postingsDelete]]), positional
-  *    ([[PhraseQueries.positionalDelete]]), near-dup
-  *    ([[NearDup.neardupDelete]]), IVF ([[Ann.delete]]), IVF-PQ
-  *    ([[Ivfpq.delete]]): tombstone writes, idempotent BY CONSTRUCTION
-  *    (already-tombstoned ids are excluded up front) — no marker
-  *    needed, a replayed leg is a mechanical no-op.
-  *  - Suggest dictionaries ([[Suggest.suggestDeleteOnce]] /
-  *    [[Suggest.suggestDelete2Once]], one per edit-distance layout):
-  *    algebraic negative df merges — NOT idempotent, so each rides an
-  *    `_applied_del_<batchId>` marker in its directory swap.
+  *  - Swap-layout BM25 postings ([[TextQueries.postingsDelete]]),
+  *    near-dup ([[NearDup.neardupDelete]]), IVF ([[Ann.delete]]),
+  *    IVF-PQ ([[Ivfpq.delete]]): tombstone writes, idempotent BY
+  *    CONSTRUCTION (already-tombstoned ids are excluded up front) — no
+  *    marker needed, a replayed leg is a mechanical no-op.
+  *  - The suggest dictionary ([[EpochSuggest.delete]]): an algebraic
+  *    negative df merge — NOT idempotent, so it is skipped on a replay
+  *    by the manifest ledger key `del_<batchId>`.
   *  - Materialized views ([[graft.plans.EpochMv.refreshDelete]]):
-  *    the view's delete merge as a new manifest generation, skipped
-  *    on a replay by the manifest ledger key `del_<batchId>`.
-  *  - The epoch twins of the index tiers and the table tier: each
-  *    leg one manifest generation under the same `del_<batchId>`
-  *    ledger key.
+  *    the view's delete merge as a new manifest generation, under the
+  *    same ledger key.
+  *  - The positional index ([[EpochPositional.delete]]), the epoch
+  *    twins of the other index tiers and the table tier: each leg one
+  *    manifest generation under the same `del_<batchId>` ledger key.
   *
   * A crash ANYWHERE in the composition replays to the identical final
   * state: the caller re-invokes with the same batch id, tombstone legs
-  * no-op on their own, marked and ledgered legs skip exactly the
-  * merges that committed. The doomed frame is MATERIALIZED up front (the
+  * no-op on their own, ledgered legs skip exactly the merges that
+  * committed. The doomed frame is MATERIALIZED up front (the
   * lazy-segment trap: a frame derived from one of these layouts would
   * otherwise be re-read mid-mutation). Run in a maintenance window
   * without concurrent serving — the same contract as every layout
@@ -62,16 +60,14 @@ object Takedown {
     * its ledger key. */
   final case class Tiers(
       postings: Option[String] = None,
-      positional: Option[String] = None,
       neardup: Option[String] = None,
-      suggest: Option[String] = None,
-      suggest2: Option[String] = None,
       ivf: Option[String] = None,
       ivfpq: Option[String] = None,
-      // the SERVE-SAFE epoch-layout twins (ops/Epoch): deletes publish
-      // a new manifest generation under the ledger key del_<batchId>
-      // — exactly-once rides the manifest, not marker files, and
-      // concurrent readers keep their pinned snapshots throughout
+      // the SERVE-SAFE epoch layouts (ops/Epoch): deletes publish a new
+      // manifest generation under the ledger key del_<batchId> —
+      // exactly-once rides the manifest, and concurrent readers keep
+      // their pinned snapshots throughout. The positional index and
+      // the (distance-1) suggest dictionary live only here.
       postingsEpoch: Option[String] = None,
       positionalEpoch: Option[String] = None,
       suggestEpoch: Option[String] = None,
@@ -107,8 +103,7 @@ object Takedown {
     * replay ≡ once (`TakedownSpec` pins the ordering requirement). */
   def apply(s: SparkSession, doomedDocs: DataFrame, tiers: Tiers,
       batchId: Long): Unit = {
-    val needsText = tiers.suggest.nonEmpty || tiers.suggest2.nonEmpty ||
-      tiers.suggestEpoch.nonEmpty
+    val needsText = tiers.suggestEpoch.nonEmpty
     require(!needsText || doomedDocs.columns.contains("text"),
       "Takedown: a wired suggest tier needs the doomed docs' text " +
         "(the negative df merge subtracts per-term distinct-doc " +
@@ -131,7 +126,7 @@ object Takedown {
       EpochPositional.delete(s, ids, p, batchId)
     })
     tiers.suggestEpoch.foreach(p => Epoch.occ(s, p) {
-      EpochSuggest.delete(s, doomed, p, batchId)
+      EpochSuggest.delete(s, doomed, p, Suggest.Distance1, batchId)
     })
     tiers.ivfEpoch.foreach(p => Epoch.occ(s, p) {
       EpochAnn.delete(s, ids.select(col("doc_id").as("vec_id")), p,
@@ -156,17 +151,11 @@ object Takedown {
         graft.plans.EpochMv.refreshDelete(s, d, deletedRows, batchId)
       }
     }
-    tiers.positional.foreach(p =>
-      PhraseQueries.positionalDelete(s, ids, p))
     tiers.neardup.foreach(p => NearDup.neardupDelete(s, ids, p))
     tiers.ivf.foreach(p =>
       Ann.delete(s, p, ids.select(col("doc_id").as("vec_id"))))
     tiers.ivfpq.foreach(p =>
       Ivfpq.delete(s, p, ids.select(col("doc_id").as("vec_id"))))
-    tiers.suggest.foreach(p =>
-      Suggest.suggestDeleteOnce(s, doomed, p, batchId))
-    tiers.suggest2.foreach(p =>
-      Suggest.suggestDelete2Once(s, doomed, p, batchId))
   }
 
   /** The doomed residue shared by the entry, its oracle, and the tier
@@ -210,9 +199,9 @@ object Takedown {
       val base = scratch("tk_mvbase", d)
       val mv = scratch("tk_mv", d)
       TextQueries.buildPostings(s, docs, post)
-      PhraseQueries.buildPositional(s, docs, pos)
+      EpochPositional.build(s, docs, pos)
       NearDup.buildNearDup(s, docs, nd)
-      Suggest.buildSuggest(s, docs, sug)
+      EpochSuggest.create(s, docs, sug, Suggest.Distance1)
       Ivfpq.save(Ivfpq.build(emb, k = 8, m = 4, codes = 16), vec)
       Ann.save(Ann.build(emb, k = 8), ivf)
       docs.select(col("doc_id"), col("source"), col("n_chars"))
@@ -223,8 +212,8 @@ object Takedown {
         .select(col("doc_id"), col("text"))
         .localCheckpoint(true)
       Takedown(s, doomed,
-        Tiers(postings = Some(post), positional = Some(pos),
-          neardup = Some(nd), suggest = Some(sug), ivf = Some(ivf),
+        Tiers(postings = Some(post), positionalEpoch = Some(pos),
+          neardup = Some(nd), suggestEpoch = Some(sug), ivf = Some(ivf),
           ivfpq = Some(vec), mvEpoch = Some(mvDef)),
         batchId = 1L)
       Layout.replaceDir(s,
@@ -281,7 +270,7 @@ object Takedown {
           .select(norm("bm25", col("rnk"), col("doc_id"),
             col("score")): _*)
       }
-      val phraseF = Future(PhraseQueries.servePhrase(s, p("pos"),
+      val phraseF = Future(EpochPositional.servePhrase(s, p("pos"),
         Seq("spark", "merge"))
         .select(norm("phrase", col("doc_id"), col("n_occ"),
           col("first_pos")): _*))
@@ -289,8 +278,8 @@ object Takedown {
         docs.where(col("doc_id") % 62 === 8), p("nd"))
         .select(norm("neardup", col("probe_id"), col("match_id"),
           col("jaccard")): _*))
-      val suggestF = Future(Suggest.suggestBatch(s, p("sug"),
-        Suggest.probeQueries)
+      val suggestF = Future(Suggest.suggestBatch(s,
+        EpochSuggest.currentGen(s, p("sug")), Suggest.probeQueries)
         .select(norm("suggest", col("rnk"),
           concat(col("query"), lit("|"), col("term")),
           col("df")): _*))
@@ -531,7 +520,7 @@ object Takedown {
       val mv = scratch("tke_mv", d)
       EpochPostings.build(s, docs, post)
       EpochPositional.build(s, docs, pos)
-      EpochSuggest.create(s, docs, sug)
+      EpochSuggest.create(s, docs, sug, Suggest.Distance1)
       EpochAnn.build(s, emb, vec, k = 8)
       EpochIvfpq.build(s, emb, vecpq, k = 8, m = 4, codes = 16)
       EpochNearDup.build(s, docs, nd)

@@ -477,27 +477,33 @@ object StreamRunner {
   /** Streaming TAKEDOWN worker — the operational face of the index
     * DELETE lifecycle: each micro-batch of doomed doc ids drives
     * `TextQueries.postingsDelete` on the persisted BM25 layout and
-    * (when `ivfPath` is given) `Ann.delete` on the persisted IVF
-    * layout, exactly how a takedown/dedup-removal queue is drained in
-    * production — a maintenance worker serializing delete batches, not
-    * an online mutation (the per-batch body inherits the offline
-    * maintenance-window contract the delete ops document: the
-    * side-table swaps are not atomic for concurrent readers).
+    * (when given) `Ann.delete` on the persisted IVF layout,
+    * `EpochPositional.delete` on the positional epoch layout and
+    * `NearDup.neardupDelete` on the near-dup layout — how a
+    * takedown/dedup-removal queue is drained in production, a
+    * maintenance worker serializing delete batches.
     *
-    * EXACTLY-ONCE needs no batch-id ledger here, unlike
-    * [[incrRefreshStream]]: the tombstone MUTATION IS the dedup state.
-    * Both delete ops exclude already-tombstoned ids up front, so a
-    * crash-replayed batch (same checkpointed offsets) re-deletes
-    * nothing — the df/stats subtraction can never double-fire and the
-    * segment never holds a duplicate — which is precisely the
-    * idempotent-re-execution property `Bm25DeleteSpec`/`AnnDeleteSpec`
-    * pin for re-delivered batches. The flip side of replay-as-no-op:
-    * a worker crash BETWEEN a batch's tombstone commit and its
-    * df/stats swaps leaves the text index's statistics stale with no
-    * replay to fix them (content removal itself is already durable) —
-    * recovery is `postingsCompact`, which recomputes df/stats from the
-    * surviving lists as ground truth; run it before resuming serving
-    * after a mid-batch crash, as after any interrupted maintenance op.
+    * EXACTLY-ONCE on the swap layouts needs no batch-id ledger: the
+    * tombstone MUTATION IS the dedup state. Their delete ops exclude
+    * already-tombstoned ids up front, so a crash-replayed batch (same
+    * checkpointed offsets) re-deletes nothing — the df/stats
+    * subtraction can never double-fire and the segment never holds a
+    * duplicate (`Bm25DeleteSpec`/`AnnDeleteSpec` pin re-delivered
+    * batches). Those legs inherit the offline maintenance-window
+    * contract of the swap delete ops: a worker crash BETWEEN a
+    * batch's tombstone commit and its df/stats swaps leaves the text
+    * index's statistics stale with no replay to fix them (content
+    * removal itself is already durable) — recovery is
+    * `postingsCompact`, which recomputes df/stats from the surviving
+    * lists as ground truth. The positional leg has no such window: it
+    * commits tombstones and stats in one manifest under [[Epoch.occ]],
+    * keyed `del_<batchId>` on the foreachBatch id, so a replayed batch
+    * skips on the ledger and a re-delivered id in a later batch commits
+    * nothing. The stream sets no checkpoint location, so its batch ids
+    * restart at 0 with every start: a new batch whose id an earlier
+    * start already committed at the same positional layout skips the
+    * positional leg while the swap legs apply ([[takedownAllStream]]'s
+    * `checkpoint = None` caveat) — one start per positional layout.
     * Expects a streaming `doc_id: long` column; doc_id ≡ vec_id across
     * the paired layouts (the corpus convention). */
   def takedownStream(postingsPath: String, doomedIds: DataFrame,
@@ -506,22 +512,23 @@ object StreamRunner {
       neardupPath: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     doomedIds.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val s = batch.sparkSession
         val ids = batch.select(col("doc_id").cast("long").as("doc_id"))
           .localCheckpoint(true)
-        graft.ops.TextQueries.postingsDelete(batch.sparkSession, ids,
-          postingsPath)
-        ivfPath.foreach(p => graft.ops.Ann.delete(batch.sparkSession, p,
+        graft.ops.TextQueries.postingsDelete(s, ids, postingsPath)
+        ivfPath.foreach(p => graft.ops.Ann.delete(s, p,
           ids.select(col("doc_id").as("vec_id"))))
         // the positional layout is the third text-side serving tier a
-        // takedown must reach; same tombstone idempotence contract
-        positionalPath.foreach(p => graft.ops.PhraseQueries
-          .positionalDelete(batch.sparkSession, ids, p))
+        // takedown must reach
+        positionalPath.foreach(p => graft.ops.Epoch.occ(s, p) {
+          graft.ops.EpochPositional.delete(s, ids, p, batchId)
+        })
         // and the near-dup index — a taken-down document must stop
         // gating future ingests, or its content survives as a REJECT
         // verdict on every re-submission of similar text
         neardupPath.foreach(p => graft.ops.NearDup
-          .neardupDelete(batch.sparkSession, ids, p))
+          .neardupDelete(s, ids, p))
       }
       .start()
 
@@ -743,12 +750,13 @@ object StreamRunner {
     * micro-batch of doomed (doc_id, text) documents (text feeds the
     * suggest dictionary's negative df merge — the one leg bare ids
     * cannot drive). EXACTLY-ONCE composition: the checkpointed
-    * foreachBatch batch id IS the takedown batch id, so the tombstone
-    * legs replay as no-ops by construction, the suggest legs skip on
-    * their `_applied_del_<id>` markers and the MV and other epoch legs
-    * on the manifest ledger key `del_<id>` — a worker crash at ANY
-    * point replays to the identical global state, the property `TakedownSpec` pins call-level and this
-    * stream inherits wholesale. Same maintenance-worker contract as
+    * foreachBatch batch id IS the takedown batch id, so the swap
+    * tombstone legs replay as no-ops by construction and the epoch legs
+    * (suggest, MV, positional and the rest) skip on the manifest ledger
+    * key `del_<id>` — a worker crash at ANY point replays to the
+    * identical global state, the property `TakedownSpec` pins
+    * call-level and this stream inherits wholesale. Same
+    * maintenance-worker contract as
     * [[takedownStream]]: serialized delete batches in a window
     * without concurrent serving.
     *
@@ -756,11 +764,10 @@ object StreamRunner {
     * when `Takedown.apply` accepts it — no suggest tier wired; the
     * select mirrors the batch face instead of demanding text
     * unconditionally. `checkpoint` is REQUIRED for exactly-once across
-    * restarts: the algebraic legs skip on `_applied_del_<batchId>`
-    * markers and `del_<batchId>` ledger keys, both keyed by the
-    * checkpointed foreachBatch id, and a restart without a checkpoint
-    * resets ids to 0 — a new doomed batch then collides with old
-    * markers and keys, so the suggest/MV legs silently skip
+    * restarts: the algebraic legs skip on `del_<batchId>` ledger keys,
+    * keyed by the checkpointed foreachBatch id, and a restart without a
+    * checkpoint resets ids to 0 — a new doomed batch then collides with
+    * old keys, so the suggest/MV legs silently skip
     * while the tombstone legs still apply: exactly the cross-tier
     * inconsistency this stream exists to prevent. `checkpoint = None`
     * is for never-restarted one-shot runs only. */

@@ -251,8 +251,8 @@ object ScaleSweep {
         .withColumn("text", regexp_replace(col("text"), lit("(\\S+)"),
           concat(lit("r"), (col("doc_id") / KeyShift).cast("long"),
             lit("_$1"))))
-      Suggest.buildSuggest(s, docs, path)
-      Suggest.suggestBatch(s, path,
+      graft.ops.EpochSuggest.create(s, docs, path, Suggest.Distance1)
+      Suggest.suggestBatch(s, graft.ops.EpochSuggest.currentGen(s, path),
         Seq("r0_spqrk", "r0_mergee", "r0_rows", "zzz"))
     }),
     "knnjoinpq_sweep" -> ((s, dir) => {

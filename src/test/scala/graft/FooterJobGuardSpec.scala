@@ -52,11 +52,16 @@ class FooterJobGuardSpec extends AnyFunSuite {
       s"coalesce(1).sortWithinPartitions in: ${found.mkString(", ")}")
   }
 
-  /** Views are built and maintained only on epoch manifests
-    * (`EpochMv`); the swap-replace protocol (`Layout`) has no caller in
-    * the plans package. */
-  test("plans code references no Layout.") {
-    val found = offenders("\\bLayout\\.".r, Set.empty, within = "plans/")
+  /** Views, positional indexes and suggest dictionaries are built,
+    * maintained and read only on epoch manifests (`EpochMv`,
+    * `EpochPositional`, `EpochSuggest`); the swap-replace protocol
+    * (`Layout`) has no caller in the plans package or in those tiers'
+    * files. */
+  test("plans, positional and suggest code references no Layout.") {
+    val found = Seq("plans/", "ops/PhraseQueries.scala",
+      "ops/EpochPositional.scala", "ops/Suggest.scala",
+      "ops/EpochSuggest.scala", "ops/IndexStats.scala")
+      .flatMap(w => offenders("\\bLayout\\.".r, Set.empty, within = w))
     assert(found.isEmpty, s"Layout. in: ${found.mkString(", ")}")
   }
 }

@@ -78,7 +78,7 @@ class BoolSearchSpec extends SparkTestBase {
       (4L, "merge filter window"),
       (5L, "spark merge window"),
       (6L, "window scan")).toDF("doc_id", "text")
-    PhraseQueries.buildPositional(spark, docs, pos)
+    EpochPositional.build(spark, docs, pos)
     // exact phrase "spark merge" → {1,2,5}; AND filter → {1}
     assert(ids(BoolQueries.boolSearch(spark, path, must = Seq("filter"),
       positional = Some(pos), phrases = Seq(Seq("spark", "merge"))))

@@ -111,12 +111,15 @@ class ConcurrentServeSpec extends SparkTestBase {
           .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("match_id")))
           .sortBy(identity).toSeq
       def sgRows(qs: Seq[String]) =
-        Suggest.suggestBatch(spark, Suggest.savedSuggestPath(spark, sf), qs)
+        Suggest.suggestBatch(spark,
+          EpochSuggest.currentGen(spark, Suggest.savedSuggestPath(spark, sf)),
+          qs)
           .collect()
           .map(r => (r.getString(0), r.getAs[Long]("rnk"), r.getString(2)))
           .sortBy(t => (t._1, t._2)).toSeq
       def sg2Rows(qs: Seq[String]) =
-        Suggest.suggestBatch2(spark, Suggest.savedSuggest2Path(spark, sf),
+        Suggest.suggestBatch2(spark,
+          EpochSuggest.currentGen(spark, Suggest.savedSuggest2Path(spark, sf)),
           qs)
           .collect()
           .map(r => (r.getString(0), r.getAs[Long]("rnk"), r.getString(2)))

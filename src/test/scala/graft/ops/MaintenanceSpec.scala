@@ -195,9 +195,10 @@ class MaintenanceSpec extends SparkTestBase {
     // dictionary) — the sweep manages its HISTORY: five committed
     // epochs against a 3-epoch horizon → prune, then steady-state none
     val sug = s"${graft.GraftSession.scratchDir}/maint_esug"
-    EpochSuggest.create(spark, mkDocs(1L to 20L), sug)
+    EpochSuggest.create(spark, mkDocs(1L to 20L), sug, Suggest.Distance1)
     (1 to 4).foreach(i => EpochSuggest.append(spark,
-      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, batchId = i))
+      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, Suggest.Distance1,
+      batchId = i))
     assert(Epoch.committedEpochs(spark, sug) === 5)
     val sugRef = Maintenance.LayoutRef("epoch_suggest", sug)
     val horizon = Maintenance.Policy(maxSegments = 1000,
@@ -221,11 +222,12 @@ class MaintenanceSpec extends SparkTestBase {
       "and breakClaim clears them") {
     val sug = s"${graft.GraftSession.scratchDir}/maint_pinned"
     val reg = s"${graft.GraftSession.scratchDir}/maint_pinned_reg"
-    EpochSuggest.create(spark, mkDocs(1L to 20L), sug)
+    EpochSuggest.create(spark, mkDocs(1L to 20L), sug, Suggest.Distance1)
     // a retained registry snapshot pins the tier's epoch 0
     Snapshot.publish(spark, reg, Map("suggest" -> 0L), "snap_0")
     (1 to 4).foreach(i => EpochSuggest.append(spark,
-      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, batchId = i))
+      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, Suggest.Distance1,
+      batchId = i))
     assert(Epoch.committedEpochs(spark, sug) === 5)
     val ref = Maintenance.LayoutRef("epoch_suggest", sug,
       registry = Some((reg, "suggest")))

@@ -3,7 +3,8 @@ package graft.ops
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Pins for the positional retrieval tier ([[PhraseQueries]]):
+/** Pins for the positional retrieval tier ([[PhraseQueries]] over the
+  * [[EpochPositional]] layout):
   *
   *  - the adjacency fold against hand-checked fixtures — multi-occurrence
   *    phrases, REPEATED phrase terms ("big big": the same posting row
@@ -122,6 +123,13 @@ class PhraseSpec extends SparkTestBase {
     assert(near(4) === Map(1L -> Seq(0L), 3L -> Seq(0L)))
   }
 
+  /** The current manifest's live lists (every term) and stats row. */
+  private def listsOf(path: String) =
+    EpochPositional.lists(spark, path,
+      EpochPositional.current(spark, path), None)
+  private def statsOf(path: String) =
+    EpochPositional.stats(spark, path, EpochPositional.current(spark, path))
+
   test("delete lifecycle: tombstone serving, no-op replay, compact repair") {
     import spark.implicits._
     val docs = Seq(
@@ -129,35 +137,39 @@ class PhraseSpec extends SparkTestBase {
       (3L, "spark merge c"), (4L, "no match here"))
       .toDF("doc_id", "text")
     val path = s"${graft.GraftSession.scratchDir}/positional_spec_del"
-    PhraseQueries.buildPositional(spark, docs, path)
-    def servedIds = {
-      val rows = graft.ops.Layout.minusTombstones(spark,
-        spark.read.parquet(s"$path/lists")
-          .where(col("term").isin("spark", "merge")), path)
-      PhraseQueries.phraseStarts(rows, Seq("spark", "merge"))
+    EpochPositional.build(spark, docs, path)
+    def servedIds =
+      EpochPositional.servePhrase(spark, path, Seq("spark", "merge"))
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    }
     assert(servedIds === Seq(1L, 2L, 3L))
-    PhraseQueries.positionalDelete(spark, Seq(2L).toDF("doc_id"), path)
+    EpochPositional.delete(spark, Seq(2L).toDF("doc_id"), path,
+      batchId = 1L)
     assert(servedIds === Seq(1L, 3L))
-    val statsAfterDelete = spark.read.parquet(s"$path/stats")
-      .select("n_docs_l", "sum_dl").head()
+    val statsAfterDelete = statsOf(path).select("n_docs_l", "sum_dl").head()
     assert(statsAfterDelete.getLong(0) === 3L)
-    // re-delivered batch is a no-op: already-tombstoned ids are
-    // excluded up front, so the stats subtraction cannot double-fire
-    PhraseQueries.positionalDelete(spark, Seq(2L).toDF("doc_id"), path)
-    assert(spark.read.parquet(s"$path/stats")
-      .select("n_docs_l").head().getLong(0) === 3L)
+    // re-delivered id is a no-op: under the same batch id the ledger
+    // skips it, under a new one the already-tombstoned id is excluded
+    // up front — either way no epoch commits and the stats subtraction
+    // cannot double-fire
+    val epochs = Epoch.committedEpochs(spark, path)
+    EpochPositional.delete(spark, Seq(2L).toDF("doc_id"), path,
+      batchId = 1L)
+    EpochPositional.delete(spark, Seq(2L).toDF("doc_id"), path,
+      batchId = 2L)
+    assert(Epoch.committedEpochs(spark, path) === epochs)
+    assert(statsOf(path).select("n_docs_l").head().getLong(0) === 3L)
     // re-adding a tombstoned id is refused by name before compaction
     val err = intercept[IllegalArgumentException] {
-      PhraseQueries.positionalAppend(spark,
-        Seq((2L, "spark merge back")).toDF("doc_id", "text"), path)
+      EpochPositional.append(spark,
+        Seq((2L, "spark merge back")).toDF("doc_id", "text"), path,
+        batchId = 3L)
     }
-    assert(err.getMessage.contains("positionalAppend"))
-    // compaction drops the rows physically and clears the segment
-    PhraseQueries.positionalCompact(spark, path)
-    assert(!graft.ops.Layout.dirExists(spark, s"$path/tombstones"))
-    assert(spark.read.parquet(s"$path/lists")
+    assert(err.getMessage.contains("EpochPositional.append"))
+    // compaction drops the rows physically and empties the tombstones
+    EpochPositional.compact(spark, path)
+    val m = EpochPositional.current(spark, path)
+    assert(m.components("tombstones").isEmpty)
+    assert(Epoch.read(spark, path, m, "lists").get
       .where(col("doc_id") === 2L).count() === 0L)
     assert(servedIds === Seq(1L, 3L))
   }
@@ -170,18 +182,18 @@ class PhraseSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val appended = s"${graft.GraftSession.scratchDir}/positional_spec_app"
     val rebuilt = s"${graft.GraftSession.scratchDir}/positional_spec_reb"
-    PhraseQueries.buildPositional(spark, first, appended)
-    PhraseQueries.positionalAppend(spark, second, appended)
-    PhraseQueries.buildPositional(spark, first.unionByName(second), rebuilt)
+    EpochPositional.build(spark, first, appended)
+    EpochPositional.append(spark, second, appended, batchId = 1L)
+    EpochPositional.build(spark, first.unionByName(second), rebuilt)
     def rowsOf(p: String) =
-      spark.read.parquet(s"$p/lists")
+      listsOf(p)
         .collect()
         .map(r => (r.getAs[String]("term"), r.getAs[Long]("doc_id"),
           r.getAs[Long]("dl"), r.getSeq[Long](3).toSeq))
         .sortBy(t => (t._1, t._2)).toSeq
     assert(rowsOf(appended) === rowsOf(rebuilt))
-    assert(spark.read.parquet(s"$appended/stats").collect().toSeq ===
-      spark.read.parquet(s"$rebuilt/stats").collect().toSeq)
+    assert(statsOf(appended).collect().toSeq ===
+      statsOf(rebuilt).collect().toSeq)
   }
 
   test("a single-query batch reproduces phrase_serve row for row") {
@@ -204,8 +216,7 @@ class PhraseSpec extends SparkTestBase {
     // two offsets, countDistinct(offset) = 2 = phrase_len — must equal
     // the k-way-join form on the same layout
     val path = PhraseQueries.savedPositionalPath(spark, sf)
-    val rows = spark.read.parquet(s"$path/lists")
-      .where(col("term") === "spark")
+    val rows = listsOf(path).where(col("term") === "spark")
     val expected = PhraseQueries.phraseStarts(rows, Seq("spark", "spark"))
       .select(col("doc_id"), col("starts")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).size.toLong,
@@ -291,8 +302,8 @@ class PhraseSpec extends SparkTestBase {
 
   test("term restriction is pushed into the positional lists scan") {
     val path = PhraseQueries.savedPositionalPath(spark, sf)
-    val plan = spark.read.parquet(s"$path/lists")
-      .where(col("term").isin("spark", "merge"))
+    val plan = EpochPositional.lists(spark, path,
+        EpochPositional.current(spark, path), Some(Seq("spark", "merge")))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("In(term"), plan)
   }

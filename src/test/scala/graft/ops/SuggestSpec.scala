@@ -13,8 +13,14 @@ class SuggestSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The current generation roots of the saved dictionaries. */
+  private def gen1 =
+    EpochSuggest.currentGen(spark, Suggest.savedSuggestPath(spark, sf))
+  private def gen2 =
+    EpochSuggest.currentGen(spark, Suggest.savedSuggest2Path(spark, sf))
+
   test("delkey lookup is a pushed In filter") {
-    val path = Suggest.savedSuggestPath(spark, sf)
+    val path = gen1
     val plan = spark.read.parquet(s"$path/delnbr")
       .where(col("delkey").isin("a", "b"))
       .queryExecution.executedPlan.toString
@@ -24,7 +30,7 @@ class SuggestSpec extends SparkTestBase {
 
   test("over-threshold key batches fall back to the broadcast join " +
       "with identical answers (no giant In literal in the plan)") {
-    val path = Suggest.savedSuggestPath(spark, sf)
+    val path = gen1
     // same probes, both sides of the switch: maxInPushdown = 0 forces
     // the broadcast-only path the delkey count would normally trigger
     // at > NearDup.MaxInPushdown keys
@@ -38,44 +44,47 @@ class SuggestSpec extends SparkTestBase {
     assert(!plan.contains("In(delkey"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan)
     // distance-2 tier: same switch, same equality
-    val path2 = Suggest.savedSuggest2Path(spark, sf)
+    val path2 = gen2
     val p2 = Suggest.suggestBatch2(spark, path2, Seq("spqrk", "wind"))
     val f2 = Suggest.suggestBatch2(spark, path2, Seq("spqrk", "wind"),
       maxInPushdown = 0)
     assert(p2.collect().toSeq === f2.collect().toSeq)
   }
 
-  test("distance-2 delete ≡ survivors rebuild, and a marker-replayed " +
+  test("distance-2 delete ≡ survivors rebuild, and a ledger-replayed " +
       "delete batch is a no-op") {
     val docs = graft.Tables.documents(spark, sf)
     val path = s"${graft.GraftSession.scratchDir}/suggest2_del_spec"
     val rebuilt = s"${graft.GraftSession.scratchDir}/suggest2_del_ref"
-    Suggest.buildSuggest2(spark, docs, path)
+    EpochSuggest.create(spark, docs, path, Suggest.Distance2)
     val doomed = docs.where(col("doc_id") % 6 === 1)
       .select("doc_id", "text")
-    Suggest.suggestDelete2Once(spark, doomed, path, batchId = 9L)
-    Suggest.buildSuggest2(spark,
-      docs.where(col("doc_id") % 6 =!= 1), rebuilt)
-    def rows(p: String) = spark.read.parquet(s"$p/delnbr2")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .sortBy(t => (t._1, t._2)).toSeq
+    EpochSuggest.delete(spark, doomed, path, Suggest.Distance2,
+      batchId = 9L)
+    EpochSuggest.create(spark,
+      docs.where(col("doc_id") % 6 =!= 1), rebuilt, Suggest.Distance2)
+    def rows(p: String) =
+      spark.read.parquet(s"${EpochSuggest.currentGen(spark, p)}/delnbr2")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        .sortBy(t => (t._1, t._2)).toSeq
     val after = rows(path)
     assert(after === rows(rebuilt))
-    // replay with the SAME batch id and a poison frame: marker skips
-    // the merge before the frame is evaluated
-    Suggest.suggestDelete2Once(spark, docs.select("doc_id", "text"),
-      path, batchId = 9L)
+    // replay with the SAME batch id and a poison frame: the ledger
+    // skips the merge before the frame is evaluated — no epoch commits
+    val epochs = Epoch.committedEpochs(spark, path)
+    EpochSuggest.delete(spark, docs.select("doc_id", "text"), path,
+      Suggest.Distance2, batchId = 9L)
+    assert(Epoch.committedEpochs(spark, path) === epochs)
     assert(rows(path) === after)
     // served output over the deleted layout ≡ over the rebuild
-    val a = Suggest.suggestBatch2(spark, path, Seq("spqrk", "wind"))
+    def served(p: String) = Suggest.suggestBatch2(spark,
+      EpochSuggest.currentGen(spark, p), Seq("spqrk", "wind"))
       .collect().toSeq
-    val b = Suggest.suggestBatch2(spark, rebuilt, Seq("spqrk", "wind"))
-      .collect().toSeq
-    assert(a === b)
+    assert(served(path) === served(rebuilt))
   }
 
   test("index suggestion ≡ brute-force levenshtein over the dictionary") {
-    val path = Suggest.savedSuggestPath(spark, sf)
+    val path = gen1
     val dict = graft.Tables.documents(spark, sf)
       .where(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
@@ -105,7 +114,7 @@ class SuggestSpec extends SparkTestBase {
   }
 
   test("the Scala and SQL deletion-key rules agree on every term") {
-    val path = Suggest.savedSuggestPath(spark, sf)
+    val path = gen1
     val indexed = spark.read.parquet(s"$path/delnbr")
       .groupBy("term").agg(sort_array(collect_set(col("delkey")))
         .as("keys"))
@@ -118,7 +127,7 @@ class SuggestSpec extends SparkTestBase {
   }
 
   test("distance-2 index ≡ brute levenshtein ≤ 2 over the dictionary") {
-    val path = Suggest.savedSuggest2Path(spark, sf)
+    val path = gen2
     val dict = graft.Tables.documents(spark, sf)
       .where(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
@@ -143,7 +152,7 @@ class SuggestSpec extends SparkTestBase {
   }
 
   test("the Scala and SQL depth-2 deletion-key rules agree") {
-    val path = Suggest.savedSuggest2Path(spark, sf)
+    val path = gen2
     val indexed = spark.read.parquet(s"$path/delnbr2")
       .groupBy("term")
       .agg(sort_array(collect_set(col("delkey"))).as("keys"))
@@ -157,23 +166,25 @@ class SuggestSpec extends SparkTestBase {
 
   test("append ≡ rebuild: grown index serves identical suggestions") {
     def served(path: String) =
-      Suggest.suggestBatch(spark, path, Suggest.probeQueries)
+      Suggest.suggestBatch(spark, EpochSuggest.currentGen(spark, path),
+          Suggest.probeQueries)
         .collect()
         .map(r => (r.getString(0), r.getAs[Long]("rnk"), r.getString(2),
           r.getAs[Long]("df"))).sortBy(t => (t._1, t._2)).toSeq
     assert(served(Suggest.savedAppendPath(spark, sf)) ===
       served(Suggest.savedSuggestPath(spark, sf)))
-    // an empty batch mutates nothing
+    // an empty batch mutates nothing: no generation commits
     import spark.implicits._
     val path = Suggest.savedAppendPath(spark, sf)
-    val before = spark.read.parquet(s"$path/delnbr").count()
-    Suggest.suggestAppend(spark,
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), path)
-    assert(spark.read.parquet(s"$path/delnbr").count() === before)
+    val epochs = Epoch.committedEpochs(spark, path)
+    EpochSuggest.append(spark,
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), path,
+      Suggest.Distance1, batchId = 2L)
+    assert(Epoch.committedEpochs(spark, path) === epochs)
   }
 
   test("completion prefix is pushed as StringStartsWith on delkey") {
-    val path = Suggest.savedSuggestPath(spark, sf)
+    val path = gen1
     val plan = spark.read.parquet(s"$path/delnbr")
       .where(col("delkey").startsWith("s") &&
         col("delkey") === col("term"))
@@ -182,7 +193,7 @@ class SuggestSpec extends SparkTestBase {
   }
 
   test("a no-neighbor query contributes no rows") {
-    val path = Suggest.savedSuggestPath(spark, sf)
+    val path = gen1
     assert(Suggest.suggestBatch(spark, path, Seq("zzz")).count() === 0L)
   }
 }

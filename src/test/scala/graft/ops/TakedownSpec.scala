@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 /** Unified-takedown pins: ONE `Takedown.apply` must remove the doomed
   * doc from every wired tier (postings, positional, near-dup, suggest,
   * IVF-PQ, MV partials), a crash-replayed call with the same batch id
-  * must change NOTHING (tombstone legs are idempotent, marked legs
+  * must change NOTHING (tombstone legs are idempotent, ledgered legs
   * skip), and a new batch id must still apply. */
 class TakedownSpec extends SparkTestBase {
 
@@ -17,6 +17,13 @@ class TakedownSpec extends SparkTestBase {
       Seq(graft.plans.MatView.AggSpec("sum", "n",
           Some(DecimalType(38, 0)), "sum_p"),
         graft.plans.MatView.AggSpec("count", "", None, "cnt_p")))
+
+  /** Distance-1 dictionary rows of the suggest layout's current
+    * generation: term → df. */
+  private def dictOf(sug: String): Map[String, Long] =
+    spark.read.parquet(s"${EpochSuggest.currentGen(spark, sug)}/delnbr")
+      .where(col("delkey") === col("term"))
+      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
 
   /** The view's current generation. */
   private def viewOf(d: graft.plans.EpochMv.EpochMvDef) =
@@ -45,9 +52,9 @@ class TakedownSpec extends SparkTestBase {
     val (post, pos, nd, sug, vec) = (s"$root/post", s"$root/pos",
       s"$root/nd", s"$root/sug", s"$root/vec")
     TextQueries.buildPostings(spark, docs, post)
-    PhraseQueries.buildPositional(spark, docs, pos)
+    EpochPositional.build(spark, docs, pos)
     NearDup.buildNearDup(spark, docs, nd)
-    Suggest.buildSuggest(spark, docs, sug)
+    EpochSuggest.create(spark, docs, sug, Suggest.Distance1)
     Ivfpq.save(Ivfpq.build(emb, k = 2, m = 2, codes = 4), vec)
     val base = s"$root/mvbase"
     val mv = s"$root/mv"
@@ -58,8 +65,8 @@ class TakedownSpec extends SparkTestBase {
     graft.plans.EpochMv.create(spark, mvDef)
     try {
       val tiers = Takedown.Tiers(postings = Some(post),
-        positional = Some(pos), neardup = Some(nd), suggest = Some(sug),
-        ivfpq = Some(vec), mvEpoch = Some(mvDef))
+        positionalEpoch = Some(pos), neardup = Some(nd),
+        suggestEpoch = Some(sug), ivfpq = Some(vec), mvEpoch = Some(mvDef))
       def doom(id: Long) =
         docs.where(col("doc_id") === id).select("doc_id", "text")
       Takedown(spark, doom(4L), tiers, batchId = 1L)
@@ -69,7 +76,7 @@ class TakedownSpec extends SparkTestBase {
       assert(lists.where(col("doc_id") === 4).count() === 0L)
       assert(lists.where(col("doc_id") === 1).count() === 1L)
       // positional: the phrase in doc 4 is gone, others remain
-      val hits = PhraseQueries.servePhrase(spark, pos,
+      val hits = EpochPositional.servePhrase(spark, pos,
         Seq("spark", "merge")).collect().map(_.getLong(0)).toSet
       assert(!hits.contains(4L) && hits.contains(1L))
       // near-dup: doc 4's twin (doc 6, one-token edit) no longer
@@ -80,9 +87,7 @@ class TakedownSpec extends SparkTestBase {
       assert(!served.contains(4L))
       // suggest: 'scan' lived only in doc 4 — dictionary row gone;
       // 'spark' df dropped from 5 docs to 4
-      val dict = spark.read.parquet(s"$sug/delnbr")
-        .where(col("delkey") === col("term"))
-        .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+      val dict = dictOf(sug)
       assert(!dict.contains("scan"), dict.toString)
       assert(dict("spark") === 4L)
       // IVF-PQ: vec 4 (probe 1's nearest twin) is unservable
@@ -100,23 +105,19 @@ class TakedownSpec extends SparkTestBase {
 
       // crash-replay: SAME batch id — nothing may change anywhere
       val tombCount = spark.read.parquet(s"$post/tombstones").count()
+      val epochs = Seq(pos, sug).map(Epoch.committedEpochs(spark, _))
       Takedown(spark, doom(4L), tiers, batchId = 1L)
       assert(cells === after)
-      assert(spark.read.parquet(s"$sug/delnbr")
-        .where(col("delkey") === col("term") &&
-          col("term") === "spark")
-        .head().getLong(2) === 4L)
+      assert(dictOf(sug)("spark") === 4L)
       assert(spark.read.parquet(s"$post/tombstones").count()
         === tombCount)
+      assert(Seq(pos, sug).map(Epoch.committedEpochs(spark, _)) === epochs)
 
       // a NEW batch id still applies (doc 6 goes too)
       Takedown(spark, doom(6L), tiers, batchId = 2L)
       assert(cells.find(_._1 == "book").get._3 === 1L)
-      assert(spark.read.parquet(s"$sug/delnbr")
-        .where(col("delkey") === col("term") &&
-          col("term") === "spark")
-        .head().getLong(2) === 3L)
-      assert(!PhraseQueries.servePhrase(spark, pos,
+      assert(dictOf(sug)("spark") === 3L)
+      assert(!EpochPositional.servePhrase(spark, pos,
         Seq("spark", "merge")).collect().map(_.getLong(0)).toSet
         .contains(6L))
     } finally graft.plans.MatView.deregister(base)
@@ -137,7 +138,7 @@ class TakedownSpec extends SparkTestBase {
     val ex = intercept[IllegalArgumentException] {
       Takedown(spark, Seq(2L).toDF("doc_id"),
         Takedown.Tiers(postings = Some(post),
-          suggest = Some(s"$root/nope")), batchId = 2L)
+          suggestEpoch = Some(s"$root/nope")), batchId = 2L)
     }
     assert(ex.getMessage.contains("text"), ex.getMessage)
   }
@@ -216,11 +217,8 @@ class TakedownSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     docs.write.mode("overwrite").parquet(corpus)
     val sug = s"$root/sug"
-    Suggest.buildSuggest(spark, docs, sug)
-    def df(term: String): Option[Long] = spark.read
-      .parquet(s"$sug/delnbr")
-      .where(col("delkey") === col("term") && col("term") === term)
-      .collect().headOption.map(_.getLong(2))
+    EpochSuggest.create(spark, docs, sug, Suggest.Distance1)
+    def df(term: String): Option[Long] = dictOf(sug).get(term)
     // WRONG order: the data-plane row delete runs first, then the
     // takedown derives text by joining ids to the corpus — the doomed
     // rows are already gone, the suggest merge subtracts nothing
@@ -228,7 +226,7 @@ class TakedownSpec extends SparkTestBase {
       spark.read.parquet(corpus).where(col("doc_id") =!= 1L), corpus)
     val doomedLate = spark.read.parquet(corpus)
       .join(Seq(1L).toDF("doc_id"), Seq("doc_id"))
-    Takedown(spark, doomedLate, Takedown.Tiers(suggest = Some(sug)),
+    Takedown(spark, doomedLate, Takedown.Tiers(suggestEpoch = Some(sug)),
       batchId = 1L)
     assert(df("uniqterm") === Some(1L),
       "doomed term survived BECAUSE the row delete ran first — the " +
@@ -236,7 +234,7 @@ class TakedownSpec extends SparkTestBase {
     // RIGHT order: text captured before the rows go — the term leaves
     // the dictionary
     Takedown(spark, docs.where(col("doc_id") === 1L),
-      Takedown.Tiers(suggest = Some(sug)), batchId = 2L)
+      Takedown.Tiers(suggestEpoch = Some(sug)), batchId = 2L)
     assert(df("uniqterm") === None)
   }
 
@@ -253,7 +251,7 @@ class TakedownSpec extends SparkTestBase {
       .toDF("doc_id", "text", "src")
     val (post, sug) = (s"$root/post", s"$root/sug")
     TextQueries.buildPostings(spark, docs, post)
-    Suggest.buildSuggest(spark, docs, sug)
+    EpochSuggest.create(spark, docs, sug, Suggest.Distance1)
     val base = s"$root/mvbase"
     val mv = s"$root/mv"
     docs.select(col("doc_id"), col("src"), lit(1L).as("n"))
@@ -261,7 +259,7 @@ class TakedownSpec extends SparkTestBase {
     val mvDef = srcView(base, mv)
     graft.plans.EpochMv.create(spark, mvDef)
     val tiers = Takedown.Tiers(postings = Some(post),
-      suggest = Some(sug), mvEpoch = Some(mvDef))
+      suggestEpoch = Some(sug), mvEpoch = Some(mvDef))
     try {
       val source = MemoryStream[(Long, String)]
       val q = graft.streaming.StreamRunner.takedownAllStream(tiers,
@@ -275,22 +273,18 @@ class TakedownSpec extends SparkTestBase {
       val lists = TextQueries.servedLists(spark, post, Seq("spark"))
       assert(lists.select("doc_id").collect().map(_.getLong(0)).toSet
         === Set.empty[Long])
-      val dict = spark.read.parquet(s"$sug/delnbr")
-        .where(col("delkey") === col("term"))
-        .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-      assert(dict === Map("merge" -> 1L, "filter" -> 1L, "scan" -> 1L))
+      assert(dictOf(sug) === Map("merge" -> 1L, "filter" -> 1L,
+        "scan" -> 1L))
       // MV: the 'web' cell (both rows doomed) dropped entirely
       val cells = viewOf(mvDef).collect()
         .map(r => (r.getString(0), r.getLong(2))).toMap
       assert(cells === Map("book" -> 1L))
       // crash-replay of the stream's batch 0 (same id, same payload):
-      // the algebraic legs skip on their markers and ledger keys —
-      // nothing changes
+      // the algebraic legs skip on their ledger keys — nothing changes
       Takedown(spark,
         Seq(1L -> "spark merge filter").toDF("doc_id", "text"),
         tiers, batchId = 0L)
-      assert(spark.read.parquet(s"$sug/delnbr")
-        .where(col("delkey") === col("term")).count() === 3L)
+      assert(dictOf(sug).size === 3)
       assert(viewOf(mvDef).count() === 1L)
     } finally graft.plans.MatView.deregister(base)
   }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** The streaming takedown worker: micro-batches of doomed ids must
-  * drive the tombstone DELETE path of both persisted indexes, with
-  * re-delivered ids across batches a no-op (the mutation is its own
-  * dedup state) and the final served answers equal to a from-scratch
-  * rebuild over the survivors. */
+  * drive the DELETE path of every wired index, with re-delivered ids
+  * across batches a no-op (the tombstones are their own dedup state;
+  * the positional epoch leg commits nothing for them) and the final
+  * served answers equal to a from-scratch rebuild over the
+  * survivors. */
 class TakedownStreamSpec extends SparkTestBase {
 
   private def docsDf(rows: Seq[(Long, String)]) = {
@@ -107,17 +108,16 @@ class TakedownStreamSpec extends SparkTestBase {
   test("takedown propagates to the positional layout too") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
+    import graft.ops.{Epoch, EpochPositional}
     val base = java.nio.file.Files
       .createTempDirectory("takedown-pos").toString
     val postings = s"$base/postings"
     val positional = s"$base/positional"
     TextQueries.buildPostings(spark, docsDf(corpus), postings)
-    graft.ops.PhraseQueries.buildPositional(spark, docsDf(corpus),
-      positional)
+    EpochPositional.build(spark, docsDf(corpus), positional)
     // doc 0 is the only "spark merge" phrase match in the corpus
     def phraseDocs =
-      graft.ops.PhraseQueries.servePhrase(spark, positional,
-          Seq("spark", "merge"))
+      EpochPositional.servePhrase(spark, positional, Seq("spark", "merge"))
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(phraseDocs === Seq(0L))
     val source = MemoryStream[Long]
@@ -125,14 +125,18 @@ class TakedownStreamSpec extends SparkTestBase {
       source.toDF().toDF("doc_id"), positionalPath = Some(positional))
     source.addData(0L)
     q.processAllAvailable()
-    // re-delivery is a no-op on the positional stats as well
+    val epochs = Epoch.committedEpochs(spark, positional)
+    // re-delivering doc 0 in a later batch commits no further epoch
     source.addData(0L)
     q.processAllAvailable()
     q.stop()
+    assert(Epoch.committedEpochs(spark, positional) === epochs)
     assert(phraseDocs === Seq.empty)
-    assert(spark.read.parquet(s"$positional/stats")
+    val m = Epoch.resolve(spark, positional).get
+    assert(m.has("del_0"))
+    assert(Epoch.read(spark, positional, m, "stats").get
       .select("n_docs_l").head().getLong(0) === corpus.size - 1L)
-    assert(spark.read.parquet(s"$positional/tombstones")
+    assert(Epoch.read(spark, positional, m, "tombstones").get
       .collect().map(_.getLong(0)).toSeq === Seq(0L))
   }
 }
