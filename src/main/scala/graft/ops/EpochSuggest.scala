@@ -8,15 +8,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dictionary ([[Suggest.mergedDict]]), so each one lands as a fresh
   * generation behind one atomic manifest rename, exactly-once on the
   * manifest ledger. A layout holds ONE dictionary ([[Suggest.Dict]]:
-  * distance-1 `delnbr` or distance-2 `delnbr2`), named by every call
-  * that builds or maintains it. Serving reuses the [[Suggest]] faces
-  * pointed at the CURRENT generation directory ([[currentGen]], the
-  * dictionary directory inside), so the pushed-`In(delkey,…)`
-  * candidate read and the bounded-batch serving are the same for
-  * every generation. */
+  * distance-1 `delnbr` or distance-2 `delnbr2`), chosen at [[create]]
+  * and recorded in the manifest: its one component is named by the
+  * dictionary's directory, so every mutation maintains the dictionary
+  * the layout holds. Serving reuses the [[Suggest]] faces pointed at
+  * the CURRENT generation directory ([[currentGen]], the dictionary
+  * directory inside), so the pushed-`In(delkey,…)` candidate read and
+  * the bounded-batch serving are the same for every generation. */
 object EpochSuggest {
-
-  private val Gen = "gen"
 
   /** Epoch 0: `dict` built over `docs`. */
   def create(s: SparkSession, docs: DataFrame, path: String,
@@ -24,22 +23,31 @@ object EpochSuggest {
     val g = Epoch.genDir(s, path, 0L)
     Suggest.buildSuggest(docs, g, dict)
     Epoch.commit(s, path, Epoch.Manifest(0L,
-      Map(Gen -> Seq("g0")), Seq.empty))
+      Map(dict.dir -> Seq("g0")), Seq.empty))
   }
+
+  private def current(s: SparkSession, path: String): Epoch.Manifest =
+    Epoch.resolve(s, path).getOrElse(throw new IllegalStateException(
+      s"EpochSuggest: no committed epoch at $path — create first"))
+
+  /** The dictionary a manifest holds: the one named component. */
+  private def dictOf(m: Epoch.Manifest): Suggest.Dict =
+    Seq(Suggest.Distance1, Suggest.Distance2)
+      .find(d => m.components.contains(d.dir)).get
 
   /** The CURRENT generation root (`<gen>/delnbr` or `<gen>/delnbr2`
     * inside); pass it to any [[Suggest]] serving face. One manifest
     * read pins the generation for the query. */
-  def currentGen(s: SparkSession, path: String): String =
-    Epoch.resolve(s, path).map(_.dirs(path, Gen).head)
-      .getOrElse(throw new IllegalStateException(
-        s"EpochSuggest: no committed epoch at $path — create first"))
+  def currentGen(s: SparkSession, path: String): String = {
+    val m = current(s, path)
+    m.dirs(path, dictOf(m).dir).head
+  }
 
   /** Append a document batch's dictionary partial as a new generation
     * (positive merge). Ledger-replay-safe on `app_<batchId>`. */
   def append(s: SparkSession, newDocs: DataFrame, path: String,
-      dict: Suggest.Dict, batchId: Long): Unit =
-    mutate(s, path, dict, s"app_$batchId", newDocs, negate = false)
+      batchId: Long): Unit =
+    mutate(s, path, s"app_$batchId", newDocs, negate = false)
 
   /** Delete documents (negative merge — rows reaching df 0 drop) as a
     * new generation. Takes (doc_id, text): df counts distinct docs per
@@ -49,22 +57,21 @@ object EpochSuggest {
     * negative merge does. Ledger-replay-safe on `del_<batchId>`: a
     * replay skips before its frame is evaluated. */
   def delete(s: SparkSession, deletedDocs: DataFrame, path: String,
-      dict: Suggest.Dict, batchId: Long): Unit =
-    mutate(s, path, dict, s"del_$batchId", deletedDocs, negate = true)
+      batchId: Long): Unit =
+    mutate(s, path, s"del_$batchId", deletedDocs, negate = true)
 
-  private def mutate(s: SparkSession, path: String, dict: Suggest.Dict,
-      key: String, docs: DataFrame, negate: Boolean): Unit = {
-    val m = Epoch.resolve(s, path).getOrElse(
-      throw new IllegalStateException(
-        s"EpochSuggest: no committed epoch at $path — create first"))
+  private def mutate(s: SparkSession, path: String, key: String,
+      docs: DataFrame, negate: Boolean): Unit = {
+    val m = current(s, path)
     if (m.has(key)) return
-    val cur = m.dirs(path, Gen).head
+    val dict = dictOf(m)
+    val cur = m.dirs(path, dict.dir).head
     Suggest.mergedDict(s, cur, Suggest.dictionary(docs), dict, negate)
       .foreach { merged =>
         val g = Epoch.genDir(s, path, m.next)
         merged.write.mode("overwrite").parquet(s"$g/${dict.dir}")
         Epoch.commit(s, path, Epoch.Manifest(m.next,
-          Map(Gen -> Seq(s"g${m.next}")), m.applied :+ key))
+          Map(dict.dir -> Seq(s"g${m.next}")), m.applied :+ key))
       }
   }
 

@@ -99,7 +99,9 @@ object Maintenance {
           .map(m => m.dirs(ref.path, "data") ++ m.dirs(ref.path, "merge"))
           .getOrElse(Seq.empty)
       case "epoch_suggest" =>
-        Epoch.resolve(s, ref.path).map(_.dirs(ref.path, "gen"))
+        // one component, named by the dictionary the layout holds
+        Epoch.resolve(s, ref.path)
+          .map(m => m.components.keys.toSeq.flatMap(m.dirs(ref.path, _)))
           .getOrElse(Seq.empty)
       case "epoch_ivf" =>
         Epoch.resolve(s, ref.path).map(_.dirs(ref.path, "assigned"))

@@ -429,23 +429,6 @@ object PhraseQueries {
       LIMIT 10
     """))
 
-  /** Serve a bounded BATCH of phrase queries against the positional
-    * index in ONE distributed pass — `bm25ServeBatch`'s positional twin.
-    * The batch's term union restricts the posting scan (one pushed
-    * `In(term, …)` read); the exploded (query_id, term, offset) request
-    * rows BROADCAST onto the matched lists; and the per-(query, doc)
-    * adjacency check becomes a grouped fold: each joined row shifts its
-    * positions back by the term's phrase offset, the group collects the
-    * ≤|phrase| shifted arrays, and `aggregate` intersects them — the
-    * same start-set arithmetic as [[phraseStarts]], expressed once per
-    * group instead of once per join leg (a k-way join can't serve
-    * heterogeneous phrases in one pass; the grouped fold can). Docs
-    * missing any phrase term never survive the `n_present = phrase_len`
-    * gate — countDistinct(offset) handles repeated phrase terms
-    * correctly (each offset is its own requirement). Index side never
-    * moves to the driver; work is |matched posting rows|, corpus-
-    * independent. A single-query batch reproduces [[phraseServe]] row
-    * for row (pinned in `PhraseSpec`). */
   /** Match highlighting — the snippet a search result page shows:
     * for each phrase match, the token window [first_pos−2, first_pos+
     * |phrase|+1] of the ORIGINAL document, rejoined. The doc-store
@@ -542,6 +525,23 @@ object PhraseQueries {
         array_min(col("starts")).as("first_pos"))
       .orderBy("query_id", "doc_id")
 
+  /** Serve a bounded BATCH of phrase queries against the positional
+    * index in ONE distributed pass — `bm25ServeBatch`'s positional twin.
+    * The batch's term union restricts the posting scan (one pushed
+    * `In(term, …)` read); the exploded (query_id, term, offset) request
+    * rows BROADCAST onto the matched lists; and the per-(query, doc)
+    * adjacency check becomes a grouped fold: each joined row shifts its
+    * positions back by the term's phrase offset, the group collects the
+    * ≤|phrase| shifted arrays, and `aggregate` intersects them — the
+    * same start-set arithmetic as [[phraseStarts]], expressed once per
+    * group instead of once per join leg (a k-way join can't serve
+    * heterogeneous phrases in one pass; the grouped fold can). Docs
+    * missing any phrase term never survive the `n_present = phrase_len`
+    * gate — countDistinct(offset) handles repeated phrase terms
+    * correctly (each offset is its own requirement). Index side never
+    * moves to the driver; work is |matched posting rows|, corpus-
+    * independent. A single-query batch reproduces [[phraseServe]] row
+    * for row (pinned in `PhraseSpec`). */
   def phraseServeBatch(s: SparkSession, d: String,
       queries: Seq[(Long, Seq[String])]): DataFrame = {
     val qreq = requestFrame(s, queries)

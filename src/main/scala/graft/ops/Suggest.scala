@@ -325,7 +325,7 @@ object Suggest {
       EpochSuggest.create(s, docs.where(col("doc_id") % 2 === 0), path,
         Distance1)
       EpochSuggest.append(s, docs.where(col("doc_id") % 2 === 1), path,
-        Distance1, batchId = 1L)
+        batchId = 1L)
       path
     }
 
@@ -354,7 +354,7 @@ object Suggest {
       EpochSuggest.create(s, docs, path, Distance1)
       EpochSuggest.delete(s,
         docs.where(col("doc_id") % 6 === 1).select("doc_id", "text"),
-        path, Distance1, batchId = 1L)
+        path, batchId = 1L)
       path
     }
 
@@ -401,7 +401,7 @@ object Suggest {
       EpochSuggest.create(s, docs.where(col("doc_id") % 2 === 0), path,
         Distance2)
       EpochSuggest.append(s, docs.where(col("doc_id") % 2 === 1), path,
-        Distance2, batchId = 1L)
+        batchId = 1L)
       path
     }
 

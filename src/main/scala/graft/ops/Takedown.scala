@@ -126,7 +126,7 @@ object Takedown {
       EpochPositional.delete(s, ids, p, batchId)
     })
     tiers.suggestEpoch.foreach(p => Epoch.occ(s, p) {
-      EpochSuggest.delete(s, doomed, p, Suggest.Distance1, batchId)
+      EpochSuggest.delete(s, doomed, p, batchId)
     })
     tiers.ivfEpoch.foreach(p => Epoch.occ(s, p) {
       EpochAnn.delete(s, ids.select(col("doc_id").as("vec_id")), p,

@@ -496,14 +496,16 @@ object StreamRunner {
     * removal itself is already durable) — recovery is
     * `postingsCompact`, which recomputes df/stats from the surviving
     * lists as ground truth. The positional leg has no such window: it
-    * commits tombstones and stats in one manifest under [[Epoch.occ]],
-    * keyed `del_<batchId>` on the foreachBatch id, so a replayed batch
-    * skips on the ledger and a re-delivered id in a later batch commits
-    * nothing. The stream sets no checkpoint location, so its batch ids
-    * restart at 0 with every start: a new batch whose id an earlier
-    * start already committed at the same positional layout skips the
-    * positional leg while the swap legs apply ([[takedownAllStream]]'s
-    * `checkpoint = None` caveat) — one start per positional layout.
+    * commits tombstones and stats in one manifest under [[Epoch.occ]].
+    * Its ledger key is the manifest's next epoch, not the foreachBatch
+    * id: the stream sets no checkpoint location, so batch ids restart
+    * at 0 with every start, while epoch numbers never repeat. Its
+    * replay safety is the same exclusion as the swap legs': a replayed
+    * or re-delivered id is already tombstoned, so the leg commits
+    * nothing. Each positional delete rewrites the layout's whole
+    * tombstone set (old ∪ fresh), so a long-running worker registers
+    * the layout with [[graft.ops.Maintenance.sweep]] as
+    * `epoch_positional` (or compacts it) to keep that set bounded.
     * Expects a streaming `doc_id: long` column; doc_id ≡ vec_id across
     * the paired layouts (the corpus convention). */
   def takedownStream(postingsPath: String, doomedIds: DataFrame,
@@ -512,7 +514,7 @@ object StreamRunner {
       neardupPath: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     doomedIds.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
         val ids = batch.select(col("doc_id").cast("long").as("doc_id"))
           .localCheckpoint(true)
@@ -522,7 +524,8 @@ object StreamRunner {
         // the positional layout is the third text-side serving tier a
         // takedown must reach
         positionalPath.foreach(p => graft.ops.Epoch.occ(s, p) {
-          graft.ops.EpochPositional.delete(s, ids, p, batchId)
+          graft.ops.EpochPositional.delete(s, ids, p,
+            graft.ops.Epoch.resolve(s, p).fold(0L)(_.next))
         })
         // and the near-dup index — a taken-down document must stop
         // gating future ingests, or its content survives as a REJECT

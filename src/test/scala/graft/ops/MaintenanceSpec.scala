@@ -197,8 +197,7 @@ class MaintenanceSpec extends SparkTestBase {
     val sug = s"${graft.GraftSession.scratchDir}/maint_esug"
     EpochSuggest.create(spark, mkDocs(1L to 20L), sug, Suggest.Distance1)
     (1 to 4).foreach(i => EpochSuggest.append(spark,
-      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, Suggest.Distance1,
-      batchId = i))
+      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, batchId = i))
     assert(Epoch.committedEpochs(spark, sug) === 5)
     val sugRef = Maintenance.LayoutRef("epoch_suggest", sug)
     val horizon = Maintenance.Policy(maxSegments = 1000,
@@ -226,8 +225,7 @@ class MaintenanceSpec extends SparkTestBase {
     // a retained registry snapshot pins the tier's epoch 0
     Snapshot.publish(spark, reg, Map("suggest" -> 0L), "snap_0")
     (1 to 4).foreach(i => EpochSuggest.append(spark,
-      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, Suggest.Distance1,
-      batchId = i))
+      mkDocs((20L + i * 10L) to (29L + i * 10L)), sug, batchId = i))
     assert(Epoch.committedEpochs(spark, sug) === 5)
     val ref = Maintenance.LayoutRef("epoch_suggest", sug,
       registry = Some((reg, "suggest")))

@@ -59,8 +59,7 @@ class SuggestSpec extends SparkTestBase {
     EpochSuggest.create(spark, docs, path, Suggest.Distance2)
     val doomed = docs.where(col("doc_id") % 6 === 1)
       .select("doc_id", "text")
-    EpochSuggest.delete(spark, doomed, path, Suggest.Distance2,
-      batchId = 9L)
+    EpochSuggest.delete(spark, doomed, path, batchId = 9L)
     EpochSuggest.create(spark,
       docs.where(col("doc_id") % 6 =!= 1), rebuilt, Suggest.Distance2)
     def rows(p: String) =
@@ -73,7 +72,7 @@ class SuggestSpec extends SparkTestBase {
     // skips the merge before the frame is evaluated — no epoch commits
     val epochs = Epoch.committedEpochs(spark, path)
     EpochSuggest.delete(spark, docs.select("doc_id", "text"), path,
-      Suggest.Distance2, batchId = 9L)
+      batchId = 9L)
     assert(Epoch.committedEpochs(spark, path) === epochs)
     assert(rows(path) === after)
     // served output over the deleted layout ≡ over the rebuild
@@ -179,7 +178,7 @@ class SuggestSpec extends SparkTestBase {
     val epochs = Epoch.committedEpochs(spark, path)
     EpochSuggest.append(spark,
       Seq.empty[(Long, String)].toDF("doc_id", "text"), path,
-      Suggest.Distance1, batchId = 2L)
+      batchId = 2L)
     assert(Epoch.committedEpochs(spark, path) === epochs)
   }
 

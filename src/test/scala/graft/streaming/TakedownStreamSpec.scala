@@ -115,28 +115,37 @@ class TakedownStreamSpec extends SparkTestBase {
     val positional = s"$base/positional"
     TextQueries.buildPostings(spark, docsDf(corpus), postings)
     EpochPositional.build(spark, docsDf(corpus), positional)
-    // doc 0 is the only "spark merge" phrase match in the corpus
-    def phraseDocs =
-      EpochPositional.servePhrase(spark, positional, Seq("spark", "merge"))
+    // doc 0 is the only "spark merge" phrase match in the corpus, doc 1
+    // the only "spark filter" one
+    def phraseDocs(phrase: String*) =
+      EpochPositional.servePhrase(spark, positional, phrase)
         .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(phraseDocs === Seq(0L))
-    val source = MemoryStream[Long]
-    val q = StreamRunner.takedownStream(postings,
-      source.toDF().toDF("doc_id"), positionalPath = Some(positional))
-    source.addData(0L)
-    q.processAllAvailable()
+    assert(phraseDocs("spark", "merge") === Seq(0L))
+    assert(phraseDocs("spark", "filter") === Seq(1L))
+    // each start runs without a checkpoint, so its batch ids restart
+    // at 0 — the second start's first batch must still apply
+    def start(batches: Seq[Long]*): Unit = {
+      val source = MemoryStream[Long]
+      val q = StreamRunner.takedownStream(postings,
+        source.toDF().toDF("doc_id"), positionalPath = Some(positional))
+      batches.foreach { b =>
+        source.addData(b: _*)
+        q.processAllAvailable()
+      }
+      q.stop()
+    }
+    start(Seq(0L))
     val epochs = Epoch.committedEpochs(spark, positional)
     // re-delivering doc 0 in a later batch commits no further epoch
-    source.addData(0L)
-    q.processAllAvailable()
-    q.stop()
+    start(Seq(0L))
     assert(Epoch.committedEpochs(spark, positional) === epochs)
-    assert(phraseDocs === Seq.empty)
+    assert(phraseDocs("spark", "merge") === Seq.empty)
+    start(Seq(1L))
+    assert(phraseDocs("spark", "filter") === Seq.empty)
     val m = Epoch.resolve(spark, positional).get
-    assert(m.has("del_0"))
     assert(Epoch.read(spark, positional, m, "stats").get
-      .select("n_docs_l").head().getLong(0) === corpus.size - 1L)
+      .select("n_docs_l").head().getLong(0) === corpus.size - 2L)
     assert(Epoch.read(spark, positional, m, "tombstones").get
-      .collect().map(_.getLong(0)).toSeq === Seq(0L))
+      .collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L))
   }
 }
