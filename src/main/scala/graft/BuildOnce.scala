@@ -20,29 +20,4 @@ object BuildOnce {
       key: K)(build: => V): V =
     cache.getOrElse(key,
       cache.synchronized { cache.getOrElseUpdate(key, build) })
-
-  /** One-generation-per-key memo (r20 advice): the cache maps
-    * key → (stamp, value) and a CHANGED stamp REPLACES the entry
-    * instead of accreting a new one — a long-lived serving process
-    * that retrains/compacts an index N times holds ONE quantizer
-    * table per path, not N. Same build-at-most-once locking as
-    * [[memo]]; correct for swap layouts, where only the CURRENT
-    * generation is ever served (epoch layouts, whose old pinned
-    * generations stay servable, keep accretive caches with a size
-    * bound instead). */
-  def memoStamped[K, S, V](
-      cache: scala.collection.concurrent.TrieMap[K, (S, V)],
-      key: K, stamp: S)(build: => V): V =
-    cache.get(key) match {
-      case Some((s0, v)) if s0 == stamp => v
-      case _ => cache.synchronized {
-        cache.get(key) match {
-          case Some((s0, v)) if s0 == stamp => v
-          case _ =>
-            val v = build
-            cache.put(key, (stamp, v))
-            v
-        }
-      }
-    }
 }

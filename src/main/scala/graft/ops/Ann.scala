@@ -172,41 +172,13 @@ object Ann {
     IvfIndex(cents, assign(embeddings, cents, idCol, embCol))
   }
 
-  /** Persist the index with the inverted lists as partition directories:
-    * `assigned` partitioned by cell, centroids as a tiny side table. A
-    * probe that keeps nProbe cells then touches only those directories —
-    * on the loaded index the cell restriction becomes partition pruning,
-    * so at 100 TB a query reads nProbe/k of the data no matter how large
-    * the corpus grows. */
-  def save(index: IvfIndex, path: String): Unit = {
-    index.assigned.write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/assigned")
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    index.centroids.toDF("centroid_id", "centroid_emb")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Append a batch of NEW vectors to a persisted index WITHOUT
-    * rebuilding — the operational path that keeps a 100 TB index
-    * current between (rare, expensive) retrains: load only the bounded
-    * centroid side table, assign the new batch against the FROZEN
-    * centroids (the same narrow literal-fold scan the build uses — no
-    * shuffle, no contact with the existing lists), and append-mode
-    * write into the same cell-partitioned layout, so the new files land
-    * INSIDE the existing cell directories and the next `load` serves
-    * the union with identical pruning. Because the coarse quantizer is
-    * frozen, the result is bit-identical to having assigned old∪new in
-    * one pass with these centroids (pinned in AnnAppendSpec) — recall
-    * on drifted content degrades only as the data outgrows the
-    * centroids, which is the standard retrain-cadence contract. */
-  /** Schema gate BEFORE an append-mode write into a persisted index
-    * layout (shared by [[append]] and [[Ivfpq.append]]): a batch whose
-    * id or embedding type differs from the persisted layout (float vs
-    * double elements, mis-named columns) would land mixed-schema
-    * parquet files inside the cell directories that only fail — or
-    * silently mis-merge — at the NEXT load. Fail fast here instead,
-    * naming the mismatch and the caller. A freshly initialized layout
+  /** Schema gate BEFORE an append into a persisted index layout
+    * (shared by [[EpochAnn.append]] and [[EpochIvfpq.append]], checked
+    * against the pinned manifest's first data dir): a batch whose id or
+    * embedding type differs from the persisted layout (float vs double
+    * elements, mis-named columns) would land a mixed-schema generation
+    * that only fails — or silently mis-merges — at the NEXT load. Fail
+    * fast here instead, naming the mismatch and the caller. A layout
     * with no data files yet has nothing to conflict with (schema
     * inference finds no footers) — skip the gate. simpleString
     * comparison is nullability-insensitive on purpose: parquet
@@ -235,115 +207,17 @@ object Ann {
         }
       }
 
-  def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    appendSchemaGate(spark, s"$path/assigned", newVectors, idCol, embCol,
-      "Ann.append")
-    appendTombstoneGate(spark, path, newVectors.select(col(idCol)),
-      idCol, "Ann.append")
-    val cents = graft.Pq.read(spark, s"$path/centroids")
-      .select(col("centroid_id").cast(LongType), col("centroid_emb"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    assign(newVectors, cents, idCol, embCol)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/assigned")
-  }
-
-  /** Refuse an append batch that intersects the layout's live
-    * tombstones (shared by [[append]], [[Ivfpq.append]], and
-    * `postingsAppend`): re-adding a deleted id without compacting
-    * first would land rows (and, for the text index, count them into
-    * df/stats) that the tombstone anti-join silently removes from
-    * every served plan — statistics counting a document no query can
-    * return. The documented "compact first" contract is enforced
-    * mechanically here: the check is a bounded semi-join against the
-    * broadcast segment, and the error names the fix. */
-  private[ops] def appendTombstoneGate(spark: SparkSession, path: String,
-      batchIds: DataFrame, idCol: String, caller: String): Unit =
-    Layout.tombstonesOpt(spark, path).foreach { t =>
-      val clash = batchIds
-        .join(broadcast(t.toDF(idCol)), Seq(idCol), "left_semi")
-        .limit(1).count()
-      require(clash == 0L,
-        s"$caller: batch contains tombstoned ids — run the layout's " +
-          "compact to fold deletes in before re-adding deleted ids")
-    }
-
-  /** DELETE from a persisted IVF index — `postingsDelete`'s vector twin,
-    * completing the maintenance lifecycle (build → append → DELETE →
-    * compact) for the ANN side. Tombstone design: the cell-partitioned
-    * lists — the corpus-scale part — are never touched; the doomed ids
-    * land in a `tombstones` side segment that [[load]] anti-joins out of
-    * every served plan (broadcast — bounded between compactions, and the
-    * cell partition-pruning still pushes below the join), and the next
-    * [[compact]] drops the rows physically. A takedown at 100 TB costs
-    * one bounded segment write, not an index rebuild — and unlike the
-    * text index there are no corpus statistics to adjust: cosine scores
-    * carry no cross-document state, so tombstoned serving is EXACTLY
-    * rebuild-over-survivors serving with these centroids (what
-    * `sim_ivf_delete` verifies against the filtered brute-force anchor).
-    * Already-tombstoned ids are excluded up front (re-delivered delete
-    * batches are no-ops); ids absent from the index are harmless. Same
-    * offline-maintenance window contract as [[append]]. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: String = "vec_id"): Unit = {
-    val batch = ids.select(col(idCol).cast(LongType).as(idCol)).distinct()
-    // materialize before the segment write: the anti-join against the
-    // tombstone segment is lazy and must not re-read the segment after
-    // the new ids land in it (the postingsDelete discipline)
-    val fresh = Layout.tombstonesOpt(spark, path)
-      .map(t => batch.join(broadcast(t), Seq(idCol), "left_anti"))
-      .getOrElse(batch)
-      .localCheckpoint(true)
-    if (fresh.isEmpty) return
-    fresh.coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-  }
-
-  /** Fold accumulated tombstones into the cell-partitioned layout for
-    * real — the shared [[Layout.dropTombstoned]] contract (stage + swap
-    * with cell partitioning preserved, segment dropped LAST so a crash
-    * in between re-runs an idempotent no-match anti-join). No-op when
-    * no tombstones exist. */
-  def compact(spark: SparkSession, path: String): Unit =
-    Layout.dropTombstoned(spark, s"$path/assigned", path,
-      partitionCols = Seq("cell"))
-
-  /** UPDATE (upsert) a vector batch — [[Ivfpq.update]]'s single-marker
-    * delete → compact → append composition on the float layout, so
-    * BOTH vector index forms carry the atomic update roundtrip: stale
-    * versions tombstone, the compact folds them (the append gate's
-    * demand), the new versions assign against the frozen centroids,
-    * and `_applied_upd_<batchId>` on the assigned directory makes a
-    * replayed batch a mechanical no-op. Every pre-marker crash window
-    * is self-healing under replay by the identical argument
-    * documented on [[Ivfpq.update]]; ids absent from the index upsert
-    * to inserts; the batch frame must not derive from this layout.
-    * `AnnUpdateSpec` pins update ≡ frozen-centroid rebuild over the
-    * post-update corpus and the replay no-op. */
-  def update(spark: SparkSession, path: String, newVectors: DataFrame,
-      batchId: Long, idCol: String = "vec_id",
-      embCol: String = "embedding"): Unit = {
-    val marker = s"_applied_upd_$batchId"
-    if (Layout.hasMarker(spark, s"$path/assigned", marker)) return
-    val ids = newVectors.select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    delete(spark, path, ids, idCol)
-    compact(spark, path)
-    append(spark, path, newVectors, idCol, embCol)
-    Layout.addMarker(spark, s"$path/assigned", marker)
-  }
-
   /** Cell-occupancy skew statistic — max/mean resident count over the
     * index's cells — the retrain trigger for a grown index:
-    * [[append]] assigns into FROZEN centroids, so as appended content
-    * drifts from the training distribution, vectors pile into the cells
-    * nearest the drift and probe cost (nProbe cells × occupancy) loses
-    * its n/k balance. A fresh balanced build sits near 1; the statistic
-    * grows as cells fatten. ONE count aggregation — only k counts reach
-    * the driver (the centroid-table discipline). Cells that lost every
-    * member count as 0 via the centroid list, so a degenerate index
-    * (all mass in few cells) reads high instead of hiding its empty
-    * cells. */
+    * [[EpochAnn.append]] assigns into FROZEN centroids, so as appended
+    * content drifts from the training distribution, vectors pile into
+    * the cells nearest the drift and probe cost (nProbe cells ×
+    * occupancy) loses its n/k balance. A fresh balanced build sits near
+    * 1; the statistic grows as cells fatten. ONE count aggregation —
+    * only k counts reach the driver (the centroid-table discipline).
+    * Cells that lost every member count as 0 via the centroid list, so
+    * a degenerate index (all mass in few cells) reads high instead of
+    * hiding its empty cells. */
   def cellSkew(index: IvfIndex): Double = {
     // partition discovery may type `cell` as int on a loaded layout —
     // normalize to long before the driver-side lookup
@@ -363,77 +237,6 @@ object Ann {
     * probe latency on the fat cells. */
   def needsRetrain(index: IvfIndex, maxSkew: Double): Boolean =
     cellSkew(index) > maxSkew
-
-  /** RETRAIN a persisted index in place — the escape hatch [[append]]'s
-    * frozen-centroid contract assumes exists: re-run `iters` Lloyd
-    * refinements over the CURRENT residents starting from the saved
-    * centroids (warm start — the standard k-means restart; each
-    * iteration is the same one-scan + one-bounded-shuffle job as
-    * [[build]]'s), re-assign everything once, and swap both layout
-    * directories ([[Layout.replaceDir]] each — stage + rename, cell
-    * partitioning preserved). Tombstoned ids are EXCLUDED from the
-    * refit and from the rewritten layout (retrain subsumes [[compact]]),
-    * and the segment is cleared last.
-    *
-    * Consistency contract: the two swaps plus the segment drop are not
-    * atomic as a unit — a reader between them could pair new lists with
-    * old centroids — so retrain runs in a maintenance window without
-    * concurrent serving and retries from the last snapshot, exactly
-    * like [[postingsAppend]]'s documented discipline. At 100 TB this is
-    * the rare, expensive pass (one full re-assignment scan per Lloyd
-    * iteration) that [[append]] exists to amortize; [[cellSkew]] is the
-    * trigger that decides when the amortization has run out. */
-  def retrain(spark: SparkSession, path: String, iters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    val idx = load(spark, path)   // tombstone-aware: refit the survivors
-    require(idx.centroids.nonEmpty, s"Ann.retrain: $path has no centroids")
-    val dim = idx.centroids.head._2.length
-    val resident = idx.assigned.select(col(idCol), col(embCol))
-    var cents = idx.centroids
-    for (_ <- 1 to iters)
-      cents = meanCentroids(assign(resident, cents, idCol, embCol),
-        embCol, dim)
-    Layout.replaceDir(spark, assign(resident, cents, idCol, embCol),
-      s"$path/assigned", partitionCols = Seq("cell"))
-    import spark.implicits._
-    Layout.replaceDir(spark, cents.toDF("centroid_id", "centroid_emb"),
-      s"$path/centroids")
-    Layout.deleteDir(spark, s"$path/tombstones")
-  }
-
-  /** Load a saved index; `query` on it prunes to the probed cells. When
-    * a delete-tombstone segment exists, the served rows anti-join it
-    * ([[Layout.minusTombstones]] — broadcast; the cell restriction
-    * still pushes below the join), so every search path — query /
-    * knnJoin / serveBatch — observes the deletes without any of them
-    * knowing the segment exists. */
-  /** Centroid tables resident per (path, content fingerprint) — a
-    * serving process holds its index metadata in memory instead of
-    * re-collecting the (k · dim)-bounded table on every query; the
-    * fingerprint key (see [[Layout.dirFingerprint]]) means a retrain's
-    * swapped-in centroids are always picked up. The data-side frame is
-    * still built fresh per load (lazy — tombstones and layout changes
-    * flow through it untouched). */
-  // r21 (r20 advice): keyed by dir with the fingerprint as the STAMP —
-  // a retrain's swapped-in centroids replace the entry instead of
-  // accreting one table per retrain generation
-  private val centroidCache = scala.collection.concurrent.TrieMap
-    .empty[String, (String, Seq[(Long, Seq[Double])])]
-
-  private[ops] def loadCentroidsMemo(spark: SparkSession,
-      dir: String): Seq[(Long, Seq[Double])] =
-    graft.BuildOnce.memoStamped(centroidCache,
-      dir, Layout.dirFingerprint(spark, dir))(
-      graft.Pq.read(spark, dir)
-        .select(col("centroid_id").cast(LongType), col("centroid_emb"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq)
-
-  def load(spark: SparkSession, path: String): IvfIndex =
-    IvfIndex(
-      loadCentroidsMemo(spark, s"$path/centroids"),
-      Layout.minusTombstones(spark,
-        graft.Pq.read(spark, s"$path/assigned"), path))
 
   /** Top-k neighbors of `probeId` searching only the nProbe nearest
     * cells. Cell ranking happens on the driver (centroids are local);

@@ -54,13 +54,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * older than the keep horizon can lose directories mid-query, exactly
   * like Iceberg snapshot expiry — size `keep` to the longest query.
   *
-  * Adoption map: postings ([[EpochPostings]]) and float IVF
-  * ([[EpochAnn]]) serve from epochs beside their swap layouts;
-  * materialized views ([[graft.plans.EpochMv]]), the positional phrase
-  * index ([[EpochPositional]]) and the suggest dictionary
-  * ([[EpochSuggest]]) are epoch-only — each is the one way its state
-  * is built, maintained and read; hybrid retrieval composes
-  * the epoch postings + IVF faces. The NEAR-DUP tier deliberately stays on the
+  * Adoption map: postings ([[EpochPostings]]) serve from epochs beside
+  * their swap layout; materialized views ([[graft.plans.EpochMv]]),
+  * the positional phrase index ([[EpochPositional]]), the suggest
+  * dictionary ([[EpochSuggest]]) and both vector indexes (float IVF
+  * [[EpochAnn]], IVF-PQ [[EpochIvfpq]]) are epoch-only — each is the
+  * one way its state is built, maintained and read; hybrid retrieval
+  * composes the epoch postings + IVF faces. The NEAR-DUP tier deliberately stays on the
   * [[Layout.replaceDir]] swap discipline: its ingest gate is a
   * read-your-own-writes loop (each micro-batch's verdicts must see the
   * segments the PREVIOUS batch appended, and `ingestVerdicts` replay

@@ -5,39 +5,38 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** The float-IVF vector index on EPOCH manifests ([[Epoch]]) — the
-  * vector twin of [[EpochPostings]], closing the same
-  * serve-during-mutation seam for the retrieval tier whose swap-layout
-  * faces ([[Ann.append]]/[[Ann.delete]]/[[Ann.compact]]/[[Ann.retrain]])
-  * document the maintenance-window contract (retrain's two-directory
-  * swap is its sharpest instance: a reader between the swaps could
-  * pair new lists with old centroids — exactly the mixed-generation
-  * read a pinned manifest makes impossible, because centroids and
-  * assigned lists flip together in ONE manifest rename).
+  * one way an [[Ann]] index is persisted, maintained and read. Every
+  * mutation writes new generation dirs and publishes them behind ONE
+  * manifest rename, so centroids and assigned lists always flip
+  * together: a reader pins one manifest and can never pair new lists
+  * with old centroids, and serving needs no maintenance window.
   *
-  * Same index semantics as [[Ann]] — assignment, search, and the
-  * k-means refit are the SHARED code paths ([[Ann.assign]],
-  * [[Ann.query]] over the loaded [[Ann.IvfIndex]],
-  * [[Ann.meanCentroids]]), so the two layouts cannot drift on what a
-  * cell, a cosine, or a refit is. Mutations publish epochs:
+  * Index semantics are the SHARED [[Ann]] code paths — assignment,
+  * search and the k-means refit ([[Ann.assign]], [[Ann.query]] over
+  * the loaded [[Ann.IvfIndex]], [[Ann.meanCentroids]]) — and
+  * [[EpochIvfpq]] reuses them, so the two vector tiers cannot drift on
+  * what a cell, a cosine or a refit is. Mutations publish epochs:
   *
   *  - APPEND (∝ |batch|): the batch assigns against the PINNED
   *    centroids and lands as one new cell-partitioned delta dir
   *    REFERENCED beside the old ones — bit-identical to a one-pass
-  *    assignment under frozen centroids ([[Ann.append]]'s contract);
+  *    assignment under frozen centroids;
   *  - DELETE (∝ |doomed|): accumulated tombstones as a fresh dir;
+  *  - UPDATE (upsert): survivors-minus-batch plus the re-assigned
+  *    batch as ONE generation under ONE ledger key;
   *  - COMPACT: survivors re-written into one generation, tombstones
   *    cleared;
   *  - RETRAIN: warm-start Lloyd refit over the pinned survivors, new
-  *    centroids AND re-assigned lists in one epoch — the atomic
-  *    centroids+lists flip the swap layout cannot give.
+  *    centroids AND re-assigned lists in one epoch.
   *
   * Reads are [[load]]: resolve once, pin every directory. The multi-
   * root cell-partitioned scan keeps partition pruning (a probed cell
   * reads that cell's directories across every referenced delta).
-  * Exactly-once append/delete via the manifest ledger (`app_<id>` /
-  * `del_<id>`). `sim_ivf_epoch` drives build → append → serve under
-  * the recall oracle; `EpochAnnSpec` pins snapshot isolation across a
-  * retrain, ledger replays, and lifecycle ≡ rebuild. */
+  * Exactly-once append/delete/update via the manifest ledger
+  * (`app_<id>` / `del_<id>` / `upd_<id>`). `sim_ivf_append` drives
+  * build → append → serve under the recall oracle; `EpochAnnSpec` pins
+  * snapshot isolation across a retrain, ledger replays, and
+  * lifecycle ≡ an in-memory rebuild. */
 object EpochAnn {
 
   private val Assigned = "assigned"
@@ -91,20 +90,28 @@ object EpochAnn {
   private val centCache = scala.collection.concurrent.TrieMap
     .empty[String, Seq[(Long, Seq[Double])]]
 
-  private def centroidsOf(s: SparkSession, path: String,
+  /** The pinned centroid table in id order — the order [[Ann.build]]
+    * and [[Ann.meanCentroids]] produce. Order is semantic: ties in
+    * [[Ann.assign]]'s fold (a zero-norm vector ties every cell) go to
+    * the earlier-listed centroid, and a parquet read returns rows in
+    * file-split order, so an unsorted read would assign appended ties
+    * differently from a one-pass build. Shared with [[EpochIvfpq]]. */
+  private[ops] def centroidsOf(s: SparkSession, path: String,
       m: Epoch.Manifest): Seq[(Long, Seq[Double])] = {
     if (centCache.size > CentCacheMax) centCache.clear()
     graft.BuildOnce.memo(centCache, m.dirs(path, Cents).mkString(";"))(
       Epoch.read(s, path, m, Cents).get
         .select(col("centroid_id").cast(LongType), col("centroid_emb"))
         .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq)
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+        .sortBy(_._1))
   }
 
   /** Load ONE pinned epoch as the shared [[Ann.IvfIndex]] — after
     * this, every [[Ann]] read path (query, serveBatch, kNN join,
-    * cellSkew) works unchanged; tombstones anti-join exactly like
-    * [[Ann.load]]'s. */
+    * cellSkew) works unchanged. Pinned tombstones anti-join the
+    * assigned rows (broadcast; the cell restriction still pushes below
+    * the join), so every search path observes the deletes. */
   def load(s: SparkSession, path: String): Ann.IvfIndex =
     loadOn(s, path, current(s, path))
 
@@ -122,12 +129,16 @@ object EpochAnn {
 
   /** Append under frozen PINNED centroids as one delta generation.
     * Ledger-replay-safe on `app_<batchId>`; empty batches commit
-    * nothing; re-adding tombstoned ids is refused (compact first). */
+    * nothing; a batch whose id or embedding type differs from the
+    * layout is refused by name ([[Ann.appendSchemaGate]]); re-adding
+    * tombstoned ids is refused (compact first). */
   def append(s: SparkSession, newVectors: DataFrame, path: String,
       batchId: Long): Unit = {
     val m = current(s, path)
     val key = s"app_$batchId"
     if (m.has(key)) return
+    Ann.appendSchemaGate(s, m.dirs(path, Assigned).head, newVectors,
+      "vec_id", "embedding", "EpochAnn.append")
     if (newVectors.isEmpty) return
     Epoch.read(s, path, m, Tomb).foreach { t =>
       require(newVectors.select(col("vec_id"))
@@ -170,6 +181,54 @@ object EpochAnn {
       m.applied :+ key))
   }
 
+  /** UPSERT a batch as ONE epoch under `upd_<batchId>` — the batch's
+    * stale versions go and its new versions land, re-assigned under
+    * the PINNED centroids, in the same manifest rename, so no reader
+    * observes the delete without the re-add. Ids absent from the index
+    * upsert to inserts. */
+  def update(s: SparkSession, newVectors: DataFrame, path: String,
+      batchId: Long): Unit = {
+    val m = current(s, path)
+    upsert(s, path, m, batchId, Assigned, newVectors)(
+      loadOn(s, path, m).assigned,
+      Ann.assign(_, centroidsOf(s, path, m), "vec_id", "embedding"))
+  }
+
+  /** The upsert both vector tiers share ([[update]],
+    * [[EpochIvfpq.update]]): survivors-minus-batch plus the batch
+    * placed by `place` (cell-assign, plus PQ-encode on the compressed
+    * tier) publish as ONE fresh `component` generation with the
+    * tombstones cleared. A tombstone+delta pair can NOT express an
+    * upsert — the tombstones anti-join the whole union at load, so
+    * they would swallow the re-added rows — so the batch's ids are
+    * compacted out instead, keeping load one anti-join with no id
+    * exemptions. Cost is ∝ residents (like compact); workloads needing
+    * ∝|batch| upserts between compactions chain delete + append epochs
+    * of DISJOINT-id batches instead. `residents` (the pinned
+    * tombstone-free rows) is only evaluated when the ledger does not
+    * hold the key. */
+  private[ops] def upsert(s: SparkSession, path: String,
+      m: Epoch.Manifest, batchId: Long, component: String,
+      newVectors: DataFrame)(residents: => DataFrame,
+      place: DataFrame => DataFrame): Unit = {
+    val key = s"upd_$batchId"
+    if (m.has(key)) return
+    val batch = newVectors.select(col("vec_id").cast(LongType),
+      col("embedding")).localCheckpoint(true)
+    val survivors = residents
+      .join(broadcast(batch.select(col("vec_id"))), Seq("vec_id"),
+        "left_anti")
+    val g = Epoch.genDir(s, path, m.next)
+    survivors.unionByName(place(batch))
+      .write.mode("overwrite").partitionBy("cell")
+      .parquet(s"$g/$component")
+    Epoch.commit(s, path, Epoch.Manifest(m.next,
+      m.components
+        .updated(component, Seq(s"g${m.next}/$component"))
+        .updated(Tomb, Seq.empty),
+      m.applied :+ key))
+  }
+
   /** Fold deltas + tombstones into one fresh generation (centroids
     * carried; idempotent, no ledger key — recompacting an already
     * compacted epoch is an equal epoch). */
@@ -187,8 +246,7 @@ object EpochAnn {
 
   /** Warm-start Lloyd refit over the PINNED survivors — new centroids
     * and the full re-assignment publish as ONE epoch, so no reader can
-    * pair new lists with old centroids (the atomicity [[Ann.retrain]]'s
-    * two-directory swap has to document away). Subsumes [[compact]]. */
+    * pair new lists with old centroids. Subsumes [[compact]]. */
   def retrain(s: SparkSession, path: String, iters: Int = 2): Unit = {
     val m = current(s, path)
     val idx = loadOn(s, path, m)

@@ -5,21 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** The COMPRESSED (IVF-PQ) vector index on EPOCH manifests ([[Epoch]])
-  * — [[EpochAnn]]'s twin for the [[Ivfpq]] layout, and the tier where
-  * the manifest buys the most: `Ivfpq.retrain` swaps THREE directories
-  * (encoded, centroids, books) plus a tombstone clear under the
-  * maintenance-window contract, so a concurrent reader can pair new
-  * codes with old codebooks — which is not a stale answer but a WRONG
-  * one (ADC distances decode codes through the wrong centroid table).
-  * Here the refreshed quantizers and the re-encoded corpus publish as
-  * ONE manifest rename; a pinned reader keeps a coherent
-  * (codes, books, centroids) triple by construction.
+  * — [[EpochAnn]]'s twin for the [[Ivfpq]] index, and the one way it
+  * is persisted, maintained and read. The refreshed quantizers and the
+  * re-encoded corpus publish as ONE manifest rename, so a pinned reader
+  * keeps a coherent (codes, books, centroids) triple by construction.
+  * On this index a mixed-generation read would not be a stale answer
+  * but a WRONG one: ADC distances decode codes through the codebooks
+  * they were encoded with.
   *
   * Index semantics are the SHARED [[Ivfpq]] code paths — [[load]]
   * returns a plain [[Ivfpq.IvfPqIndex]], so the two-phase search
   * (cell-pruned codes-only ADC scan → exact re-rank), the filtered
-  * variant, and the kNN join all work unchanged, and the layouts
-  * cannot drift on what a code or a distance is. Mutations:
+  * variant, and the kNN join all work unchanged. Mutations:
   *
   *  - APPEND (∝ |batch|): cell-assign against the PINNED centroids +
   *    PQ-encode with the PINNED books ([[graft.functions.PqEncode]],
@@ -27,22 +24,20 @@ import org.apache.spark.sql.types.LongType
   *    new cell-partitioned delta dir referenced beside the old ones;
   *  - DELETE (∝ |doomed|): accumulated tombstones as a fresh dir,
   *    anti-joined below BOTH search phases at [[load]];
+  *  - UPDATE (upsert): survivors-minus-batch plus the re-encoded batch
+  *    as ONE epoch under ONE ledger key (`upd_<id>`) — the upsert
+  *    [[EpochAnn.upsert]] shares with the float tier;
   *  - COMPACT: survivors into one generation, tombstones cleared,
   *    quantizers carried;
   *  - RETRAIN: full [[Ivfpq.build]] refit over the pinned survivors —
-  *    encoded + centroids + books flip together, subsumes compact;
-  *  - UPDATE (upsert): delete + append of the batch as ONE epoch under
-  *    ONE ledger key (`upd_<id>`) — the swap layout needs a
-  *    delete→compact→append triple behind a marker file ([[Ivfpq
-  *    .update]]) because its append gate collides with uncompacted
-  *    tombstones; here the epoch's tombstones and delta commit
-  *    atomically, so the upsert is one mutation, not three.
+  *    encoded + centroids + books flip together, subsumes compact.
   *
   * Exactly-once via the manifest ledger (`app_<id>` / `del_<id>` /
-  * `upd_<id>`). `sim_ivfpq_epoch` drives build → append → serve under
+  * `upd_<id>`). `sim_ivfpq_append` drives build → append → serve under
   * the standard recall oracle; `EpochIvfpqSpec` pins snapshot
   * isolation across a retrain (the coherent-triple property), ledger
-  * replays, the update roundtrip, and lifecycle ≡ rebuild. */
+  * replays, the update roundtrip, and lifecycle ≡ an in-memory
+  * rebuild. */
 object EpochIvfpq {
 
   private val Encoded = "encoded"
@@ -88,29 +83,18 @@ object EpochIvfpq {
     m.dirs(path, Encoded).map(graft.Pq.read(s, _))
       .reduce(_ unionByName _)
 
-  // r20 §5: quantizer tables resident per pinned component-dir set —
-  // a committed generation's centroid/book files are immutable (epoch
-  // layouts only ever ADD generations), so the manifest's dir list is
-  // a complete staleness key and the (k·dim)-bounded collect runs once
-  // per epoch instead of once per served query. ACCRETIVE by design
-  // (snapshot readers pin OLD generations concurrently with current
-  // serving); r21 adds the fieldsCache-style size bound so unbounded
-  // retrain cycles cannot grow the cache without limit (r20 advice).
+  // r20 §5: codebooks resident per pinned component-dir set — a
+  // committed generation's book files are immutable (epoch layouts
+  // only ever ADD generations), so the manifest's dir list is a
+  // complete staleness key and the (m·codes·dsub)-bounded collect runs
+  // once per epoch instead of once per served query. ACCRETIVE by
+  // design (snapshot readers pin OLD generations concurrently with
+  // current serving); r21 adds the fieldsCache-style size bound so
+  // unbounded retrain cycles cannot grow the cache without limit. The
+  // coarse centroids share [[EpochAnn.centroidsOf]]'s cache.
   private val QuantCacheMax = 256
-  private val centCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, Seq[Double])]]
   private val bookCache = scala.collection.concurrent.TrieMap
     .empty[String, Seq[Seq[Seq[Double]]]]
-
-  private def centroidsOf(s: SparkSession, path: String,
-      m: Epoch.Manifest): Seq[(Long, Seq[Double])] = {
-    if (centCache.size > QuantCacheMax) centCache.clear()
-    graft.BuildOnce.memo(centCache, m.dirs(path, Cents).mkString(";"))(
-      Epoch.read(s, path, m, Cents).get
-        .select(col("centroid_id").cast(LongType), col("centroid_emb"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq)
-  }
 
   private def booksOf(s: SparkSession, path: String,
       m: Epoch.Manifest): Seq[Seq[Seq[Double]]] = {
@@ -136,7 +120,7 @@ object EpochIvfpq {
       : Ivfpq.IvfPqIndex = {
     val books = booksOf(s, path, m)
     val encoded = readEncoded(s, path, m)
-    Ivfpq.IvfPqIndex(centroidsOf(s, path, m),
+    Ivfpq.IvfPqIndex(EpochAnn.centroidsOf(s, path, m),
       books.length, books.head.head.length, books,
       Epoch.read(s, path, m, Tomb)
         .map(t => encoded.join(broadcast(t), Seq("vec_id"), "left_anti"))
@@ -145,14 +129,17 @@ object EpochIvfpq {
 
   /** Append under the PINNED frozen quantizers as one delta
     * generation. Ledger-replay-safe on `app_<batchId>`; empty batches
-    * commit nothing; re-adding tombstoned ids is refused (compact
-    * first — the tombstone would swallow the re-added rows at load).
-    */
+    * commit nothing; a batch whose id or embedding type differs from
+    * the layout is refused by name ([[Ann.appendSchemaGate]]);
+    * re-adding tombstoned ids is refused (compact first — the
+    * tombstone would swallow the re-added rows at load). */
   def append(s: SparkSession, newVectors: DataFrame, path: String,
       batchId: Long): Unit = {
     val m = current(s, path)
     val key = s"app_$batchId"
     if (m.has(key)) return
+    Ann.appendSchemaGate(s, m.dirs(path, Encoded).head, newVectors,
+      "vec_id", "embedding", "EpochIvfpq.append")
     if (newVectors.isEmpty) return
     Epoch.read(s, path, m, Tomb).foreach { t =>
       require(newVectors.select(col("vec_id"))
@@ -175,7 +162,7 @@ object EpochIvfpq {
   private def encodeBatch(s: SparkSession, path: String,
       m: Epoch.Manifest, batch: DataFrame): DataFrame = {
     val books = booksOf(s, path, m)
-    Ann.assign(batch, centroidsOf(s, path, m), "vec_id", "embedding")
+    Ann.assign(batch, EpochAnn.centroidsOf(s, path, m), "vec_id", "embedding")
       .select(col("vec_id"), col("embedding"), col("cell"),
         graft.functions.PqEncode.pqEncode(
           ProductQuant.unit(col("embedding")), books).as("codes"))
@@ -213,38 +200,15 @@ object EpochIvfpq {
       .localCheckpoint(true)
   }
 
-  /** UPSERT a batch as ONE epoch under `upd_<batchId>` — atomic where
-    * the swap layout's [[Ivfpq.update]] needs a delete→compact→append
-    * triple behind a marker file: no reader can observe the delete
-    * without the re-add, because both land in the same manifest
-    * rename. A tombstone+delta pair can NOT express this (tombstones
-    * anti-join the whole union at [[loadOn]], so they would swallow
-    * the re-added rows — the exact collision the swap layout's append
-    * gate exists to refuse); to keep [[loadOn]] layout-agnostic (one
-    * anti-join, no id exemptions), UPDATE compacts the batch's ids
-    * out instead: survivors-minus-batch plus the re-encoded batch
-    * publish as ONE fresh encoded generation. Cost is ∝ residents
-    * (like compact — the price of keeping reads simple); workloads
-    * needing ∝|batch| upserts between compactions chain
-    * [[delete]]+[[append]] epochs of DISJOINT-id batches instead. */
+  /** UPSERT a batch as ONE epoch under `upd_<batchId>`: no reader can
+    * observe the delete without the re-add, because both land in the
+    * same manifest rename ([[EpochAnn.upsert]]). Ids absent from the
+    * index upsert to inserts. */
   def update(s: SparkSession, newVectors: DataFrame, path: String,
       batchId: Long): Unit = {
     val m = current(s, path)
-    val key = s"upd_$batchId"
-    if (m.has(key)) return
-    val batch = newVectors.select(col("vec_id").cast(LongType),
-      col("embedding")).localCheckpoint(true)
-    val ids = batch.select(col("vec_id"))
-    val survivors = loadOn(s, path, m).encoded
-      .join(broadcast(ids), Seq("vec_id"), "left_anti")
-    val g = Epoch.genDir(s, path, m.next)
-    survivors.unionByName(encodeBatch(s, path, m, batch))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$g/encoded")
-    Epoch.commit(s, path, Epoch.Manifest(m.next,
-      m.components
-        .updated(Encoded, Seq(s"g${m.next}/encoded"))
-        .updated(Tomb, Seq.empty),
-      m.applied :+ key))
+    EpochAnn.upsert(s, path, m, batchId, Encoded, newVectors)(
+      loadOn(s, path, m).encoded, encodeBatch(s, path, m, _))
   }
 
   /** Fold deltas + tombstones into one fresh generation (quantizers
@@ -263,9 +227,11 @@ object EpochIvfpq {
 
   /** Full quantizer refit over the PINNED survivors — re-trained
     * centroids, re-trained codebooks, and the re-encoded corpus
-    * publish as ONE epoch (the coherent-triple atomicity
-    * [[Ivfpq.retrain]]'s three-directory swap has to document away).
-    * k/m/codes carried from the pinned index; subsumes [[compact]]. */
+    * publish as ONE epoch (the coherent triple). Product codebooks have
+    * no meaningful warm start in this k-means form, so both quantizers
+    * refit from scratch ([[Ivfpq.build]] verbatim); k/m/codes carried
+    * from the pinned index, so the serving plan shape is unchanged;
+    * subsumes [[compact]]. */
   def retrain(s: SparkSession, path: String, iters: Int = 2): Unit = {
     val m = current(s, path)
     val idx = loadOn(s, path, m)

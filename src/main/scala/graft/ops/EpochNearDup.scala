@@ -74,9 +74,8 @@ object EpochNearDup {
     * components, old segment dirs referenced untouched (per-document
     * state — nothing merges). Replay-safe on `app_<batchId>`; empty
     * batches commit nothing; re-adding a PINNED-tombstoned id is
-    * refused by name (compact first — the shared
-    * [[Ann.appendTombstoneGate]] contract, against the manifest's
-    * tombstone set). */
+    * refused by name (compact first — the swap appends' tombstone-gate
+    * contract, against the manifest's tombstone set). */
   def append(s: SparkSession, newDocs: DataFrame, path: String,
       batchId: Long): Unit = {
     val m = current(s, path)

@@ -70,8 +70,8 @@ object EpochPostings {
   /** Append one document batch as epoch N+1 — segment dir + merged
     * df/stats, old segments referenced. Replay-safe on `app_<batchId>`
     * in the ledger; an empty batch commits nothing; re-adding a
-    * tombstoned doc id is refused by name (compact first — the
-    * [[Ann.appendTombstoneGate]] contract, checked against the PINNED
+    * tombstoned doc id is refused by name (compact first — the swap
+    * appends' tombstone-gate contract, checked against the PINNED
     * tombstone set). */
   def append(s: org.apache.spark.sql.SparkSession,
       newDocs: org.apache.spark.sql.DataFrame, path: String,

@@ -213,7 +213,7 @@ object HybridQueries {
       val kwServed = TextQueries.bm25Serve.fn(s, d)
         .select(col("doc_id"), col("rnk").as("kw_rnk"))
       val vecServed = Ann.query(
-        Ann.load(s, VectorQueries.savedIvfPath(s, d, k = 8)),
+        EpochAnn.load(s, VectorQueries.savedIvfPath(s, d, k = 8)),
         probeId = 0, topK = VectorQueries.IvfTopK, nProbe = 3,
         knownProbe = Some(VectorQueries.probeEmbedding(s, d)))
         .select(col("neighbor_id").as("doc_id"), col("rank").as("vec_rnk"))
@@ -342,7 +342,7 @@ object HybridQueries {
       requests.map(r => (r._1, r._2)), kwTopK)
       .select(col("query_id"), col("doc_id"), col("rnk").as("kw_rnk"))
     val vec = Ann.serveBatch(
-      Ann.load(s, VectorQueries.savedIvfPath(s, d, k = 8)),
+      EpochAnn.load(s, VectorQueries.savedIvfPath(s, d, k = 8)),
       requests.map(r => (r._1, r._3)), vecTopK, nProbe,
       excludeSelf = excludeSelf)
       .select(col("probe_id").as("query_id"),
@@ -620,7 +620,7 @@ object HybridQueries {
         .select(col("doc_id"), col("rnk").as("kw_rnk"))
       val vecPred = pmod(col("vec_id"), lit(3)) === 0
       val vecServed = Ann.query(
-        Ann.load(s, VectorQueries.savedIvfPath(s, d, k = 8)),
+        EpochAnn.load(s, VectorQueries.savedIvfPath(s, d, k = 8)),
         probeId = 0, topK = VectorQueries.IvfTopK, nProbe = 3,
         candidateFilter = Some(vecPred),
         knownProbe = Some(VectorQueries.probeEmbedding(s, d)))
@@ -699,8 +699,8 @@ object HybridQueries {
     * `sim_ivf_append`) each prove alone: BOTH persisted indexes were
     * built on the even-id half of the corpus and grown to the whole of
     * it by their append paths (new term-sorted postings segments +
-    * algebraic df/stats merges; frozen-centroid assignment into the
-    * cell directories), and the hybrid query then serves against the
+    * algebraic df/stats merges; frozen-centroid assignment into a
+    * referenced delta generation), and the hybrid query then serves against the
     * two grown layouts. The hash anchor is the EXACT full-corpus
     * fusion — `hybrid_search`'s oracle rows verbatim — plus the usual
     * `fuse_ok` ≤ 2-missing gate: the appended keyword index is exact
@@ -718,7 +718,7 @@ object HybridQueries {
       val kwServed = TextQueries.bm25TopK(lists, dfs, stats)
         .select(col("doc_id"), col("rnk").as("kw_rnk"))
       val vecServed = Ann.query(
-        Ann.load(s, VectorQueries.appendedIvfPath(s, d, k = 8)),
+        EpochAnn.load(s, VectorQueries.appendedIvfPath(s, d, k = 8)),
         probeId = 0, topK = VectorQueries.IvfTopK, nProbe = 3,
         knownProbe = Some(VectorQueries.probeEmbedding(s, d)))
         .select(col("neighbor_id").as("doc_id"), col("rank").as("vec_rnk"))
@@ -932,8 +932,8 @@ object HybridQueries {
   /** TAKEDOWN PROPAGATION through the composed stack — the compliance
     * property the delete lifecycle exists for: the SAME doomed doc set
     * (doc_id ≡ 3 mod 7) was tombstoned out of BOTH persisted indexes
-    * (`postingsDelete` on the postings layout; `Ann.delete` on an IVF
-    * twin built over the full corpus), and the hybrid query then serves
+    * (`postingsDelete` on the postings layout; `EpochAnn.delete` on
+    * an IVF twin built over the full corpus), and the hybrid query then serves
     * against the two tombstoned layouts. A deleted doc must be
     * unreachable through EITHER tier of the fused ranking — not merely
     * demoted: the keyword tier's anti-join removes its posting rows
@@ -959,7 +959,7 @@ object HybridQueries {
         graft.Pq.read(s, s"$path/stats"))
         .select(col("doc_id"), col("rnk").as("kw_rnk"))
       val vecServed = Ann.query(
-        Ann.load(s, VectorQueries.deletedIvfPath7(s, d, k = 8)),
+        EpochAnn.load(s, VectorQueries.deletedIvfPath7(s, d, k = 8)),
         probeId = 0, topK = VectorQueries.IvfTopK, nProbe = 3,
         knownProbe = Some(VectorQueries.probeEmbedding(s, d)))
         .select(col("neighbor_id").as("doc_id"), col("rank").as("vec_rnk"))
@@ -1312,7 +1312,7 @@ object HybridQueries {
         EpochPostings.savedEpochPath(s, d), TextQueries.bm25Terms)
         .select(col("doc_id"), col("rnk").as("kw_rnk"))
       val vecServed = Ann.query(
-        EpochAnn.load(s, VectorQueries.epochIvfPath(s, d, k = 8)),
+        EpochAnn.load(s, VectorQueries.appendedIvfPath(s, d, k = 8)),
         probeId = 0, topK = VectorQueries.IvfTopK, nProbe = 3,
         knownProbe = Some(VectorQueries.probeEmbedding(s, d)))
         .select(col("neighbor_id").as("doc_id"),

@@ -42,7 +42,7 @@ object IndexStats {
     val vec = VectorQueries.savedIvfpqPath(s, d, k = 8, m = 4)
     val frames = Seq(
       one("ivfpq", "n_vectors",
-        graft.Pq.read(s, s"$vec/encoded").agg(count(lit(1)))),
+        EpochIvfpq.load(s, vec).encoded.agg(count(lit(1)))),
       one("postings", "n_docs",
         graft.Pq.read(s, s"$post/stats").agg(sum("n_docs_l"))),
       one("postings", "sum_dl",

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 /** IVF-PQ — the composed 100 TB ANN serving index (SURVEY §2.10 X3
   * scale path): [[Ann]]'s inverted-file cells decide WHICH vectors a
   * probe scores (nProbe/k of the corpus, partition pruning on the
-  * persisted layout) and [[ProductQuant]]'s product codes decide WHAT scoring a
+  * persisted layout, [[EpochIvfpq]]) and [[ProductQuant]]'s product codes decide WHAT scoring a
   * candidate costs (m byte codes instead of dim floats). This is the
   * standard large-scale layout (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011 — the IVFADC system): at 100 TB
@@ -57,198 +57,6 @@ object Ivfpq {
       graft.functions.PqEncode.pqEncode(ProductQuant.unit(col(embCol)), books)
         .as("codes"))
     IvfPqIndex(ivf.centroids, m, dsub, books, encoded)
-  }
-
-  /** Persist with the inverted lists as cell partition directories
-    * (same layout contract as [[Ann.save]] — the probe's cell
-    * restriction becomes parquet partition pruning) plus the two
-    * bounded side tables (centroids; codebooks flattened to one row per
-    * (subspace, code)). */
-  def save(index: IvfPqIndex, path: String): Unit = {
-    index.encoded.write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/encoded")
-    val spark = index.encoded.sparkSession
-    import spark.implicits._
-    index.centroids.toDF("centroid_id", "centroid_emb")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    index.books.zipWithIndex.flatMap { case (book, sub) =>
-      book.zipWithIndex.map { case (cent, code) => (sub, code, cent) }
-    }.toDF("sub", "code", "centroid")
-      .write.mode("overwrite").parquet(s"$path/books")
-  }
-
-  /** Coarse centroids resident per (path, fingerprint) — shared memo
-    * with the float-IVF index (see [[Ann.loadCentroidsMemo]]): the
-    * quantizer tables are the small, frozen-between-retrains metadata a
-    * serving process keeps in memory; the fingerprint key picks up any
-    * retrain swap. */
-  private def loadCentroids(spark: SparkSession,
-      path: String): Seq[(Long, Seq[Double])] =
-    Ann.loadCentroidsMemo(spark, s"$path/centroids")
-
-  // r21 (r20 advice): fingerprint as STAMP, not key — one codebook
-  // table per path, replaced on retrain, never accreted
-  private val bookCache = scala.collection.concurrent.TrieMap
-    .empty[String, (String, Seq[Seq[Seq[Double]]])]
-
-  private def loadBooks(spark: SparkSession,
-      path: String): Seq[Seq[Seq[Double]]] =
-    graft.BuildOnce.memoStamped(bookCache,
-      path, Layout.dirFingerprint(spark, s"$path/books"))(
-      graft.Pq.read(spark, s"$path/books")
-        .select(col("sub").cast(IntegerType), col("code").cast(IntegerType),
-          col("centroid"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toSeq })
-
-  /** Load a saved index; [[search]] on it prunes to the probed cell
-    * directories and the ADC phase reads only the codes column. When a
-    * delete-tombstone segment exists ([[delete]]), the encoded rows
-    * anti-join it (broadcast; cell pruning and the codes-only column
-    * footprint push below the join), so both search phases — ADC scan
-    * and exact re-rank — observe the deletes without knowing the
-    * segment exists. */
-  def load(spark: SparkSession, path: String): IvfPqIndex = {
-    val cents = loadCentroids(spark, path)
-    val books = loadBooks(spark, path)
-    IvfPqIndex(cents, books.length, books.head.head.length, books,
-      Layout.minusTombstones(spark,
-        graft.Pq.read(spark, s"$path/encoded"), path))
-  }
-
-  /** DELETE from a persisted IVF-PQ index — the same tombstone segment
-    * contract as [[Ann.delete]] (which manages only `$path/tombstones`
-    * and is layout-agnostic, so it IS the implementation): doomed ids
-    * land in the bounded side segment, the compressed cell directories
-    * are never touched, [[load]] anti-joins every served plan, and
-    * [[compact]] folds the rows out physically. Codebooks and centroids
-    * are per-corpus statistics only in the loose sense — they are
-    * frozen between retrains anyway — so, as with the plain IVF index,
-    * tombstoned serving is EXACTLY rebuild-over-survivors serving with
-    * these quantizers. Note: re-adding a previously deleted id via
-    * [[append]] requires a [[compact]] first — the tombstone would
-    * otherwise swallow the re-added row at load. */
-  def delete(spark: SparkSession, path: String, ids: DataFrame,
-      idCol: String = "vec_id"): Unit =
-    Ann.delete(spark, path, ids, idCol)
-
-  /** Fold accumulated tombstones into the compressed layout for real —
-    * [[Ann.compact]]'s IVF-PQ twin over the `encoded` directory (the
-    * shared [[Layout.dropTombstoned]] contract). */
-  def compact(spark: SparkSession, path: String): Unit =
-    Layout.dropTombstoned(spark, s"$path/encoded", path,
-      partitionCols = Seq("cell"))
-
-  /** RETRAIN a persisted IVF-PQ index in place — the refit
-    * [[append]]'s frozen-quantizer contract assumes exists, completing
-    * the compressed index's lifecycle (append → delete → compact →
-    * RETRAIN). Unlike `Ann.retrain`'s warm start, BOTH quantizers are
-    * refit from scratch over the current residents ([[build]] verbatim
-    * — product codebooks have no meaningful warm start in this k-means
-    * form, and the coarse re-seed costs one extra Lloyd pass at most),
-    * every resident is re-encoded once, and all four layout pieces
-    * swap under the shared [[Layout.replaceDir]] contract (encoded,
-    * centroids, books; tombstones cleared LAST — retrain subsumes
-    * [[compact]]). Same maintenance-window consistency contract as
-    * `Ann.retrain`: the swaps are not atomic as a unit. k/m/codes are
-    * taken from the saved layout, so the serving plan shape is
-    * unchanged — only the quantizer quality is refreshed. */
-  def retrain(spark: SparkSession, path: String, iters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    val idx = load(spark, path)   // tombstone-aware: refit the survivors
-    require(idx.centroids.nonEmpty,
-      s"Ivfpq.retrain: $path has no centroids")
-    val fresh = build(idx.encoded.select(col(idCol), col(embCol)),
-      k = idx.centroids.length, m = idx.m,
-      codes = idx.books.head.length, iters = iters,
-      idCol = idCol, embCol = embCol)
-    Layout.replaceDir(spark, fresh.encoded, s"$path/encoded",
-      partitionCols = Seq("cell"))
-    import spark.implicits._
-    Layout.replaceDir(spark,
-      fresh.centroids.toDF("centroid_id", "centroid_emb"),
-      s"$path/centroids")
-    Layout.replaceDir(spark,
-      fresh.books.zipWithIndex.flatMap { case (book, sub) =>
-        book.zipWithIndex.map { case (cent, code) => (sub, code, cent) }
-      }.toDF("sub", "code", "centroid"),
-      s"$path/books")
-    Layout.deleteDir(spark, s"$path/tombstones")
-  }
-
-  /** Incremental maintenance of a persisted IVF-PQ index — the
-    * compressed twin of [[Ann.append]] (grow between retrains): new
-    * vectors are cell-assigned against the FROZEN coarse centroids and
-    * PQ-encoded with the FROZEN codebooks ([[graft.functions.PqEncode]]
-    * — the identical kernel the build used, so an appended row's codes
-    * are bit-identical to what a build-time encode of that row would
-    * produce), landing as NEW files inside the existing cell partition
-    * directories in append mode. Neither side table changes — centroids
-    * and codebooks are immutable between retrains — so the serving
-    * plan over the appended layout is unchanged: same partition
-    * pruning, same codes-only ADC scan, same exact re-rank. Recall is
-    * governed by how stale the frozen quantizers are vs the new data;
-    * the exact re-rank absorbs code-quality drift for anything that
-    * reaches the shortlist, and `sim_ivfpq_append` drives the
-    * half-trained worst case through the standard recall gate.
-    *
-    * Same fail-fast schema gate as [[Ann.append]] (the shared
-    * [[Ann.appendSchemaGate]]): a batch whose id or embedding type
-    * differs from the persisted layout is refused BY NAME here,
-    * instead of landing mixed-schema files that only break the next
-    * load. */
-  def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String = "vec_id", embCol: String = "embedding"): Unit = {
-    Ann.appendSchemaGate(spark, s"$path/encoded", newVectors, idCol,
-      embCol, "Ivfpq.append")
-    Ann.appendTombstoneGate(spark, path, newVectors.select(col(idCol)),
-      idCol, "Ivfpq.append")
-    val cents = loadCentroids(spark, path)
-    val books = loadBooks(spark, path)
-    Ann.assign(newVectors, cents, idCol, embCol)
-      .select(col(idCol), col(embCol), col("cell"),
-        graft.functions.PqEncode.pqEncode(ProductQuant.unit(col(embCol)), books)
-          .as("codes"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/encoded")
-  }
-
-  /** UPDATE (upsert) a batch of vectors in the persisted index — the
-    * `bm25_serve_update` composition on the compressed layout, under
-    * ONE batch-id marker: [[delete]] the batch's ids (stale versions
-    * tombstoned), [[compact]] to fold the tombstones (the append gate
-    * demands it — an un-compacted tombstone would both refuse the
-    * re-add and swallow the new rows at load), [[append]] the new
-    * versions against the frozen quantizers, then plant
-    * `_applied_upd_<batchId>` on the encoded directory so a replayed
-    * batch is a mechanical no-op (the marker survives later compaction
-    * swaps via the carried `_applied_*` history).
-    *
-    * Every pre-marker crash window is SELF-HEALING under replay, which
-    * is why the marker can ride a plain file after the append instead
-    * of a swap: re-deleting already-dropped ids tombstones nothing
-    * that serving can still see, the compact then physically drops any
-    * partially appended rows of the batch, and the append re-adds the
-    * full batch — the final state is identical whichever step the
-    * crash hit. Ids absent from the index upsert to inserts. The
-    * batch frame must not derive from this layout's own directories
-    * (it is re-read after the compact swap). Same offline-maintenance
-    * window contract as every layout mutation. `IvfpqUpdateSpec` pins
-    * the replay no-op and the updated-vector serving roundtrip;
-    * `sim_ivfpq_update` hash-verifies update ≡ rebuild-over-updated-
-    * corpus through the standard recall gate. */
-  def update(spark: SparkSession, path: String, newVectors: DataFrame,
-      batchId: Long, idCol: String = "vec_id",
-      embCol: String = "embedding"): Unit = {
-    val marker = s"_applied_upd_$batchId"
-    if (Layout.hasMarker(spark, s"$path/encoded", marker)) return
-    val ids = newVectors.select(col(idCol)).distinct()
-      .localCheckpoint(true)
-    delete(spark, path, ids, idCol)
-    compact(spark, path)
-    append(spark, path, newVectors, idCol, embCol)
-    Layout.addMarker(spark, s"$path/encoded", marker)
   }
 
   /** Top-`topK` neighbors of `probeId`: driver-side cell routing (the

@@ -2,12 +2,11 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared directory-swap primitive for persisted index layouts (the BM25
-  * postings side tables, the IVF cell directories): stage the replacement
-  * frame next to the live directory, then swap with tombstone ordering.
-  * Factored out of the postings maintenance path so the text and vector
-  * indexes share ONE crash-recovery contract instead of two diverging
-  * copies. */
+/** Shared directory-swap primitive for the persisted layouts still on
+  * the swap protocol (the BM25 postings side tables, the near-dup
+  * index, the base-table shrinks): stage the replacement frame next to
+  * the live directory, then swap with tombstone ordering — ONE
+  * crash-recovery contract instead of one diverging copy per tier. */
 private[graft] object Layout {
 
   /** Swap-replace a layout directory: stage the merged frame next to it
@@ -21,9 +20,8 @@ private[graft] object Layout {
     * land in the gap and miss the path) — maintenance runs in a window
     * without concurrent serving, exactly like parquet table compaction;
     * the callers (`postingsAppend`/`postingsCompact`/`postingsDelete`,
-    * `Ann.retrain`/`Ann.compact`) document the same contract.
-    * `partitionCols` preserves a partitioned layout (the IVF cell
-    * directories) through the rewrite. */
+    * `neardupCompact`) document the same contract. `partitionCols`
+    * preserves a partitioned layout through the rewrite. */
   def replaceDir(s: SparkSession, merged: DataFrame, dir: String,
       partitionCols: Seq[String] = Nil,
       stageMarkers: Seq[String] = Nil): Unit = {
@@ -69,20 +67,6 @@ private[graft] object Layout {
     fs.delete(old, true)
   }
 
-  /** Plant marker file `name` in a LIVE layout directory — for
-    * compositions whose last step is an append (no swap to ride):
-    * the marker commits the whole composition, and every replay window
-    * before it must be self-healing on its own (the caller documents
-    * why). Underscore-prefixed names are invisible to parquet readers
-    * and survive subsequent [[replaceDir]] swaps via the carried
-    * `_applied_*` history. */
-  def addMarker(s: SparkSession, dir: String, name: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir, name)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .create(p, true).close()
-  }
-
   /** True iff `dir` carries marker file `name` (see `stageMarkers`). */
   def hasMarker(s: SparkSession, dir: String, name: String): Boolean = {
     import org.apache.hadoop.fs.Path
@@ -98,36 +82,38 @@ private[graft] object Layout {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Cheap content fingerprint of a layout directory: the sorted
-    * (name, length, mtime) listing. Used as the staleness component of
-    * once-per-process driver caches over SMALL layout components
-    * (centroid/codebook tables): a retrain/compact swaps in new files
-    * (fresh names from the staged write), so any mutation changes the
-    * fingerprint and the cache can never serve a stale component —
-    * unlike a bare path key. One FS listing per serve: microseconds
-    * locally, one RPC on a real store — always cheaper than the collect
-    * job it replaces (optimization guide §5: the driver should do
-    * almost no data work, and re-collecting an unchanged component per
-    * query was exactly that). */
-  def dirFingerprint(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).map(st =>
-      s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(",")
-  }
-
   /** The delete-tombstone segment of a persisted layout, if one exists
     * — ids removed since the last compaction. Bounded by construction:
     * deletes accumulate only between compactions, which fold them into
     * the data for real, so the segment stays a broadcast-sized side
-    * table. ONE definition behind every index's serving path (postings,
-    * IVF, IVF-PQ) so the crash-recovery-sensitive pattern cannot fork. */
+    * table. ONE definition behind every swap index's serving path
+    * (postings, near-dup) so the crash-recovery-sensitive pattern cannot
+    * fork. */
   def tombstonesOpt(s: SparkSession, path: String): Option[DataFrame] =
     if (dirExists(s, s"$path/tombstones"))
       Some(graft.Pq.read(s, s"$path/tombstones"))
     else None
+
+  /** Refuse an append batch that intersects the layout's live
+    * tombstones (shared by `postingsAppend`, `postingsAppendOnce` and
+    * `neardupAppend`): re-adding a deleted id without compacting first
+    * would land rows (and, for the text index, count them into
+    * df/stats) that the tombstone anti-join silently removes from
+    * every served plan — statistics counting a document no query can
+    * return. The documented "compact first" contract is enforced
+    * mechanically here: the check is a bounded semi-join against the
+    * broadcast segment, and the error names the fix. */
+  def appendTombstoneGate(s: SparkSession, path: String,
+      batchIds: DataFrame, idCol: String, caller: String): Unit =
+    tombstonesOpt(s, path).foreach { t =>
+      import org.apache.spark.sql.functions.broadcast
+      val clash = batchIds
+        .join(broadcast(t.toDF(idCol)), Seq(idCol), "left_semi")
+        .limit(1).count()
+      require(clash == 0L,
+        s"$caller: batch contains tombstoned ids — run the layout's " +
+          "compact to fold deletes in before re-adding deleted ids")
+    }
 
   /** Serve `df` minus the layout's tombstoned ids: broadcast anti-join
     * on the tombstone segment's own columns when one exists, `df`
@@ -140,22 +126,6 @@ private[graft] object Layout {
       import org.apache.spark.sql.functions.broadcast
       df.join(broadcast(t), t.columns.toSeq, "left_anti")
     }.getOrElse(df)
-
-  /** Fold accumulated tombstones into a layout's data directory for
-    * real: rewrite `dataDir` minus the tombstoned ids (stage + swap,
-    * partitioning preserved), then drop the segment LAST — a crash
-    * between the swap and the drop just re-runs an anti-join that
-    * matches nothing (idempotent). No-op when no tombstones exist. */
-  def dropTombstoned(s: SparkSession, dataDir: String, path: String,
-      partitionCols: Seq[String] = Nil): Unit =
-    tombstonesOpt(s, path).foreach { t =>
-      import org.apache.spark.sql.functions.broadcast
-      replaceDir(s,
-        graft.Pq.read(s, dataDir)
-          .join(broadcast(t), t.columns.toSeq, "left_anti"),
-        dataDir, partitionCols)
-      deleteDir(s, s"$path/tombstones")
-    }
 
   /** Recursively drop a layout directory (tombstone segment cleanup
     * after a compaction folds the deletes in). */

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *
   * [[sweep]] walks registered layouts, probes each against the policy,
   * and applies the due operation through the layout's OWN maintenance
-  * face (postings/near-dup/epoch-layout compaction, IVF retrain-or-
-  * compact via the existing [[Ann.needsRetrain]] skew trigger, IVF-PQ
-  * compaction) — the sweep adds no new mutation semantics, so every
+  * face (postings/near-dup/epoch-layout compaction, IVF and IVF-PQ
+  * retrain-or-compact via the existing [[Ann.needsRetrain]] skew
+  * trigger) — the sweep adds no new mutation semantics, so every
   * crash/replay contract those faces document carries over verbatim;
   * all of them are idempotent, so re-running a crashed sweep under the
   * same batch id converges (the id tags the report for the operator's
@@ -46,7 +46,7 @@ object Maintenance {
       maxRetainedEpochs: Int = 8)
 
   /** One layout under sweep management. `kind` ∈ postings |
-    * neardup | ivf | ivfpq | epoch_postings |
+    * neardup | epoch_postings |
     * epoch_positional | epoch_suggest | epoch_ivf | epoch_ivfpq |
     * epoch_neardup | epoch_table | epoch_mv.
     * `registry` binds an epoch layout to the cross-tier snapshot
@@ -84,8 +84,6 @@ object Maintenance {
     ref.kind match {
       case "postings" => Seq(s"${ref.path}/lists")
       case "neardup" => Seq(s"${ref.path}/bands")
-      case "ivf" => Seq(s"${ref.path}/assigned")
-      case "ivfpq" => Seq(s"${ref.path}/encoded")
       case "epoch_postings" | "epoch_positional" =>
         Epoch.resolve(s, ref.path).map(_.dirs(ref.path, "lists"))
           .getOrElse(Seq.empty)
@@ -205,12 +203,6 @@ object Maintenance {
       val compactDue = segs > policy.maxSegments ||
         ratio > policy.maxTombstoneRatio
       val action = ref.kind match {
-        case "ivf" if Ann.needsRetrain(Ann.load(s, ref.path),
-            policy.maxCellSkew) =>
-          Ann.retrain(s, ref.path); "retrain"
-        case "ivf" if compactDue => Ann.compact(s, ref.path); "compact"
-        case "ivfpq" if compactDue =>
-          Ivfpq.compact(s, ref.path); "compact"
         case "postings" if compactDue =>
           TextQueries.postingsCompact(s, ref.path); "compact"
         case "neardup" if compactDue =>

@@ -127,15 +127,15 @@ object NearDup {
     * is NOTHING else to do — no df merge, no stats accumulators.
     * Append ≡ rebuild by construction; `neardup_serve_append`
     * hash-verifies it. Re-adding a tombstoned id is refused until a
-    * compact folds the delete in ([[Ann.appendTombstoneGate]] — the
-    * shared mechanical gate). Same offline-maintenance consistency
+    * compact folds the delete in (the swap appends' shared mechanical
+    * tombstone gate). Same offline-maintenance consistency
     * contract as every other layout mutation here: run in a window
     * without concurrent serving, one append per committed batch id. */
   def neardupAppend(s: SparkSession, newDocs: DataFrame,
       path: String): Unit = {
     val proj = docProjection(newDocs)
     if (proj.isEmpty) return
-    Ann.appendTombstoneGate(s, path, proj.select(col("doc_id")),
+    Layout.appendTombstoneGate(s, path, proj.select(col("doc_id")),
       "doc_id", "neardupAppend")
     bandRows(newDocs)
       .repartitionByRange(8, col("band_key"))

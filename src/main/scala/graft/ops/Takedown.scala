@@ -16,18 +16,19 @@ import org.apache.spark.sql.types._
   *
   * Per-tier legs and their replay story under ONE `batchId`:
   *
-  *  - Swap-layout BM25 postings ([[TextQueries.postingsDelete]]),
-  *    near-dup ([[NearDup.neardupDelete]]), IVF ([[Ann.delete]]),
-  *    IVF-PQ ([[Ivfpq.delete]]): tombstone writes, idempotent BY
-  *    CONSTRUCTION (already-tombstoned ids are excluded up front) — no
-  *    marker needed, a replayed leg is a mechanical no-op.
+  *  - Swap-layout BM25 postings ([[TextQueries.postingsDelete]]) and
+  *    near-dup ([[NearDup.neardupDelete]]): tombstone writes,
+  *    idempotent BY CONSTRUCTION (already-tombstoned ids are excluded
+  *    up front) — no marker needed, a replayed leg is a mechanical
+  *    no-op.
   *  - The suggest dictionary ([[EpochSuggest.delete]]): an algebraic
   *    negative df merge — NOT idempotent, so it is skipped on a replay
   *    by the manifest ledger key `del_<batchId>`.
   *  - Materialized views ([[graft.plans.EpochMv.refreshDelete]]):
   *    the view's delete merge as a new manifest generation, under the
   *    same ledger key.
-  *  - The positional index ([[EpochPositional.delete]]), the epoch
+  *  - The positional index ([[EpochPositional.delete]]), the vector
+  *    indexes ([[EpochAnn.delete]], [[EpochIvfpq.delete]]), the epoch
   *    twins of the other index tiers and the table tier: each leg one
   *    manifest generation under the same `del_<batchId>` ledger key.
   *
@@ -61,13 +62,11 @@ object Takedown {
   final case class Tiers(
       postings: Option[String] = None,
       neardup: Option[String] = None,
-      ivf: Option[String] = None,
-      ivfpq: Option[String] = None,
       // the SERVE-SAFE epoch layouts (ops/Epoch): deletes publish a new
       // manifest generation under the ledger key del_<batchId> —
       // exactly-once rides the manifest, and concurrent readers keep
-      // their pinned snapshots throughout. The positional index and
-      // the (distance-1) suggest dictionary live only here.
+      // their pinned snapshots throughout. The positional index, the
+      // suggest dictionary and both vector indexes live only here.
       postingsEpoch: Option[String] = None,
       positionalEpoch: Option[String] = None,
       suggestEpoch: Option[String] = None,
@@ -152,10 +151,6 @@ object Takedown {
       }
     }
     tiers.neardup.foreach(p => NearDup.neardupDelete(s, ids, p))
-    tiers.ivf.foreach(p =>
-      Ann.delete(s, p, ids.select(col("doc_id").as("vec_id"))))
-    tiers.ivfpq.foreach(p =>
-      Ivfpq.delete(s, p, ids.select(col("doc_id").as("vec_id"))))
   }
 
   /** The doomed residue shared by the entry, its oracle, and the tier
@@ -202,8 +197,8 @@ object Takedown {
       EpochPositional.build(s, docs, pos)
       NearDup.buildNearDup(s, docs, nd)
       EpochSuggest.create(s, docs, sug, Suggest.Distance1)
-      Ivfpq.save(Ivfpq.build(emb, k = 8, m = 4, codes = 16), vec)
-      Ann.save(Ann.build(emb, k = 8), ivf)
+      EpochIvfpq.build(s, emb, vec, k = 8, m = 4, codes = 16)
+      EpochAnn.build(s, emb, ivf, k = 8)
       docs.select(col("doc_id"), col("source"), col("n_chars"))
         .write.mode("overwrite").parquet(base)
       val mvDef = sourceCharsMv(base, mv)
@@ -213,8 +208,9 @@ object Takedown {
         .localCheckpoint(true)
       Takedown(s, doomed,
         Tiers(postings = Some(post), positionalEpoch = Some(pos),
-          neardup = Some(nd), suggestEpoch = Some(sug), ivf = Some(ivf),
-          ivfpq = Some(vec), mvEpoch = Some(mvDef)),
+          neardup = Some(nd), suggestEpoch = Some(sug),
+          ivfEpoch = Some(ivf), ivfpqEpoch = Some(vec),
+          mvEpoch = Some(mvDef)),
         batchId = 1L)
       Layout.replaceDir(s,
         graft.Pq.read(s, base).where(col("doc_id") % 5 =!= Residue), base)
@@ -303,7 +299,7 @@ object Takedown {
                 .partitionBy()) >= 3).cast(IntegerType)): _*)
       }
       val vectorF = Future(vectorTier("vector",
-        Ivfpq.search(Ivfpq.load(s, p("vec")), probeId = 0,
+        Ivfpq.search(EpochIvfpq.load(s, p("vec")), probeId = 0,
           topK = VectorQueries.IvfTopK, nProbe = 3,
           shortlist = VectorQueries.shortlistFor(
             // r20 §5: once-per-process corpus count (VectorQueries
@@ -313,7 +309,7 @@ object Takedown {
       // seventh tier: the float-IVF index the SAME takedown call
       // tombstoned — served search must recall the survivor anchor
       val vectorIvfF = Future(vectorTier("vector_ivf",
-        Ann.query(Ann.load(s, p("ivf")), probeId = 0,
+        Ann.query(EpochAnn.load(s, p("ivf")), probeId = 0,
           topK = VectorQueries.IvfTopK, nProbe = 3,
           knownProbe = Some(VectorQueries.probeEmbedding(s, d)))))
       val mvQF = Future(graft.Pq.read(s, p("base"))

@@ -918,7 +918,7 @@ object TextQueries {
     Layout.replaceDir(s, merged, dir)
 
   /** Incremental maintenance of a persisted BM25 index — the text twin
-    * of `Ann.append` (grow between retrains), replacing the
+    * of `EpochAnn.append` (grow between retrains), replacing the
     * reference's full-reload habit (`updatecalaccessrawdata.py:
     * ~100-200`) with segment append + algebraic side-table merges:
     *
@@ -956,21 +956,9 @@ object TextQueries {
     * from the last committed snapshot. */
   def postingsAppend(s: org.apache.spark.sql.SparkSession,
       newDocs: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val proj = docProjection(newDocs)
-    // batch stats FIRST, before any mutation: an all-null/empty batch
-    // contributes nothing, and aggregating it after the lists append has
-    // already run would die on the NULL sum(dl) mid-lifecycle — the
-    // coalesce makes the aggregate total-safe and the early return skips
-    // the three-step mutation entirely for a no-op batch
-    val nw = proj.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("dl")), lit(0L)).as("sd")).head()
-    if (nw.getLong(0) == 0L) return
-    // mechanical "compact first" contract: a batch re-adding a
-    // tombstoned doc id is refused by name — its rows would be counted
-    // into df/stats yet anti-joined out of every served plan
-    Ann.appendTombstoneGate(s, path, proj.select(col("doc_id")),
-      "doc_id", "postingsAppend")
-    val lists = postingRows(proj)
+    val batch = appendBatch(s, newDocs, path, "postingsAppend")
+    if (batch.isEmpty) return
+    val (lists, nNew, dlNew) = batch.get
     lists.repartitionByRange(8, col("term"))
       .sortWithinPartitions("term")
       .write.mode("append").parquet(s"$path/lists")
@@ -982,13 +970,37 @@ object TextQueries {
     // both sides bounded by construction: 1 row each
     val old = graft.Pq.read(s, s"$path/stats")
       .select(col("sum_dl"), col("n_docs_l")).head()
-    val sumDl = old.getLong(0) + nw.getLong(1)
-    val nDocs = old.getLong(1) + nw.getLong(0)
+    val sumDl = old.getLong(0) + dlNew
+    val nDocs = old.getLong(1) + nNew
     import s.implicits._
     replaceDir(s,
       Seq((nDocs.toDouble, sumDl.toDouble / nDocs.toDouble, sumDl, nDocs))
         .toDF("n_docs", "avgdl", "sum_dl", "n_docs_l"),
       s"$path/stats")
+  }
+
+  /** The prologue both swap appends share, run before any mutation:
+    * the batch's posting rows with its doc count and summed dl, or None
+    * for an empty batch. The stats come FIRST: an all-null/empty batch
+    * contributes nothing, and aggregating it after the lists append has
+    * already run would die on the NULL sum(dl) mid-lifecycle — the
+    * coalesce makes the aggregate total-safe and the early return skips
+    * the three-step mutation entirely for a no-op batch. Mechanical
+    * "compact first" contract: a batch re-adding a tombstoned doc id is
+    * refused by name — its rows would be counted into df/stats yet
+    * anti-joined out of every served plan. */
+  private def appendBatch(s: org.apache.spark.sql.SparkSession,
+      newDocs: org.apache.spark.sql.DataFrame, path: String,
+      caller: String): Option[(org.apache.spark.sql.DataFrame, Long, Long)] = {
+    val proj = docProjection(newDocs)
+    val nw = proj.agg(count(lit(1)).as("n"),
+      coalesce(sum(col("dl")), lit(0L)).as("sd")).head()
+    if (nw.getLong(0) == 0L) None
+    else {
+      Layout.appendTombstoneGate(s, path, proj.select(col("doc_id")),
+        "doc_id", caller)
+      Some((postingRows(proj), nw.getLong(0), nw.getLong(1)))
+    }
   }
 
   /** EXACTLY-ONCE [[postingsAppend]] — the streaming-facing variant
@@ -1022,13 +1034,9 @@ object TextQueries {
       batchId: Long): Unit = {
     import org.apache.hadoop.fs.Path
     val marker = s"_applied_$batchId"
-    val proj = docProjection(newDocs)
-    val nw = proj.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("dl")), lit(0L)).as("sd")).head()
-    if (nw.getLong(0) == 0L) return
-    Ann.appendTombstoneGate(s, path, proj.select(col("doc_id")),
-      "doc_id", "postingsAppendOnce")
-    val lists = postingRows(proj)
+    val batch = appendBatch(s, newDocs, path, "postingsAppendOnce")
+    if (batch.isEmpty) return
+    val (lists, nNew, dlNew) = batch.get
     // the legs run in order, so the df marker already implies the
     // lists leg completed in the attempt that set it
     if (!Layout.hasMarker(s, s"$path/df", marker)) {
@@ -1064,8 +1072,8 @@ object TextQueries {
     if (!Layout.hasMarker(s, s"$path/stats", marker)) {
       val old = graft.Pq.read(s, s"$path/stats")
         .select(col("sum_dl"), col("n_docs_l")).head()
-      val sumDl = old.getLong(0) + nw.getLong(1)
-      val nDocs = old.getLong(1) + nw.getLong(0)
+      val sumDl = old.getLong(0) + dlNew
+      val nDocs = old.getLong(1) + nNew
       import s.implicits._
       Layout.replaceDir(s,
         Seq((nDocs.toDouble, sumDl.toDouble / nDocs.toDouble, sumDl,
@@ -1178,7 +1186,7 @@ object TextQueries {
     * consistency contract as [[postingsAppend]]. RE-ADDING a deleted
     * doc id via [[postingsAppend]] requires a [[postingsCompact]]
     * first — enforced mechanically by the append paths' shared
-    * tombstone gate ([[Ann.appendTombstoneGate]]). */
+    * tombstone gate. */
   def postingsDelete(s: org.apache.spark.sql.SparkSession,
       docIds: org.apache.spark.sql.DataFrame, path: String): Unit = {
     val ids = docIds.select(col("doc_id").cast(LongType)).distinct()

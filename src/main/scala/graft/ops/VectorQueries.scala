@@ -410,13 +410,13 @@ object VectorQueries {
     graft.BuildOnce.memo(ivfSaved, (d, k)) {
       val path = s"${graft.GraftSession.scratchDir}/ivf_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k$k"
-      Ann.save(Ann.build(Tables.embeddings(s, d), k = k), path)
+      EpochAnn.build(s, Tables.embeddings(s, d), path, k = k)
       path
     }
 
   /** The persisted-IVF serving path, driver-visible end-to-end: build →
-    * `Ann.save` (inverted lists as cell partition directories, ONCE per
-    * process via [[savedIvfPath]]) → `Ann.load` → query. On the LOADED
+    * `EpochAnn.build` (inverted lists as cell partition directories,
+    * ONCE per process via [[savedIvfPath]]) → `EpochAnn.load` → query. On the LOADED
     * index the nProbe cell restriction is partition pruning against the
     * parquet layout — at 100 TB a probe reads nProbe/k of the corpus no
     * matter how large it grows, which is the whole point of persisting
@@ -427,7 +427,8 @@ object VectorQueries {
     * equals brute force. */
   val simIvfLoaded = GQuery(
     "sim_ivf_loaded",
-    (s, d) => ivfWithRecall(s, d, Ann.load(s, savedIvfPath(s, d, k = 8))),
+    (s, d) => ivfWithRecall(s, d,
+      EpochAnn.load(s, savedIvfPath(s, d, k = 8))),
     Some(ivfRecallOracle))
 
   /** Query-time FILTERED search on the persisted index — the vector
@@ -446,7 +447,7 @@ object VectorQueries {
     (s, d) => {
       val pred = pmod(col("vec_id"), lit(3)) === 0
       recallAnchored(s, d,
-        Ann.query(Ann.load(s, savedIvfPath(s, d, k = 8)),
+        Ann.query(EpochAnn.load(s, savedIvfPath(s, d, k = 8)),
           probeId = 0, topK = IvfTopK, nProbe = 3,
           candidateFilter = Some(pred),
           knownProbe = Some(probeEmbedding(s, d))),
@@ -468,10 +469,12 @@ object VectorQueries {
     """))
 
   /** Grow-by-append path per (sfDir, k), built at most once per
-    * process: the index is TRAINED AND SAVED on only the even-id half
-    * of the corpus, then the odd-id half arrives later via
-    * `Ann.append` — frozen-centroid assignment, append-mode write into
-    * the same cell directories, never touching the existing lists. */
+    * process: the index is built on only the even-id half of the corpus
+    * (epoch 0), then the odd-id half arrives as `EpochAnn.append` batch
+    * 1 — frozen-centroid assignment into one referenced delta
+    * generation (epoch 1), never touching the existing lists, published
+    * by one atomic manifest flip a concurrent reader could overlap
+    * safely. */
   private val ivfAppended =
     scala.collection.concurrent.TrieMap.empty[(String, Int), String]
 
@@ -481,42 +484,6 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivf_app_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k$k"
       val e = Tables.embeddings(s, d)
-      Ann.save(Ann.build(e.filter(pmod(col("vec_id"), lit(2)) === 0),
-        k = k), path)
-      Ann.append(s, path, e.filter(pmod(col("vec_id"), lit(2)) === 1))
-      path
-    }
-
-  /** Incremental index maintenance, driver-visible end-to-end: the
-    * persisted IVF index is built on HALF the corpus, the other half is
-    * `Ann.append`ed against the frozen centroids (ONCE per process via
-    * [[appendedIvfPath]]), and the probe then searches the merged
-    * layout — same partition pruning, same recall gate as `sim_ivf`,
-    * except the index was never rebuilt. This is the operational 100 TB
-    * loop (continuous corpus growth between retrains); AnnAppendSpec
-    * pins append ≡ one-pass assignment with the same centroids and that
-    * no new cell directories appear. */
-  val simIvfAppend = GQuery(
-    "sim_ivf_append",
-    (s, d) => ivfWithRecall(s, d,
-      Ann.load(s, appendedIvfPath(s, d, k = 8))),
-    Some(ivfRecallOracle))
-
-  /** Epoch-layout grow path, built once per process: build on the
-    * even-id half as epoch 0, append the odd half as a referenced
-    * delta generation (epoch 1) — [[appendedIvfPath]]'s lifecycle on
-    * the MANIFEST-POINTER layout ([[EpochAnn]]), where the append was
-    * one atomic manifest flip a concurrent reader could overlap
-    * safely. */
-  private val ivfEpochSaved =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), String]
-
-  private[ops] def epochIvfPath(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int): String =
-    graft.BuildOnce.memo(ivfEpochSaved, (d, k)) {
-      val path = s"${graft.GraftSession.scratchDir}/ivf_epoch_" +
-        d.replaceAll("[^A-Za-z0-9]", "_") + s"_k$k"
-      val e = Tables.embeddings(s, d)
       EpochAnn.build(s, e.filter(pmod(col("vec_id"), lit(2)) === 0),
         path, k = k)
       EpochAnn.append(s, e.filter(pmod(col("vec_id"), lit(2)) === 1),
@@ -524,68 +491,31 @@ object VectorQueries {
       path
     }
 
-  /** The SNAPSHOT-ISOLATED vector serving face, driver-verified: the
-    * IVF index lives on epoch manifests ([[EpochAnn]] — every
-    * mutation publishes new generation dirs behind one atomic manifest
-    * rename, so centroids and lists can never be read mixed-
-    * generation), grown half→full by a referenced delta append, then
-    * probed through the SAME [[Ann.query]] path and recall gate as
-    * `sim_ivf_append` — the layout change must be invisible in the
-    * served answer. `EpochAnnSpec` pins the pinned-manifest isolation
-    * across a concurrent retrain and the lifecycle ≡ rebuild. */
-  val simIvfEpoch = GQuery(
-    "sim_ivf_epoch",
+  /** Incremental index maintenance, driver-visible end-to-end: the
+    * persisted IVF index is built on HALF the corpus, the other half is
+    * `EpochAnn.append`ed against the frozen centroids (ONCE per process
+    * via [[appendedIvfPath]]), and the probe then searches the union of
+    * the two generations — the cell filter prunes partitions in both
+    * branches, same recall gate as `sim_ivf`, except the index was
+    * never rebuilt. This is the operational 100 TB loop (continuous
+    * corpus growth between retrains); AnnAppendSpec pins append ≡
+    * one-pass assignment with the same centroids and that no new cell
+    * directories appear. */
+  val simIvfAppend = GQuery(
+    "sim_ivf_append",
     (s, d) => ivfWithRecall(s, d,
-      EpochAnn.load(s, epochIvfPath(s, d, k = 8))),
+      EpochAnn.load(s, appendedIvfPath(s, d, k = 8))),
     Some(ivfRecallOracle))
 
-  /** Epoch-layout grow path for the COMPRESSED index, built once per
-    * process — [[epochIvfPath]]'s lifecycle on [[EpochIvfpq]]: both
-    * quantizers train on the even-id half (epoch 0), the odd half
-    * appends as a referenced delta generation encoded under the PINNED
-    * frozen quantizers (epoch 1). */
-  private val ivfpqEpochSaved =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), String]
-
-  private[ops] def epochIvfpqPath(s: org.apache.spark.sql.SparkSession,
-      d: String, k: Int, m: Int): String =
-    graft.BuildOnce.memo(ivfpqEpochSaved, (d, k, m)) {
-      val path = s"${graft.GraftSession.scratchDir}/ivfpq_epoch_" +
-        d.replaceAll("[^A-Za-z0-9]", "_") + s"_k${k}_m$m"
-      val e = Tables.embeddings(s, d)
-      EpochIvfpq.build(s, e.filter(pmod(col("vec_id"), lit(2)) === 0),
-        path, k = k, m = m, codes = 16)
-      EpochIvfpq.append(s, e.filter(pmod(col("vec_id"), lit(2)) === 1),
-        path, batchId = 1L)
-      path
-    }
-
-  /** The snapshot-isolated COMPRESSED serving face, driver-verified:
-    * the IVF-PQ index lives on epoch manifests ([[EpochIvfpq]]), where
-    * a retrain's three-directory swap (encoded, centroids, books — the
-    * swap layout's sharpest seam: mixed generations there decode codes
-    * through the WRONG codebooks) is one atomic manifest rename. Grown
-    * half→full by a frozen-quantizer delta append, then probed through
-    * the SAME [[Ivfpq.search]] two-phase path and recall gate as
-    * `sim_ivfpq_append` — the layout change must be invisible in the
-    * served answer. `EpochIvfpqSpec` pins the coherent-triple snapshot
-    * across a concurrent retrain, ledger replays, the one-epoch
-    * upsert, and lifecycle ≡ rebuild. */
-  val simIvfpqEpoch = GQuery(
-    "sim_ivfpq_epoch",
-    (s, d) => recallAnchored(s, d,
-      Ivfpq.search(EpochIvfpq.load(s, epochIvfpqPath(s, d, k = 8, m = 4)),
-        probeId = 0, topK = IvfTopK, nProbe = 3,
-        shortlist = shortlistFor(embCount(s, d)),
-        knownProbe = Some(probeEmbedding(s, d))),
-      topK = IvfTopK, minHits = 3),
-    Some(ivfRecallOracle))
+  /** The snapshot-isolated serving face under its historical name —
+    * the same builder and plan as `sim_ivf_append`. */
+  val simIvfEpoch = simIvfAppend.copy(name = "sim_ivf_epoch")
 
   /** Tombstoned-delete path per (sfDir, k), built at most once per
     * process: the full-corpus index is built and saved, then the
     * vec_id ≡ 2 (mod 5) residue class (~1/5 of the corpus) is
-    * `Ann.delete`d — a bounded tombstone segment, the cell directories
-    * untouched. */
+    * `EpochAnn.delete`d — a bounded tombstone generation, the cell
+    * directories untouched. */
   private val ivfDeleted =
     scala.collection.concurrent.TrieMap.empty[(String, Int), String]
 
@@ -595,17 +525,18 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivf_del_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k$k"
       val e = Tables.embeddings(s, d)
-      Ann.save(Ann.build(e, k = k), path)
-      Ann.delete(s, path,
-        e.where(pmod(col("vec_id"), lit(5)) === 2).select("vec_id"))
+      EpochAnn.build(s, e, path, k = k)
+      EpochAnn.delete(s,
+        e.where(pmod(col("vec_id"), lit(5)) === 2).select("vec_id"),
+        path, batchId = 1L)
       path
     }
 
   /** The DELETE leg of the ANN maintenance lifecycle, driver-verified
     * (`bm25_serve_delete`'s vector twin): the persisted IVF index had
-    * ~1/5 of its residents tombstoned by `Ann.delete` — no rewrite of
-    * the cell directories, just the bounded segment every `Ann.load`
-    * anti-joins — and the probe then searches the survivors. Anchored
+    * ~1/5 of its residents tombstoned by `EpochAnn.delete` — no rewrite
+    * of the cell directories, just the bounded tombstone generation
+    * every `EpochAnn.load` anti-joins — and the probe then searches the survivors. Anchored
     * against the brute-force top-5 OVER THE SURVIVORS (cosine carries
     * no cross-document state, so tombstoned serving must equal
     * rebuild-over-survivors serving with these centroids — exactness
@@ -619,7 +550,7 @@ object VectorQueries {
     (s, d) => {
       val pred = pmod(col("vec_id"), lit(5)) =!= 2
       recallAnchored(s, d,
-        Ann.query(Ann.load(s, deletedIvfPath(s, d, k = 8)),
+        Ann.query(EpochAnn.load(s, deletedIvfPath(s, d, k = 8)),
           probeId = 0, topK = IvfTopK, nProbe = 3,
           knownProbe = Some(probeEmbedding(s, d))),
         IvfTopK, minHits = 3, extraFilter = Some(pred))
@@ -653,20 +584,21 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivf_del7_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k$k"
       val e = Tables.embeddings(s, d)
-      Ann.save(Ann.build(e, k = k), path)
-      Ann.delete(s, path,
-        e.where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"))
+      EpochAnn.build(s, e, path, k = k)
+      EpochAnn.delete(s,
+        e.where(pmod(col("vec_id"), lit(7)) === 3).select("vec_id"),
+        path, batchId = 1L)
       path
     }
 
   /** Retrain-policy roundtrip per (sfDir, k), built at most once per
     * process: the index is trained on a deliberately unrepresentative
     * slice (the 32 lowest-id vectors — the worst warm-up a production
-    * index starts from), grown to the full corpus by `Ann.append`
+    * index starts from), grown to the full corpus by `EpochAnn.append`
     * against those frozen centroids, and then taken through the
     * trigger: `Ann.needsRetrain` at the (deliberately tight — see
     * [[simIvfRetrain]]) `RetrainMaxSkew` threshold fires a warm-start
-    * `Ann.retrain`. Pre/post occupancy skew and whether the trigger
+    * `EpochAnn.retrain`. Pre/post occupancy skew and whether the trigger
     * fired ride along for the entry's gate. */
   private val ivfRetrained = scala.collection.concurrent.TrieMap
     .empty[(String, Int), (String, Double, Double, Boolean)]
@@ -698,26 +630,26 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivf_rt_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k$k"
       val e = Tables.embeddings(s, d)
-      Ann.save(Ann.build(e.where(col("vec_id") < 32), k = k), path)
-      Ann.append(s, path, e.where(col("vec_id") >= 32))
-      val preIdx = Ann.load(s, path)
+      EpochAnn.build(s, e.where(col("vec_id") < 32), path, k = k)
+      EpochAnn.append(s, e.where(col("vec_id") >= 32), path, batchId = 1L)
+      val preIdx = EpochAnn.load(s, path)
       val pre = Ann.cellSkew(preIdx)
       val fired = Ann.needsRetrain(preIdx, RetrainMaxSkew)
-      if (fired) Ann.retrain(s, path, iters = 2)
-      val postIdx = Ann.load(s, path)
+      if (fired) EpochAnn.retrain(s, path, iters = 2)
+      val postIdx = EpochAnn.load(s, path)
       val post = Ann.cellSkew(postIdx)
       val refitOk = !fired || postIdx.centroids != preIdx.centroids
       (path, pre, post, refitOk)
     }
 
   /** The RETRAIN leg of the ANN maintenance lifecycle, driver-verified:
-    * `Ann.append`'s frozen-centroid contract degrades cell balance
+    * `EpochAnn.append`'s frozen-centroid contract degrades cell balance
     * silently as appended content outgrows the training slice, so the
     * policy loop is measure (`Ann.cellSkew` — one bounded count
     * aggregation) → trigger (`Ann.needsRetrain` against the SLO
-    * threshold) → warm-start `Ann.retrain` (Lloyd refinements from the
-    * saved centroids, one re-assignment pass, both layout directories
-    * swap-replaced). This entry drives that loop end-to-end on an index
+    * threshold) → warm-start `EpochAnn.retrain` (Lloyd refinements from
+    * the saved centroids, one re-assignment pass, new centroids and
+    * lists published as one epoch). This entry drives that loop end-to-end on an index
     * built from the worst warm-up (32 seed vectors, everything else
     * appended) and serves a probe off the RETRAINED layout.
     *
@@ -737,7 +669,7 @@ object VectorQueries {
       val (path, _, post, refitOk) = retrainedIvfPath(s, d, k = 8)
       val skewOk = refitOk && post < RetrainSkewCeiling
       recallAnchored(s, d,
-        Ann.query(Ann.load(s, path), probeId = 0, topK = IvfTopK,
+        Ann.query(EpochAnn.load(s, path), probeId = 0, topK = IvfTopK,
           nProbe = 3, knownProbe = Some(probeEmbedding(s, d))),
         IvfTopK, minHits = 3)
         .withColumn("skew_ok", lit(skewOk))
@@ -760,7 +692,7 @@ object VectorQueries {
   /** Retrain roundtrip for the COMPRESSED index per (sfDir, k, m) —
     * `sim_ivf_retrain`'s IVF-PQ twin: worst warm-up (32 seed vectors
     * train BOTH quantizers), everything else appended against the
-    * frozen pair, the same skew trigger, then `Ivfpq.retrain` refits
+    * frozen pair, the same skew trigger, then `EpochIvfpq.retrain` refits
     * coarse centroids AND product codebooks over the full residents.
     * The memo boolean is refit_ok: the trigger honored and, when
     * fired, the refit VERIFIABLY rewrote at least one quantizer
@@ -775,15 +707,16 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivfpq_rt_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k${k}_m$m"
       val e = Tables.embeddings(s, d)
-      Ivfpq.save(Ivfpq.build(e.where(col("vec_id") < 32), k = k, m = m,
-        codes = 16), path)
-      Ivfpq.append(s, path, e.where(col("vec_id") >= 32))
-      val preIdx = Ivfpq.load(s, path)
+      EpochIvfpq.build(s, e.where(col("vec_id") < 32), path, k = k, m = m,
+        codes = 16)
+      EpochIvfpq.append(s, e.where(col("vec_id") >= 32), path,
+        batchId = 1L)
+      val preIdx = EpochIvfpq.load(s, path)
       val pre = Ann.cellSkew(Ann.IvfIndex(preIdx.centroids,
         preIdx.encoded))
       val fired = pre > RetrainMaxSkew
-      if (fired) Ivfpq.retrain(s, path, iters = 2)
-      val postIdx = Ivfpq.load(s, path)
+      if (fired) EpochIvfpq.retrain(s, path, iters = 2)
+      val postIdx = EpochIvfpq.load(s, path)
       val post = Ann.cellSkew(Ann.IvfIndex(postIdx.centroids,
         postIdx.encoded))
       val refitOk = !fired || postIdx.centroids != preIdx.centroids ||
@@ -794,7 +727,7 @@ object VectorQueries {
   /** The RETRAIN leg for the compressed serving index, driver-verified
     * — closes the maintenance lifecycle (append → delete → compact →
     * retrain) across BOTH vector index forms: after growing from the
-    * worst warm-up, `Ivfpq.retrain` refits coarse centroids AND
+    * worst warm-up, `EpochIvfpq.retrain` refits coarse centroids AND
     * product codebooks over the residents and the probe then runs the
     * standard two-phase search off the refit layout. Same gates as
     * `sim_ivf_retrain`: brute-force hash anchor + recall ≥ 3/5, plus
@@ -806,7 +739,7 @@ object VectorQueries {
       val (path, _, post, refitOk) = retrainedIvfpqPath(s, d, k = 8, m = 4)
       val skewOk = refitOk && post < RetrainSkewCeiling
       recallAnchored(s, d,
-        Ivfpq.search(Ivfpq.load(s, path), probeId = 0,
+        Ivfpq.search(EpochIvfpq.load(s, path), probeId = 0,
           topK = IvfTopK, nProbe = 3,
           shortlist = shortlistFor(embCount(s, d)),
           knownProbe = Some(probeEmbedding(s, d))),
@@ -828,6 +761,11 @@ object VectorQueries {
       ORDER BY rnk
     """))
 
+  /** Grow-by-append path for the COMPRESSED index per (sfDir, k, m),
+    * built once per process — [[appendedIvfPath]]'s lifecycle on
+    * [[EpochIvfpq]]: both quantizers train on the even-id half (epoch
+    * 0), the odd half appends as a referenced delta generation encoded
+    * under the PINNED frozen quantizers (epoch 1). */
   private val ivfpqAppended =
     scala.collection.concurrent.TrieMap.empty[(String, Int, Int), String]
 
@@ -837,9 +775,10 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivfpq_app_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k${k}_m$m"
       val e = Tables.embeddings(s, d)
-      Ivfpq.save(Ivfpq.build(e.filter(pmod(col("vec_id"), lit(2)) === 0),
-        k = k, m = m, codes = 16), path)
-      Ivfpq.append(s, path, e.filter(pmod(col("vec_id"), lit(2)) === 1))
+      EpochIvfpq.build(s, e.filter(pmod(col("vec_id"), lit(2)) === 0),
+        path, k = k, m = m, codes = 16)
+      EpochIvfpq.append(s, e.filter(pmod(col("vec_id"), lit(2)) === 1),
+        path, batchId = 1L)
       path
     }
 
@@ -848,10 +787,10 @@ object VectorQueries {
     * genuine 100 TB serving loop: the codes-only index grows between
     * retrains without re-encoding the corpus): coarse centroids AND
     * product codebooks are trained on HALF the corpus, the other half
-    * is `Ivfpq.append`ed against both frozen quantizers (cell-assign +
-    * PQ-encode of just the new batch, append-mode into the cell
-    * partition directories, ONCE per process), and the probe then
-    * runs the standard two-phase search over the merged layout — same
+    * is `EpochIvfpq.append`ed against both frozen quantizers
+    * (cell-assign + PQ-encode of just the new batch into one delta
+    * generation, ONCE per process), and the probe then runs the
+    * standard two-phase search over the two generations — same
     * partition pruning, same codes-only ADC scan, same recall gate as
     * `sim_ivfpq`. This is deliberately the half-stale-quantizer WORST
     * case; the exact re-rank absorbs code-quality drift for anything
@@ -859,10 +798,25 @@ object VectorQueries {
     * recall boolean verifies. `IvfpqAppendSpec` pins append ≡
     * build-time encode of the same rows (bit-identical codes, no new
     * cells) and the schema fail-fast gate. */
+  val simIvfpqAppend = GQuery(
+    "sim_ivfpq_append",
+    (s, d) => recallAnchored(s, d,
+      Ivfpq.search(EpochIvfpq.load(s, appendedIvfpqPath(s, d, k = 8, m = 4)),
+        probeId = 0, topK = IvfTopK, nProbe = 3,
+        shortlist = shortlistFor(embCount(s, d)),
+        knownProbe = Some(probeEmbedding(s, d))),
+      topK = IvfTopK, minHits = 3),
+    Some(ivfRecallOracle))
+
+  /** The snapshot-isolated compressed serving face under its historical
+    * name — the same builder and plan as `sim_ivfpq_append`. */
+  val simIvfpqEpoch = simIvfpqAppend.copy(name = "sim_ivfpq_epoch")
+
   /** Tombstoned-delete path for the COMPRESSED index per (sfDir, k, m),
     * built at most once per process: full build + save, then the
-    * vec_id ≡ 2 (mod 5) residue class tombstoned via `Ivfpq.delete` —
-    * the cell directories and both side tables untouched. */
+    * vec_id ≡ 2 (mod 5) residue class tombstoned via
+    * `EpochIvfpq.delete` — the cell directories and both side tables
+    * untouched. */
   private val ivfpqDeleted =
     scala.collection.concurrent.TrieMap.empty[(String, Int, Int), String]
 
@@ -872,9 +826,10 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivfpq_del_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k${k}_m$m"
       val e = Tables.embeddings(s, d)
-      Ivfpq.save(Ivfpq.build(e, k = k, m = m, codes = 16), path)
-      Ivfpq.delete(s, path,
-        e.where(pmod(col("vec_id"), lit(5)) === 2).select("vec_id"))
+      EpochIvfpq.build(s, e, path, k = k, m = m, codes = 16)
+      EpochIvfpq.delete(s,
+        e.where(pmod(col("vec_id"), lit(5)) === 2).select("vec_id"),
+        path, batchId = 1L)
       path
     }
 
@@ -884,13 +839,13 @@ object VectorQueries {
     * of the residents are tombstoned and the standard two-phase search
     * (codes-only ADC scan → exact re-rank) then runs over the
     * survivors — the tombstone anti-join sits below BOTH phases via
-    * `Ivfpq.load`, so a deleted id can neither reach the shortlist nor
+    * `EpochIvfpq.load`, so a deleted id can neither reach the shortlist nor
     * re-enter at re-rank. Anchored against the brute-force top-5 over
     * the survivors with the usual recall ≥ 3/5 gate. */
   val simIvfpqDelete = GQuery(
     "sim_ivfpq_delete",
     (s, d) => recallAnchored(s, d,
-      Ivfpq.search(Ivfpq.load(s, deletedIvfpqPath(s, d, k = 8, m = 4)),
+      Ivfpq.search(EpochIvfpq.load(s, deletedIvfpqPath(s, d, k = 8, m = 4)),
         probeId = 0, topK = IvfTopK, nProbe = 3,
         shortlist = shortlistFor(embCount(s, d)),
         knownProbe = Some(probeEmbedding(s, d))),
@@ -911,16 +866,6 @@ object VectorQueries {
       ORDER BY rnk
     """))
 
-  val simIvfpqAppend = GQuery(
-    "sim_ivfpq_append",
-    (s, d) => recallAnchored(s, d,
-      Ivfpq.search(Ivfpq.load(s, appendedIvfpqPath(s, d, k = 8, m = 4)),
-        probeId = 0, topK = IvfTopK, nProbe = 3,
-        shortlist = shortlistFor(embCount(s, d)),
-        knownProbe = Some(probeEmbedding(s, d))),
-      topK = IvfTopK, minHits = 3),
-    Some(ivfRecallOracle))
-
   /** The post-update corpus shared by the `sim_ivfpq_update` layout,
     * its brute anchor, and (as SQL) its oracle: the vec_id ≡ 3 (mod 7)
     * residue's embeddings REVERSED — a deterministic, engine-agnostic
@@ -932,8 +877,8 @@ object VectorQueries {
         .otherwise(col("embedding")).as("embedding"))
 
   /** Full build, then the mod-7 residue upserted with reversed
-    * embeddings through `Ivfpq.update`'s single-marker
-    * delete→compact→append composition. */
+    * embeddings through `EpochIvfpq.update` — one epoch under
+    * `upd_1`. */
   private val ivfpqUpdated =
     scala.collection.concurrent.TrieMap.empty[(String, Int, Int), String]
 
@@ -943,12 +888,12 @@ object VectorQueries {
       val path = s"${graft.GraftSession.scratchDir}/ivfpq_upd_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k${k}_m$m"
       val e = Tables.embeddings(s, d)
-      Ivfpq.save(Ivfpq.build(e, k = k, m = m, codes = 16), path)
-      Ivfpq.update(s, path,
+      EpochIvfpq.build(s, e, path, k = k, m = m, codes = 16)
+      EpochIvfpq.update(s,
         updatedEmbeddings(s, d)
           .where(pmod(col("vec_id"), lit(7)) === 3)
           .localCheckpoint(true),
-        batchId = 1L)
+        path, batchId = 1L)
       path
     }
 
@@ -976,8 +921,8 @@ object VectorQueries {
     """
 
   /** Full float-IVF build, then the mod-7 residue upserted with
-    * reversed embeddings through `Ann.update`'s single-marker
-    * composition — `sim_ivf_update`'s layout. */
+    * reversed embeddings through `EpochAnn.update` — one epoch under
+    * `upd_1`, `sim_ivf_update`'s layout. */
   private val ivfUpdated =
     scala.collection.concurrent.TrieMap.empty[(String, Int), String]
 
@@ -986,12 +931,12 @@ object VectorQueries {
     graft.BuildOnce.memo(ivfUpdated, (d, k)) {
       val path = s"${graft.GraftSession.scratchDir}/ivf_upd_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k$k"
-      Ann.save(Ann.build(Tables.embeddings(s, d), k = k), path)
-      Ann.update(s, path,
+      EpochAnn.build(s, Tables.embeddings(s, d), path, k = k)
+      EpochAnn.update(s,
         updatedEmbeddings(s, d)
           .where(pmod(col("vec_id"), lit(7)) === 3)
           .localCheckpoint(true),
-        batchId = 1L)
+        path, batchId = 1L)
       path
     }
 
@@ -1007,7 +952,7 @@ object VectorQueries {
     (s, d) => recallAnchoredOf(
       bruteTopKOf(updatedEmbeddings(s, d), IvfTopK,
         knownProbe = Some(probeEmbedding(s, d))),
-      Ann.query(Ann.load(s, updatedIvfPath(s, d, k = 8)),
+      Ann.query(EpochAnn.load(s, updatedIvfPath(s, d, k = 8)),
         probeId = 0, topK = IvfTopK, nProbe = 3,
         knownProbe = Some(probeEmbedding(s, d))),
       minHits = 3),
@@ -1016,14 +961,13 @@ object VectorQueries {
   /** UPDATE ≡ rebuild for the compressed serving index — the last
     * lifecycle identity on the vector side (`bm25_serve_update`'s
     * IVF-PQ twin): ~1/7 of the vectors are upserted with CHANGED
-    * embeddings via the atomic single-marker delete→compact→append,
-    * and the standard two-phase search over the updated layout is
+    * embeddings via one atomic `EpochIvfpq.update` epoch, and the standard two-phase search over the updated layout is
     * anchored against the brute-force top-5 of the POST-UPDATE corpus
     * (the oracle recomputes the same edit inline). The updated rows'
     * cells and codes both move — frozen quantizers re-assign and
     * re-encode them — so the hash match certifies the full
     * composition, not just row plumbing. `IvfpqUpdateSpec` pins the
-    * marker replay no-op. Shortlist floor is raised to 100 (20% at the
+    * ledger replay no-op. Shortlist floor is raised to 100 (20% at the
     * smallest SF): the frozen quantizers are one update STALER relative
     * to the post-update corpus than in the append/delete twins — the
     * updated residue's old neighbors vacate the true top-k and their
@@ -1035,7 +979,7 @@ object VectorQueries {
     (s, d) => recallAnchoredOf(
       bruteTopKOf(updatedEmbeddings(s, d), IvfTopK,
         knownProbe = Some(probeEmbedding(s, d))),
-      Ivfpq.search(Ivfpq.load(s, updatedIvfpqPath(s, d, k = 8, m = 4)),
+      Ivfpq.search(EpochIvfpq.load(s, updatedIvfpqPath(s, d, k = 8, m = 4)),
         probeId = 0, topK = IvfTopK, nProbe = 3,
         shortlist = shortlistFor(embCount(s, d), minS = 100),
         knownProbe = Some(probeEmbedding(s, d))),
@@ -1062,7 +1006,8 @@ object VectorQueries {
       // probe memo instead of a collect job per timed rep
       val batch: Seq[(Long, Seq[Double])] =
         (0L until 3L).map(i => (i, probeEmbedding(s, d, i)))
-      val served = Ann.serveBatch(Ann.load(s, savedIvfPath(s, d, k = 8)),
+      val served = Ann.serveBatch(
+        EpochAnn.load(s, savedIvfPath(s, d, k = 8)),
         batch, topK = IvfTopK, nProbe = 3)
       perProbeRecallAnchored(s, d, served)
     },
@@ -1138,7 +1083,7 @@ object VectorQueries {
     "knn_join",
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val index = Ann.load(s, savedIvfPath(s, d, k = 8))
+      val index = EpochAnn.load(s, savedIvfPath(s, d, k = 8))
       val served = Ann.knnJoin(index,
         e.select(col("vec_id").as("probe_id"),
           col("embedding").as("probe_emb")),
@@ -1167,7 +1112,7 @@ object VectorQueries {
     "knn_join_pq",
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val index = Ivfpq.load(s, savedIvfpqPath(s, d, k = 8, m = 4))
+      val index = EpochIvfpq.load(s, savedIvfpqPath(s, d, k = 8, m = 4))
       val served = Ivfpq.knnJoin(index,
         e.select(col("vec_id").as("probe_id"),
           col("embedding").as("probe_emb")),
@@ -1399,14 +1344,14 @@ object VectorQueries {
     graft.BuildOnce.memo(ivfpqSaved, (d, k, m)) {
       val path = s"${graft.GraftSession.scratchDir}/ivfpq_" +
         d.replaceAll("[^A-Za-z0-9]", "_") + s"_k${k}_m$m"
-      Ivfpq.save(Ivfpq.build(Tables.embeddings(s, d), k = k, m = m,
-        codes = 16), path)
+      EpochIvfpq.build(s, Tables.embeddings(s, d), path, k = k, m = m,
+        codes = 16)
       path
     }
 
-  /** The persisted IVF-PQ serving path: build → `Ivfpq.save` (inverted
-    * lists as cell partition directories, ONCE per process) → load →
-    * two-phase search. On the loaded index the cell restriction is
+  /** The persisted IVF-PQ serving path: build → `EpochIvfpq.build`
+    * (inverted lists as cell partition directories, ONCE per process)
+    * → `EpochIvfpq.load` → two-phase search. On the loaded index the cell restriction is
     * partition pruning AND the ADC phase's scan reads only the codes
     * column (both plan-pinned in `IvfpqSpec`) — at 100 TB a probe reads
     * `nProbe/k` of the rows at `m` bytes each instead of the full
@@ -1414,7 +1359,7 @@ object VectorQueries {
   val simIvfpqLoaded = GQuery(
     "sim_ivfpq_loaded",
     (s, d) => recallAnchored(s, d,
-      Ivfpq.search(Ivfpq.load(s, savedIvfpqPath(s, d, k = 8, m = 4)),
+      Ivfpq.search(EpochIvfpq.load(s, savedIvfpqPath(s, d, k = 8, m = 4)),
         probeId = 0, topK = IvfTopK, nProbe = 3,
         shortlist = shortlistFor(embCount(s, d)),
         knownProbe = Some(probeEmbedding(s, d))),
@@ -1438,7 +1383,7 @@ object VectorQueries {
     (s, d) => {
       val pred = pmod(col("vec_id"), lit(3)) === 0
       recallAnchored(s, d,
-        Ivfpq.search(Ivfpq.load(s, savedIvfpqPath(s, d, k = 8, m = 4)),
+        Ivfpq.search(EpochIvfpq.load(s, savedIvfpqPath(s, d, k = 8, m = 4)),
           probeId = 0, topK = IvfTopK, nProbe = 3,
           shortlist = shortlistFor(embCount(s, d)),
           candidateFilter = Some(pred),

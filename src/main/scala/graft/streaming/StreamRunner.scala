@@ -477,7 +477,7 @@ object StreamRunner {
   /** Streaming TAKEDOWN worker — the operational face of the index
     * DELETE lifecycle: each micro-batch of doomed doc ids drives
     * `TextQueries.postingsDelete` on the persisted BM25 layout and
-    * (when given) `Ann.delete` on the persisted IVF layout,
+    * (when given) `EpochAnn.delete` on the IVF epoch layout,
     * `EpochPositional.delete` on the positional epoch layout and
     * `NearDup.neardupDelete` on the near-dup layout — how a
     * takedown/dedup-removal queue is drained in production, a
@@ -488,24 +488,24 @@ object StreamRunner {
     * already-tombstoned ids up front, so a crash-replayed batch (same
     * checkpointed offsets) re-deletes nothing — the df/stats
     * subtraction can never double-fire and the segment never holds a
-    * duplicate (`Bm25DeleteSpec`/`AnnDeleteSpec` pin re-delivered
-    * batches). Those legs inherit the offline maintenance-window
+    * duplicate (`Bm25DeleteSpec` pins re-delivered batches). Those legs inherit the offline maintenance-window
     * contract of the swap delete ops: a worker crash BETWEEN a
     * batch's tombstone commit and its df/stats swaps leaves the text
     * index's statistics stale with no replay to fix them (content
     * removal itself is already durable) — recovery is
     * `postingsCompact`, which recomputes df/stats from the surviving
-    * lists as ground truth. The positional leg has no such window: it
-    * commits tombstones and stats in one manifest under [[Epoch.occ]].
-    * Its ledger key is the manifest's next epoch, not the foreachBatch
-    * id: the stream sets no checkpoint location, so batch ids restart
-    * at 0 with every start, while epoch numbers never repeat. Its
-    * replay safety is the same exclusion as the swap legs': a replayed
-    * or re-delivered id is already tombstoned, so the leg commits
-    * nothing. Each positional delete rewrites the layout's whole
+    * lists as ground truth. The positional and IVF legs have no such
+    * window: each commits one manifest under [[Epoch.occ]]. Their
+    * ledger key is the manifest's next epoch, not the foreachBatch id:
+    * the stream sets no checkpoint location, so batch ids restart at 0
+    * with every start, while epoch numbers never repeat. Their replay
+    * safety is the same exclusion as the swap legs': a replayed or
+    * re-delivered id is already tombstoned, so the leg commits
+    * nothing. Each of these deletes rewrites the layout's whole
     * tombstone set (old ∪ fresh), so a long-running worker registers
-    * the layout with [[graft.ops.Maintenance.sweep]] as
-    * `epoch_positional` (or compacts it) to keep that set bounded.
+    * the layouts with [[graft.ops.Maintenance.sweep]] as
+    * `epoch_positional` / `epoch_ivf` (or compacts them) to keep those
+    * sets bounded.
     * Expects a streaming `doc_id: long` column; doc_id ≡ vec_id across
     * the paired layouts (the corpus convention). */
   def takedownStream(postingsPath: String, doomedIds: DataFrame,
@@ -519,8 +519,11 @@ object StreamRunner {
         val ids = batch.select(col("doc_id").cast("long").as("doc_id"))
           .localCheckpoint(true)
         graft.ops.TextQueries.postingsDelete(s, ids, postingsPath)
-        ivfPath.foreach(p => graft.ops.Ann.delete(s, p,
-          ids.select(col("doc_id").as("vec_id"))))
+        ivfPath.foreach(p => graft.ops.Epoch.occ(s, p) {
+          graft.ops.EpochAnn.delete(s,
+            ids.select(col("doc_id").as("vec_id")), p,
+            graft.ops.Epoch.resolve(s, p).fold(0L)(_.next))
+        })
         // the positional layout is the third text-side serving tier a
         // takedown must reach
         positionalPath.foreach(p => graft.ops.Epoch.occ(s, p) {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
-import graft.ops.Ann
+import graft.ops.{Ann, EpochAnn}
 import org.apache.spark.sql.functions._
 
 /** Dev diagnostic for the retrain-cadence policy: build an IVF index on
@@ -22,11 +22,12 @@ object IvfRetrainProbe {
     val e = graft.Tables.embeddings(spark, d)
     val path = java.nio.file.Files.createTempDirectory("ivf_rt_probe")
       .toString + "/idx"
-    Ann.save(Ann.build(e.where(col("vec_id") < seedRows), k = k), path)
-    Ann.append(spark, path, e.where(col("vec_id") >= seedRows))
-    val pre = Ann.cellSkew(Ann.load(spark, path))
-    Ann.retrain(spark, path, iters = 2)
-    val post = Ann.cellSkew(Ann.load(spark, path))
+    EpochAnn.build(spark, e.where(col("vec_id") < seedRows), path, k = k)
+    EpochAnn.append(spark, e.where(col("vec_id") >= seedRows), path,
+      batchId = 1L)
+    val pre = Ann.cellSkew(EpochAnn.load(spark, path))
+    EpochAnn.retrain(spark, path, iters = 2)
+    val post = Ann.cellSkew(EpochAnn.load(spark, path))
     println(f"SKEW sf=$d k=$k seed=$seedRows pre=$pre%.4f post=$post%.4f")
     spark.stop()
   }

@@ -135,13 +135,13 @@ object ScaleSweep {
       val k = math.max(8, (n / 250).toInt)
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"${graft.GraftSession.scratchDir}/sweep_ivfpqapp_$tag"
-      graft.ops.Ivfpq.save(graft.ops.Ivfpq.build(
-        e.filter(pmod(col("vec_id"), lit(2)) === 0), k = k, m = 4,
-        codes = graft.ops.VectorQueries.codesFor(n)), path)
-      graft.ops.Ivfpq.append(s, path,
-        e.filter(pmod(col("vec_id"), lit(2)) === 1))
-      graft.ops.Ivfpq.search(graft.ops.Ivfpq.load(s, path), probeId = 0,
-        topK = 5, nProbe = 3, shortlist = 50)
+      graft.ops.EpochIvfpq.build(s,
+        e.filter(pmod(col("vec_id"), lit(2)) === 0), path, k = k, m = 4,
+        codes = graft.ops.VectorQueries.codesFor(n))
+      graft.ops.EpochIvfpq.append(s,
+        e.filter(pmod(col("vec_id"), lit(2)) === 1), path, batchId = 1L)
+      graft.ops.Ivfpq.search(graft.ops.EpochIvfpq.load(s, path),
+        probeId = 0, topK = 5, nProbe = 3, shortlist = 50)
     }),
     // The DELETE lifecycle end-to-end (round 14): build the full text
     // index, tombstone the 1-in-7 residue class (ONE matched-rows scan
@@ -172,17 +172,18 @@ object ScaleSweep {
     // Must stay ~linear in R: retrain is the RARE expensive pass and
     // even it carries no super-linear stage.
     "ivfretrain_sweep" -> ((s, dir) => {
-      import graft.ops.Ann
+      import graft.ops.{Ann, EpochAnn}
       val e = graft.Tables.embeddings(s, dir)
       val n = e.count()
       val k = math.max(8, (n / 250).toInt)
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val path = s"${graft.GraftSession.scratchDir}/sweep_ivfrt_$tag"
-      Ann.save(Ann.build(e.where(col("vec_id") < 4L * k), k = k), path)
-      Ann.append(s, path, e.where(col("vec_id") >= 4L * k))
-      if (Ann.needsRetrain(Ann.load(s, path), maxSkew = 1.0))
-        Ann.retrain(s, path, iters = 2)
-      Ann.query(Ann.load(s, path), probeId = 0, topK = 5, nProbe = 3)
+      EpochAnn.build(s, e.where(col("vec_id") < 4L * k), path, k = k)
+      EpochAnn.append(s, e.where(col("vec_id") >= 4L * k), path,
+        batchId = 1L)
+      if (Ann.needsRetrain(EpochAnn.load(s, path), maxSkew = 1.0))
+        EpochAnn.retrain(s, path, iters = 2)
+      Ann.query(EpochAnn.load(s, path), probeId = 0, topK = 5, nProbe = 3)
     }),
     // The dedup-at-ingest lifecycle (round 14): near-dup index BUILD on
     // the replica corpus (replica-disjoint token spaces — the

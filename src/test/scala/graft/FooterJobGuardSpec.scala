@@ -52,15 +52,18 @@ class FooterJobGuardSpec extends AnyFunSuite {
       s"coalesce(1).sortWithinPartitions in: ${found.mkString(", ")}")
   }
 
-  /** Views, positional indexes and suggest dictionaries are built,
-    * maintained and read only on epoch manifests (`EpochMv`,
-    * `EpochPositional`, `EpochSuggest`); the swap-replace protocol
-    * (`Layout`) has no caller in the plans package or in those tiers'
-    * files. */
-  test("plans, positional and suggest code references no Layout.") {
+  /** Views, positional indexes, suggest dictionaries and vector
+    * indexes are built, maintained and read only on epoch manifests
+    * (`EpochMv`, `EpochPositional`, `EpochSuggest`, `EpochAnn`,
+    * `EpochIvfpq`); the swap-replace protocol (`Layout`) has no caller
+    * in the plans package or in those tiers' files. */
+  test("plans, positional, suggest and vector code references no " +
+      "Layout.") {
     val found = Seq("plans/", "ops/PhraseQueries.scala",
       "ops/EpochPositional.scala", "ops/Suggest.scala",
-      "ops/EpochSuggest.scala", "ops/IndexStats.scala")
+      "ops/EpochSuggest.scala", "ops/IndexStats.scala", "ops/Ann.scala",
+      "ops/Ivfpq.scala", "ops/EpochAnn.scala", "ops/EpochIvfpq.scala",
+      "ops/VectorQueries.scala")
       .flatMap(w => offenders("\\bLayout\\.".r, Set.empty, within = w))
     assert(found.isEmpty, s"Layout. in: ${found.mkString(", ")}")
   }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Incremental-append pins: appending against frozen centroids must be
   * bit-identical to assigning old∪new in one pass with those centroids,
-  * must create no new cell directories (new files land inside the
-  * existing partition layout so pruning is unchanged), and a query on
+  * must create no new cells (the delta generation is cell-partitioned
+  * by the same centroid ids, so pruning is unchanged), must refuse a
+  * batch whose schema differs from the layout by name, and a query on
   * the merged index must see appended vectors as first-class
   * candidates. */
 class AnnAppendSpec extends SparkTestBase {
@@ -18,27 +19,17 @@ class AnnAppendSpec extends SparkTestBase {
     val even = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
     val odd = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val path = s"${graft.GraftSession.scratchDir}/ann_append_spec"
-    val built = Ann.build(even, k = 8)
-    Ann.save(built, path)
-    Ann.append(spark, path, odd)
-    val merged = Ann.load(spark, path)
+    EpochAnn.build(spark, even, path, k = 8)
+    val built = EpochAnn.load(spark, path)
+    EpochAnn.append(spark, odd, path, batchId = 1L)
+    val merged = EpochAnn.load(spark, path)
     assert(merged.centroids.toSet === built.centroids.toSet)
     // one-pass reference: assign the FULL corpus with the same centroids
-    val refAssigned = {
-      // reuse the public surface: an index whose assigned frame is the
-      // full corpus assigned against `built`'s centroids — obtained by
-      // saving centroids and appending EVERYTHING onto an empty layout
-      val refPath = s"${graft.GraftSession.scratchDir}/ann_append_ref"
-      Ann.save(Ann.IvfIndex(built.centroids,
-        built.assigned.limit(0)), refPath)
-      Ann.append(spark, refPath, emb)
-      Ann.load(spark, refPath).assigned
-    }
+    val b = Ann.assign(emb, built.centroids, "vec_id", "embedding")
+      .select(col("vec_id"), col("cell")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     // partition discovery may type `cell` as int — read it numerically
     val a = merged.assigned.select(col("vec_id"),
-        col("cell").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val b = refAssigned.select(col("vec_id"),
         col("cell").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(a === b)
@@ -51,31 +42,34 @@ class AnnAppendSpec extends SparkTestBase {
 
   test("append rejects a batch whose schema mismatches the saved layout") {
     val path = s"${graft.GraftSession.scratchDir}/ann_append_schema"
-    Ann.save(Ann.build(emb.filter(col("vec_id") < 50), k = 4), path)
+    EpochAnn.build(spark, emb.filter(col("vec_id") < 50), path, k = 4)
+    val epoch = Epoch.resolve(spark, path).get.epoch
     // element type drift: float embeddings persisted, double batch
     val doubled = emb.filter(col("vec_id") >= 50)
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("embedding"))
     val e1 = intercept[IllegalArgumentException] {
-      Ann.append(spark, path, doubled)
+      EpochAnn.append(spark, doubled, path, batchId = 1L)
     }
     assert(e1.getMessage.contains("does not match"))
     // mis-named column
     val misnamed = emb.filter(col("vec_id") >= 50)
       .select(col("vec_id"), col("embedding").as("emb"))
     val e2 = intercept[IllegalArgumentException] {
-      Ann.append(spark, path, misnamed)
+      EpochAnn.append(spark, misnamed, path, batchId = 2L)
     }
     assert(e2.getMessage.contains("no 'embedding' column"))
+    // neither refused batch committed an epoch
+    assert(Epoch.resolve(spark, path).get.epoch === epoch)
   }
 
   test("query on the appended index surfaces appended (odd) vectors") {
     val even = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
     val odd = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val path = s"${graft.GraftSession.scratchDir}/ann_append_probe"
-    Ann.save(Ann.build(even, k = 8), path)
-    Ann.append(spark, path, odd)
-    val merged = Ann.load(spark, path)
+    EpochAnn.build(spark, even, path, k = 8)
+    EpochAnn.append(spark, odd, path, batchId = 1L)
+    val merged = EpochAnn.load(spark, path)
     // full probing = exact search over the merged content: its top-5
     // must equal brute force over the WHOLE corpus, which necessarily
     // includes any odd-id true neighbors

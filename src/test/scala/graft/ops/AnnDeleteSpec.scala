@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * brute force over the survivors (cosine carries no cross-document
   * state, so delete ≡ rebuild-with-these-centroids exactly);
   * re-delivered/unknown batches are no-ops; and compaction drops the
-  * rows physically, clears the segment, and changes no served
+  * rows physically, clears the tombstones, and changes no served
   * answer. */
 class AnnDeleteSpec extends SparkTestBase {
 
@@ -19,15 +19,23 @@ class AnnDeleteSpec extends SparkTestBase {
 
   private def freshDeletedPath(tag: String): String = {
     val path = s"${graft.GraftSession.scratchDir}/ann_delete_$tag"
-    Ann.save(Ann.build(emb, k = 4), path)
-    Ann.delete(spark, path, emb.where(doomedPred).select("vec_id"))
+    EpochAnn.build(spark, emb, path, k = 4)
+    EpochAnn.delete(spark, emb.where(doomedPred).select("vec_id"), path,
+      batchId = 1L)
     path
+  }
+
+  /** Rows physically present in the pinned `assigned` dirs (parquet
+    * footer counts — tombstoned rows included). */
+  private def rawAssigned(path: String): Long = {
+    val m = Epoch.resolve(spark, path).get
+    graft.Pq.rows(spark, m.dirs(path, "assigned"): _*)
   }
 
   test("tombstoned ids vanish from load; full probing equals brute " +
       "force over the survivors") {
     val path = freshDeletedPath("main")
-    val idx = Ann.load(spark, path)
+    val idx = EpochAnn.load(spark, path)
     val served = idx.assigned.select(col("vec_id")).collect()
       .map(_.getLong(0)).toSet
     val doomed = emb.where(doomedPred).select("vec_id").collect()
@@ -53,16 +61,24 @@ class AnnDeleteSpec extends SparkTestBase {
 
   test("re-delivered and unknown-id delete batches are no-ops") {
     val path = freshDeletedPath("redeliver")
-    def tombRows() = spark.read.parquet(s"$path/tombstones")
-      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    def tombRows() = {
+      val m = Epoch.resolve(spark, path).get
+      Epoch.read(spark, path, m, "tombstones").get
+        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    }
     val t1 = tombRows()
-    Ann.delete(spark, path, emb.where(doomedPred).select("vec_id"))
+    val epoch = Epoch.resolve(spark, path).get.epoch
+    // re-delivered under a NEW batch id: every id is already
+    // tombstoned, so nothing commits
+    EpochAnn.delete(spark, emb.where(doomedPred).select("vec_id"), path,
+      batchId = 2L)
     assert(tombRows() === t1)
     import spark.implicits._
-    Ann.delete(spark, path, Seq(999999L, 888888L).toDF("vec_id"))
-    // unknown ids are harmless: the segment may note them or skip them,
-    // but the SERVED id set must be unchanged
-    val served = Ann.load(spark, path).assigned.select("vec_id")
+    EpochAnn.delete(spark, Seq(999999L, 888888L).toDF("vec_id"), path,
+      batchId = 3L)
+    assert(Epoch.resolve(spark, path).get.epoch === epoch)
+    // unknown ids are harmless: the SERVED id set is unchanged
+    val served = EpochAnn.load(spark, path).assigned.select("vec_id")
       .collect().map(_.getLong(0)).toSet
     val doomed = emb.where(doomedPred).select("vec_id").collect()
       .map(_.getLong(0)).toSet
@@ -75,37 +91,40 @@ class AnnDeleteSpec extends SparkTestBase {
     val path = freshDeletedPath("readd")
     val readd = emb.where(col("vec_id") === 2L) // 2 % 5 == 2: doomed
     val e = intercept[IllegalArgumentException] {
-      Ann.append(spark, path, readd)
+      EpochAnn.append(spark, readd, path, batchId = 2L)
     }
     assert(e.getMessage.contains("tombstoned"))
-    Ann.compact(spark, path)
-    Ann.append(spark, path, readd)
-    assert(Ann.load(spark, path).assigned
+    EpochAnn.compact(spark, path)
+    EpochAnn.append(spark, readd, path, batchId = 2L)
+    assert(EpochAnn.load(spark, path).assigned
       .filter(col("vec_id") === 2L).count() === 1L)
   }
 
   test("compact drops rows physically, clears the segment, and " +
       "preserves every served answer") {
     val path = freshDeletedPath("compact")
-    val beforeRows = Ann.load(spark, path).assigned
+    val beforeRows = EpochAnn.load(spark, path).assigned
       .select(col("vec_id"), col("cell").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val beforeQuery = Ann.query(Ann.load(spark, path),
+    val beforeQuery = Ann.query(EpochAnn.load(spark, path),
       probeId = 0, topK = 5, nProbe = 3)
       .collect().map(_.toSeq).toSeq
-    val rawBefore = spark.read.parquet(s"$path/assigned").count()
-    Ann.compact(spark, path)
-    assert(!Layout.dirExists(spark, s"$path/tombstones"))
-    val rawAfter = spark.read.parquet(s"$path/assigned").count()
+    val rawBefore = rawAssigned(path)
+    EpochAnn.compact(spark, path)
+    assert(Epoch.resolve(spark, path).get
+      .components("tombstones").isEmpty)
+    val rawAfter = rawAssigned(path)
     assert(rawAfter < rawBefore, "compact removed no rows")
-    val afterRows = Ann.load(spark, path).assigned
+    assert(rawAfter === beforeRows.size.toLong)
+    val afterRows = EpochAnn.load(spark, path).assigned
       .select(col("vec_id"), col("cell").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(afterRows === beforeRows)
-    assert(Ann.query(Ann.load(spark, path), probeId = 0, topK = 5,
+    assert(Ann.query(EpochAnn.load(spark, path), probeId = 0, topK = 5,
       nProbe = 3).collect().map(_.toSeq).toSeq === beforeQuery)
-    // compact with no tombstones is a no-op (idempotent re-run)
-    Ann.compact(spark, path)
-    assert(Ann.load(spark, path).assigned.count() === afterRows.size)
+    // compact with no tombstones changes nothing (idempotent re-run)
+    EpochAnn.compact(spark, path)
+    assert(EpochAnn.load(spark, path).assigned.count() === afterRows.size)
+    assert(rawAssigned(path) === rawAfter)
   }
 }

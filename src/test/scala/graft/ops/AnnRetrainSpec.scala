@@ -16,10 +16,11 @@ class AnnRetrainSpec extends SparkTestBase {
   test("retrain rewrites a consistent layout and keeps full-probe " +
       "exactness") {
     val path = s"${graft.GraftSession.scratchDir}/ann_retrain_main"
-    Ann.save(Ann.build(emb.where(col("vec_id") < 32), k = 4), path)
-    Ann.append(spark, path, emb.where(col("vec_id") >= 32))
-    Ann.retrain(spark, path, iters = 2)
-    val idx = Ann.load(spark, path)
+    EpochAnn.build(spark, emb.where(col("vec_id") < 32), path, k = 4)
+    EpochAnn.append(spark, emb.where(col("vec_id") >= 32), path,
+      batchId = 1L)
+    EpochAnn.retrain(spark, path, iters = 2)
+    val idx = EpochAnn.load(spark, path)
     // every resident exactly once
     val ids = idx.assigned.select("vec_id").collect().map(_.getLong(0))
     assert(ids.length === emb.count())
@@ -41,12 +42,13 @@ class AnnRetrainSpec extends SparkTestBase {
   test("retrain subsumes pending deletes: tombstoned ids are refit " +
       "away and the segment is cleared") {
     val path = s"${graft.GraftSession.scratchDir}/ann_retrain_del"
-    Ann.save(Ann.build(emb, k = 4), path)
+    EpochAnn.build(spark, emb, path, k = 4)
     val doomed = emb.where(pmod(col("vec_id"), lit(5)) === 2)
-    Ann.delete(spark, path, doomed.select("vec_id"))
-    Ann.retrain(spark, path, iters = 1)
-    assert(!Layout.dirExists(spark, s"$path/tombstones"))
-    val served = Ann.load(spark, path).assigned.select("vec_id")
+    EpochAnn.delete(spark, doomed.select("vec_id"), path, batchId = 1L)
+    EpochAnn.retrain(spark, path, iters = 1)
+    assert(Epoch.resolve(spark, path).get
+      .components("tombstones").isEmpty)
+    val served = EpochAnn.load(spark, path).assigned.select("vec_id")
       .collect().map(_.getLong(0)).toSet
     val doomedIds = doomed.select("vec_id").collect()
       .map(_.getLong(0)).toSet
@@ -54,18 +56,20 @@ class AnnRetrainSpec extends SparkTestBase {
     assert(served.size === emb.count() - doomedIds.size)
   }
 
-  test("Ivfpq.retrain refits both quantizers, keeps full-probe " +
+  test("EpochIvfpq.retrain refits both quantizers, keeps full-probe " +
       "full-shortlist exactness, and subsumes pending deletes") {
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_retrain_main"
-    Ivfpq.save(Ivfpq.build(emb.where(col("vec_id") < 32), k = 4, m = 4,
-      codes = 16), path)
-    Ivfpq.append(spark, path, emb.where(col("vec_id") >= 32))
-    val before = Ivfpq.load(spark, path)
+    EpochIvfpq.build(spark, emb.where(col("vec_id") < 32), path, k = 4,
+      m = 4, codes = 16)
+    EpochIvfpq.append(spark, emb.where(col("vec_id") >= 32), path,
+      batchId = 1L)
+    val before = EpochIvfpq.load(spark, path)
     val doomed = emb.where(pmod(col("vec_id"), lit(5)) === 2)
-    Ivfpq.delete(spark, path, doomed.select("vec_id"))
-    Ivfpq.retrain(spark, path, iters = 2)
-    assert(!Layout.dirExists(spark, s"$path/tombstones"))
-    val after = Ivfpq.load(spark, path)
+    EpochIvfpq.delete(spark, doomed.select("vec_id"), path, batchId = 2L)
+    EpochIvfpq.retrain(spark, path, iters = 2)
+    assert(Epoch.resolve(spark, path).get
+      .components("tombstones").isEmpty)
+    val after = EpochIvfpq.load(spark, path)
     // same layout parameters, refreshed quantizers
     assert(after.m === before.m && after.dsub === before.dsub)
     assert(after.books.length === before.books.length)

@@ -39,8 +39,8 @@ class AnnSkewSpec extends SparkTestBase {
 
   test("saved IVF index prunes to the probed cell partitions") {
     val dir = java.nio.file.Files.createTempDirectory("ivf").toString
-    Ann.save(Ann.build(emb, k = 8), dir)
-    val loaded = Ann.load(spark, dir)
+    EpochAnn.build(spark, emb, dir, k = 8)
+    val loaded = EpochAnn.load(spark, dir)
     val q = Ann.query(loaded, probeId = 0, topK = 5, nProbe = 3)
     // correctness: results exist and ranks are 1..n
     val ranks = q.select("rank").collect().map(_.getLong(0)).sorted

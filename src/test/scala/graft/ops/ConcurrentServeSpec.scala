@@ -66,7 +66,7 @@ class ConcurrentServeSpec extends SparkTestBase {
             transform(col("embedding"), _.cast(DoubleType)))
           .collect().head.getSeq[Double](1).toSeq
       def annRows(probeId: Long) = {
-        val idx = Ann.load(spark,
+        val idx = EpochAnn.load(spark,
           VectorQueries.savedIvfPath(spark, sf, k = 8))
         Ann.serveBatch(idx, Seq(probeId -> probeVec(probeId)),
           topK = 5, nProbe = 2)

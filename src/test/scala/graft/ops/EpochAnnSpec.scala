@@ -4,12 +4,11 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** Epoch-IVF pins: a pinned manifest keeps serving its exact snapshot
-  * (old centroids AND old lists) across a retrain — the mixed
-  * centroids/lists read the swap layout has to forbid by contract is
-  * structurally impossible; the full lifecycle on the epoch layout
-  * lands row-identical to the swap layout's (shared assignment code,
-  * deterministic build); ledger replays no-op; prune retires history
-  * without touching serving. */
+  * (old centroids AND old lists) across a retrain — a mixed
+  * centroids/lists read is structurally impossible; the full lifecycle
+  * on the epoch layout lands row-identical to an in-memory reference
+  * over the survivors (shared assignment and refit code); ledger
+  * replays no-op; prune retires history without touching serving. */
 class EpochAnnSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -25,28 +24,29 @@ class EpochAnnSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("a manifest pinned before a retrain serves the OLD centroids " +
-      "and lists; the lifecycle lands row-identical to the swap layout") {
+      "and lists; the lifecycle lands row-identical to an in-memory " +
+      "reference") {
     val path = s"${graft.GraftSession.scratchDir}/epoch_ann"
-    val swap = s"${graft.GraftSession.scratchDir}/epoch_ann_swap"
     val all = emb(1L to 40L)
     val even = all.filter(col("vec_id") % 2 === 0)
     val odd = all.filter(col("vec_id") % 2 === 1)
+    val survivors = all.where(!col("vec_id").isin(4L, 7L))
 
     EpochAnn.build(spark, even, path, k = 3)
-    Ann.save(Ann.build(even, k = 3), swap)
     val m0 = Epoch.resolve(spark, path).get
     val pinnedBefore = EpochAnn.loadOn(spark, path, m0)
     val centsBefore = pinnedBefore.centroids
     val rowsBefore = rows(pinnedBefore)
+    assert(centsBefore === Ann.build(even, k = 3).centroids)
 
-    // identical lifecycle on both layouts: append odd, delete a slice
+    // append odd, delete a slice: the survivors assigned in one pass
+    // under the frozen build centroids
     EpochAnn.append(spark, odd, path, batchId = 1L)
-    Ann.append(spark, swap, odd)
     EpochAnn.delete(spark, Seq(4L, 7L).toDF("vec_id"), path,
       batchId = 2L)
-    Ann.delete(spark, swap, Seq(4L, 7L).toDF("vec_id"))
-    assert(rows(EpochAnn.load(spark, path))
-      === rows(Ann.load(spark, swap)))
+    assert(rows(EpochAnn.load(spark, path)) === rows(Ann.IvfIndex(
+      centsBefore, Ann.assign(survivors, centsBefore, "vec_id",
+        "embedding"))))
 
     // ledger replays: same batch keys commit nothing
     val e = Epoch.resolve(spark, path).get.epoch
@@ -65,13 +65,15 @@ class EpochAnnSpec extends SparkTestBase {
     assert(Epoch.resolve(spark, path).get
       .components("tombstones").isEmpty)
 
-    // retrain ≡ the swap layout's retrain (same warm start, same
-    // survivors, same deterministic refit)
-    Ann.retrain(spark, swap)
-    assert(rows(EpochAnn.load(spark, path))
-      === rows(Ann.load(spark, swap)))
-    assert(EpochAnn.load(spark, path).centroids
-      === Ann.load(spark, swap).centroids)
+    // retrain ≡ a warm-start refit of the survivors in memory (same
+    // start centroids, same two Lloyd steps, one re-assignment)
+    val refCents = (1 to 2).foldLeft(centsBefore)((c, _) =>
+      Ann.meanCentroids(Ann.assign(survivors, c, "vec_id", "embedding"),
+        "embedding", 4))
+    val ref = Ann.IvfIndex(refCents,
+      Ann.assign(survivors, refCents, "vec_id", "embedding"))
+    assert(rows(EpochAnn.load(spark, path)) === rows(ref))
+    assert(EpochAnn.load(spark, path).centroids === refCents)
 
     // full-probe search equals brute force over the survivors
     val k = EpochAnn.load(spark, path).centroids.size
@@ -91,8 +93,7 @@ class EpochAnnSpec extends SparkTestBase {
     // prune to the current epoch only: serving unaffected
     EpochAnn.compact(spark, path)
     Epoch.prune(spark, path, keep = 1)
-    assert(rows(EpochAnn.load(spark, path))
-      === rows(Ann.load(spark, swap)))
+    assert(rows(EpochAnn.load(spark, path)) === rows(ref))
     // re-add of a tombstoned id is refused while tombstones live
     EpochAnn.delete(spark, Seq(9L).toDF("vec_id"), path, batchId = 5L)
     val ex = intercept[IllegalArgumentException] {

@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
   * exact snapshot as a COHERENT TRIPLE (old codes + old books + old
   * centroids — mixed generations on this index are not stale but
   * wrong: ADC would decode codes through the wrong codebooks); the
-  * lifecycle lands row-identical to the swap layout's ([[Ivfpq]],
-  * shared assignment/encode kernels); the one-epoch UPSERT replaces
-  * the swap layout's delete→compact→append-behind-a-marker triple;
-  * ledger replays no-op; prune retires history without touching
-  * serving. */
+  * lifecycle lands row-identical to an in-memory reference over the
+  * survivors ([[Ivfpq]], shared assignment/encode kernels); the UPSERT
+  * is one epoch; ledger replays no-op; prune retires history without
+  * touching serving. */
 class EpochIvfpqSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -29,29 +28,34 @@ class EpochIvfpqSpec extends SparkTestBase {
       .toSet
 
   test("pinned pre-retrain manifest keeps the coherent triple; " +
-      "lifecycle ≡ swap layout; upsert is one epoch; replays no-op") {
+      "lifecycle ≡ in-memory reference; upsert is one epoch; replays " +
+      "no-op") {
     val path = s"${graft.GraftSession.scratchDir}/epoch_ivfpq"
-    val swap = s"${graft.GraftSession.scratchDir}/epoch_ivfpq_swap"
     val all = emb(1L to 40L)
     val even = all.filter(col("vec_id") % 2 === 0)
     val odd = all.filter(col("vec_id") % 2 === 1)
 
     EpochIvfpq.build(spark, even, path, k = 3, m = 2, codes = 4)
-    Ivfpq.save(Ivfpq.build(even, k = 3, m = 2, codes = 4), swap)
     val m0 = Epoch.resolve(spark, path).get
     val pinned0 = EpochIvfpq.loadOn(spark, path, m0)
     val books0 = pinned0.books
     val cents0 = pinned0.centroids
     val rows0 = rows(pinned0)
+    // the in-memory reference: `corpus` cell-assigned and PQ-encoded
+    // under the frozen build quantizers
+    def frozen(corpus: org.apache.spark.sql.DataFrame) =
+      pinned0.copy(encoded = Ann.assign(corpus, cents0, "vec_id",
+          "embedding")
+        .select(col("vec_id"), col("embedding"), col("cell"),
+          graft.functions.PqEncode.pqEncode(
+            ProductQuant.unit(col("embedding")), books0).as("codes")))
 
-    // identical lifecycle on both layouts: append odd, delete a slice
+    // append odd, delete a slice
     EpochIvfpq.append(spark, odd, path, batchId = 1L)
-    Ivfpq.append(spark, swap, odd)
     EpochIvfpq.delete(spark, Seq(4L, 7L).toDF("vec_id"), path,
       batchId = 2L)
-    Ivfpq.delete(spark, swap, Seq(4L, 7L).toDF("vec_id"))
     assert(rows(EpochIvfpq.load(spark, path))
-      === rows(Ivfpq.load(spark, swap)))
+      === rows(frozen(all.where(!col("vec_id").isin(4L, 7L)))))
 
     // ledger replays: same batch keys commit nothing
     val e = Epoch.resolve(spark, path).get.epoch
@@ -60,14 +64,14 @@ class EpochIvfpqSpec extends SparkTestBase {
       batchId = 2L)
     assert(Epoch.resolve(spark, path).get.epoch === e)
 
-    // UPSERT as one epoch: reversed embeddings for two ids, applied to
-    // BOTH layouts (swap needs its three-step update); replay no-ops
+    // UPSERT as one epoch: reversed embeddings for two ids; replay
+    // no-ops
     val upd = emb(Seq(6L, 11L))
       .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
+    val survivors = all.where(!col("vec_id").isin(4L, 7L, 6L, 11L))
+      .unionByName(upd)
     EpochIvfpq.update(spark, upd, path, batchId = 3L)
-    Ivfpq.update(spark, swap, upd, batchId = 3L)
-    assert(rows(EpochIvfpq.load(spark, path))
-      === rows(Ivfpq.load(spark, swap)))
+    assert(rows(EpochIvfpq.load(spark, path)) === rows(frozen(survivors)))
     val e2 = Epoch.resolve(spark, path).get.epoch
     EpochIvfpq.update(spark, upd, path, batchId = 3L)
     assert(Epoch.resolve(spark, path).get.epoch === e2)
@@ -83,21 +87,20 @@ class EpochIvfpqSpec extends SparkTestBase {
     assert(pinnedAfter.centroids === cents0)
     assert(rows(pinnedAfter) === rows0)
 
-    // retrain ≡ the swap layout's retrain UP TO FLOAT-SUM ORDER: the
-    // two layouts feed the refit identical survivor ROWS but from
-    // differently-partitioned files, so the codebook means can differ
+    // retrain ≡ an in-memory build over the survivors UP TO FLOAT-SUM
+    // ORDER: both refits see identical survivor ROWS but from
+    // differently-partitioned inputs, so the codebook means can differ
     // by ulps — cells must match exactly, books within tolerance, and
     // the SERVED answer (exact re-rank absorbs quantizer ulps) must be
     // identical
-    Ivfpq.retrain(spark, swap)
     val epochIdx = EpochIvfpq.load(spark, path)
-    val swapIdx = Ivfpq.load(spark, swap)
+    val refIdx = Ivfpq.build(survivors, k = 3, m = 2, codes = 4)
     def cells(i: Ivfpq.IvfPqIndex): Set[(Long, Long)] =
       i.encoded.select(col("vec_id"), col("cell").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(cells(epochIdx) === cells(swapIdx))
+    assert(cells(epochIdx) === cells(refIdx))
     val eb = epochIdx.books.flatten.flatten
-    val sb = swapIdx.books.flatten.flatten
+    val sb = refIdx.books.flatten.flatten
     assert(eb.size === sb.size)
     eb.zip(sb).foreach { case (a, b) =>
       assert(math.abs(a - b) < 1e-9, s"book entry drift: $a vs $b") }
@@ -105,7 +108,7 @@ class EpochIvfpqSpec extends SparkTestBase {
       Ivfpq.search(i, probeId = 1L, topK = 5,
         nProbe = i.centroids.size, shortlist = 40)
         .collect().map(_.getLong(0)).toSeq
-    assert(servedIds(epochIdx) === servedIds(swapIdx))
+    assert(servedIds(epochIdx) === servedIds(refIdx))
 
     // full-probe search over survivors serves no deleted/self ids
     val idx = EpochIvfpq.load(spark, path)
@@ -121,7 +124,7 @@ class EpochIvfpqSpec extends SparkTestBase {
     EpochIvfpq.compact(spark, path)
     Epoch.prune(spark, path, keep = 1)
     assert(rows(EpochIvfpq.load(spark, path)) === prePrune)
-    assert(cells(EpochIvfpq.load(spark, path)) === cells(swapIdx))
+    assert(cells(EpochIvfpq.load(spark, path)) === cells(refIdx))
 
     // re-add of a tombstoned id is refused while tombstones live
     EpochIvfpq.delete(spark, Seq(9L).toDF("vec_id"), path, batchId = 5L)

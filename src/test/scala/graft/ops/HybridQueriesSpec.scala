@@ -50,7 +50,8 @@ class HybridQueriesSpec extends SparkTestBase {
     assertUnique(VectorQueries.bruteTopK(spark, sf, 5), Seq("neighbor_id"),
       "bruteTopK (vector tier)")
     assertUnique(
-      Ann.query(Ann.load(spark, VectorQueries.savedIvfPath(spark, sf, 8)),
+      Ann.query(
+        EpochAnn.load(spark, VectorQueries.savedIvfPath(spark, sf, 8)),
         probeId = 0, topK = 5, nProbe = 3), Seq("neighbor_id"),
       "Ann.query (served vector tier)")
   }

@@ -3,8 +3,8 @@ package graft.ops
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Incremental-append pins for the COMPRESSED index (`Ivfpq.append`,
-  * `sim_ivfpq_append`): appending against the frozen coarse centroids
+/** Incremental-append pins for the COMPRESSED index
+  * (`EpochIvfpq.append`, `sim_ivfpq_append`): appending against the frozen coarse centroids
   * AND frozen product codebooks must produce cells and PQ codes
   * bit-identical to a build-time encode of the same rows, must create
   * no new cell directories, must fail fast on schema drift, and a
@@ -21,10 +21,10 @@ class IvfpqAppendSpec extends SparkTestBase {
     val even = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
     val odd = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_append_spec"
-    val built = Ivfpq.build(even, k = 8, m = 4, codes = 16)
-    Ivfpq.save(built, path)
-    Ivfpq.append(spark, path, odd)
-    val merged = Ivfpq.load(spark, path)
+    EpochIvfpq.build(spark, even, path, k = 8, m = 4, codes = 16)
+    val built = EpochIvfpq.load(spark, path)
+    EpochIvfpq.append(spark, odd, path, batchId = 1L)
+    val merged = EpochIvfpq.load(spark, path)
     assert(merged.centroids.toSet === built.centroids.toSet)
     assert(merged.books === built.books)
     // reference: encode the FULL corpus with the same frozen quantizers
@@ -53,21 +53,24 @@ class IvfpqAppendSpec extends SparkTestBase {
 
   test("append rejects a batch whose schema mismatches the saved layout") {
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_append_schema"
-    Ivfpq.save(Ivfpq.build(emb.filter(col("vec_id") < 50), k = 4, m = 4,
-      codes = 8), path)
+    EpochIvfpq.build(spark, emb.filter(col("vec_id") < 50), path, k = 4,
+      m = 4, codes = 8)
+    val epoch = Epoch.resolve(spark, path).get.epoch
     val doubled = emb.filter(col("vec_id") >= 50)
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("embedding"))
     val e1 = intercept[IllegalArgumentException] {
-      Ivfpq.append(spark, path, doubled)
+      EpochIvfpq.append(spark, doubled, path, batchId = 1L)
     }
     assert(e1.getMessage.contains("does not match"))
     val misnamed = emb.filter(col("vec_id") >= 50)
       .select(col("vec_id"), col("embedding").as("emb"))
     val e2 = intercept[IllegalArgumentException] {
-      Ivfpq.append(spark, path, misnamed)
+      EpochIvfpq.append(spark, misnamed, path, batchId = 2L)
     }
     assert(e2.getMessage.contains("no 'embedding' column"))
+    // neither refused batch committed an epoch
+    assert(Epoch.resolve(spark, path).get.epoch === epoch)
   }
 
   test("search on the appended layout keeps cell partition pruning and " +
@@ -75,9 +78,9 @@ class IvfpqAppendSpec extends SparkTestBase {
     val even = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
     val odd = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_append_plan"
-    Ivfpq.save(Ivfpq.build(even, k = 8, m = 4, codes = 16), path)
-    Ivfpq.append(spark, path, odd)
-    val plan = Ivfpq.search(Ivfpq.load(spark, path), probeId = 0,
+    EpochIvfpq.build(spark, even, path, k = 8, m = 4, codes = 16)
+    EpochIvfpq.append(spark, odd, path, batchId = 1L)
+    val plan = Ivfpq.search(EpochIvfpq.load(spark, path), probeId = 0,
       topK = 5, nProbe = 3, shortlist = 20)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"),
@@ -95,9 +98,9 @@ class IvfpqAppendSpec extends SparkTestBase {
     val even = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
     val odd = emb.filter(pmod(col("vec_id"), lit(2)) === 1)
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_append_probe"
-    Ivfpq.save(Ivfpq.build(even, k = 8, m = 4, codes = 16), path)
-    Ivfpq.append(spark, path, odd)
-    val merged = Ivfpq.load(spark, path)
+    EpochIvfpq.build(spark, even, path, k = 8, m = 4, codes = 16)
+    EpochIvfpq.append(spark, odd, path, batchId = 1L)
+    val merged = EpochIvfpq.load(spark, path)
     val n = emb.count().toInt
     val got = Ivfpq.search(merged, probeId = 0, topK = 5, nProbe = 8,
       shortlist = n)

@@ -16,15 +16,23 @@ class IvfpqDeleteSpec extends SparkTestBase {
 
   private def freshPath(tag: String): String = {
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_delete_$tag"
-    Ivfpq.save(Ivfpq.build(emb, k = 4, m = 4, codes = 16), path)
-    Ivfpq.delete(spark, path, emb.where(doomedPred).select("vec_id"))
+    EpochIvfpq.build(spark, emb, path, k = 4, m = 4, codes = 16)
+    EpochIvfpq.delete(spark, emb.where(doomedPred).select("vec_id"), path,
+      batchId = 1L)
     path
+  }
+
+  /** Rows physically present in the pinned `encoded` dirs (parquet
+    * footer counts — tombstoned rows included). */
+  private def rawEncoded(path: String): Long = {
+    val m = Epoch.resolve(spark, path).get
+    graft.Pq.rows(spark, m.dirs(path, "encoded"): _*)
   }
 
   test("full probe + full shortlist over the tombstoned index equals " +
       "brute force over the survivors") {
     val path = freshPath("main")
-    val idx = Ivfpq.load(spark, path)
+    val idx = EpochIvfpq.load(spark, path)
     val n = emb.count().toInt
     val full = Ivfpq.search(idx, probeId = 0, topK = 5,
       nProbe = idx.centroids.length, shortlist = n)
@@ -44,14 +52,15 @@ class IvfpqDeleteSpec extends SparkTestBase {
   test("compact drops encoded rows physically and preserves the " +
       "served search") {
     val path = freshPath("compact")
-    val before = Ivfpq.search(Ivfpq.load(spark, path), probeId = 0,
+    val before = Ivfpq.search(EpochIvfpq.load(spark, path), probeId = 0,
       topK = 5, nProbe = 2, shortlist = 40)
       .collect().map(_.toSeq).toSeq
-    val rawBefore = spark.read.parquet(s"$path/encoded").count()
-    Ivfpq.compact(spark, path)
-    assert(!Layout.dirExists(spark, s"$path/tombstones"))
-    assert(spark.read.parquet(s"$path/encoded").count() < rawBefore)
-    assert(Ivfpq.search(Ivfpq.load(spark, path), probeId = 0,
+    val rawBefore = rawEncoded(path)
+    EpochIvfpq.compact(spark, path)
+    assert(Epoch.resolve(spark, path).get
+      .components("tombstones").isEmpty)
+    assert(rawEncoded(path) < rawBefore)
+    assert(Ivfpq.search(EpochIvfpq.load(spark, path), probeId = 0,
       topK = 5, nProbe = 2, shortlist = 40)
       .collect().map(_.toSeq).toSeq === before)
   }

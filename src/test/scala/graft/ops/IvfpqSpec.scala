@@ -34,8 +34,8 @@ class IvfpqSpec extends SparkTestBase {
   test("save/load roundtrip answers identically to the built index") {
     val index = Ivfpq.build(emb, k = 8, m = 4, codes = 16)
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_spec"
-    Ivfpq.save(index, path)
-    val loaded = Ivfpq.load(spark, path)
+    EpochIvfpq.build(spark, emb, path, k = 8, m = 4, codes = 16)
+    val loaded = EpochIvfpq.load(spark, path)
     assert(loaded.books === index.books)
     assert(loaded.centroids.toSet === index.centroids.toSet)
     val a = topIds(Ivfpq.search(index, 0, topK = 5, nProbe = 3, shortlist = 50))
@@ -44,10 +44,9 @@ class IvfpqSpec extends SparkTestBase {
   }
 
   test("loaded-index search prunes cells and ADC-scans codes only") {
-    val index = Ivfpq.build(emb, k = 8, m = 4, codes = 16)
     val path = s"${graft.GraftSession.scratchDir}/ivfpq_spec_plan"
-    Ivfpq.save(index, path)
-    val loaded = Ivfpq.load(spark, path)
+    EpochIvfpq.build(spark, emb, path, k = 8, m = 4, codes = 16)
+    val loaded = EpochIvfpq.load(spark, path)
     val plan = Ivfpq.search(loaded, 0, topK = 5, nProbe = 3, shortlist = 50)
       .queryExecution.executedPlan.toString
     // the cell restriction reaches both scans as STATIC partition pruning

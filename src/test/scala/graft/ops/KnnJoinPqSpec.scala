@@ -107,8 +107,8 @@ class KnnJoinPqSpec extends SparkTestBase {
 
   test("phase-1 candidate scan reads codes, never the embedding column") {
     val path = s"${graft.GraftSession.scratchDir}/knnjoinpq_spec_plan"
-    Ivfpq.save(index, path)
-    val loaded = Ivfpq.load(spark, path)
+    EpochIvfpq.build(spark, emb, path, k = 8, m = 4, codes = 16)
+    val loaded = EpochIvfpq.load(spark, path)
     val plan = Ivfpq.knnJoin(loaded, probesOf(0L, 1L), topK = 5,
         nProbe = 3, shortlist = 50)
       .queryExecution.executedPlan.toString

@@ -67,8 +67,8 @@ class LayoutSpec extends SparkTestBase {
     assert(!fs.exists(p(s"${live}__stage")))
   }
 
-  test("minusTombstones and dropTombstoned are no-ops without a " +
-      "segment and consistent with each other when one exists") {
+  test("minusTombstones is a no-op without a segment and drops the " +
+      "tombstoned ids when one exists") {
     val base = java.nio.file.Files.createTempDirectory("layout4").toString
     val path = s"$base/idx"
     val data = s"$path/data"
@@ -81,11 +81,5 @@ class LayoutSpec extends SparkTestBase {
     assert(Layout.minusTombstones(spark, df, path)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq ===
       Seq(1L, 3L))
-    Layout.dropTombstoned(spark, data, path)
-    assert(!Layout.dirExists(spark, s"$path/tombstones"))
-    assert(spark.read.parquet(data).count() === 2L)
-    // idempotent re-run with the segment gone
-    Layout.dropTombstoned(spark, data, path)
-    assert(spark.read.parquet(data).count() === 2L)
   }
 }

@@ -121,6 +121,9 @@ class MaintenanceSpec extends SparkTestBase {
       Maintenance.Policy(maxCellSkew = 50.0)).map(_.action)
       === Seq("none"))
     val e0 = Epoch.resolve(spark, path).get.epoch
+    // 9 near-identical vectors + 1 outlier → k=2 lands ~9/1
+    val skew = Ann.cellSkew(EpochAnn.load(spark, path))
+    assert(skew > 1.2, s"fixture skew $skew")
     assert(Maintenance.sweep(spark, Seq(ref),
       Maintenance.Policy(maxCellSkew = 1.2)).map(_.action)
       === Seq("retrain"))
@@ -259,37 +262,6 @@ class MaintenanceSpec extends SparkTestBase {
     Epoch.breakClaim(spark, sug, 99L)
     assert(Maintenance.sweep(spark, Seq(ref), horizon)
       .head.orphanClaims === 0)
-  }
-
-  test("the IVF arm routes occupancy skew to RETRAIN and tombstone " +
-      "mass to compact") {
-    val path = s"${graft.GraftSession.scratchDir}/maint_ivf"
-    // 9 near-identical vectors + 1 outlier → k=2 lands ~9/1: skew
-    // max/mean = 9/5 = 1.8
-    val emb = ((1L to 9L).map(i =>
-      (i, Array(1.0f, 0.001f * i, 0f, 0f))) :+
-      (10L, Array(0f, 0f, 1f, 0f)))
-      .toDF("vec_id", "embedding")
-    Ann.save(Ann.build(emb, k = 2), path)
-    val ref = Maintenance.LayoutRef("ivf", path)
-    // skew threshold above the observed skew → nothing due
-    assert(Maintenance.sweep(spark, Seq(ref),
-      Maintenance.Policy(maxCellSkew = 50.0)).map(_.action)
-      === Seq("none"))
-    // skew threshold below it → retrain (not compact)
-    val skew = Ann.cellSkew(Ann.load(spark, path))
-    assert(skew > 1.2, s"fixture skew $skew")
-    assert(Maintenance.sweep(spark, Seq(ref),
-      Maintenance.Policy(maxCellSkew = 1.2)).map(_.action)
-      === Seq("retrain"))
-    // tombstone mass with skew disarmed → the shared compact trigger
-    Ann.delete(spark, path, Seq(3L, 4L).toDF("vec_id"))
-    val r = Maintenance.sweep(spark, Seq(ref),
-      Maintenance.Policy(maxSegments = 1000,
-        maxTombstoneRatio = 0.10, maxCellSkew = 50.0))
-    assert(r.map(_.action) === Seq("compact"))
-    assert(!Layout.dirExists(spark, s"$path/tombstones"))
-    assert(Ann.load(spark, path).assigned.count() === 8L)
   }
 
   test("the epoch-MV arm prunes view generations to the horizon; the " +

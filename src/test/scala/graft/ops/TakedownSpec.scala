@@ -55,7 +55,7 @@ class TakedownSpec extends SparkTestBase {
     EpochPositional.build(spark, docs, pos)
     NearDup.buildNearDup(spark, docs, nd)
     EpochSuggest.create(spark, docs, sug, Suggest.Distance1)
-    Ivfpq.save(Ivfpq.build(emb, k = 2, m = 2, codes = 4), vec)
+    EpochIvfpq.build(spark, emb, vec, k = 2, m = 2, codes = 4)
     val base = s"$root/mvbase"
     val mv = s"$root/mv"
     docs.select(col("doc_id"), col("src"),
@@ -66,7 +66,8 @@ class TakedownSpec extends SparkTestBase {
     try {
       val tiers = Takedown.Tiers(postings = Some(post),
         positionalEpoch = Some(pos), neardup = Some(nd),
-        suggestEpoch = Some(sug), ivfpq = Some(vec), mvEpoch = Some(mvDef))
+        suggestEpoch = Some(sug), ivfpqEpoch = Some(vec),
+        mvEpoch = Some(mvDef))
       def doom(id: Long) =
         docs.where(col("doc_id") === id).select("doc_id", "text")
       Takedown(spark, doom(4L), tiers, batchId = 1L)
@@ -91,7 +92,7 @@ class TakedownSpec extends SparkTestBase {
       assert(!dict.contains("scan"), dict.toString)
       assert(dict("spark") === 4L)
       // IVF-PQ: vec 4 (probe 1's nearest twin) is unservable
-      val nn = Ivfpq.search(Ivfpq.load(spark, vec), probeId = 1,
+      val nn = Ivfpq.search(EpochIvfpq.load(spark, vec), probeId = 1,
         topK = 3, nProbe = 2, shortlist = 6)
         .collect().map(_.getLong(0)).toSet
       assert(!nn.contains(4L) && nn.contains(2L))
@@ -105,13 +106,14 @@ class TakedownSpec extends SparkTestBase {
 
       // crash-replay: SAME batch id — nothing may change anywhere
       val tombCount = spark.read.parquet(s"$post/tombstones").count()
-      val epochs = Seq(pos, sug).map(Epoch.committedEpochs(spark, _))
+      val epochs = Seq(pos, sug, vec).map(Epoch.committedEpochs(spark, _))
       Takedown(spark, doom(4L), tiers, batchId = 1L)
       assert(cells === after)
       assert(dictOf(sug)("spark") === 4L)
       assert(spark.read.parquet(s"$post/tombstones").count()
         === tombCount)
-      assert(Seq(pos, sug).map(Epoch.committedEpochs(spark, _)) === epochs)
+      assert(Seq(pos, sug, vec).map(Epoch.committedEpochs(spark, _))
+        === epochs)
 
       // a NEW batch id still applies (doc 6 goes too)
       Takedown(spark, doom(6L), tiers, batchId = 2L)

@@ -1,14 +1,14 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.ops.{Ann, TextQueries}
+import graft.ops.{Epoch, EpochAnn, TextQueries}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** The streaming takedown worker: micro-batches of doomed ids must
   * drive the DELETE path of every wired index, with re-delivered ids
   * across batches a no-op (the tombstones are their own dedup state;
-  * the positional epoch leg commits nothing for them) and the final
+  * the positional and IVF epoch legs commit nothing for them) and the final
   * served answers equal to a from-scratch rebuild over the
   * survivors. */
 class TakedownStreamSpec extends SparkTestBase {
@@ -38,7 +38,7 @@ class TakedownStreamSpec extends SparkTestBase {
     val ivf = s"$base/ivf"
     TextQueries.buildPostings(spark, docsDf(corpus), postings)
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    Ann.save(Ann.build(emb, k = 4), ivf)
+    EpochAnn.build(spark, emb, ivf, k = 4)
 
     val source = MemoryStream[Long]
     val q = StreamRunner.takedownStream(postings,
@@ -70,7 +70,7 @@ class TakedownStreamSpec extends SparkTestBase {
       .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq ===
       rows(s"$rebuilt/lists", "term", "doc_id", "dl", "tf"))
     // the paired IVF layout saw the same ids (doc_id ≡ vec_id)
-    val served = Ann.load(spark, ivf).assigned.select("vec_id")
+    val served = EpochAnn.load(spark, ivf).assigned.select("vec_id")
       .collect().map(_.getLong(0)).toSet
     assert(!served(2L) && !served(5L))
     assert(served.size === emb.count() - 2)
@@ -108,13 +108,18 @@ class TakedownStreamSpec extends SparkTestBase {
   test("takedown propagates to the positional layout too") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.ops.{Epoch, EpochPositional}
+    import graft.ops.EpochPositional
     val base = java.nio.file.Files
       .createTempDirectory("takedown-pos").toString
     val postings = s"$base/postings"
     val positional = s"$base/positional"
+    val ivf = s"$base/ivf"
     TextQueries.buildPostings(spark, docsDf(corpus), postings)
     EpochPositional.build(spark, docsDf(corpus), positional)
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    EpochAnn.build(spark, emb, ivf, k = 4)
+    def servedVecs() = EpochAnn.load(spark, ivf).assigned
+      .select("vec_id").collect().map(_.getLong(0)).toSet
     // doc 0 is the only "spark merge" phrase match in the corpus, doc 1
     // the only "spark filter" one
     def phraseDocs(phrase: String*) =
@@ -127,7 +132,8 @@ class TakedownStreamSpec extends SparkTestBase {
     def start(batches: Seq[Long]*): Unit = {
       val source = MemoryStream[Long]
       val q = StreamRunner.takedownStream(postings,
-        source.toDF().toDF("doc_id"), positionalPath = Some(positional))
+        source.toDF().toDF("doc_id"), ivfPath = Some(ivf),
+        positionalPath = Some(positional))
       batches.foreach { b =>
         source.addData(b: _*)
         q.processAllAvailable()
@@ -135,13 +141,18 @@ class TakedownStreamSpec extends SparkTestBase {
       q.stop()
     }
     start(Seq(0L))
-    val epochs = Epoch.committedEpochs(spark, positional)
+    val epochs = Seq(positional, ivf).map(Epoch.committedEpochs(spark, _))
     // re-delivering doc 0 in a later batch commits no further epoch
     start(Seq(0L))
-    assert(Epoch.committedEpochs(spark, positional) === epochs)
+    assert(Seq(positional, ivf).map(Epoch.committedEpochs(spark, _))
+      === epochs)
     assert(phraseDocs("spark", "merge") === Seq.empty)
     start(Seq(1L))
     assert(phraseDocs("spark", "filter") === Seq.empty)
+    // the IVF leg applied every start's first batch too
+    val served = servedVecs()
+    assert(!served(0L) && !served(1L))
+    assert(served.size === emb.count() - 2)
     val m = Epoch.resolve(spark, positional).get
     assert(Epoch.read(spark, positional, m, "stats").get
       .select("n_docs_l").head().getLong(0) === corpus.size - 2L)
