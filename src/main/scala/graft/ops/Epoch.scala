@@ -60,15 +60,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dictionary ([[EpochSuggest]]) and both vector indexes (float IVF
   * [[EpochAnn]], IVF-PQ [[EpochIvfpq]]) are epoch-only — each is the
   * one way its state is built, maintained and read; hybrid retrieval
-  * composes the epoch postings + IVF faces. The NEAR-DUP tier deliberately stays on the
-  * [[Layout.replaceDir]] swap discipline: its ingest gate is a
-  * read-your-own-writes loop (each micro-batch's verdicts must see the
-  * segments the PREVIOUS batch appended, and `ingestVerdicts` replay
-  * safety keys off in-place segment state, NearDup.scala) — pinning
-  * that pipeline to a snapshot epoch per batch would re-admit every
-  * dup that arrived since the pinned epoch, so the gate reads latest
-  * state by design and its serving face inherits the maintenance-window
-  * contract instead. */
+  * composes the epoch postings + IVF faces. The NEAR-DUP tier
+  * deliberately stays on the [[Layout.replaceDir]] swap discipline: its
+  * ingest gate is a read-your-own-writes loop (each micro-batch's verdicts
+  * must see the segments the PREVIOUS batch appended, and `ingestVerdicts`
+  * replay safety keys off in-place segment state, NearDup.scala) — pinning
+  * that pipeline to a snapshot epoch per batch would re-admit every dup that
+  * arrived since the pinned epoch, so the gate reads latest state by design
+  * and its serving face inherits the maintenance-window contract instead. */
 private[graft] object Epoch {
 
   /** The TWO filesystem primitives the whole epoch design rests on —

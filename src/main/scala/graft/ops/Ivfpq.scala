@@ -7,12 +7,12 @@ import org.apache.spark.sql.types._
 /** IVF-PQ — the composed 100 TB ANN serving index (SURVEY §2.10 X3
   * scale path): [[Ann]]'s inverted-file cells decide WHICH vectors a
   * probe scores (nProbe/k of the corpus, partition pruning on the
-  * persisted layout, [[EpochIvfpq]]) and [[ProductQuant]]'s product codes decide WHAT scoring a
-  * candidate costs (m byte codes instead of dim floats). This is the
-  * standard large-scale layout (Jégou et al., "Product Quantization for
-  * Nearest Neighbor Search", TPAMI 2011 — the IVFADC system): at 100 TB
-  * the pruned+compressed scan phase reads `nProbe/k · m/(4·dim)` of the
-  * raw bytes a brute-force pass would.
+  * persisted layout, [[EpochIvfpq]]) and [[ProductQuant]]'s product
+  * codes decide WHAT scoring a candidate costs (m byte codes instead of dim
+  * floats). This is the standard large-scale layout (Jégou et al., "Product
+  * Quantization for Nearest Neighbor Search", TPAMI 2011 — the IVFADC
+  * system): at 100 TB the pruned+compressed scan phase reads `nProbe/k ·
+  * m/(4·dim)` of the raw bytes a brute-force pass would.
   *
   * Search runs in two phases with DIFFERENT column footprints, and the
   * plan keeps them separate so parquet column pruning does the work:

@@ -416,15 +416,15 @@ object VectorQueries {
 
   /** The persisted-IVF serving path, driver-visible end-to-end: build →
     * `EpochAnn.build` (inverted lists as cell partition directories,
-    * ONCE per process via [[savedIvfPath]]) → `EpochAnn.load` → query. On the LOADED
-    * index the nProbe cell restriction is partition pruning against the
-    * parquet layout — at 100 TB a probe reads nProbe/k of the corpus no
-    * matter how large it grows, which is the whole point of persisting
-    * the index rather than rebuilding per query (what `sim_ivf` above
-    * does). Same driver-verified recall output as `sim_ivf`
-    * ([[ivfWithRecall]]); `AnnSkewSpec` pins that the loaded-index probe
-    * plan reads ONLY the probed cell directories and that full probing
-    * equals brute force. */
+    * ONCE per process via [[savedIvfPath]]) → `EpochAnn.load` → query.
+    * On the LOADED index the nProbe cell restriction is partition pruning
+    * against the parquet layout — at 100 TB a probe reads nProbe/k of the
+    * corpus no matter how large it grows, which is the whole point of
+    * persisting the index rather than rebuilding per query (what `sim_ivf`
+    * above does). Same driver-verified recall output as `sim_ivf`
+    * ([[ivfWithRecall]]); `AnnSkewSpec` pins that the loaded-index probe plan
+    * reads ONLY the probed cell directories and that full probing equals
+    * brute force. */
   val simIvfLoaded = GQuery(
     "sim_ivf_loaded",
     (s, d) => ivfWithRecall(s, d,
@@ -536,15 +536,14 @@ object VectorQueries {
     * (`bm25_serve_delete`'s vector twin): the persisted IVF index had
     * ~1/5 of its residents tombstoned by `EpochAnn.delete` — no rewrite
     * of the cell directories, just the bounded tombstone generation
-    * every `EpochAnn.load` anti-joins — and the probe then searches the survivors. Anchored
-    * against the brute-force top-5 OVER THE SURVIVORS (cosine carries
-    * no cross-document state, so tombstoned serving must equal
-    * rebuild-over-survivors serving with these centroids — exactness
-    * under full probing is pinned in `AnnDeleteSpec`), with the usual
-    * recall ≥ 3/5 tolerance at nProbe = 3. A deleted id can never
-    * surface: the anti-join removes it from every probed cell before
-    * ranking, which is the takedown guarantee the reference only gets
-    * by full reload. */
+    * every `EpochAnn.load` anti-joins — and the probe then searches
+    * the survivors. Anchored against the brute-force top-5 OVER THE SURVIVORS
+    * (cosine carries no cross-document state, so tombstoned serving must
+    * equal rebuild-over-survivors serving with these centroids — exactness
+    * under full probing is pinned in `AnnDeleteSpec`), with the usual recall
+    * ≥ 3/5 tolerance at nProbe = 3. A deleted id can never surface: the
+    * anti-join removes it from every probed cell before ranking, which is the
+    * takedown guarantee the reference only gets by full reload. */
   val simIvfDelete = GQuery(
     "sim_ivf_delete",
     (s, d) => {
@@ -649,9 +648,9 @@ object VectorQueries {
     * aggregation) → trigger (`Ann.needsRetrain` against the SLO
     * threshold) → warm-start `EpochAnn.retrain` (Lloyd refinements from
     * the saved centroids, one re-assignment pass, new centroids and
-    * lists published as one epoch). This entry drives that loop end-to-end on an index
-    * built from the worst warm-up (32 seed vectors, everything else
-    * appended) and serves a probe off the RETRAINED layout.
+    * lists published as one epoch). This entry drives that loop
+    * end-to-end on an index built from the worst warm-up (32 seed vectors,
+    * everything else appended) and serves a probe off the RETRAINED layout.
     *
     * Gate discipline: the hash anchor is the brute-force top-5
     * (retrain changes the index layout, never the true neighbors) with
@@ -961,19 +960,19 @@ object VectorQueries {
   /** UPDATE ≡ rebuild for the compressed serving index — the last
     * lifecycle identity on the vector side (`bm25_serve_update`'s
     * IVF-PQ twin): ~1/7 of the vectors are upserted with CHANGED
-    * embeddings via one atomic `EpochIvfpq.update` epoch, and the standard two-phase search over the updated layout is
-    * anchored against the brute-force top-5 of the POST-UPDATE corpus
-    * (the oracle recomputes the same edit inline). The updated rows'
-    * cells and codes both move — frozen quantizers re-assign and
-    * re-encode them — so the hash match certifies the full
-    * composition, not just row plumbing. `IvfpqUpdateSpec` pins the
-    * ledger replay no-op. Shortlist floor is raised to 100 (20% at the
-    * smallest SF): the frozen quantizers are one update STALER relative
-    * to the post-update corpus than in the append/delete twins — the
-    * updated residue's old neighbors vacate the true top-k and their
-    * replacements carry more code distortion, so the ADC phase needs a
-    * deeper exact re-rank to hold the recall gate (measured: 2/5 at
-    * the 50 floor, 5/5 at 100, sf0.001). */
+    * embeddings via one atomic `EpochIvfpq.update` epoch, and the
+    * standard two-phase search over the updated layout is anchored against
+    * the brute-force top-5 of the POST-UPDATE corpus (the oracle recomputes
+    * the same edit inline). The updated rows' cells and codes both move —
+    * frozen quantizers re-assign and re-encode them — so the hash match
+    * certifies the full composition, not just row plumbing. `IvfpqUpdateSpec`
+    * pins the ledger replay no-op. Shortlist floor is raised to 100 (20% at
+    * the smallest SF): the frozen quantizers are one update STALER relative
+    * to the post-update corpus than in the append/delete twins — the updated
+    * residue's old neighbors vacate the true top-k and their replacements
+    * carry more code distortion, so the ADC phase needs a deeper exact
+    * re-rank to hold the recall gate (measured: 2/5 at the 50 floor, 5/5 at
+    * 100, sf0.001). */
   val simIvfpqUpdate = GQuery(
     "sim_ivfpq_update",
     (s, d) => recallAnchoredOf(
@@ -1351,10 +1350,10 @@ object VectorQueries {
 
   /** The persisted IVF-PQ serving path: build → `EpochIvfpq.build`
     * (inverted lists as cell partition directories, ONCE per process)
-    * → `EpochIvfpq.load` → two-phase search. On the loaded index the cell restriction is
-    * partition pruning AND the ADC phase's scan reads only the codes
-    * column (both plan-pinned in `IvfpqSpec`) — at 100 TB a probe reads
-    * `nProbe/k` of the rows at `m` bytes each instead of the full
+    * → `EpochIvfpq.load` → two-phase search. On the loaded index the
+    * cell restriction is partition pruning AND the ADC phase's scan reads
+    * only the codes column (both plan-pinned in `IvfpqSpec`) — at 100 TB a
+    * probe reads `nProbe/k` of the rows at `m` bytes each instead of the full
     * float corpus. Same driver-verified recall output as `sim_ivf`. */
   val simIvfpqLoaded = GQuery(
     "sim_ivfpq_loaded",

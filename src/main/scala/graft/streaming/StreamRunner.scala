@@ -488,26 +488,24 @@ object StreamRunner {
     * already-tombstoned ids up front, so a crash-replayed batch (same
     * checkpointed offsets) re-deletes nothing — the df/stats
     * subtraction can never double-fire and the segment never holds a
-    * duplicate (`Bm25DeleteSpec` pins re-delivered batches). Those legs inherit the offline maintenance-window
-    * contract of the swap delete ops: a worker crash BETWEEN a
-    * batch's tombstone commit and its df/stats swaps leaves the text
-    * index's statistics stale with no replay to fix them (content
-    * removal itself is already durable) — recovery is
-    * `postingsCompact`, which recomputes df/stats from the surviving
-    * lists as ground truth. The positional and IVF legs have no such
-    * window: each commits one manifest under [[Epoch.occ]]. Their
-    * ledger key is the manifest's next epoch, not the foreachBatch id:
-    * the stream sets no checkpoint location, so batch ids restart at 0
-    * with every start, while epoch numbers never repeat. Their replay
-    * safety is the same exclusion as the swap legs': a replayed or
-    * re-delivered id is already tombstoned, so the leg commits
-    * nothing. Each of these deletes rewrites the layout's whole
-    * tombstone set (old ∪ fresh), so a long-running worker registers
-    * the layouts with [[graft.ops.Maintenance.sweep]] as
-    * `epoch_positional` / `epoch_ivf` (or compacts them) to keep those
-    * sets bounded.
-    * Expects a streaming `doc_id: long` column; doc_id ≡ vec_id across
-    * the paired layouts (the corpus convention). */
+    * duplicate (`Bm25DeleteSpec` pins re-delivered batches). Those
+    * legs inherit the offline maintenance-window contract of the swap delete
+    * ops: a worker crash BETWEEN a batch's tombstone commit and its df/stats
+    * swaps leaves the text index's statistics stale with no replay to fix
+    * them (content removal itself is already durable) — recovery is
+    * `postingsCompact`, which recomputes df/stats from the surviving lists as
+    * ground truth. The positional and IVF legs have no such window: each
+    * commits one manifest under [[Epoch.occ]]. Their ledger key is the
+    * manifest's next epoch, not the foreachBatch id: the stream sets no
+    * checkpoint location, so batch ids restart at 0 with every start, while
+    * epoch numbers never repeat. Their replay safety is the same exclusion as
+    * the swap legs': a replayed or re-delivered id is already tombstoned, so
+    * the leg commits nothing. Each of these deletes rewrites the layout's
+    * whole tombstone set (old ∪ fresh), so a long-running worker registers
+    * the layouts with [[graft.ops.Maintenance.sweep]] as `epoch_positional` /
+    * `epoch_ivf` (or compacts them) to keep those sets bounded. Expects a
+    * streaming `doc_id: long` column; doc_id ≡ vec_id across the paired
+    * layouts (the corpus convention). */
   def takedownStream(postingsPath: String, doomedIds: DataFrame,
       ivfPath: Option[String] = None,
       positionalPath: Option[String] = None,

@@ -4,13 +4,13 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
 /** Incremental-append pins for the COMPRESSED index
-  * (`EpochIvfpq.append`, `sim_ivfpq_append`): appending against the frozen coarse centroids
-  * AND frozen product codebooks must produce cells and PQ codes
-  * bit-identical to a build-time encode of the same rows, must create
-  * no new cell directories, must fail fast on schema drift, and a
-  * full-probe full-shortlist search over the merged layout must equal
-  * brute force over the whole corpus (the exact re-rank degeneracy
-  * holds regardless of how stale the quantizers are). */
+  * (`EpochIvfpq.append`, `sim_ivfpq_append`): appending against the
+  * frozen coarse centroids AND frozen product codebooks must produce cells
+  * and PQ codes bit-identical to a build-time encode of the same rows, must
+  * create no new cell directories, must fail fast on schema drift, and a
+  * full-probe full-shortlist search over the merged layout must equal brute
+  * force over the whole corpus (the exact re-rank degeneracy holds regardless
+  * of how stale the quantizers are). */
 class IvfpqAppendSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
