@@ -58,6 +58,11 @@ object Maintenance {
   final case class LayoutRef(kind: String, path: String,
       registry: Option[(String, String)] = None)
 
+  /** The `kind`s [[sweep]] manages — the list in [[LayoutRef]]. */
+  val kinds: Set[String] = Set("postings", "neardup", "epoch_postings",
+    "epoch_positional", "epoch_suggest", "epoch_ivf", "epoch_ivfpq",
+    "epoch_neardup", "epoch_table", "epoch_mv")
+
   /** What the probe saw and what the sweep did (`action` ∈ none |
     * compact | retrain | prune). For epoch layouts the sweep also
     * reports the ORPHAN statistics ([[Epoch.orphans]]): claims above
@@ -110,9 +115,11 @@ object Maintenance {
       case "epoch_mv" =>
         Epoch.resolve(s, ref.path).map(_.dirs(ref.path, "view"))
           .getOrElse(Seq.empty)
-      case k => throw new IllegalArgumentException(
-        s"Maintenance: unknown layout kind $k")
+      case k => throw unknownKind(k)
     }
+
+  private def unknownKind(k: String) =
+    new IllegalArgumentException(s"Maintenance: unknown layout kind $k")
 
   /** Parquet data files under `dir`, recursively (cell-partitioned
     * layouts nest files under cell=N subdirectories) — one FS listing,
@@ -194,9 +201,12 @@ object Maintenance {
     * `vectorIngestEpochStream`, [[Snapshot.ingestBoth]]'s tier
     * appends, and [[Takedown]]'s epoch legs), so the sweep can run
     * BESIDE a live ingest worker: whoever wins the epoch-number claim
-    * commits first and the loser rebases (`EpochOccSpec`). */
+    * commits first and the loser rebases (`EpochOccSpec`). A layout
+    * list naming a kind outside [[kinds]] (a retired swap kind such as
+    * `ivf`) is refused whole, before any layout is touched. */
   def sweep(s: SparkSession, layouts: Seq[LayoutRef],
-      policy: Policy = Policy(), batchId: Long = 0L): Seq[SweepResult] =
+      policy: Policy = Policy(), batchId: Long = 0L): Seq[SweepResult] = {
+    layouts.find(r => !kinds(r.kind)).foreach(r => throw unknownKind(r.kind))
     layouts.map { ref =>
       val segs = dataDirs(s, ref).map(segmentCount(s, _)).sum
       val ratio = tombstoneRatio(s, ref)
@@ -277,6 +287,7 @@ object Maintenance {
           o.stagingBytes)
       } else SweepResult(ref.kind, ref.path, segs, ratio, action, batchId)
     }
+  }
 
   /** Postings layout taken through the POLICY-DRIVEN lifecycle the
     * sweep manages: built on half the corpus, grown by three append

@@ -138,6 +138,26 @@ class MaintenanceSpec extends SparkTestBase {
     assert(EpochAnn.load(spark, path).assigned.count() === 8L)
   }
 
+  test("a layout list naming a retired swap kind is refused by name " +
+      "before any layout is touched") {
+    val path = s"${graft.GraftSession.scratchDir}/maint_retired_kind"
+    val emb = ((1L to 9L).map(i =>
+      (i, Array(1.0f, 0.001f * i, 0f, 0f))) :+
+      (10L, Array(0f, 0f, 1f, 0f)))
+      .toDF("vec_id", "embedding")
+    EpochAnn.build(spark, emb, path, k = 2)
+    val e0 = Epoch.resolve(spark, path).get.epoch
+    // the live layout first: a skew-1.2 policy would retrain it
+    Seq("ivf", "ivfpq", "positional").foreach { retired =>
+      val e = intercept[IllegalArgumentException](Maintenance.sweep(spark,
+        Seq(Maintenance.LayoutRef("epoch_ivf", path),
+          Maintenance.LayoutRef(retired, path)),
+        Maintenance.Policy(maxCellSkew = 1.2)))
+      assert(e.getMessage === s"Maintenance: unknown layout kind $retired")
+    }
+    assert(Epoch.resolve(spark, path).get.epoch === e0)
+  }
+
   test("the epoch-positional arm compacts through a fresh epoch; the " +
       "epoch-IVF-PQ arm routes skew to retrain and tombstones to " +
       "compact; history past the retention horizon prunes") {
